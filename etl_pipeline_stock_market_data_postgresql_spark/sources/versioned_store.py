@@ -42,11 +42,16 @@ segments, and every ~32nd commit consolidates the reference list (the
 amortized checkpoint), so commit metadata never scales with table
 size or commit history. Legacy flat manifests still read (and migrate
 to a segment on the next commit). Writers use OPTIMISTIC
-CONCURRENCY: every commit CAS-publishes its manifest (create-if-absent
-— first writer to claim a version wins), data file names embed the
-writer's pid so concurrent stagings never collide, a losing blind
-append re-homes its files and retries against the new latest (appends
-commute), and a losing rewrite/delete/merge raises
+CONCURRENCY through ONE commit path, :func:`_transact` (the Delta
+log's single commit protocol): claim the next version, validate the
+snapshot (read-version match or a disjoint rebase, txn ledger, CHECK
+constraints), build the verb's manifest body, CAS-publish it
+(create-if-absent — first writer to claim a version wins). Data file
+names embed the writer's (pid, seq) so concurrent stagings never
+collide, and manifests reference files BY NAME, so a staged file is
+never renamed: a losing blind append or file-scoped delete/merge
+simply retries against the new latest (appends commute; disjoint
+file sets rebase), while a losing whole-table rewrite raises
 :class:`ConcurrentCommitError` because its snapshot is stale (Delta's
 conflict rules). A crashed commit leaves at worst orphaned data files
 for vacuum — never a readable-but-wrong manifest (the crash-recovery
@@ -55,6 +60,7 @@ gate)."""
 
 from __future__ import annotations
 
+import datetime
 import math
 import os
 import re
@@ -321,6 +327,42 @@ def _seg_ref(name: str, files: list[str], stats: dict) -> dict:
         summary = {c: per_col[c]
                    for c in complete - bad if c in per_col}
     return {"name": name, "n": len(files), "stats": summary}
+
+
+def _new_segment(root: str, files: list[str], stats: dict) -> dict:
+    """Write a segment holding ``files`` and return its reference."""
+    return _seg_ref(_write_segment(root, files, stats), files, stats)
+
+
+def _segments_of(root: str, raw: dict | None, drop=frozenset(),
+                 touched=frozenset(), stats: dict | None = None) -> list:
+    """Segment references carrying ``raw``'s files minus ``drop`` — the
+    one place a commit derives its segment list from a manifest. A
+    segment that loses no file and holds no ``touched`` one (a file
+    whose stats entry changes, e.g. a new deletion vector) is
+    referenced BY NAME; the others are re-emitted with their kept
+    files (segment-level copy-on-write, mirroring the data files'),
+    taking stats entries from ``stats`` when given. A legacy FLAT
+    manifest migrates into one new segment."""
+    if raw is None:
+        return []
+    if "segments" in raw and not (drop or touched):
+        return list(raw["segments"])  # the append path reads nothing
+    parts = ([(e, _read_segment(root, _seg_name(e)))
+              for e in raw["segments"]] if "segments" in raw
+             else [(None, {"files": raw["files"],
+                           "stats": raw.get("stats", {})})])
+    out = []
+    for entry, sd in parts:
+        kept = [f for f in sd["files"] if f not in drop]
+        if (entry is not None and len(kept) == len(sd["files"])
+                and touched.isdisjoint(kept)):
+            out.append(entry)
+        elif kept:
+            st = sd["stats"] if stats is None else stats
+            out.append(_new_segment(root, kept,
+                                    {f: st[f] for f in kept if f in st}))
+    return out
 
 
 def _resolve(root: str, raw: dict) -> dict:
@@ -705,25 +747,6 @@ def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
             .select(fn_col, ri_col))
 
 
-def _apply_dvs(spark: SparkSession, root: str, stats: dict,
-               files, df: DataFrame) -> DataFrame:
-    """Filter a raw scan of ``files`` down to its LOGICAL content by
-    anti-joining out every (file, row position) a deletion vector
-    marks — the merge-on-read read path. Positions come from
-    :func:`_dv_positions_df` (driver-broadcast when tiny, distributed
-    sidecar scan when large — never an O(deleted rows) driver
-    materialization). No-op — zero plan changes — when no kept file
-    carries a marker."""
-    dvm = _dv_map(stats, files)
-    if not dvm:
-        return df
-    pos = _dv_positions_df(spark, root, dvm)
-    aug = (df.withColumn("_dv_fn", F.col("_metadata.file_name"))
-           .withColumn("_dv_ri", F.col("_metadata.row_index")))
-    return (aug.join(pos, ["_dv_fn", "_dv_ri"], "left_anti")
-            .drop("_dv_fn", "_dv_ri"))
-
-
 def _strip_row_id(schema):
     """The logical schema of a frame that may carry the managed
     ``_row_id`` column — row ids are table METADATA, never part of the
@@ -863,7 +886,8 @@ def _file_stats(path: str, cols: tuple[str, ...]) -> dict:
     file skipping a pure planning decision. Also records the file's
     ROW COUNT (``__rows__``) — the entry that lets
     :func:`snapshot_row_count` answer COUNT(*) from the manifest
-    alone (Delta answers it from the transaction log)."""
+    alone (Delta answers it from the transaction log). Date and
+    timestamp bounds record as ISO-8601 strings (:func:`_stat_bound`)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -879,8 +903,40 @@ def _file_stats(path: str, cols: tuple[str, ...]) -> dict:
             lo = st.min if lo is None else min(lo, st.min)
             hi = st.max if hi is None else max(hi, st.max)
         if lo is not None:
-            out[c] = [lo, hi]
+            out[c] = [_stat_bound(lo), _stat_bound(hi)]
     return out
+
+
+def _stat_bound(v):
+    """A min/max bound in its manifest (JSON) form: dates and timestamps
+    become ISO-8601 strings — timestamps in UTC at fixed microsecond
+    precision — whose string order is their time order, so pruning
+    compares them without parsing. Other values pass through."""
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return v.isoformat(timespec="microseconds")
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    return v
+
+
+def _overlaps(s, lo, hi) -> bool:
+    """May a file whose stats range is ``s = [min, max]`` hold a value
+    in ``[lo, hi]``? Temporal bounds compare in :func:`_stat_bound`
+    form; a date against a timestamp compares on their common prefix
+    (the date), which never skips a file Spark's date-as-midnight
+    promotion could match."""
+    if not isinstance(lo, datetime.date) and not isinstance(
+            hi, datetime.date):
+        return s[0] <= hi and s[1] >= lo
+    lo, hi = _stat_bound(lo), _stat_bound(hi)
+
+    def le(a: str, b: str) -> bool:
+        n = min(len(a), len(b))
+        return a[:n] <= b[:n]
+
+    return le(s[0], hi) and le(lo, s[1])
 
 
 class ConstraintViolationError(ValueError):
@@ -1096,14 +1152,27 @@ def _pid_alive(pid: int) -> bool:
         return True  # exists, owned by someone else
 
 
+def _ledger(pm: dict | None, tk: tuple[str, int] | None) -> dict | None:
+    """The txn ledger a commit on top of ``pm`` publishes — ``pm``'s
+    ``{app: latest_version}`` map with ``tk`` recorded — or None when
+    ``tk`` is already recorded there (exactly-once: the commit must not
+    publish). The one ledger check-and-record of every commit."""
+    txns = _normalize_txns(pm.get("txns")) if pm is not None else {}
+    if tk is not None:
+        if txns.get(tk[0], -1) >= tk[1]:
+            return None
+        txns[tk[0]] = tk[1]
+    return txns
+
+
 def _next_manifest(pm: dict | None, version: int, new_files: list[str],
                    new_stats: dict, carry, tk: tuple[str, int] | None,
                    df_schema, allow_evolution: bool) -> dict | None:
-    """Build the manifest dict for the next commit — pure metadata
-    logic, factored out of :func:`_commit` so its cost model is
-    testable without Spark writes. Returns ``None`` when ``tk`` is
-    already recorded (a concurrent writer won the txn race —
-    exactly-once holds).
+    """Build the resolved manifest dict for the next data commit — the
+    ``carry`` files of ``pm`` plus ``new_files`` — as pure metadata
+    logic, so its cost model is testable without Spark writes.
+    Returns ``None`` when ``tk`` is already recorded (a concurrent
+    writer won the txn race — exactly-once holds).
 
     Cost contract (the r12 verdict's O(total-history) finding, fixed):
     the txn ledger is a bounded ``{app: latest_version}`` map — a
@@ -1113,19 +1182,15 @@ def _next_manifest(pm: dict | None, version: int, new_files: list[str],
     design; an Iceberg manifest-list tree shards that too), but it is
     bounded by LIVE files, which compaction keeps small — unlike the
     old txn id list, which nothing could ever shrink."""
-    txns = _normalize_txns(pm.get("txns")) if pm is not None else {}
-    if tk is not None and txns.get(tk[0], -1) >= tk[1]:
+    txns = _ledger(pm, tk)
+    if txns is None:
         return None
     stats = dict(new_stats)
-    carry_files = (pm["files"] if carry == "prev" and pm is not None
-                   else [] if carry == "prev"
-                   else list(carry or []))
+    carry_files = list(carry or [])
     if carry_files and pm is not None:
         pstats = pm.get("stats", {})
         stats = {**{f: pstats[f] for f in carry_files if f in pstats},
                  **stats}
-    if tk is not None:
-        txns[tk[0]] = tk[1]
     if pm is not None and pm.get("schema") is not None:
         from pyspark.sql.types import StructType
 
@@ -1140,99 +1205,13 @@ def _next_manifest(pm: dict | None, version: int, new_files: list[str],
             "constraints": (pm or {}).get("constraints", {})}
 
 
-def _segmented_body(root: str, praw: dict | None, man: dict, carry,
-                    new_files: list[str], new_stats: dict,
-                    touched: frozenset = frozenset()) -> dict:
-    """Encode the resolved next-manifest ``man`` as a MANIFEST LIST —
-    the Iceberg layout the r12 verdict called for: file entries live
-    in immutable segment files, the manifest itself holds only segment
-    references (plus the bounded ledger and schema), and a commit
-    WRITES only its delta:
-
-    - append (``carry == "prev"``): reference the previous manifest's
-      segments BY NAME and add one new segment holding this commit's
-      files — metadata written is O(new files + #segments), never
-      O(live files);
-    - delete/merge (explicit carry list): segments fully inside the
-      carry set are referenced by name; segments that lost files to
-      the rewrite are re-emitted minus their victims (segment-level
-      copy-on-write, mirroring the data files');
-    - rewrite (``carry is None``): one fresh segment.
-
-    A legacy FLAT previous manifest is wrapped into a segment on the
-    next commit (one O(live files) migration write). When the
-    reference list would exceed ``_SEG_COMPACT_EVERY``, the segments
-    consolidate into one — the amortized checkpoint that keeps reader
-    resolution O(live files + a bounded constant) forever."""
-    def _mk_seg(files: list[str], stats: dict) -> dict:
-        return _seg_ref(_write_segment(root, files, stats), files, stats)
-
-    if carry == "prev":
-        if praw is None:
-            segs: list = []
-        elif "segments" in praw:
-            segs = list(praw["segments"])
-        else:
-            segs = ([_mk_seg(praw["files"], praw.get("stats", {}))]
-                    if praw["files"] else [])
-    elif carry is None:
-        segs = []
-    else:
-        carry_set = set(carry)
-        if praw is not None and "segments" in praw:
-            prev_iter = [(e, _read_segment(root, _seg_name(e)))
-                         for e in praw["segments"]]
-        elif praw is not None:
-            prev_iter = [(None, {"files": praw["files"],
-                                 "stats": praw.get("stats", {})})]
-        else:
-            prev_iter = []
-        mstats = man.get("stats", {})  # includes any DV-marker
-        # overlays on carried files (MoR update) — re-emitted segment
-        # stats must come from the FINAL manifest view, never the
-        # previous segment's stale entries
-        segs = []
-        for entry, sd in prev_iter:
-            kept = [f for f in sd["files"] if f in carry_set]
-            if not kept:
-                continue
-            if (entry is not None and len(kept) == len(sd["files"])
-                    and not (touched and touched & set(kept))):
-                segs.append(entry)
-            else:
-                segs.append(_mk_seg(
-                    kept, {f: mstats[f] for f in kept if f in mstats}))
-    if new_files:
-        segs.append(_mk_seg(new_files, dict(new_stats)))
-    if len(segs) > _SEG_COMPACT_EVERY:
-        files: list[str] = []
-        stats: dict = {}
-        for e in segs:
-            sd = _read_segment(root, _seg_name(e))
-            files += sd["files"]
-            stats.update(sd["stats"])
-        segs = [_mk_seg(files, stats)]
-    out = {"version": man["version"], "format": _FORMAT_VERSION,
-           "segments": segs,
-           "txns": man["txns"], "schema": man["schema"],
-           "constraints": man.get("constraints", {})}
-    if man.get("row_tracking"):
-        out["row_tracking"] = True
-        out["row_hwm"] = man["row_hwm"]
-    if man.get("colmap") is not None:
-        out["colmap"] = man["colmap"]
-        out["colmax"] = man.get("colmax", 0)
-    return out
-
-
 def _carry_row_tracking(out: dict, src: dict,
                         hwm_src: dict | None = None) -> dict:
-    """Copy the row-tracking AND column-mapping fields a
-    non-``_commit`` manifest builder must carry forward. ``hwm_src``
-    overrides where the MONOTONE counters come from (restore carries
-    the CURRENT latest's row-id high-water mark and physical-column
-    counter, never the target's — ids are never reused across any
-    retained snapshot)."""
+    """Copy the row-tracking AND column-mapping fields a manifest body
+    carries forward from ``src``. ``hwm_src`` overrides where the
+    MONOTONE counters come from (restore carries the CURRENT latest's
+    row-id high-water mark and physical-column counter, never the
+    target's — ids are never reused across any retained snapshot)."""
     if src.get("row_tracking"):
         out["row_tracking"] = True
         out["row_hwm"] = int((hwm_src or src).get("row_hwm", 0))
@@ -1240,6 +1219,244 @@ def _carry_row_tracking(out: dict, src: dict,
         out["colmap"] = dict(src["colmap"])
         out["colmax"] = int((hwm_src or src).get("colmax", 0))
     return out
+
+
+def _transact(root: str, op: str, build, *, spark=None, staged=(),
+              txn=None, based_on: int | None = None, touched=None,
+              pending_tx: tuple[str, str] | None = None) -> int:
+    """THE commit path: every manifest this module publishes goes
+    through this one optimistic transaction (the Delta log's single
+    commit protocol, VLDB 2020). Each attempt:
+
+    1. claims — the visible latest and the version to publish, from
+       ONE sweep (:func:`_latest_and_claim`) — and reads that snapshot;
+    2. validates it: the latest must BE ``based_on`` (the snapshot the
+       caller derived its plan from), or — for a file-scoped commit —
+       the interleaved commits must be disjoint from the ``touched``
+       files it replaces or marks (:func:`_rebase_safe`), in which case
+       it rebases; then the txn ledger (an already-recorded ``txn``
+       returns the latest unpublished); then the ``staged`` files
+       against the CHECK constraints, again whenever the constraint
+       set differs from the one last validated (a concurrent ADD
+       CONSTRAINT can never let violating rows publish);
+    3. calls ``build(version, praw, pm)`` for the verb's manifest body
+       (segments, schema, constraints, mapping and row tracking — the
+       verb's only contribution; its own checks raise from there);
+    4. CAS-publishes it (:func:`_publish_cas`), recording the number
+       of CAS attempts as ``attempts``.
+
+    One retry rule on a lost CAS: a file-scoped commit (``touched`` is
+    a set — blind appends touch nothing; deletes, merges, compactions
+    and deletion-vector verbs name their files) loops and re-derives
+    everything under the new latest; a whole-table commit (``touched``
+    None: full rewrite, restore, metadata change, clone) raises
+    :class:`ConcurrentCommitError`, its snapshot being stale. Staged
+    files are never renamed — manifests reference them by name."""
+    import json
+
+    tk = _txn_key(txn)
+    for d in (_DATA, _MANIFESTS):
+        os.makedirs(os.path.join(root, d), exist_ok=True)
+    base_man = validated = None
+    attempts = 0
+    while True:
+        attempts += 1
+        prev, version = _latest_and_claim(root)
+        praw = _read_manifest_raw(root, prev) if prev is not None else None
+        pm = _resolve(root, praw) if praw is not None else None
+        if based_on is not None and (prev or 0) != based_on:
+            if touched is not None and pm is not None and base_man is None:
+                base_man = read_manifest(root, based_on)
+            if (touched is None or pm is None
+                    or not _rebase_safe(base_man, pm, touched)):
+                raise ConcurrentCommitError(
+                    f"snapshot validation failed for {root}: this {op} "
+                    f"was derived from version {based_on} but the latest "
+                    f"is {prev}, and the commits in between touch its "
+                    f"replaced or marked files or table metadata (or it "
+                    f"replaces the whole table) — re-read and retry "
+                    f"(staged files are vacuumable orphans)")
+        txns = _ledger(pm, tk)
+        if txns is None:  # committed concurrently: exactly-once holds
+            return prev  # type: ignore[return-value]
+        body = build(version, praw, pm)
+        cons = (pm.get("constraints") or {}) if pm is not None else {}
+        if staged and cons and cons != validated:
+            # validate the STAGED bytes under the manifest-to-be's
+            # pinned union schema (an evolved subset append surfaces
+            # missing constrained columns as NULL => passes)
+            if spark is None:  # the sink's session-less commit runner
+                _validate_constraints_local(root, list(staged), cons,
+                                            cmap=body.get("colmap"))
+            else:
+                _validate_constraints(
+                    _plain_scan(spark, root, body["schema"], list(staged),
+                                body.get("colmap")),
+                    cons, unresolvable_pass=True)
+            validated = cons
+        if len(body["segments"]) > _SEG_COMPACT_EVERY:
+            # the amortized checkpoint: consolidate into ONE segment
+            whole = _resolve(root, {"segments": body["segments"]})
+            body["segments"] = [_new_segment(root, whole["files"],
+                                             whole["stats"])]
+        raw = {"version": version, "format": _FORMAT_VERSION,
+               "txns": txns, **body, "op": op,
+               "n_new_files": len(staged), "attempts": attempts}
+        if pending_tx is not None:  # phase 1 of a cross-store commit:
+            # invisible until the coordinator's decision record says so
+            raw["pending_tx"] = list(pending_tx)
+        if _publish_cas(root, version, json.dumps(raw)):
+            return version
+        if touched is None:
+            raise ConcurrentCommitError(
+                f"version {version} of {root} was committed concurrently; "
+                f"this {op} was derived from superseded version {prev} — "
+                f"re-read and retry (staged files are vacuumable orphans)")
+
+
+def _publish_files(spark, root: str, new_files: list[str], df_schema, *,
+                   stats_cols: tuple[str, ...] = (),
+                   bloom_cols: tuple[str, ...] = (), txn=None,
+                   allow_evolution: bool = False, op: str = "append",
+                   removed=frozenset(), dv_updates: dict | None = None,
+                   based_on: int | None = None, colmap: dict | None = None,
+                   assigned_new: dict | None = None, colmax: int = 0,
+                   row_ids: bool = False,
+                   pending_tx: tuple[str, str] | None = None) -> int:
+    """Publish data files already in ``data/`` (written under the
+    writer's logical schema ``df_schema``) through :func:`_transact` —
+    the body builder of every data commit: :func:`_commit`'s staged
+    frame, :func:`commit_staged_files`' executor-written parts, and
+    :func:`commit_delete_mor`'s zero-file deletion-vector overlay.
+
+    ``removed`` is the set of snapshot files the commit replaces (empty
+    for a blind append) — the new manifest carries the latest's files
+    minus these — or None for a whole-table replace that carries
+    nothing. ``dv_updates`` (``{file: sidecar}``) overlays deletion
+    vectors onto carried files. Footer stats and bloom sidecars are
+    read once, up front; every attempt re-derives, under the latest
+    manifest, the carried files, the evolved schema, the row-id bases
+    (a concurrent append advances the high-water mark) and the column
+    mapping. On a mapped store ``colmap`` is the writer's logical →
+    physical map (``assigned_new`` the entries it drew from
+    ``colmax`` for columns new to the store); column identity is the
+    PHYSICAL id (Delta's column-ID matching), so a concurrent logical
+    rename leaves the staged bytes valid and the commit publishes
+    under the current name, while a drop, a logical-name reuse over
+    another id or a clashing new-id assignment raises
+    :class:`ConcurrentCommitError`."""
+    from pyspark.sql.types import StructField, StructType
+
+    phys = colmap or {}
+    fields = [f.name for f in df_schema.fields]
+    # footer stats / blooms are keyed PHYSICAL on mapped stores (stable
+    # across renames — a rename must never rewrite O(live files) stats)
+    cols = tuple(phys.get(c, c) for c in stats_cols if c in fields)
+    bcols = tuple(phys.get(c, c) for c in bloom_cols if c in fields)
+    new_stats: dict = {}
+    if new_files:
+        # footer-only metadata reads (plus the bloom columns' data pages
+        # when bloom_cols is set), parallelized (pyarrow releases the
+        # GIL on I/O); at true scale the write TASKS report these back
+        # (Iceberg writer metrics / Delta bloom index files). Runs even
+        # with no stats/bloom columns: the footer's row count always
+        # records (metadata-only COUNT)
+        from concurrent.futures import ThreadPoolExecutor
+
+        def _meta(n: str) -> dict:
+            p = os.path.join(root, _DATA, n)
+            out = _file_stats(p, cols)
+            if bcols:
+                out.update(_write_file_bloom(p, bcols))
+            return out
+
+        with ThreadPoolExecutor(max_workers=min(16, len(new_files))) as ex:
+            new_stats = dict(zip(new_files, ex.map(_meta, new_files)))
+    dvs = dict(dv_updates or {})
+    anew = assigned_new or {}
+
+    def build(version: int, praw: dict | None, pm: dict | None) -> dict:
+        mapped = (pm.get("colmap") is not None if pm is not None
+                  else colmap is not None)
+        if mapped and colmap is None:
+            raise ValueError(
+                f"{root} is column-mapped; staged files must be written "
+                f"under PHYSICAL field names — pass colmap= (the sink "
+                f"does this automatically) or use commit_append")
+        if colmap is not None and not mapped:
+            raise ValueError(
+                f"{root} is not column-mapped but staged files were "
+                f"written under a colmap — the physical field names "
+                f"would not match the store's logical schema")
+        schema, newmap = df_schema, None
+        if mapped:
+            newmap = dict((pm or {}).get("colmap") or {})
+            owner = {p: c for c, p in newmap.items()}
+            renames: dict[str, str] = {}  # writer logical → current
+            for c in fields:
+                want = colmap.get(c)
+                if want is None:
+                    raise ValueError(
+                        f"column-mapped commit on {root}: logical column "
+                        f"{c!r} has no physical name in the writer's "
+                        f"colmap")
+                if newmap.get(c) == want:
+                    continue  # unchanged mapping
+                if c not in newmap and c in anew and want not in owner:
+                    newmap[c] = want  # evolution column, id still free
+                elif c not in newmap and c not in anew and want in owner:
+                    renames[c] = owner[want]  # renamed; bytes valid
+                else:
+                    raise ConcurrentCommitError(
+                        f"column-mapping conflict on {root}: logical "
+                        f"column {c!r} (staged as {want!r}) no longer "
+                        f"matches the latest manifest's mapping "
+                        f"{newmap.get(c)!r} — a concurrent commit/drop/"
+                        f"assign landed; restage against the new latest")
+            if renames:
+                schema = StructType(
+                    [StructField(renames.get(f.name, f.name), f.dataType,
+                                 f.nullable) for f in df_schema.fields])
+        # row tracking: enabled at the store's FIRST commit, inherited
+        # forever after. Every new file gets a __brid__ base from the
+        # latest high-water mark, which advances by the file's row count
+        # (rows carrying a materialized id burn fresh ids unused:
+        # uniqueness is the contract, density is not)
+        tracked = bool(pm.get("row_tracking")) if pm is not None else row_ids
+        if row_ids and not tracked:
+            raise ValueError(
+                f"{root} was created without row tracking — it must be "
+                f"enabled at the store's first commit")
+        hwm = int((pm or {}).get("row_hwm", 0))
+        if tracked:
+            for f in new_files:
+                new_stats[f][_BRID_KEY] = hwm
+                hwm += int(new_stats[f][_ROWS_KEY])
+        keep = ([] if removed is None or pm is None
+                else [f for f in pm["files"] if f not in removed])
+        # the core records the txn; this builds the rest of the body
+        man = _next_manifest(pm, version, new_files, new_stats, keep,
+                             None, schema, allow_evolution)
+        for f, dv in dvs.items():  # MoR markers mask carried preimages
+            man["stats"][f] = {**man["stats"].get(f, {}), _DV_KEY: dv}
+        segs = ([] if removed is None else _segments_of(
+            root, praw, drop=removed, touched=frozenset(dvs),
+            stats=man["stats"]))
+        if new_files:
+            segs.append(_new_segment(root, new_files, new_stats))
+        body = {"segments": segs, "schema": man["schema"],
+                "constraints": man["constraints"]}
+        if tracked:
+            body.update(row_tracking=True, row_hwm=hwm)
+        if mapped:
+            body.update(colmap=newmap, colmax=max(
+                colmax, int((pm or {}).get("colmax", 0))))
+        return body
+
+    touched = None if removed is None else frozenset(removed) | set(dvs)
+    return _transact(root, op, build, spark=spark, staged=new_files,
+                     txn=txn, based_on=based_on, touched=touched,
+                     pending_tx=pending_tx)
 
 
 def _commit(spark: SparkSession, root: str, df: DataFrame,
@@ -1254,95 +1471,73 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
             column_mapping: bool = False,
             removed_files: list[str] | None = None,
             dv_updates: dict | None = None) -> int:
-    """Write ``df``'s part files into the data dir, then CAS-publish a
-    new manifest referencing them plus the carried files (by name —
-    their bytes are never touched). ``carry`` is ``"prev"`` (carry the
-    latest manifest's files — append semantics, safe to retry under a
-    lost CAS because blind appends commute), an explicit file list
-    (delete/merge — a lost CAS raises :class:`ConcurrentCommitError`
-    because the list was derived from a snapshot that is no longer
-    latest), or ``None`` (rewrite — same conflict rule). Data file
-    names embed the writer's pid so concurrent committers can never
-    clobber each other's staged files.
+    """Stage ``df``'s part files into the data dir under their final
+    names, then publish them exactly as :func:`commit_staged_files`
+    does (:func:`_publish_files` → :func:`_transact`, the one commit
+    path) — a manifest referencing them plus the carried files (by
+    name — their bytes are never touched). ``carry`` is ``"prev"``
+    (append: carry the latest manifest's files, safe to retry under a
+    lost CAS because blind appends commute), the carried file list of
+    a delete/merge (the ``based_on`` snapshot's files minus
+    ``removed_files``), or ``None`` (rewrite: carry nothing). Staged
+    names embed (claimed version, pid, seq), so concurrent committers
+    never clobber each other's files and a retry publishes them under
+    the name they were staged with.
 
     ``based_on`` is the SNAPSHOT VERSION the caller derived its plan
     from (delete/merge census lists, a compaction's input). It closes
-    the lost-update window the CAS alone cannot: if a concurrent
-    append lands BETWEEN the caller's snapshot read and this commit's
-    version claim, the CAS would succeed at a fresh version number
-    while the carry list silently omits the interloper's files —
-    dropping committed data. With ``based_on`` set, the commit
-    publishes ONLY as version ``based_on + 1``; any other observed
-    latest raises :class:`ConcurrentCommitError` (Delta's
-    read-snapshot validation) and the caller re-derives. Blind appends
-    pass None — they re-derive their carry under the latest manifest
-    every attempt, which is exactly why they commute.
-
-    ``removed_files`` upgrades that whole-table rule to FILE-
-    GRANULARITY conflict checking (Delta's WriteSerializable): it
+    the lost-update window the CAS alone cannot: a concurrent append
+    landing BETWEEN the caller's snapshot read and this commit's claim
+    would otherwise publish at a fresh version with the interloper's
+    files silently omitted. With ``based_on`` set, any other observed
+    latest raises :class:`ConcurrentCommitError` (Delta's read-snapshot
+    validation) — unless ``removed_files`` (or ``dv_updates``) scope
+    the commit to FILE GRANULARITY (Delta's WriteSerializable): it
     names the ``based_on``-snapshot files this commit REPLACES (the
     victim census of a delete/update/merge; every input file of a
-    compaction). When the observed latest has moved past ``based_on``,
-    the commit REBASES instead of raising iff the interleaved commits
-    are disjoint from it: every removed file still lives in the latest
-    manifest with a byte-identical stats entry (same deletion vector,
-    same blooms, same row-id base — the staged rewrite read those
-    bytes), and schema/column-mapping/constraints are untouched. The
-    carry list is then recomputed as ``latest's files − removed`` — a
-    concurrent append's files ride along instead of being replaced
-    away — and the expensive staging is NEVER repaid. Any overlap
-    (victim rewritten, vector moved, metadata changed) raises as
-    before.
+    compaction), and when every one still lives in the latest manifest
+    with a byte-identical stats entry and schema/mapping/constraints
+    are untouched, the commit REBASES — it carries the latest's files
+    minus the removed ones, so a concurrent append's files ride along,
+    and the expensive staging is NEVER repaid. Any overlap raises.
 
-    The per-app txn ledger carries
-    across the chain regardless of carry semantics and is re-checked
-    under the latest manifest on every CAS attempt, so even a txn race
-    resolves to exactly-once. The manifest records the frame's schema
-    so a zero-file version still reads with the right shape."""
-    import json
-
+    The per-app txn ledger carries across the chain regardless of
+    carry semantics and is re-checked under the latest manifest on
+    every CAS attempt, so even a txn race resolves to exactly-once.
+    The manifest records the frame's LOGICAL schema so a zero-file
+    version still reads with the right shape; on a column-mapped store
+    (Delta columnMapping name mode) the files hold stable PHYSICAL
+    field names (c0, c1, ...), so a logical RENAME/DROP is pure
+    metadata."""
     pid = os.getpid()
     seq = next(_COMMIT_SEQ)
     os.makedirs(os.path.join(root, _DATA), exist_ok=True)
-    os.makedirs(os.path.join(root, _MANIFESTS), exist_ok=True)
     for entry in os.listdir(root):  # crashed-commit staging debris —
         if not entry.startswith(".commit-tmp-"):  # only DEAD writers'
             continue  # (a live concurrent committer owns its dir)
         owner = entry[len(".commit-tmp-"):].split("-", 1)[0]
         if not (owner.isdigit() and _pid_alive(int(owner))):
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-    # COLUMN MAPPING (Delta columnMapping name mode): mapped stores
-    # write files under stable PHYSICAL field names (c0, c1, ...) so a
-    # logical RENAME/DROP is pure metadata. The logical schema is
-    # captured BEFORE the physical rename — it is what the manifest
-    # records; ids for logical columns new to the store are assigned
-    # here from the current colmax and re-validated inside the CAS
-    # loop (a concurrent commit assigning the same id to a different
-    # column raises, and the caller restages).
-    logical_cols = [c for c in df.columns if c != _ROW_ID]
     df_schema = _strip_row_id(df.schema)  # recorded schema: LOGICAL
-    prev0 = latest_version(root)
-    pm0 = read_manifest(root, prev0) if prev0 is not None else None
-    if pm0 is None:
-        mapped = bool(column_mapping)
-        cmap0: dict = {}
-        colmax0 = 0
-    else:
-        mapped = pm0.get("colmap") is not None
-        if column_mapping and not mapped:
-            raise ValueError(
-                f"{root} was created without column mapping — it must "
-                f"be enabled at the store's first commit")
-        cmap0 = dict(pm0.get("colmap") or {})
-        colmax0 = int(pm0.get("colmax", 0))
-    assigned_new: dict[str, str] = {}
+    prev, claim = _latest_and_claim(root)
+    praw = _read_manifest_raw(root, prev) if prev is not None else None
+    mapped = column_mapping if praw is None else (
+        praw.get("colmap") is not None)
+    if column_mapping and not mapped:
+        raise ValueError(
+            f"{root} was created without column mapping — it must be "
+            f"enabled at the store's first commit")
+    cmap, colmax, assigned = None, 0, {}
     if mapped:
-        for c in logical_cols:
-            if c not in cmap0:
-                cmap0[c] = f"c{colmax0}"
-                assigned_new[c] = cmap0[c]
-                colmax0 += 1
-        df = df.select(*[F.col(c).alias(cmap0.get(c, c))
+        # ids for logical columns new to the store are assigned here
+        # from the current colmax; the publish re-validates them
+        cmap = dict((praw or {}).get("colmap") or {})
+        colmax = int((praw or {}).get("colmax", 0))
+        for c in df.columns:
+            if c != _ROW_ID and c not in cmap:
+                cmap[c] = assigned[c] = f"c{colmax}"
+                colmax += 1
+        df = df.select(*[F.col(c).alias(cmap.get(c, c))
                          for c in df.columns])
     tmp = os.path.join(root, f".commit-tmp-{pid}-{seq}")
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1355,216 +1550,19 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
         shutil.rmtree(tmp, ignore_errors=True)
         spark.createDataFrame([], df.schema).write.parquet(tmp)
         parts = sorted(x for x in os.listdir(tmp) if x.endswith(".parquet"))
-    # footer stats / blooms are keyed PHYSICAL on mapped stores (stable
-    # across renames — a rename must never rewrite O(live files) stats)
-    cols = tuple(cmap0.get(c, c) for c in stats_cols if c in logical_cols)
-    bcols = tuple(cmap0.get(c, c) for c in bloom_cols
-                  if c in logical_cols)
-
-    placed: list[str] = []
-    placed_version: int | None = None
-    new_stats: dict = {}
-    validated_cons: dict | None = None
-    n_rows_by_idx: list[int] | None = None  # per staged file, in order
-    base_man: dict | None = None  # based_on's manifest, read lazily on
-    # the first rebase validation (most commits never conflict)
-    while True:
-        # VISIBLE latest and the claim from ONE listing (raises while
-        # the top manifest is in-doubt — writing past it could drop its
-        # rows). The claim skips every CLAIMED number — committed,
-        # prepared, or aborted hole (numbers are never reused) — and
-        # sharing the listing with `prev` guarantees everything between
-        # them is an aborted hole, so a commit landing after this
-        # listing contends for the SAME number and loses or wins the
-        # CAS — it can never be silently skipped past.
-        prev, version = _latest_and_claim(root)
-        praw = _read_manifest_raw(root, prev) if prev is not None else None
-        pm = _resolve(root, praw) if praw is not None else None
-        if based_on is not None and (prev or 0) != based_on:
-            # file-granularity conflict check (see docstring): rebase
-            # onto the moved latest when the interleaved commits are
-            # disjoint from this one's removed-file set
-            if (removed_files is not None or dv_updates) \
-                    and pm is not None:
-                if base_man is None:
-                    base_man = read_manifest(root, based_on)
-                touched = (set(removed_files or [])
-                           | set(dv_updates or {}))
-                if _rebase_safe(base_man, pm, touched):
-                    removed_set = set(removed_files or [])
-                    carry = [f for f in pm["files"]
-                             if f not in removed_set]
-                    validated_cons = None  # revalidate under the rebase
-                else:
-                    raise ConcurrentCommitError(
-                        f"snapshot validation failed for {root}: this "
-                        f"{op} was derived from version {based_on}, the "
-                        f"latest is {prev}, and the interleaved commits "
-                        f"touch its replaced files or table metadata — "
-                        f"re-read and retry (staged files are vacuumable "
-                        f"orphans)")
-            else:
-                raise ConcurrentCommitError(
-                    f"snapshot validation failed for {root}: this "
-                    f"{op} was derived from version {based_on} but the "
-                    f"latest is {prev} — a concurrent commit landed "
-                    f"between the snapshot read and the publish; re-read "
-                    f"and retry (staged files are vacuumable orphans)")
-        new = [f"v{version:05d}-p{pid}-{seq}-{i:05d}.parquet"
-               for i in range(len(parts))]
-        if placed_version is None:
-            for f, name in zip(parts, new):
-                os.replace(os.path.join(tmp, f),
-                           os.path.join(root, _DATA, name))
-            shutil.rmtree(tmp, ignore_errors=True)
-            if new:
-                # footer-only metadata reads (plus the bloom columns'
-                # data pages when bloom_cols is set), parallelized
-                # (pyarrow releases the GIL on I/O) so a many-file
-                # commit doesn't serialize planning metadata on one
-                # driver thread; at true scale the write TASKS report
-                # these stats back (Iceberg writer metrics / Delta
-                # bloom index files) and the driver only merges them.
-                # Runs even with no stats/bloom columns: the footer's
-                # row count always records (metadata-only COUNT)
-                from concurrent.futures import ThreadPoolExecutor
-
-                def _meta(n: str) -> dict:
-                    p = os.path.join(root, _DATA, n)
-                    out = _file_stats(p, cols)
-                    if bcols:
-                        out.update(_write_file_bloom(p, bcols))
-                    return out
-
-                with ThreadPoolExecutor(max_workers=min(16, len(new))) as ex:
-                    new_stats = dict(zip(new, ex.map(_meta, new)))
-        elif placed_version != version:
-            # lost a CAS: re-home the staged files under the new version
-            # prefix (pure renames, no data movement)
-            renamed_stats = {}
-            for old, name in zip(placed, new):
-                os.replace(os.path.join(root, _DATA, old),
-                           os.path.join(root, _DATA, name))
-                old_bloom = os.path.join(root, _DATA, old + _BLOOM_SIDECAR)
-                if os.path.exists(old_bloom):  # sidecar follows its file
-                    os.replace(old_bloom, os.path.join(
-                        root, _DATA, name + _BLOOM_SIDECAR))
-                if old in new_stats:
-                    renamed_stats[name] = new_stats[old]
-            new_stats = renamed_stats
-        placed, placed_version = new, version
-        # row tracking: enabled at the store's FIRST commit, inherited
-        # forever after (enabling on an existing store would leave the
-        # legacy files id-less). Every staged file gets a __brid__ base
-        # from the previous manifest's high-water mark — recomputed on
-        # every CAS retry, since a concurrent append advances the hwm —
-        # and the hwm advances by the TOTAL staged row count (rows that
-        # carried a materialized id burn fresh ids unused: uniqueness is
-        # the contract, density is not).
-        if pm is None:
-            tracked = bool(row_ids)
-        else:
-            tracked = bool(pm.get("row_tracking"))
-            if row_ids and not tracked:
-                raise ValueError(
-                    f"{root} was created without row tracking — it must "
-                    f"be enabled at the store's first commit")
-        row_hwm = None
-        if tracked:
-            if n_rows_by_idx is None:
-                import pyarrow.parquet as pq
-                n_rows_by_idx = [
-                    pq.ParquetFile(os.path.join(root, _DATA, f))
-                    .metadata.num_rows for f in new]
-            base = int(pm.get("row_hwm", 0)) if pm is not None else 0
-            for name, nr in zip(new, n_rows_by_idx):
-                new_stats.setdefault(name, {})[_BRID_KEY] = base
-                base += nr
-            row_hwm = base
-        # column mapping: re-validate the staging-time id assumptions
-        # under the latest manifest (a concurrent commit may have
-        # assigned ids of its own) and merge the maps
-        newmap = None
-        if mapped:
-            pmap = dict(pm.get("colmap") or {}) if pm is not None else {}
-            taken = set(pmap.values())
-            for c in logical_cols:
-                want = cmap0[c]
-                ok = (pmap.get(c) == want if c in pmap
-                      # a column this commit did NOT assign that is no
-                      # longer mapped was renamed/dropped concurrently
-                      # — merging would resurrect it under its old id
-                      else (c in assigned_new and want not in taken))
-                if not ok:
-                    raise ConcurrentCommitError(
-                        f"column-mapping conflict on {root}: logical "
-                        f"column {c!r} (staged as {want!r}) no longer "
-                        f"matches the latest manifest's mapping "
-                        f"{pmap.get(c)!r} — a concurrent commit/rename/"
-                        f"drop landed; restage against the new latest")
-            newmap = {**pmap, **{c: cmap0[c] for c in logical_cols}}
-        man = _next_manifest(pm, version, new, new_stats, carry,
-                             _txn_key(txn), df_schema, allow_evolution)
-        if man is not None and dv_updates:
-            # MoR-update markers: overlay the staged deletion vectors
-            # onto the CARRIED victim files' stats (the new files hold
-            # the postimages; the vectors mask the preimages in place)
-            for f, dv in dv_updates.items():
-                man["stats"][f] = {**man["stats"].get(f, {}),
-                                   _DV_KEY: dv}
-        if man is not None and tracked:
-            man["row_tracking"] = True
-            man["row_hwm"] = row_hwm
-        if man is not None and mapped:
-            man["colmap"] = newmap
-            man["colmax"] = max(
-                colmax0,
-                int(pm.get("colmax", 0)) if pm is not None else 0)
-        if man is None:
-            # a concurrent writer committed this txn between our
-            # caller's check and now — exactly-once holds; our staged
-            # files become vacuumable orphans
-            return prev  # type: ignore[return-value]
-        # CHECK constraints validate the STAGED bytes (deterministic —
-        # a nondeterministic source cannot pass validation then write
-        # different rows) under the manifest's pinned union schema (an
-        # evolved subset append surfaces missing constrained columns as
-        # NULL => passes, SQL's rule), and they RE-validate inside this
-        # CAS loop whenever the latest manifest's constraint set
-        # differs from the one last validated — so a concurrent ADD
-        # CONSTRAINT landing between attempts can never let violating
-        # rows publish (one scan per constraint-set change, normally
-        # exactly one per constrained commit).
-        cons = (pm.get("constraints") or {}) if pm is not None else {}
-        if cons != validated_cons:
-            if cons and new:
-                staged = _tagged_rows(
-                    spark, root, man["schema"], {}, new,
-                    row_ids=False, cmap=newmap).drop("_rt_f", "_rt_ri")
-                _validate_constraints(staged, cons,
-                                      unresolvable_pass=True)
-            validated_cons = cons
-        raw = _segmented_body(root, praw, man, carry, new, new_stats,
-                              touched=frozenset(dv_updates or ()))
-        raw["op"] = op
-        raw["n_new_files"] = len(new)
-        if pending_tx is not None:  # phase-1 of a cross-store commit:
-            # invisible until the coordinator's decision record says so
-            raw["pending_tx"] = [pending_tx[0], pending_tx[1]]
-        body = json.dumps(raw)
-        if _publish_cas(root, version, body):
-            return version
-        # lost the race: another writer claimed this version first. A
-        # removed-file-scoped commit loops — the next iteration's
-        # snapshot validation rebases over a disjoint interloper (or
-        # raises on real overlap); everything else snapshot-scoped
-        # raises immediately (its staged plan is superseded wholesale)
-        if carry != "prev" and removed_files is None and not dv_updates:
-            raise ConcurrentCommitError(
-                f"version {version} of {root} was committed concurrently; "
-                f"this {'rewrite' if carry is None else 'delete/merge'} was "
-                f"derived from superseded version {prev} — re-read and "
-                f"retry (staged files are vacuumable orphans)")
+    new = [f"v{claim:05d}-p{pid}-{seq}-{i:05d}.parquet"
+           for i in range(len(parts))]
+    for f, name in zip(parts, new):
+        os.replace(os.path.join(tmp, f), os.path.join(root, _DATA, name))
+    shutil.rmtree(tmp, ignore_errors=True)
+    return _publish_files(
+        spark, root, new, df_schema, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, txn=txn, allow_evolution=allow_evolution,
+        op=op, removed=(None if carry is None and removed_files is None
+                        else frozenset(removed_files or ())),
+        dv_updates=dv_updates, based_on=based_on, colmap=cmap,
+        assigned_new=assigned, colmax=colmax, row_ids=row_ids,
+        pending_tx=pending_tx)
 
 
 def read_version_pruned_multi(
@@ -1607,7 +1605,7 @@ def read_version_pruned_multi(
     def _hits(fs: dict) -> bool:
         for col, (lo, hi) in preds.items():
             s = fs.get(col)
-            if s is not None and not (s[0] <= hi and s[1] >= lo):
+            if s is not None and not _overlaps(s, lo, hi):
                 return False
         return True
 
@@ -1682,7 +1680,7 @@ def read_version_point_lookup(
         for entry in raw["segments"]:
             if isinstance(entry, dict):
                 s = entry["stats"].get(col)
-                if s is not None and not (s[0] <= value <= s[1]):
+                if s is not None and not _overlaps(s, value, value):
                     n_total += entry["n"]  # range-skipped unread
                     continue
             sd = _read_segment(root, _seg_name(entry))
@@ -1698,7 +1696,7 @@ def read_version_point_lookup(
     for f in cand:
         fs = stats.get(f, {})
         rng = fs.get(col)
-        if rng is not None and not (rng[0] <= value <= rng[1]):
+        if rng is not None and not _overlaps(rng, value, value):
             continue  # range stats already exclude it
         marker = fs.get(key)
         if marker is not None:
@@ -2042,13 +2040,15 @@ def commit_staged_files(root: str, new_files: list[str],
     driver half of a distributed sink whose EXECUTORS wrote their part
     files straight into the store's data dir (the streaming sink's
     two-phase shape: tasks stage bytes, the driver publishes ONE
-    manifest). Same contract as :func:`commit_append`: txn-keyed
-    exactly-once (a replayed batch id no-ops), schema ENFORCED against
-    the store (evolution by opt-in), footer stats + bloom sidecars for
-    file skipping, row-tracked stores assign fresh row-id bases, blind
-    appends commute so a lost CAS retries. An EMPTY file list with a
-    txn still publishes (the ledger must record the batch so its
-    replay no-ops).
+    manifest). This is the same publish :func:`commit_append` ends in
+    (:func:`_publish_files` → :func:`_transact`, the one commit path):
+    txn-keyed exactly-once (a replayed batch id no-ops), schema
+    ENFORCED against the store (evolution by opt-in), footer stats +
+    bloom sidecars for file skipping, row-tracked stores assign fresh
+    row-id bases, blind appends commute so a lost CAS retries. The
+    files publish under the names they were staged with. An EMPTY
+    file list with a txn still publishes (the ledger must record the
+    batch so its replay no-ops).
 
     COLUMN-MAPPED stores: pass ``colmap`` — the logical→physical map
     the executors wrote their files under (captured from the store's
@@ -2056,13 +2056,13 @@ def commit_staged_files(root: str, new_files: list[str],
     so a mid-stream RENAME never invalidates staged bytes), with
     ``assigned_new`` the subset of entries this writer assigned for
     logical columns new to the store (ids drawn from ``colmax``). The
-    mapping is re-validated against the latest manifest inside the CAS
-    loop exactly like :func:`commit_append`'s — a concurrent rename/
-    drop/assign that contradicts the staged physical names raises
-    :class:`ConcurrentCommitError` instead of publishing files whose
-    field names no longer mean what the manifest says. Without
-    ``colmap``, a mapped store raises (executors would have written
-    logical field names, which a mapped store cannot ingest verbatim).
+    mapping is re-validated against the latest manifest on every CAS
+    attempt — a concurrent drop/assign that contradicts the staged
+    physical names raises :class:`ConcurrentCommitError` instead of
+    publishing files whose field names no longer mean what the
+    manifest says. Without ``colmap``, a mapped store raises
+    (executors would have written logical field names, which a mapped
+    store cannot ingest verbatim).
 
     CHECK constraints validate the staged bytes through the ACTIVE
     SparkSession (the streaming driver always has one); without one
@@ -2070,7 +2070,8 @@ def commit_staged_files(root: str, new_files: list[str],
     they validate via an embedded local scan rather than skipping.
 
     ``carry_prev=False`` publishes a manifest referencing ONLY the new
-    files (an OVERWRITE — op defaults should then be ``rewrite``): the
+    files (an OVERWRITE — op defaults should then be ``rewrite``),
+    under the whole-table conflict rule (a lost CAS raises): the
     previous snapshot stays time-travelable, vacuum reclaims it by
     policy, and on a row-tracked store the id high-water mark stays
     monotone so fresh rows never reuse reclaimed ids."""
@@ -2078,154 +2079,22 @@ def commit_staged_files(root: str, new_files: list[str],
 
     from pyspark.sql.types import StructType
 
-    tk = _txn_key(txn)
     if isinstance(schema_json, str):
         schema_json = json.loads(schema_json)
     if schema_json is None:
         raise ValueError("commit_staged_files needs the writer's "
                          "schema (schema_json)")
-    df_schema = StructType.fromJson(schema_json)
-    os.makedirs(os.path.join(root, _DATA), exist_ok=True)
-    os.makedirs(os.path.join(root, _MANIFESTS), exist_ok=True)
     new_files = sorted(new_files)
     for f in new_files:
         if not os.path.exists(os.path.join(root, _DATA, f)):
             raise FileNotFoundError(
                 f"staged file {f} is missing under {root}/data")
-    fields = {fld.name for fld in df_schema.fields}
-    # footer stats / blooms are keyed PHYSICAL on mapped stores (the
-    # staged files hold physical field names; stats stay rename-stable)
-    _phys = (colmap or {})
-    cols = tuple(_phys.get(c, c) for c in stats_cols if c in fields)
-    bcols = tuple(_phys.get(c, c) for c in bloom_cols if c in fields)
-    new_stats: dict = {}
-    if new_files:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _meta(n: str) -> dict:
-            p = os.path.join(root, _DATA, n)
-            out = _file_stats(p, cols)  # rows always; ranges per cols
-            if bcols:
-                out.update(_write_file_bloom(p, bcols))
-            return out
-
-        with ThreadPoolExecutor(max_workers=min(16, len(new_files))) as ex:
-            new_stats = dict(zip(new_files, ex.map(_meta, new_files)))
-    n_rows_by_idx: list[int] | None = None
-    validated_cons: dict | None = None
-    while True:
-        prev, version = _latest_and_claim(root)
-        praw = _read_manifest_raw(root, prev) if prev is not None else None
-        pm = _resolve(root, praw) if praw is not None else None
-        mapped = pm is not None and pm.get("colmap") is not None
-        if mapped and colmap is None:
-            raise ValueError(
-                f"{root} is column-mapped; staged files must be written "
-                f"under PHYSICAL field names — pass colmap= (the sink "
-                f"does this automatically) or use commit_append")
-        if colmap is not None and not mapped:
-            raise ValueError(
-                f"{root} is not column-mapped but staged files were "
-                f"written under a colmap — the physical field names "
-                f"would not match the store's logical schema")
-        newmap = None
-        eff_schema = df_schema  # per-ATTEMPT effective schema (the CAS
-        # loop re-derives it from the writer's immutable df_schema, so
-        # a retry re-validates from scratch under the new latest)
-        if mapped:
-            # re-validate the staging-time mapping under the LATEST
-            # manifest. Column identity is the PHYSICAL id (Delta's
-            # column-ID matching): a concurrent logical RENAME leaves
-            # the staged bytes valid — the commit simply publishes
-            # under the current logical name — while a drop, a
-            # logical-name reuse over a different id, or a clashing
-            # new-id assignment raises (the staged files' field names
-            # would no longer mean what the manifest says).
-            pmap = dict(pm.get("colmap") or {})
-            inv_pmap = {p: l for l, p in pmap.items()}
-            taken = set(pmap.values())
-            anew = assigned_new or {}
-            renames: dict[str, str] = {}  # writer logical → current
-            fresh: dict[str, str] = {}    # writer logical → new phys
-            for c in sorted(fields):
-                want = colmap.get(c)
-                if want is None:
-                    raise ValueError(
-                        f"column-mapped staged commit on {root}: "
-                        f"logical column {c!r} has no physical name in "
-                        f"the writer's colmap")
-                if pmap.get(c) == want:
-                    continue  # unchanged mapping
-                owner = inv_pmap.get(want)
-                if owner is not None and c not in pmap:
-                    renames[c] = owner  # renamed c → owner; bytes valid
-                elif c in anew and want not in taken and c not in pmap:
-                    fresh[c] = want  # evolution column, id still free
-                else:
-                    raise ConcurrentCommitError(
-                        f"column-mapping conflict on {root}: logical "
-                        f"column {c!r} (staged as {want!r}) no longer "
-                        f"matches the latest manifest's mapping "
-                        f"{pmap.get(c)!r} — a concurrent commit/drop/"
-                        f"assign landed; restage against the new latest")
-            if renames:
-                from pyspark.sql.types import StructField
-                eff_schema = StructType(
-                    [StructField(renames.get(f.name, f.name),
-                                 f.dataType, f.nullable)
-                     for f in df_schema.fields])
-            newmap = {**pmap, **fresh}
-        tracked = bool(pm.get("row_tracking")) if pm is not None else False
-        row_hwm = None
-        if tracked:
-            if n_rows_by_idx is None:
-                import pyarrow.parquet as pq
-                n_rows_by_idx = [
-                    pq.ParquetFile(os.path.join(root, _DATA, f))
-                    .metadata.num_rows for f in new_files]
-            base = int(pm.get("row_hwm", 0)) if pm is not None else 0
-            for name, nr in zip(new_files, n_rows_by_idx):
-                new_stats.setdefault(name, {})[_BRID_KEY] = base
-                base += nr
-            row_hwm = base
-        man = _next_manifest(pm, version, new_files, new_stats,
-                             "prev" if carry_prev else None,
-                             tk, eff_schema, allow_evolution)
-        if man is None:
-            return prev  # type: ignore[return-value]
-        if tracked:
-            man["row_tracking"] = True
-            man["row_hwm"] = row_hwm
-        if mapped:
-            man["colmap"] = newmap
-            man["colmax"] = max(int(colmax),
-                                int(pm.get("colmax", 0)))
-        cons = (pm.get("constraints") or {}) if pm is not None else {}
-        if cons != validated_cons:
-            if cons and new_files:
-                spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    staged = _tagged_rows(
-                        spark, root, man["schema"], {}, new_files,
-                        row_ids=False, cmap=newmap).drop("_rt_f",
-                                                         "_rt_ri")
-                    _validate_constraints(staged, cons,
-                                          unresolvable_pass=True)
-                else:
-                    # the streaming sink's commit runs in the Python
-                    # data-source runner process (no SparkSession):
-                    # validate the staged bytes with an embedded scan
-                    _validate_constraints_local(root, new_files, cons,
-                                                cmap=newmap)
-            validated_cons = cons
-        raw = _segmented_body(root, praw, man,
-                              "prev" if carry_prev else None,
-                              new_files, new_stats)
-        raw["op"] = op
-        raw["n_new_files"] = len(new_files)
-        if _publish_cas(root, version, json.dumps(raw)):
-            return version
-        # lost the CAS: blind appends commute — loop and re-derive
+    return _publish_files(
+        SparkSession.getActiveSession(), root, new_files,
+        StructType.fromJson(schema_json), stats_cols=stats_cols,
+        bloom_cols=bloom_cols, txn=txn, allow_evolution=allow_evolution,
+        op=op, removed=frozenset() if carry_prev else None,
+        colmap=colmap, assigned_new=assigned_new, colmax=colmax)
 
 
 def _validate_constraints_local(root: str, files: list[str],
@@ -2440,18 +2309,17 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     shared storage from the task); the driver collects ONE ROW PER
     MARKED FILE — never per deleted row — so a takedown marking 10^8
     scattered rows costs a shuffle of the victim rows, not driver
-    memory. Conflict rule: whole-table semantics derived from ``prev``
-    — a lost CAS raises (same class as delete/merge)."""
-    import json
+    memory. Conflict rule: file-granularity — a lost CAS rebases over
+    commits disjoint from the marked files (:func:`_rebase_safe`) and
+    raises on any overlap."""
+    from pyspark.sql.types import StructType
 
-    tk = _txn_key(txn)
     prev = latest_version(root)
     if prev is None:
         raise ValueError(f"no committed version under {root}")
-    if tk is not None and txn_committed(root, txn):
+    if txn is not None and txn_committed(root, txn):
         return prev, 0, 0
     man = read_manifest(root, prev)
-    praw = _read_manifest_raw(root, prev)
     stats = man.get("stats", {})
     # census with BOTH tags projected directly above the scan (the
     # `_metadata` column does not reliably resolve through joins, so
@@ -2471,7 +2339,7 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     # provisional number for sidecar NAMING only (uniqueness + the
     # dead-writer vacuum rule key on it; manifests reference sidecars
     # BY NAME, so a rebase publishing at a later version keeps every
-    # staged sidecar valid without re-homing)
+    # staged sidecar valid as named)
     _, stage_version = _latest_and_claim(root)
     existing_dvs = dict(dvm)  # {file: old sidecar name}, O(#files)
     marked = _stage_dv_sidecars(root, victims, existing_dvs,
@@ -2481,70 +2349,19 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     n_victims = int(sum(r["n_new"] for r in marked))
     by_file = {r["_f"]: r["dv"] for r in marked}
 
-    # PUBLISH LOOP with FILE-GRANULARITY conflict checking (Delta's
+    # publish with FILE-GRANULARITY conflict checking (Delta's
     # WriteSerializable): the expensive staging above is paid ONCE; a
     # commit that interleaved is a conflict only when its changes
     # actually touch this delete's marked files (or table metadata) —
-    # otherwise the manifest REBASES onto the new latest and re-CASes.
-    # Two writers MoR-deleting disjoint files (two takedowns on
-    # different days) both land with one staging pass each; a blind
-    # append never conflicts with a delete it wasn't visible to.
-    for _attempt in range(8):
-        cur, version = _latest_and_claim(root)
-        curraw = _read_manifest_raw(root, cur)  # cur is visible ⇒ safe
-        curman = _resolve(root, curraw)
-        if cur != prev and not _rebase_safe(man, curman, by_file):
-            raise ConcurrentCommitError(
-                f"version {cur} of {root} was committed concurrently "
-                f"and touches this merge-on-read delete's marked files "
-                f"(or table metadata); derived from superseded version "
-                f"{prev} — re-read and retry (staged DV sidecars are "
-                f"vacuumable orphans)")
-        txns = _normalize_txns(curraw.get("txns"))
-        if tk is not None:
-            if txns.get(tk[0], -1) >= tk[1]:
-                return cur, 0, 0  # a replay committed concurrently
-            txns[tk[0]] = tk[1]
-        cstats = curman.get("stats", {})
-        new_stats: dict = {}
-        for f, dvname in by_file.items():
-            fs = dict(cstats.get(f, {}))
-            fs[_DV_KEY] = dvname
-            new_stats[f] = fs
-        # segments: references whose files are untouched carry BY NAME;
-        # segments holding a marked file re-emit with the updated stats
-        # (segment-level copy-on-write, mirroring commit_delete's)
-        marked_set = set(new_stats)
-        if "segments" in curraw:
-            prev_iter = [(e, _read_segment(root, _seg_name(e)))
-                         for e in curraw["segments"]]
-        else:  # legacy flat manifest migrates to one segment
-            prev_iter = [(None, {"files": curraw["files"],
-                                 "stats": curraw.get("stats", {})})]
-        segs = []
-        for entry, sd in prev_iter:
-            if entry is not None and not (set(sd["files"]) & marked_set):
-                segs.append(entry)
-                continue
-            sstats = {**sd.get("stats", {}),
-                      **{f: new_stats[f] for f in sd["files"]
-                         if f in marked_set}}
-            segs.append(_seg_ref(_write_segment(root, sd["files"], sstats),
-                                 sd["files"], sstats))
-        raw = _carry_row_tracking(
-            {"version": version, "format": _FORMAT_VERSION,
-             "segments": segs, "txns": txns,
-             "schema": curman.get("schema"),
-             "constraints": dict(curman.get("constraints") or {}),
-             "op": "delete_mor", "n_new_files": 0}, curman)
-        if _publish_cas(root, version, json.dumps(raw)):
-            return version, len(by_file), n_victims
-        # CAS lost: loop — the next attempt revalidates against (and
-        # rebases onto) whatever just landed
-    raise ConcurrentCommitError(
-        f"merge-on-read delete on {root} lost {8} consecutive CAS "
-        f"races; re-read and retry (staged DV sidecars are vacuumable "
-        f"orphans)")
+    # otherwise the manifest REBASES onto the new latest. Two writers
+    # MoR-deleting disjoint files both land with one staging pass
+    # each; a blind append never conflicts with a delete it wasn't
+    # visible to.
+    v = _publish_files(
+        spark, root, [], StructType.fromJson(man["schema"]), txn=txn,
+        op="delete_mor", dv_updates=by_file, based_on=prev,
+        colmap=man.get("colmap"), colmax=int(man.get("colmax", 0)))
+    return v, len(by_file), n_victims
 
 
 def _rebase_safe(base_man: dict, cur_man: dict, removed) -> bool:
@@ -2945,7 +2762,7 @@ def _version_diff(spark: SparkSession, root: str, v_from: int,
     else:
         # large vectors: set-difference the (file, position) frames
         # DISTRIBUTED — positions never materialize on the driver
-        # (the same threshold & sidecar-scan plan as _apply_dvs)
+        # (the same threshold & sidecar-scan plan as _logical_rows)
         pf_df = (_dv_positions_df(spark, root, dvm_from,
                                   "_rt_f", "_rt_ri")
                  if dvm_from else None)
@@ -2978,20 +2795,36 @@ def _mutual_except_all(a: DataFrame, b: DataFrame) -> tuple[DataFrame,
     plan-level sharing, deliberately NOT a persist: the r16
     library-persist attempt was reverted after CacheManager substituted
     stale fragments in interleaved-commit sessions, and exchange reuse
-    is scoped to a single plan so no state survives the query."""
+    is scoped to a single plan so no state survives the query.
+
+    Scale edges fail loudly: the signed count stays a bigint, and a
+    row whose |count| exceeds ``array_repeat``'s int range raises
+    instead of wrapping; the temp column names are chosen clear of the
+    inputs' columns."""
     cols = a.columns
-    tagged = (a.select(*cols, F.lit(1).alias("_vd_w"))
-              .unionByName(b.select(*cols, F.lit(-1).alias("_vd_w"))))
-    counts = tagged.groupBy(*cols).agg(F.sum("_vd_w").alias("_vd_d"))
+    w, d, r = (_fresh_name(cols, n) for n in ("_vd_w", "_vd_d", "_vd_r"))
+    tagged = (a.select(*cols, F.lit(1).cast("bigint").alias(w))
+              .unionByName(b.select(*cols, F.lit(-1).cast("bigint")
+                                    .alias(w))))
+    counts = tagged.groupBy(*cols).agg(F.sum(w).alias(d))
 
     def _side(sign: int) -> DataFrame:
-        n = (F.col("_vd_d") * sign).cast("int")
+        n = F.col(d) * sign
+        reps = F.when(n > 2147483647, F.raise_error(F.lit(
+            "version diff: a row's multiplicity exceeds 2^31-1"))
+        ).otherwise(n).cast("int")
         return (counts.filter(n > 0)
-                .withColumn("_vd_r",
-                            F.explode(F.array_repeat(F.lit(True), n)))
+                .withColumn(r, F.explode(F.array_repeat(F.lit(True), reps)))
                 .select(*cols))
 
     return _side(1), _side(-1)
+
+
+def _fresh_name(cols, base: str) -> str:
+    """``base``, underscore-extended until no column of ``cols`` has it."""
+    while base in cols:
+        base += "_"
+    return base
 
 
 def version_diff_typed(spark: SparkSession, root: str, v_from: int,
@@ -3130,60 +2963,36 @@ def history(spark: SparkSession, root: str) -> DataFrame:
 
 def _metadata_commit(root: str, mutate, op: str,
                      based_on: int | None = None) -> int:
-    """Publish a metadata-only commit: the latest manifest's segments
-    (or its flat file list wrapped into one segment) re-referenced
-    verbatim, with ``mutate(raw_fields)`` applied to the copied
-    top-level fields. Same conflict rule as rewrites: a lost CAS
-    raises. ``based_on`` pins the snapshot the caller DERIVED the
-    mutation from (``add_check_constraint``'s validation scan): any
-    other observed latest raises, closing the window where a commit
-    lands between the derivation and this publish."""
-    import json
+    """Publish a metadata-only commit through :func:`_transact`: the
+    latest manifest's segments (or its flat file list wrapped into one
+    segment) re-referenced verbatim, with ``mutate(body)`` applied to
+    the copied schema / constraints / mapping fields. Whole-table
+    conflict rule: a lost CAS raises. ``based_on`` pins the snapshot
+    the caller DERIVED the mutation from (``add_check_constraint``'s
+    validation scan): any other observed latest raises, closing the
+    window where a commit lands between the derivation and this
+    publish."""
+    def build(version: int, praw: dict | None, pm: dict | None) -> dict:
+        if pm is None:
+            raise ValueError(f"no committed version under {root}")
+        body = _carry_row_tracking(
+            {"segments": _segments_of(root, praw),
+             "schema": pm.get("schema"),
+             "constraints": dict(pm.get("constraints") or {})}, pm)
+        mutate(body)
+        return body
 
-    # one listing for both the latest AND the claim: two separate
-    # listings would let a commit land between them, making the claim
-    # skip past it and this metadata commit (built from the stale
-    # latest) silently drop its files — the lost-update race
-    prev, claim = _latest_and_claim(root)
-    if prev is None:
-        raise ValueError(f"no committed version under {root}")
-    if based_on is not None and prev != based_on:
-        raise ConcurrentCommitError(
-            f"snapshot validation failed for {root}: this {op} was "
-            f"derived from version {based_on} but the latest is {prev} "
-            f"— re-derive and retry")
-    praw = _read_manifest_raw(root, prev)
-    res = _resolve(root, praw)
-    if "segments" in praw:
-        segs = list(praw["segments"])
-    elif res["files"]:
-        segs = [_seg_ref(_write_segment(root, res["files"],
-                                        res.get("stats", {})),
-                         res["files"], res.get("stats", {}))]
-    else:
-        segs = []
-    raw = _carry_row_tracking(
-        {"version": claim, "format": _FORMAT_VERSION,
-         "segments": segs, "txns": _normalize_txns(praw.get("txns")),
-         "schema": res.get("schema"),
-         "constraints": dict(res.get("constraints") or {}),
-         "op": op, "n_new_files": 0}, res)
-    mutate(raw)
-    if _publish_cas(root, claim, json.dumps(raw)):
-        return claim
-    raise ConcurrentCommitError(
-        f"version {claim} of {root} was committed concurrently; this "
-        f"{op} was derived from superseded version {prev} — re-read and "
-        f"retry")
+    return _transact(root, op, build, based_on=based_on)
 
 
 def add_check_constraint(spark: SparkSession, root: str, name: str,
                          expr_sql: str) -> int:
     """``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)`` — record a
     CHECK constraint in the manifest so EVERY subsequent commit's rows
-    validate against it before publishing (enforcement lives in
-    ``_commit``, so append/rewrite/delete/merge outputs are all
-    covered from one place). Like Delta, the EXISTING table is scanned
+    validate against it before publishing (enforcement lives in the
+    one commit path, :func:`_transact`, so every data commit — append,
+    rewrite, delete, merge, staged sink files — is covered from one
+    place). Like Delta, the EXISTING table is scanned
     once first — a constraint the current data already violates is
     rejected here, not discovered later. NULL passes (SQL CHECK
     three-valued semantics). The constraint set version-travels with
@@ -3348,13 +3157,7 @@ def restore(spark: SparkSession, root: str, to_version: int,
     no retained manifest references, but the caller may have passed a
     narrower ``keep_versions``); a missing file raises here, at
     restore time, rather than at first read."""
-    import json
-
-    tk = _txn_key(txn)
-    # latest + claim from ONE listing (the separate-listing variant is
-    # a lost-update race: a commit landing between the two reads gets
-    # skipped past and silently un-done by this restore)
-    prev, claim = _latest_and_claim(root)
+    prev = latest_version(root)
     if prev is None:
         raise ValueError(f"cannot restore {root}: no committed version")
     if not 1 <= to_version <= prev:
@@ -3389,33 +3192,17 @@ def restore(spark: SparkSession, root: str, to_version: int,
             f"cannot restore {root} to version {to_version}: "
             f"{len(missing)} data/sidecar file(s) vacuumed, "
             f"e.g. {missing[0]}")
-    praw = _read_manifest_raw(root, prev)
-    txns = _normalize_txns(praw.get("txns"))
-    if tk is not None:
-        if txns.get(tk[0], -1) >= tk[1]:
-            return prev
-        txns[tk[0]] = tk[1]
-    if "segments" in target_raw:
-        segs = list(target_raw["segments"])
-    elif target["files"]:
-        segs = [_seg_ref(_write_segment(root, target["files"],
-                                        target.get("stats", {})),
-                         target["files"], target.get("stats", {}))]
-    else:
-        segs = []
-    raw = _carry_row_tracking(
-        {"version": claim, "format": _FORMAT_VERSION,
-         "segments": segs, "txns": txns, "schema": target.get("schema"),
-         "constraints": dict(target.get("constraints") or {}),
-         "op": "restore", "n_new_files": 0,
-         "restored_from": to_version},
-        target, hwm_src=_resolve(root, praw))
-    if _publish_cas(root, claim, json.dumps(raw)):
-        return claim
-    raise ConcurrentCommitError(
-        f"version {claim} of {root} was committed concurrently; this "
-        f"restore was derived from superseded version {prev} — re-read "
-        f"and retry")
+
+    def build(version: int, praw: dict | None, pm: dict | None) -> dict:
+        return _carry_row_tracking(
+            {"segments": _segments_of(root, target_raw),
+             "schema": target.get("schema"),
+             "constraints": dict(target.get("constraints") or {}),
+             "restored_from": to_version}, target, hwm_src=pm)
+
+    # pinned to the snapshot checked above: a commit landing after it
+    # raises instead of being silently un-done by this restore
+    return _transact(root, "restore", build, txn=txn, based_on=prev)
 
 
 def clone(root_src: str, root_dst: str,
@@ -3441,8 +3228,6 @@ def clone(root_src: str, root_dst: str,
     time travel into pre-clone states belongs to the source). Falls
     back to a byte copy if the destination is on another filesystem.
     ``root_dst`` must not already be a store."""
-    import json
-
     if latest_version(root_dst) is not None:
         raise ValueError(f"clone destination {root_dst} already exists")
     v = version if version is not None else latest_version(root_src)
@@ -3450,7 +3235,6 @@ def clone(root_src: str, root_dst: str,
         raise ValueError(f"no committed version under {root_src}")
     res = read_manifest(root_src, v)
     os.makedirs(os.path.join(root_dst, _DATA), exist_ok=True)
-    os.makedirs(os.path.join(root_dst, _MANIFESTS), exist_ok=True)
 
     def _link(name: str) -> None:
         src = os.path.join(root_src, _DATA, name)
@@ -3469,18 +3253,18 @@ def clone(root_src: str, root_dst: str,
     for dv in {fs[_DV_KEY] for fs in stats.values()
                if isinstance(fs, dict) and _DV_KEY in fs}:
         _link(dv)
-    seg = _seg_ref(_write_segment(root_dst, res["files"], stats),
-                   res["files"], stats)
-    raw = _carry_row_tracking(
-        {"version": 1, "format": _FORMAT_VERSION, "segments": [seg],
-         "txns": {}, "schema": res.get("schema"),
-         "constraints": dict(res.get("constraints") or {}),
-         "op": "clone", "n_new_files": 0,
-         "cloned_from": [os.path.abspath(root_src), v]}, res)
-    if not _publish_cas(root_dst, 1, json.dumps(raw)):
-        raise ConcurrentCommitError(
-            f"clone destination {root_dst} was created concurrently")
-    return 1
+
+    def build(version: int, praw: dict | None, pm: dict | None) -> dict:
+        if pm is not None:
+            raise ValueError(f"clone destination {root_dst} already exists")
+        return _carry_row_tracking(
+            {"segments": _segments_of(
+                root_dst, {"files": res["files"], "stats": stats}),
+             "schema": res.get("schema"),
+             "constraints": dict(res.get("constraints") or {}),
+             "cloned_from": [os.path.abspath(root_src), v]}, res)
+
+    return _transact(root_dst, "clone", build)
 
 
 def optimize_zorder(spark: SparkSession, root: str, col_a: str,
@@ -3549,9 +3333,11 @@ def commit_multi_append(spark: SparkSession, targets, txlog: str,
     coordinator pid is dead (the decision write is first-wins, so a
     lazarus coordinator cannot double-decide). Dies after the decision
     — every store resolves from the record; no second phase is needed
-    because visibility is resolved at read time. A prepare that LOSES
-    its CAS to a concurrent single-store commit aborts the whole
-    transaction (this function raises; retry re-derives).
+    because visibility is resolved at read time. A prepare that loses
+    its CAS to a concurrent single-store commit retries like any blind
+    append; one that fails (schema, constraints, an in-doubt top)
+    aborts the whole transaction (this function raises; retry
+    re-derives).
 
     ``targets``: iterable of ``(root, df, opts)`` with ``opts`` an
     optional dict of the :func:`commit_append` keyword arguments
@@ -3641,7 +3427,8 @@ def retry_on_conflict(fn, max_attempts: int = 5):
     is that the previous derivation is stale, so a closure over an
     already-computed DataFrame would just republish the stale result.
     Blind appends never need this (they auto-retry inside
-    :func:`_commit` because they commute); rewrite/delete/merge do."""
+    :func:`_transact` because they commute); rewrite/delete/merge do
+    (a disjoint interloper rebases, an overlapping one raises)."""
     last = None
     for _ in range(max_attempts):
         try:

@@ -3,7 +3,8 @@ its OWN SparkSession (a genuinely separate driver JVM — the point of
 the test), stages at a file barrier so both workers' commit windows
 overlap, then blind-appends a row range into the shared store. Blind
 appends commute, so whichever worker loses the manifest CAS must
-re-home its staged files and retry — across process boundaries.
+retry, publishing its staged files as named — across process
+boundaries.
 
 Usage: occ_append_worker.py <store_root> <barrier_path> <lo> <hi>
 The worker touches <barrier>.ready.<idx> (idx derived from lo) and

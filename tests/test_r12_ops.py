@@ -355,17 +355,23 @@ def test_interrupted_commit_leaves_recoverable_orphans(
 
 def test_concurrent_append_retries_and_keeps_both(spark, tmp_path,
                                                   monkeypatch):
-    """A blind append that loses the manifest CAS must re-home its
-    staged files and retry against the new latest — BOTH writers' rows
-    end up in the chain (appends commute)."""
+    """A blind append that loses the manifest CAS must retry against the
+    new latest, publishing its staged files under the names they were
+    staged with — BOTH writers' rows end up in the chain (appends
+    commute)."""
     root = str(tmp_path / "occstore")
     vstore.commit_append(spark, root, _mk(spark, 0, 100, 0).coalesce(1))
     orig_cas = vstore._publish_cas
     raced = {"done": False}
+    data = os.path.join(root, "data")
+    base_files = set(os.listdir(data))
 
     def racing_cas(r, version, body):
         if not raced["done"]:
             raced["done"] = True
+            # our files are staged by now; record their names
+            raced["staged"] = {f for f in set(os.listdir(data)) - base_files
+                               if f.endswith(".parquet")}
             # a competing writer sneaks in a full commit for the same
             # version before ours publishes
             monkeypatch.setattr(vstore, "_publish_cas", orig_cas)
@@ -384,6 +390,10 @@ def test_concurrent_append_retries_and_keeps_both(spark, tmp_path,
     assert got.filter("k = 1").count() == 100
     # the racer's snapshot (v2) excludes our rows
     assert vstore.read_version(spark, root, 2).count() == 150
+    # the loser's files published under their staged names: no re-home
+    ours = (set(vstore.read_manifest(root, 3)["files"])
+            - set(vstore.read_manifest(root, 2)["files"]))
+    assert raced["staged"] and ours == raced["staged"]
 
 
 def test_concurrent_rewrite_conflicts_loudly(spark, tmp_path, monkeypatch):

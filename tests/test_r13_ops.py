@@ -372,7 +372,7 @@ def test_occ_two_process_concurrent_appends(spark, tmp_path):
     separate driver processes race blind appends into one store with a
     file barrier so their commit windows overlap; both must land as
     consecutive versions with no lost rows — the os.link CAS plus
-    append re-home/retry resolving the race across process boundaries,
+    the append retry resolving the race across process boundaries,
     not threads sharing one JVM."""
     import subprocess
     import sys
@@ -832,7 +832,7 @@ def test_manifest_format_gate(spark, tmp_path):
 
 def test_threaded_multi_writer_appends_lose_nothing(spark, tmp_path):
     """In-JVM multi-writer linearizability: 4 threads race 3 blind
-    appends each through the CAS + re-home/retry path; every row must
+    appends each through the CAS + retry path; every row must
     land exactly once and versions must be contiguous. (The
     two-process test above proves the same across driver JVMs; this
     one drives far more CAS collisions per second.)"""

@@ -542,6 +542,10 @@ def test_staged_commit_mapped_cas_retry_after_rename(spark, tmp_path,
     assert df.columns == ["id", "z"]
     assert df.count() == 12
     assert fails["n"] == 0  # the flaky CAS actually fired
+    # the manifest records its CAS attempts: the lost one plus the win,
+    # and a single attempt on the uncontended first append
+    assert vstore._read_manifest_raw(root, v)["attempts"] == 2
+    assert vstore._read_manifest_raw(root, 1)["attempts"] == 1
 
 
 def test_sink_arrow_writer_array_columns(spark, tmp_path):

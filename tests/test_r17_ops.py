@@ -118,3 +118,21 @@ def test_mutual_except_all_multiset_identity(spark, dup_shape):
 
     assert ms(got_ab) == ms(want_ab)
     assert ms(got_ba) == ms(want_ba)
+
+
+def test_mutual_except_all_inputs_holding_temp_column_names(spark):
+    """Frames that already carry the diff's temp column names (a diff
+    of a diff's output, say) must diff like any others: the temp names
+    are chosen clear of the inputs' columns."""
+    a = spark.createDataFrame([(1, 5, 7), (1, 5, 7), (2, 6, 8)],
+                              "k long, _vd_w long, _vd_d long")
+    b = spark.createDataFrame([(1, 5, 7), (3, 0, 0)],
+                              "k long, _vd_w long, _vd_d long")
+    got_ab, got_ba = _mutual_except_all(a, b)
+    assert got_ab.columns == got_ba.columns == ["k", "_vd_w", "_vd_d"]
+
+    def ms(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert ms(got_ab) == ms(a.exceptAll(b)) == [(1, 5, 7), (2, 6, 8)]
+    assert ms(got_ba) == ms(b.exceptAll(a)) == [(3, 0, 0)]
