@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import textstats
 from ..functions.hashing import MERSENNE_P, MINHASH_PERMS, hash32, minhash_perm
+from .graph import cut, iterate
 
 
 def exact_dedup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -332,6 +333,11 @@ def _cc_driver_local(edges: DataFrame, src: str, dst: str,
         rows, f"node {node_t}, comp {node_t}")
 
 
+def _label_sum(labels: DataFrame):
+    return labels.agg(
+        F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
+
+
 def connected_components(edges: DataFrame, src: str, dst: str,
                          max_iter: int = 25,
                          driver_edges_threshold: int = DRIVER_EDGES_THRESHOLD
@@ -372,21 +378,30 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     change-count join. The sum is done in DECIMAL(38,0) so overflow
     can't fake convergence at scale.
 
-    Each round's labels are ``localCheckpoint``-ed, not merely
-    persisted: persist caches data but keeps the logical plan, and an
-    iterative join DOUBLES the plan tree per round (round k references
-    round k-1 twice) — analysis alone OOMs the driver near k≈20.
-    Checkpointing truncates lineage to the materialized blocks, so the
-    plan stays constant-size per round. On a real cluster with
-    preemptible executors, swap localCheckpoint for reliable
-    ``checkpoint()`` on a checkpoint dir; the algorithm is unchanged.
+    The rounds run on the graph operators' iteration core
+    (``graph.iterate``): this function supplies one round
+    (``label_propagation``) and the label-sum witness, and the core
+    decides the cuts and the stop. Because the witness reads every
+    state, each round's labels are cut with a DISK_ONLY
+    ``localCheckpoint``, not merely persisted: persist caches data but
+    keeps the logical plan, and an iterative join DOUBLES the plan tree
+    per round (round k references round k-1 twice) — analysis alone
+    OOMs the driver near k≈20. Checkpointing truncates lineage to the
+    materialized blocks, so the plan stays constant-size per round. On
+    a real cluster with preemptible executors, swap localCheckpoint for
+    reliable ``checkpoint()`` on a checkpoint dir; the algorithm is
+    unchanged.
 
-    Storage lifecycle: at most TWO rounds of label blocks are ever
-    referenced (the loop rebinds ``labels`` each round, dropping the
-    only reference to round k-1; Spark's ContextCleaner reclaims
-    dereferenced checkpoint RDD blocks). The edge cache is freed
-    deterministically on every exit path. The final labels' blocks back
-    the returned DataFrame and are the caller's to release.
+    Storage lifecycle: the initial and per-round label states live on
+    local DISK_ONLY blocks (like every iterative graph state: a
+    node-table-sized state never unrolls through the heap). At most
+    TWO rounds of label blocks are ever referenced (the core rebinds
+    its state each round, dropping the only reference to round k-1;
+    Spark's ContextCleaner reclaims dereferenced checkpoint RDD
+    blocks). The edge cache is freed deterministically on every exit
+    path, before a missed fixpoint raises ``RuntimeError``. The final
+    labels' blocks back the returned DataFrame and are the caller's to
+    release.
 
     Caller contract: PERSIST ``edges`` before calling. The finalizer
     choice is a ``take(threshold+1)`` probe — in the small-edge regime
@@ -417,39 +432,34 @@ def connected_components(edges: DataFrame, src: str, dst: str,
            .unionByName(edges.select(F.col(dst).alias("u"),
                                      F.col(src).alias("v")))
            .distinct().persist())
+
+    def label_propagation(labels: DataFrame) -> DataFrame:
+        # every node has >= 1 neighbor by construction, so the inner
+        # joins keep all nodes; least() folds the node's own label in
+        neigh = (sym.select("u", F.col("v").alias("node"))
+                 .join(labels, "node")
+                 .groupBy(F.col("u").alias("node"))
+                 .agg(F.min("comp").alias("neigh_min")))
+        prop = (labels.join(neigh, "node")
+                .select(F.col("node"),
+                        F.least(F.col("comp"),
+                                F.col("neigh_min")).alias("comp")))
+        # path-halving shortcut: comp ← label(comp). Inner join is
+        # total (every comp value is a node id present in labels),
+        # and label(comp) ≤ comp by monotonicity.
+        lut = prop.select(F.col("node").alias("c_node"),
+                          F.col("comp").alias("c_comp"))
+        return (prop.join(lut, prop.comp == lut.c_node)
+                .select("node", F.col("c_comp").alias("comp")))
+
     try:
-        labels = (sym.select(F.col("u").alias("node")).distinct()
-                  .withColumn("comp", F.col("node"))
-                  .localCheckpoint(eager=True))
-        prev = labels.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
-        for _ in range(max_iter):
-            # every node has >= 1 neighbor by construction, so the inner
-            # joins keep all nodes; least() folds the node's own label in
-            neigh = (sym.select("u", F.col("v").alias("node"))
-                     .join(labels, "node")
-                     .groupBy(F.col("u").alias("node"))
-                     .agg(F.min("comp").alias("neigh_min")))
-            prop = (labels.join(neigh, "node")
-                    .select(F.col("node"),
-                            F.least(F.col("comp"),
-                                    F.col("neigh_min")).alias("comp")))
-            # path-halving shortcut: comp ← label(comp). Inner join is
-            # total (every comp value is a node id present in labels),
-            # and label(comp) ≤ comp by monotonicity.
-            lut = prop.select(F.col("node").alias("c_node"),
-                              F.col("comp").alias("c_comp"))
-            labels = (prop.join(lut, prop.comp == lut.c_node)
-                      .select("node", F.col("c_comp").alias("comp"))
-                      .localCheckpoint(eager=True))
-            cur = labels.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iter} rounds")
+        labels = cut(sym.select(F.col("u").alias("node")).distinct()
+                     .withColumn("comp", F.col("node")))
+        labels, _, converged, _ = iterate(labels, label_propagation,
+                                          max_iter, until=_label_sum)
     finally:
         sym.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {max_iter} rounds")
     return labels

@@ -1,4 +1,5 @@
-"""Iterative graph centrality: exact integer PageRank.
+"""Iterative graph operators on one iteration core: exact integer
+PageRank and k-core peeling.
 
 PageRank is the link-quality signal large-scale corpus curation
 actually uses (Common Crawl's host-level ranks gate what gets crawled
@@ -17,10 +18,21 @@ integer constant ``TELEPORT = (DAMP_DEN - DAMP_NUM) * SCALE / DAMP_DEN``.
 No float touches the state, so V iterations stay bit-identical to the
 unrolled-CTE oracle at any parallelism.
 
+One iteration core: :func:`iterate` runs every iterative graph loop —
+both PageRanks, both k-core peels and the distributed rounds of
+``dedup.connected_components``. An operator supplies only its step
+function, plus a scalar witness when it runs to a fixpoint or a
+per-round observer when it reports a trajectory. The lineage-cut policy
+lives only in the core, and one rule derives every cut: a new state is
+cut with one DISK_ONLY ``localCheckpoint`` (:func:`cut`) exactly when
+something reads it later — another round, the witness or the observer.
+A fixed-round loop therefore skips the last cut (the state's only
+reader is the caller's next op), and a witnessed or observed loop cuts
+every round. The cut truncates lineage because an iterative join
+doubles its plan tree per round; DISK_ONLY because node-table-sized
+state must never unroll through the heap (the q114 lesson).
+
 Scale design:
-- The rank state is one long per node; each iteration's lineage is cut
-  with a DISK_ONLY ``localCheckpoint`` (node-table-sized state must
-  never unroll through the heap — the q114 lesson).
 - Contributions aggregate BEFORE the rank update join (map-side
   combine on dst), so the per-round shuffle is |edges| once, not
   |edges| x consumers.
@@ -45,6 +57,9 @@ node id, all integers end to end.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable, Optional
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -53,61 +68,116 @@ DAMP_NUM, DAMP_DEN = 17, 20          # damping d = 0.85 as a ratio
 TELEPORT = (DAMP_DEN - DAMP_NUM) * RANK_SCALE // DAMP_DEN  # (1-d)*SCALE
 
 
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` materialized now as local DISK_ONLY blocks, lineage
+    truncated — the one lineage cut of every iterative graph operator."""
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
+            rounds: int, until: Optional[Callable] = None,
+            observe: Optional[Callable] = None) -> tuple:
+    """Run ``state = step(state)`` up to ``rounds`` times and return
+    ``(state, ran, converged, observed)``.
+
+    ``until(state)`` is a scalar witness, read on the input state and
+    after every round: the loop stops, converged, at the first round
+    whose witness equals the previous one, and ``ran`` counts that
+    proving round (``ran == rounds`` when the cap is hit).
+    ``observe(i, prev, new)`` returns one row per round i (1-based);
+    ``observed`` lists them in round order. Without a witness ``ran`` is
+    ``rounds`` and ``converged`` is false.
+
+    A new state is cut (:func:`cut`) only when something reads it
+    later: another round, the witness or the observer. The input state
+    is the caller's to cut. Each round's jobs carry the description
+    ``<step name> round i/rounds``, appended to the caller's description,
+    which is restored on every exit path."""
+    sc = state.sparkSession.sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+    prev = until(state) if until else None
+    observed, ran, converged = [], 0, False
+    try:
+        for ran in range(1, rounds + 1):
+            label = f"{step.__name__} round {ran}/{rounds}"
+            sc.setJobDescription(f"{outer} | {label}" if outer else label)
+            new = step(state)
+            if ran < rounds or until or observe:
+                new = cut(new)
+            if observe:
+                observed.append(observe(ran, state, new))
+            state = new
+            if until:
+                witness = until(state)
+                if witness == prev:
+                    converged = True
+                    break
+                prev = witness
+    finally:
+        sc.setJobDescription(outer)
+    return state, ran, converged, observed
+
+
+def _out_degree(edges: DataFrame) -> DataFrame:
+    return edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+
+def _pagerank(edges: DataFrame, iters: int, observe=None):
+    """Both PageRanks: cut the edge list (three consumers — without a
+    cut the caller's edge derivation re-runs per consumer, the
+    q113/q120 fan-out lesson), the node set and the degree-annotated
+    edges (re-read every round) and r0, then :func:`iterate` the rank
+    update."""
+    edges = cut(edges)
+    nodes = cut(edges.select(F.col("src").alias("node"))
+                .union(edges.select(F.col("dst").alias("node")))
+                .distinct())
+    ed = cut(edges.join(_out_degree(edges).hint("merge"), "src")
+             .select("src", "dst", "deg"))
+
+    def pagerank(r: DataFrame) -> DataFrame:
+        # every join here is node-table-sized on at least one side; pin
+        # them to shuffle joins (merge hint) — Catalyst's static
+        # estimator sees a small checkpointed rank table and broadcasts
+        # it, which works at test SF but is a driver-memory cliff once
+        # nodes outgrow the broadcast budget (the 100x probe showed a
+        # 512 MB broadcast-exchange). Shuffle-on-node is the
+        # scale-correct plan: no table is materialized whole anywhere.
+        summed = (ed.join(r.hint("merge"), ed["src"] == r["node"])
+                  .select(F.col("dst").alias("node"),
+                          F.expr(f"(rank_micro * {DAMP_NUM}L) div "
+                                 f"({DAMP_DEN}L * deg)").alias("c"))
+                  .groupBy("node").agg(F.sum("c").alias("s")))
+        return (nodes.join(summed.hint("merge"), "node", "left")
+                .select("node", (F.lit(TELEPORT).cast("long")
+                                 + F.coalesce(F.col("s"),
+                                              F.lit(0).cast("long"))
+                                 ).alias("rank_micro")))
+
+    r0 = cut(nodes.select("node",
+                          F.lit(RANK_SCALE).cast("long").alias("rank_micro")))
+    return iterate(r0, pagerank, iters, observe=observe)
+
+
 def pagerank_exact(edges: DataFrame, iters: int) -> DataFrame:
     """(node, rank_micro) after ``iters`` exact-integer PageRank rounds
     over the directed edge list (src long, dst long). Every node that
     appears as a src must have its in-edges present too (see module
     docstring on danglers); rank mass initializes to RANK_SCALE per
-    node."""
-    src, dst = "src", "dst"
-    # the edge list fans out to three consumers (nodes x2 via the
-    # union, outdeg, ed) — without a cut, the caller's whole edge
-    # derivation re-runs per consumer (the q113/q120 fan-out lesson)
-    edges = edges.localCheckpoint(eager=True,
-                                  storageLevel=StorageLevel.DISK_ONLY)
-    # nodes is re-read every iteration's rank-update join: cut it too
-    nodes = (edges.select(F.col(src).alias("node"))
-             .union(edges.select(F.col(dst).alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True,
-                              storageLevel=StorageLevel.DISK_ONLY))
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    # outdeg is node-sized — same broadcast-cliff reasoning as the
-    # per-round joins below: pin the shuffle join
-    ed = (edges.join(outdeg.hint("merge"), src)
-          .select(src, dst, "deg")
-          .localCheckpoint(eager=True,
-                           storageLevel=StorageLevel.DISK_ONLY))
-    r = (nodes.select("node",
-                      F.lit(RANK_SCALE).cast("long").alias("rank_micro"))
-         .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY))
-    for i in range(iters):
-        # both per-round joins are node-table-sized on at least one
-        # side; pin them to shuffle joins (merge hint) — Catalyst's
-        # static estimator sees a small checkpointed rank table and
-        # broadcasts it, which works at test SF but is a driver-memory
-        # cliff once nodes outgrow the broadcast budget (the 100x probe
-        # showed a 512 MB broadcast-exchange; a web-scale host graph is
-        # orders beyond that). Shuffle-on-node is the scale-correct
-        # plan: both sides hash-partition on the key, no table is
-        # materialized whole anywhere.
-        contrib = (ed.join(r.hint("merge"), ed[src] == r["node"])
-                   .select(F.col(dst).alias("node"),
-                           F.expr(f"(rank_micro * {DAMP_NUM}L) div "
-                                  f"({DAMP_DEN}L * deg)").alias("c")))
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        r = (nodes.join(summed.hint("merge"), "node", "left")
-             .select("node",
-                     (F.lit(TELEPORT).cast("long")
-                      + F.coalesce(F.col("s"), F.lit(0).cast("long"))
-                      ).alias("rank_micro")))
-        if i < iters - 1:
-            # cut lineage BETWEEN iterations only — the final rank
-            # table feeds one consumer (the caller's next op), so a
-            # last checkpoint would pay a node-table write for nothing
-            r = r.localCheckpoint(eager=True,
-                                  storageLevel=StorageLevel.DISK_ONLY)
-    return r
+    node. The final rank state is not cut: its only reader is the
+    caller's next op."""
+    return _pagerank(edges, iters)[0]
+
+
+def _residual(i: int, prev: DataFrame, new: DataFrame) -> DataFrame:
+    d = (prev.select("node", F.col("rank_micro").alias("prev"))
+         .join(new.hint("merge"), "node")
+         .select((F.col("rank_micro") - F.col("prev")).alias("d")))
+    return (d.agg(F.max(F.abs(F.col("d"))).alias("max_abs_delta"),
+                  F.sum(F.abs(F.col("d"))).alias("sum_abs_delta"),
+                  F.count(F.when(F.col("d") != 0, 1)).alias("n_changed"))
+            .select(F.lit(i).cast("int").alias("iter"),
+                    "max_abs_delta", "sum_abs_delta", "n_changed"))
 
 
 def pagerank_with_residuals(edges: DataFrame,
@@ -128,57 +198,23 @@ def pagerank_with_residuals(edges: DataFrame,
     bit-identical to the unrolled-CTE oracle (q135 gates all three
     columns per round).
 
-    Scale shape: identical per-round cost to pagerank_exact plus one
-    node-sized join per round for the delta (merge-hinted — same
-    broadcast-cliff reasoning as the rank-update join) reduced to a
-    1-row aggregate; the residual table is ``iters`` rows total. Every
-    round's rank state is lineage-cut (unlike pagerank_exact's
-    between-rounds-only cut, each state here has two consumers: the
-    residual aggregate and the next round)."""
-    src, dst = "src", "dst"
-    edges = edges.localCheckpoint(eager=True,
-                                  storageLevel=StorageLevel.DISK_ONLY)
-    nodes = (edges.select(F.col(src).alias("node"))
-             .union(edges.select(F.col(dst).alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True,
-                              storageLevel=StorageLevel.DISK_ONLY))
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    ed = (edges.join(outdeg.hint("merge"), src)
-          .select(src, dst, "deg")
-          .localCheckpoint(eager=True,
-                           storageLevel=StorageLevel.DISK_ONLY))
-    r = (nodes.select("node",
-                      F.lit(RANK_SCALE).cast("long").alias("rank_micro"))
-         .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY))
-    res_parts = []
-    for i in range(iters):
-        contrib = (ed.join(r.hint("merge"), ed[src] == r["node"])
-                   .select(F.col(dst).alias("node"),
-                           F.expr(f"(rank_micro * {DAMP_NUM}L) div "
-                                  f"({DAMP_DEN}L * deg)").alias("c")))
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        r_new = (nodes.join(summed.hint("merge"), "node", "left")
-                 .select("node",
-                         (F.lit(TELEPORT).cast("long")
-                          + F.coalesce(F.col("s"), F.lit(0).cast("long"))
-                          ).alias("rank_micro"))
-                 .localCheckpoint(eager=True,
-                                  storageLevel=StorageLevel.DISK_ONLY))
-        d = (r.select("node", F.col("rank_micro").alias("prev"))
-             .join(r_new.hint("merge"), "node")
-             .select((F.col("rank_micro") - F.col("prev")).alias("d")))
-        res_parts.append(d.agg(
-            F.max(F.abs(F.col("d"))).alias("max_abs_delta"),
-            F.sum(F.abs(F.col("d"))).alias("sum_abs_delta"),
-            F.count(F.when(F.col("d") != 0, 1)).alias("n_changed"))
-            .select(F.lit(i + 1).cast("int").alias("iter"),
-                    "max_abs_delta", "sum_abs_delta", "n_changed"))
-        r = r_new
-    residuals = res_parts[0]
-    for part in res_parts[1:]:
-        residuals = residuals.unionByName(part)
-    return r, residuals
+    Scale shape: the same call as pagerank_exact with a residual
+    observer — one node-sized join per round for the delta
+    (merge-hinted, same broadcast-cliff reasoning as the rank-update
+    join) reduced to a 1-row aggregate; the residual table is ``iters``
+    rows total. Because the observer reads every state, every round's
+    rank state is cut, the last one included."""
+    ranks, _, _, rows = _pagerank(edges, iters, observe=_residual)
+    return ranks, reduce(DataFrame.unionByName, rows)
+
+
+def _peel(k: int) -> Callable[[DataFrame], DataFrame]:
+    def kcore(ed: DataFrame) -> DataFrame:
+        alive = _out_degree(ed).filter(F.col("deg") >= k).select("src")
+        return (ed.join(alive.hint("merge"), "src", "left_semi")
+                .join(alive.withColumnRenamed("src", "dst").hint("merge"),
+                      "dst", "left_semi"))
+    return kcore
 
 
 def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -198,35 +234,18 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Scale shape per round: one map-side-combinable degree aggregate
     (shuffle ∝ |edges|, combine on src) and two semi-joins against the
     node-sized survivor set — pinned to shuffle joins (merge hint) for
-    the same broadcast-cliff reason as pagerank_exact; lineage cut per
-    round with a DISK_ONLY localCheckpoint."""
-    src, dst = "src", "dst"
-    ed = edges.localCheckpoint(eager=True,
-                               storageLevel=StorageLevel.DISK_ONLY)
-    for i in range(rounds):
-        alive = (ed.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-                 .filter(F.col("deg") >= k)
-                 .select(src))
-        ed = (ed.join(alive.hint("merge"), src, "left_semi")
-              .join(alive.withColumnRenamed(src, dst).hint("merge"),
-                    dst, "left_semi"))
-        if i < rounds - 1:
-            # cut lineage BETWEEN rounds only: the final round's edge
-            # set feeds exactly one consumer (the degree aggregate
-            # below), so a last checkpoint would pay a full |edges|
-            # disk write+read for nothing
-            ed = ed.localCheckpoint(eager=True,
-                                    storageLevel=StorageLevel.DISK_ONLY)
-    return (ed.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-            .select(F.col(src).alias("node"), "deg"))
+    the same broadcast-cliff reason as pagerank_exact. The final edge
+    set is not cut: its only reader is the degree aggregate."""
+    ed = iterate(cut(edges), _peel(k), rounds)[0]
+    return _out_degree(ed).withColumnRenamed("src", "node")
 
 
 def kcore_fixpoint(edges: DataFrame, k: int,
-                   max_rounds: int = 100) -> DataFrame:
+                   max_rounds: int = 100) -> tuple[DataFrame, int]:
     """(node, deg) of the TRUE k-core: peel until the surviving EDGE
     count stops changing (each pass runs one :func:`kcore_peel` round
     and pays one driver-side count as the convergence check — the
-    standard driver-coordinated fixpoint, same shape as the dedup
+    standard driver-coordinated fixpoint, same core as the dedup
     connected-components loop). The witness is the edge count, not the
     node count: on a directed graph with sink-only dst nodes the edge
     set can shrink in a round while the distinct-src count stays
@@ -243,32 +262,14 @@ def kcore_fixpoint(edges: DataFrame, k: int,
     peel passes executed INCLUDING the final no-op pass that proved the
     fixpoint — the state is fixed after ``rounds_used - 1`` effective
     peels, so callers certifying convergence-within-R compare
-    ``rounds_used - 1 <= R`` (as q136 does, relational.py).
+    ``rounds_used - 1 <= R`` (as q136 does, relational.py). When the
+    cap is hit without a proof, ``rounds_used == max_rounds``.
 
     Not oracle-gated directly: the round count is data-dependent, which
     an unrolled-CTE oracle cannot express — q136 gates it anyway by
     certifying ``rounds_used`` against a statically-unrolled bound, and
     unit tests pin it against a driver-side reference (the documented
     weaker-check class)."""
-    src, dst = "src", "dst"
-    ed = edges.localCheckpoint(eager=True,
-                               storageLevel=StorageLevel.DISK_ONLY)
-    n_prev = ed.count()
-    rounds_used = 0
-    for _ in range(max_rounds):
-        alive = (ed.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-                 .filter(F.col("deg") >= k)
-                 .select(src))
-        ed = (ed.join(alive.hint("merge"), src, "left_semi")
-              .join(alive.withColumnRenamed(src, dst).hint("merge"),
-                    dst, "left_semi")
-              .localCheckpoint(eager=True,
-                               storageLevel=StorageLevel.DISK_ONLY))
-        rounds_used += 1
-        n = ed.count()
-        if n == n_prev:
-            break
-        n_prev = n
-    core = (ed.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-            .select(F.col(src).alias("node"), "deg"))
-    return core, rounds_used
+    ed, rounds_used, _, _ = iterate(cut(edges), _peel(k), max_rounds,
+                                    until=DataFrame.count)
+    return _out_degree(ed).withColumnRenamed("src", "node"), rounds_used

@@ -953,6 +953,15 @@ edges AS MATERIALIZED (
   SELECT s AS src, c AS dst FROM und
 )"""
 
+# node ids are namespaced cust*2 / supp*2+1 (:func:`_trade_edges`)
+_NODE_TYPE_SQL = ("CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' "
+                  "END AS node_type")
+
+
+def _node_type():
+    return (F.when(F.col("node") % 2 == 0, F.lit("customer"))
+            .otherwise(F.lit("supplier")).alias("node_type"))
+
 
 def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 entities by PageRank over the undirected customer↔supplier
@@ -965,7 +974,7 @@ def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus-scale stage is the ONE orders⨝lineitem pass
     that derives distinct (customer, supplier) trade edges — everything
     after runs on the aggregated edge list, shuffle ∝ |edges| per round,
-    rank state one long per node, lineage cut per round (DISK_ONLY).
+    rank state one long per node, lineage cut between rounds (DISK_ONLY).
     Exactness: ranks in integer micro-units, damping+split as a single
     BIGINT floor division, teleport an integer constant — V rounds stay
     bit-identical to the unrolled-CTE oracle, so the driver hash
@@ -975,11 +984,9 @@ def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import graph
     r = graph.pagerank_exact(_trade_edges(spark, sf_dir), PR_ITERS)
     ranked = r.orderBy(F.col("rank_micro").desc(), "node").limit(PR_TOPK)
-    return ranked.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-         .otherwise(F.lit("supplier")).alias("node_type"),
-        F.expr("node div 2").cast("long").alias("node_id"),
-        "rank_micro")
+    return ranked.select(_node_type(),
+                         F.expr("node div 2").cast("long").alias("node_id"),
+                         "rank_micro")
 
 
 def _pagerank_ctes() -> tuple[str, str]:
@@ -1020,8 +1027,7 @@ def _pagerank_sql() -> str:
     body, last = _pagerank_ctes()
     return f"""
 WITH {body}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-         AS node_type,
+SELECT {_NODE_TYPE_SQL},
        CAST(node // 2 AS BIGINT) AS node_id,
        r AS rank_micro
 FROM {last}
@@ -1087,23 +1093,28 @@ def q131_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled-CTE oracle. Output is one row per node type (n_nodes,
     sum of surviving degrees, max degree) — bounded at any scale."""
     from ..operators import graph
-    core = graph.kcore_peel(_trade_edges(spark, sf_dir),
-                            KCORE_K, KCORE_ROUNDS)
-    return (core.groupBy(
-                F.when(F.col("node") % 2 == 0, F.lit("customer"))
-                 .otherwise(F.lit("supplier")).alias("node_type"))
+    return _core_summary(graph.kcore_peel(_trade_edges(spark, sf_dir),
+                                          KCORE_K, KCORE_ROUNDS))
+
+
+def _core_summary(core: DataFrame) -> DataFrame:
+    """Per node type: n_nodes, sum and max of the surviving degrees."""
+    return (core.groupBy(_node_type())
             .agg(F.count("*").alias("n_nodes"),
                  F.sum("deg").alias("sum_deg"),
                  F.max("deg").alias("max_deg")))
 
 
-def _kcore_sql() -> str:
-    rounds = []
+def _kcore_sql(k: int, rounds: int, converged_flag: bool) -> str:
+    """Unrolled ``rounds``-round peel at threshold ``k`` over the trade
+    graph, summarized like :func:`_core_summary`; ``converged_flag``
+    adds q136's literal ``TRUE AS converged_within_bound``."""
+    peel = []
     prev = "e0"
-    for i in range(1, KCORE_ROUNDS + 1):
-        rounds.append(f"""
+    for i in range(1, rounds + 1):
+        peel.append(f"""
 a{i} AS MATERIALIZED (
-  SELECT src AS node FROM {prev} GROUP BY src HAVING count(*) >= {KCORE_K}
+  SELECT src AS node FROM {prev} GROUP BY src HAVING count(*) >= {k}
 ),
 e{i} AS MATERIALIZED (
   SELECT e.src, e.dst FROM {prev} e
@@ -1111,15 +1122,15 @@ e{i} AS MATERIALIZED (
     AND e.dst IN (SELECT node FROM a{i})
 )""")
         prev = f"e{i}"
+    flag = ",\n       TRUE AS converged_within_bound" if converged_flag else ""
     return f"""
 WITH {_TRADE_CTES},
-e0 AS MATERIALIZED (SELECT src, dst FROM edges),{",".join(rounds)},
+e0 AS MATERIALIZED (SELECT src, dst FROM edges),{",".join(peel)},
 core AS (SELECT src AS node, count(*) AS deg FROM {prev} GROUP BY src)
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-         AS node_type,
+SELECT {_NODE_TYPE_SQL},
        count(*) AS n_nodes,
        CAST(sum(deg) AS BIGINT) AS sum_deg,
-       max(deg) AS max_deg
+       max(deg) AS max_deg{flag}
 FROM core GROUP BY 1
 """
 
@@ -1173,42 +1184,8 @@ def _kcore_converged_summary(edges: DataFrame, k: int,
     # rounds_used == bound + 3 > bound + 1, so the flag is false then
     # too — the cap cannot masquerade as convergence.
     converged = (rounds_used - 1) <= bound
-    return (core.groupBy(
-                F.when(F.col("node") % 2 == 0, F.lit("customer"))
-                 .otherwise(F.lit("supplier")).alias("node_type"))
-            .agg(F.count("*").alias("n_nodes"),
-                 F.sum("deg").alias("sum_deg"),
-                 F.max("deg").alias("max_deg"))
-            .withColumn("converged_within_bound", F.lit(bool(converged))))
-
-
-def _kcore_fix_sql() -> str:
-    rounds = []
-    prev = "f0"
-    for i in range(1, KCORE_FIX_BOUND + 1):
-        rounds.append(f"""
-fa{i} AS MATERIALIZED (
-  SELECT src AS node FROM {prev} GROUP BY src
-  HAVING count(*) >= {KCORE_FIX_K}
-),
-f{i} AS MATERIALIZED (
-  SELECT e.src, e.dst FROM {prev} e
-  WHERE e.src IN (SELECT node FROM fa{i})
-    AND e.dst IN (SELECT node FROM fa{i})
-)""")
-        prev = f"f{i}"
-    return f"""
-WITH {_TRADE_CTES},
-f0 AS MATERIALIZED (SELECT src, dst FROM edges),{",".join(rounds)},
-core AS (SELECT src AS node, count(*) AS deg FROM {prev} GROUP BY src)
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-         AS node_type,
-       count(*) AS n_nodes,
-       CAST(sum(deg) AS BIGINT) AS sum_deg,
-       max(deg) AS max_deg,
-       TRUE AS converged_within_bound
-FROM core GROUP BY 1
-"""
+    return _core_summary(core).withColumn("converged_within_bound",
+                                          F.lit(bool(converged)))
 
 
 # --- q125: blocked fuzzy join (edit-distance record linkage) -------------
@@ -1312,9 +1289,11 @@ QUERIES: dict[str, Query] = {
     "q107_bloom_join": Query(q107_bloom_join, _Q107_SQL),
     "q125_fuzzy_linkage": Query(q125_fuzzy_linkage, _Q125_SQL),
     "q128_pagerank": Query(q128_pagerank, _pagerank_sql()),
-    "q131_kcore": Query(q131_kcore, _kcore_sql()),
+    "q131_kcore": Query(q131_kcore, _kcore_sql(KCORE_K, KCORE_ROUNDS, False)),
     "q135_pagerank_convergence": Query(q135_pagerank_convergence,
                                        _q135_sql()),
-    "q136_kcore_converged": Query(q136_kcore_converged, _kcore_fix_sql()),
+    "q136_kcore_converged": Query(
+        q136_kcore_converged,
+        _kcore_sql(KCORE_FIX_K, KCORE_FIX_BOUND, True)),
     "q114_global_sort": Query(q114_global_sort, _Q114_SQL),
 }

@@ -18,6 +18,7 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_stock_market_data_postgresql_spark.operators import dedup
@@ -241,6 +242,17 @@ def test_connected_components_diameter_beyond_round_cap(spark):
                                      driver_edges_threshold=0).collect()
     assert {r["node"] for r in got} == set(range(301))
     assert all(r["comp"] == 0 for r in got)
+
+
+def test_connected_components_raises_without_fixpoint_in_max_iter(spark):
+    # the same chain needs several doubling rounds; a cap of two cannot
+    # reach the fixpoint, and the distributed loop must say so rather
+    # than return half-propagated labels
+    chain = [(300 - i, 300 - i - 1) for i in range(300)]
+    df = spark.createDataFrame(chain, ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="no fixpoint in 2 rounds"):
+        dedup.connected_components(df, "id_a", "id_b", max_iter=2,
+                                   driver_edges_threshold=0)
 
 
 # --- q117: duplicate-span removal ----------------------------------------

@@ -109,14 +109,17 @@ def _pagerank_residual_ref(edges, iters):
 def test_q135_residuals_match_reference_on_handcrafted_graph(spark):
     from etl_pipeline_stock_market_data_postgresql_spark.operators.graph import (
         pagerank_with_residuals)
+    from test_r9_late_ops import _pagerank_ref
     # asymmetric digraph with a dangling-ish sink pattern and a cycle
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 4), (4, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
     for iters in (1, 3, 5):
-        _r, res = pagerank_with_residuals(df, iters)
+        ranks, res = pagerank_with_residuals(df, iters)
         got = sorted((r.iter, r.max_abs_delta, r.sum_abs_delta, r.n_changed)
                      for r in res.collect())
         assert got == _pagerank_residual_ref(edges, iters), iters
+        assert {r.node: r.rank_micro for r in ranks.collect()} == \
+            _pagerank_ref(edges, iters), iters
 
 
 def test_q135_trajectory_properties(spark, sf_dir):

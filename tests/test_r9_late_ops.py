@@ -159,7 +159,7 @@ def test_pagerank_matches_reference_on_handcrafted_graph(spark):
     und = [(1, 2), (2, 3), (1, 3), (1, 4)]
     edges = und + [(b, a) for a, b in und]
     df = spark.createDataFrame(edges, "src long, dst long")
-    for iters in (1, 3):
+    for iters in (0, 1, 3):
         got = {r.node: r.rank_micro
                for r in pagerank_exact(df, iters).collect()}
         assert got == _pagerank_ref(edges, iters)
@@ -245,7 +245,7 @@ def test_kcore_cascade_matches_reference_on_path_graph(spark):
     und = [(i, i + 1) for i in range(1, 6)]
     edges = und + [(b, a) for a, b in und]
     df = spark.createDataFrame(edges, "src long, dst long")
-    for rounds in (1, 2, 3):
+    for rounds in (0, 1, 2, 3):
         got = {r.node: r.deg for r in kcore_peel(df, 2, rounds).collect()}
         assert got == _kcore_ref(edges, 2, rounds), rounds
     # round 3 has peeled everything (6-node path dies in 3 rounds of
