@@ -78,22 +78,21 @@ def _warm_engine_surfaces(spark) -> None:
 
 
 def _scratch_marker_snapshot(sf_dir: str) -> dict[str, int]:
-    """(path → mtime_ns) of every fixture fingerprint/marker file in
-    the per-SF scratch tree. Compared before/after the fixture phase
-    to report how many fixtures were actually (re)built — a rebuilt
-    fixture rewrites its marker, a warm one never touches it."""
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage \
-        import _scratch_base
+    """(path → mtime_ns) of every fixture fingerprint file in the
+    per-SF scratch tree. Compared before/after the fixture phase to
+    report how many fixtures were actually (re)built — ``fixture`` and
+    ``cached_parquet`` both write the fingerprint LAST on a rebuild,
+    and a warm fixture never touches it."""
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache \
+        import _FP_NAME, scratch_base
 
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     snap: dict[str, int] = {}
     if not os.path.isdir(base):
         return snap
     for dirpath, _dirs, files in os.walk(base):
         for fn in files:
-            if (fn == "_INPUT_FINGERPRINT" or fn.startswith("_Q1")
-                    or fn.endswith(".bounds.json")
-                    or fn == "_emb_vec_max.json" or fn == "_BOUNDS"):
+            if fn == _FP_NAME:
                 p = os.path.join(dirpath, fn)
                 try:
                     snap[p] = os.stat(p).st_mtime_ns

@@ -1,26 +1,35 @@
-"""The fixture/timing boundary (r17: de-game the scratch cache).
+"""The fixture/timing boundary.
 
 Many gated queries read FIXTURE state — derived tables, versioned-store
-mutation chains, stream feeds, input-derived split bounds — that is
-built once per (SF, input state) behind an input fingerprint and cached
-in the per-SF scratch dir (``storage._scratch_base``). The builds are
-idempotent: each ``_ensure_*`` function stat-checks the stored
-fingerprint and rebuilds only on mismatch, so query functions stay
-standalone-correct (gate/oracle runs call them inline).
+mutation chains, stream feeds, input-derived bounds — built once per
+(SF, input state) under the per-SF scratch root. Every one of them goes
+through ONE primitive, ``sources.derived_cache.fixture(sf_dir, name,
+fingerprint, build) -> (root, bounds)``, whose contract is the whole
+staleness rule:
 
-Before r17 those builds ran INSIDE the timed bench region whenever the
-scratch was cold, so the driver's timings depended on scratch-directory
-state (a reboot made the same code look ~150 s slower). This module
-draws the boundary explicitly: ``bench.py`` calls :func:`build_fixtures`
-once, UNTIMED, before the timed loop, and reports the fixture phase
-separately (``fixture_build_sec`` + cold/warm state in the bench JSON).
-The timed region is then pure query compute regardless of scratch
-state; warm-run fingerprint checks inside the queries cost file stats
-only.
+- one fixture owns exactly one directory, ``scratch_base(sf_dir)/name``
+  (checkpoints, feeds, tx logs and clone targets nest under it);
+- it is current only when ``_INPUT_FINGERPRINT`` equals the input
+  fingerprint, ``_BOUNDS`` parses, and — when the bounds list the
+  fixture's parquet ``files`` (two-delivery feeds) — each listed
+  directory holds exactly those files;
+- when stale: remove the directory, ``build(root)``, write ``_BOUNDS``
+  (temp file + rename), then the fingerprint LAST, so a crash anywhere
+  leaves the fixture stale and the next call rebuilds it.
 
-This is fixture construction, not result caching: every declared query
-still computes its RESULT from its inputs on every run, and the oracle
-revalidates that result each run. Nothing here touches query outputs.
+(The shared derived tables — trade edges, the dedup signature index,
+the ANN model — use ``derived_cache.cached_parquet``, which applies the
+same fingerprint rule but publishes by atomic rename for concurrent
+readers.) Each builder below is therefore idempotent: warm calls cost
+file reads only, so query functions stay standalone-correct (gate and
+oracle runs call them inline).
+
+``bench.py`` calls :func:`build_fixtures` once, UNTIMED, before the
+timed loop and reports the phase separately (``fixture_build_sec`` +
+cold/warm state), so the timed region is pure query compute regardless
+of scratch state. This is fixture construction, not result caching:
+every declared query still computes its RESULT from its inputs on every
+run, and the oracle revalidates that result each run.
 """
 
 from __future__ import annotations
@@ -33,11 +42,11 @@ from pyspark.sql import SparkSession
 
 
 def fixture_builders() -> dict[str, Callable[[SparkSession, str], object]]:
-    """Name → idempotent fixture builder (fingerprint check + build on
-    mismatch). Listed dependency-first so a cold scratch builds each
-    shared fixture exactly once under its own label — builders also
-    ensure their own dependencies, so ordering is cosmetic for
-    correctness."""
+    """Name → idempotent fixture builder (``derived_cache.fixture`` or
+    ``cached_parquet`` underneath). Listed dependency-first so a cold
+    scratch builds each shared fixture exactly once under its own label
+    — builders also ensure their own dependencies, so ordering is
+    cosmetic for correctness."""
     from . import relational, similarity, storage, streaming_exec, text_dedup
 
     def ann_base_model(spark: SparkSession, sf_dir: str) -> None:

@@ -920,8 +920,8 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the orders side is nowhere near broadcastable."""
     import os
 
-    from ..sources.derived_cache import cached_parquet, table_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import (cached_parquet, scratch_base,
+                                         table_fingerprint)
 
     def build() -> DataFrame:
         orders = load(spark, sf_dir, "orders").select(
@@ -934,7 +934,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (F.col("l_suppkey") * 2 + 1).alias("s"))
                 .distinct())
 
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     fp = table_fingerprint(sf_dir, ("orders", "lineitem"),
                            params="trade_und_v1")
     und = cached_parquet(spark, os.path.join(base, "trade_und"), fp, build)

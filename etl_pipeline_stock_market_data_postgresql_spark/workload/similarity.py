@@ -1069,33 +1069,19 @@ FROM ranked r LEFT JOIN exact x
 
 def _emb_vec_max(spark: SparkSession, sf_dir: str) -> int:
     """max(vec_id) of the embeddings table — the split point every ANN
-    fixture in this module derives its batch boundaries from. Memoized
-    in a fingerprint-keyed scratch sidecar beside the fixtures it
-    parameterizes (q172's _BOUNDS pattern): the value is fixture
-    metadata (it only shapes WHERE the cached fixtures split), it is
-    re-derived whenever the embeddings files change, and at 100 TB the
-    per-run max() it replaces is a full-column scan."""
-    import json
-    import os
+    fixture in this module derives its batch boundaries from. A
+    bounds-only fixture (``derived_cache.fixture``): the value is
+    fixture metadata (it only shapes WHERE the cached fixtures split),
+    it is re-derived whenever the embeddings files change, and at
+    100 TB the per-run max() it replaces is a full-column scan."""
+    from ..sources.derived_cache import fixture, table_fingerprint
 
-    from ..sources.derived_cache import table_fingerprint
-    from .storage import _scratch_base
+    def build(_root: str) -> dict:
+        return {"mx": load(spark, sf_dir, "embeddings")
+                .agg(F.max("vec_id")).first()[0]}
 
-    base, _ = _scratch_base(sf_dir)
-    fp = table_fingerprint(sf_dir, ("embeddings",), params="vec_max_v1")
-    p = os.path.join(base, "_emb_vec_max.json")
-    try:
-        with open(p, encoding="ascii") as f:
-            d = json.load(f)
-        if d.get("fp") == fp:
-            return d["v"]
-    except (OSError, ValueError):
-        pass
-    v = load(spark, sf_dir, "embeddings").agg(F.max("vec_id")).first()[0]
-    os.makedirs(base, exist_ok=True)
-    with open(p, "w", encoding="ascii") as f:
-        json.dump({"fp": fp, "v": v}, f)
-    return v
+    return fixture(sf_dir, "emb_vec_max", table_fingerprint(
+        sf_dir, ("embeddings",), params="vec_max_v1"), build)[1]["mx"]
 
 
 def _ivfpq_model_fp(sf_dir: str, b: int) -> str:
@@ -1151,10 +1137,9 @@ def _ivfpq_base_index(spark: SparkSession, sf_dir: str, vecs: DataFrame,
 
     from ..operators import kmeans
     from ..operators.similarity import pq_argmin_codes
-    from ..sources.derived_cache import cached_parquet
-    from .storage import _scratch_base
+    from ..sources.derived_cache import cached_parquet, scratch_base
 
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     fp = _ivfpq_model_fp(sf_dir, b)
     base_vecs = vecs.filter(F.col("id") <= b)
 
@@ -1397,26 +1382,18 @@ def _ann_store_materialized(spark: SparkSession,
     pass, all fingerprint-gated so re-runs are idempotent and a crash
     before the fingerprint lands rebuilds from the base. Returns
     ``(store_path, base_boundary, second_batch_boundary)``."""
-    import os
-
     from ..sources.compaction import compact_partitioned
-    from ..sources.derived_cache import _FP_NAME, _stored_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import fixture
 
-    emb = load(spark, sf_dir, "embeddings")
     max_id = _emb_vec_max(spark, sf_dir)
     b = (2 * max_id) // 3
     b2 = b + (max_id - b + 1) // 2  # second batch boundary (arrival split)
-    scratch, _ = _scratch_base(sf_dir)
-    store = os.path.join(scratch, "ann_store")
-    store_fp = _ivfpq_model_fp(sf_dir, b) + f"_chain_v1_b2{b2}"
 
-    if _stored_fingerprint(store) != store_fp:
-        import shutil
-        shutil.rmtree(store, ignore_errors=True)
+    def build(store: str) -> None:
         # multi-consumer on the cold path (base build + two encodes);
         # q113's convention: caller owns cache lifetime
-        vecs = _spread_vectors(spark, emb).persist()
+        vecs = _spread_vectors(spark, load(spark, sf_dir, "embeddings")
+                               ).persist()
         centroids, codebook, postings = _ivfpq_base_index(
             spark, sf_dir, vecs, b)
         (postings.select("id", "m", "code", "cell")
@@ -1431,10 +1408,14 @@ def _ann_store_materialized(spark: SparkSession,
              .write.mode("append").partitionBy("cell").parquet(store))
         compact_partitioned(spark, store, "cell", "id",
                             ANN_STORE_TARGET_BYTES)
-        with open(os.path.join(store, _FP_NAME), "w",
-                  encoding="ascii") as f:
-            f.write(store_fp)
+
+    store = fixture(sf_dir, "ann_store", _ann_store_fp(sf_dir, b, b2),
+                    build)[0]
     return store, b, b2
+
+
+def _ann_store_fp(sf_dir: str, b: int, b2: int) -> str:
+    return _ivfpq_model_fp(sf_dir, b) + f"_chain_v1_b2{b2}"
 
 
 def q137_ann_index_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,27 +1601,21 @@ def _ensure_ann_gc_store(spark: SparkSession, sf_dir: str) -> str:
     """Fingerprint-gated build of q139's GC'd copy of the shared ANN
     postings store (delete runs on the COPY so q137/q138's
     certificates stay valid). Returns the gc store path."""
-    import os
     import shutil
 
     from ..sources.compaction import delete_where_partitioned
-    from ..sources.derived_cache import _FP_NAME, _stored_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import _FP_NAME, fixture
 
-    store, _b, _b2 = _ann_store_materialized(spark, sf_dir)
-    scratch, _ = _scratch_base(sf_dir)
-    gc_store = os.path.join(scratch, "ann_store_gc")
-    fp = _stored_fingerprint(store) + f"_gc_v1_mod{ANN_GC_MOD}"
-    if _stored_fingerprint(gc_store) != fp:
-        shutil.rmtree(gc_store, ignore_errors=True)
+    store, b, b2 = _ann_store_materialized(spark, sf_dir)
+
+    def build(gc_store: str) -> None:
         shutil.copytree(store, gc_store,
                         ignore=shutil.ignore_patterns(_FP_NAME))
         delete_where_partitioned(spark, gc_store, "cell",
                                  F.col("id") % ANN_GC_MOD == 0)
-        with open(os.path.join(gc_store, _FP_NAME), "w",
-                  encoding="ascii") as f:
-            f.write(fp)
-    return gc_store
+
+    return fixture(sf_dir, "ann_store_gc", _ann_store_fp(sf_dir, b, b2)
+                   + f"_gc_v1_mod{ANN_GC_MOD}", build)[0]
 
 
 def q139_ann_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1709,26 +1684,18 @@ def _ann_versioned_root(spark: SparkSession,
     ``(root, base_boundary, second_batch_boundary)``."""
     import math
     import os
-    import shutil
 
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import fixture
 
-    emb = load(spark, sf_dir, "embeddings")
     max_id = _emb_vec_max(spark, sf_dir)
     b = (2 * max_id) // 3
     b2 = b + (max_id - b + 1) // 2
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "ann_store_versioned")
-    # v3 token: the chain gained v5 (multi-column stats) + v6 (delete)
-    fp = _ivfpq_model_fp(sf_dir, b) + f"_snap_v3_b2{b2}"
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
 
-    if _stored_fingerprint(root) != fp:
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         # multi-consumer cold path; q113's clearCache convention
-        vecs = _spread_vectors(spark, emb).persist()
+        vecs = _spread_vectors(spark, load(spark, sf_dir, "embeddings")
+                               ).persist()
         centroids, codebook, postings = _ivfpq_base_index(
             spark, sf_dir, vecs, b)
         cols = ("id", "m", "code", "cell")
@@ -1774,8 +1741,11 @@ def _ann_versioned_root(spark: SparkSession,
         vstore.commit_delete(
             spark, root, (F.col("id") > b) & (F.col("id") <= b2),
             stats_cols=("cell", "id"))
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
+
+    # v3 token: the chain gained v5 (multi-column stats) + v6 (delete)
+    root = fixture(sf_dir, "ann_store_versioned",
+                   _ivfpq_model_fp(sf_dir, b) + f"_snap_v3_b2{b2}",
+                   build)[0]
     return root, b, b2
 
 
@@ -2033,25 +2003,15 @@ def _ann_retrain_root(spark: SparkSession, sf_dir: str) -> str:
     frozen-model snapshot, the rollback path every cutover needs).
     Fingerprint-gated; the retrained model caches under its own
     ``tag`` so it coexists with the frozen one."""
-    import os
-    import shutil
-
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import fixture
 
-    emb = load(spark, sf_dir, "embeddings")
     max_id = _emb_vec_max(spark, sf_dir)
     b = (2 * max_id) // 3
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "ann_store_retrain")
-    fp = (_ivfpq_model_fp(sf_dir, b) + "_cutover_v1_"
-          + _ivfpq_model_fp(sf_dir, max_id)[:16])
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
 
-    if _stored_fingerprint(root) != fp:
-        shutil.rmtree(root, ignore_errors=True)
-        vecs = _spread_vectors(spark, emb).persist()
+    def build(root: str) -> None:
+        vecs = _spread_vectors(spark, load(spark, sf_dir, "embeddings")
+                               ).persist()
         cols = ("id", "m", "code", "cell")
         centroids, codebook, _base = _ivfpq_base_index(
             spark, sf_dir, vecs, b)
@@ -2066,9 +2026,10 @@ def _ann_retrain_root(spark: SparkSession, sf_dir: str) -> str:
             spark, sf_dir, vecs, max_id, tag="_retrained")
         vstore.commit_rewrite(spark, root, postings_r.select(*cols),
                               stats_cols=("id", "cell"), txn="cutover")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "ann_store_retrain",
+                   _ivfpq_model_fp(sf_dir, b) + "_cutover_v1_"
+                   + _ivfpq_model_fp(sf_dir, max_id)[:16], build)[0]
 
 
 def q145_ann_retrain_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:

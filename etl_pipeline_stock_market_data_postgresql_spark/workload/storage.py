@@ -18,88 +18,34 @@ equivalent of "the DBA added the right index".
 
 from __future__ import annotations
 
-import getpass
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import Query
 from ..sources.bucketed import colocated_join, write_bucketed
+from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 from ..sources.tables import load
 from ..sources.zorder import write_zordered
 
 Q75_BUCKETS = 8
 
 
-def _scratch_base(sf_dir: str) -> tuple[str, str]:
-    """Deterministic per-SF scratch location for the bucketed copies.
-
-    Overwritten on every run (idempotent); keyed by the sf_dir basename
-    so gate (sf0.01) and bench (sf0.1) runs never clobber each other,
-    and by user (or an explicit SPARK_GRAFT_SCRATCH root) so concurrent
-    runs under different accounts on a shared host neither race on the
-    overwrite nor squat each other's predictable /tmp subpath. On a real
-    cluster this would be a warehouse path — the layout contract, not
-    the tmp location, is what the query demonstrates. Lifecycle: the
-    copies persist between runs as a cache; delete the directory to
-    reclaim space.
-    """
-    sf_tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    root = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if not root:
-        try:
-            user = getpass.getuser()
-        except (KeyError, OSError):  # no passwd entry (containers)
-            user = f"uid{os.getuid()}"
-        # Prefer a RAM-backed medium for engine-internal scratch: the
-        # sandbox's block device sustains ~25 MB/s bulk writes (measured
-        # r16), and write-heavy queries (compaction, stream feeds,
-        # versioned-store fixtures) were both disk-bound themselves and
-        # stalling NEIGHBORING queries through dirty-page writeback
-        # (guide §6: fix I/O placement of temp state). The whole per-SF
-        # scratch tree is ~100 MB — trivially RAM-resident. A cluster
-        # deployment sets SPARK_GRAFT_SCRATCH to a warehouse path; this
-        # default only picks the fastest LOCAL medium.
-        base = ("/dev/shm" if os.path.isdir("/dev/shm")
-                and os.access("/dev/shm", os.W_OK)
-                else tempfile.gettempdir())
-        root = os.path.join(base, f"etl_spark_bucketed_{user}")
-    return os.path.join(root, sf_tag), sf_tag
-
-
-def _store_bounds(root: str, bounds: dict) -> None:
-    """Persist build-only table bounds beside a fixture's fingerprint
-    (q172's ``_BOUNDS`` pattern, shared): call at the END of the build
-    branch, BEFORE the fingerprint write, so a crash between the two
-    leaves the fixture stale and rebuildable."""
-    import json
-
-    # temp-file + rename so a crash mid-write can never leave a
-    # truncated sidecar behind a matching fingerprint (r17 ADVICE)
-    tmp = os.path.join(root, f"_BOUNDS.tmp-{os.getpid()}")
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(bounds, f)
-    os.replace(tmp, os.path.join(root, "_BOUNDS"))
-
-
-def _load_bounds(root: str) -> dict:
-    """Read back :func:`_store_bounds`. Only valid once the fixture's
-    fingerprint matched (the guard that skipped the build): warm runs
-    get their input-derived constants here instead of re-scanning the
-    input table — at 100 TB that scan IS the fixture cost."""
-    import json
-
-    with open(os.path.join(root, "_BOUNDS"), encoding="ascii") as f:
-        return json.load(f)
+def _events_q(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """events with ``value`` quantized to integer micro-units
+    (``value_q``) so store checksums sum exactly — the Spark side of
+    the oracles' ``CAST(floor(value * 1000000) AS BIGINT)``. ``extra``
+    columns sit between ``user_id`` and ``value_q``."""
+    return load(spark, sf_dir, "events").select(
+        "event_id", "user_id", *extra,
+        F.floor(F.col("value") * 1000000).cast("long").alias("value_q"))
 
 
 def q75_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write orders/customer bucketed on custkey, return the co-located
     join. Split out so tests can assert the Exchange-free join subtree
     on exactly what the gated query runs."""
-    base, sf_tag = _scratch_base(sf_dir)
+    base, sf_tag = scratch_base(sf_dir)
     t_orders, t_customer = f"b75_orders_{sf_tag}", f"b75_customer_{sf_tag}"
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice")
@@ -203,7 +149,7 @@ def q93_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the footer ranges this query certifies. At 100 TB this is
     OPTIMIZE ZORDER: point-ish (user, time) queries touch
     ~1/√files of the table instead of all of it."""
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     zpath = os.path.join(base, "events_z")
     ev = load(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_type", "value")
@@ -269,7 +215,7 @@ def q110_dynamic_partition_overwrite(spark: SparkSession,
     the dynamic overwrite's commit replaces only the partitions present
     in the incoming data — metadata work ∝ |touched partitions|, never
     a full-table rewrite."""
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     path = os.path.join(base, "q110_events_by_day")
     ev = (load(spark, sf_dir, "events")
           .select("event_id", "user_id", "event_type", "value",
@@ -344,7 +290,7 @@ def q118_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Observation
 
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     path = os.path.join(base, "q118_events_by_day")
     ev = (load(spark, sf_dir, "events")
           .select("event_id", "user_id", "event_type", "value",
@@ -424,7 +370,7 @@ def q127_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference evolves its PostgreSQL schema with
     ALTER TABLE (schema.sql); this is the file-based equivalent where
     history cannot be rewritten in place."""
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     legacy_dir = os.path.join(base, "evolve_legacy")
     current_dir = os.path.join(base, "evolve_current")
     orders = load(spark, sf_dir, "orders")
@@ -481,7 +427,7 @@ def q133_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash60
 
     docs = load(spark, sf_dir, "documents")
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     path = os.path.join(base, "q133_docs_jsonl")
     (docs.repartition(JSONL_SHARDS)
          .write.mode("overwrite").json(path))
@@ -532,26 +478,15 @@ FROM documents GROUP BY source
 
 
 def _ensure_q147(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q147 (merge chain store);
-    idempotent — warm runs pay only the fingerprint stat check. Called
-    inline by the query (standalone correctness) and untimed by
-    bench.build_fixtures (the fixture/timing boundary). Returns the
-    store root."""
+    """q147's merge chain store, built through
+    ``derived_cache.fixture`` (warm runs pay only the fingerprint and
+    bounds reads). Called inline by the query (standalone correctness)
+    and untimed by ``fixtures.build_fixtures`` (the fixture/timing
+    boundary). Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_versioned_merge")
-    fp = table_fingerprint(sf_dir, ("events",), params="q147_merge_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bounds: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
@@ -579,9 +514,9 @@ def _ensure_q147(spark: SparkSession, sf_dir: str) -> str:
                             corrections.unionByName(inserts),
                             key_cols=("event_id",),
                             stats_cols=("event_id",), txn="q147-merge")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_versioned_merge", table_fingerprint(
+        sf_dir, ("events",), params="q147_merge_v1"), build)[0]
 
 
 def q147_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,30 +603,14 @@ SELECT * FROM summ2 UNION ALL SELECT * FROM summ3
 """
 
 
-def _ensure_q148(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q148 (schema-evolution
-    store), q147's ensure pattern; owns the bounds sidecar (including
-    the backfill for fixtures predating it). Returns the store root."""
+def _q148_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q148's schema-evolution store and its split bound ``b``."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_versioned_evolve")
-    fp = table_fingerprint(sf_dir, ("events",), params="q148_evolve_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    def _base() -> DataFrame:
-        return (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = _base()
-        # build-only input scan; the bound the gated read needs
-        # persists beside the fingerprint
+    def build(root: str) -> dict:
+        base = _events_q(spark, sf_dir)
+        # build-only input scan; the bound the gated read needs rides
+        # the fixture's bounds
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
         vstore.commit_append(spark, root,
@@ -703,18 +622,14 @@ def _ensure_q148(spark: SparkSession, sf_dir: str) -> str:
         vstore.commit_append(spark, root, evolved,
                              stats_cols=("event_id",),
                              allow_evolution=True)
-        _store_bounds(root, {"b": b})
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    try:
-        _load_bounds(root)["b"]
-    except (OSError, ValueError, KeyError):
-        # fixture predates the sidecar, or a crash truncated it:
-        # backfill once (r17 ADVICE: a corrupt sidecar must not wedge
-        # every warm run behind a matching fingerprint)
-        mx, = _base().agg(F.max("event_id")).first()
-        _store_bounds(root, {"b": (2 * mx) // 3})
-    return root
+        return {"b": b}
+
+    return fixture(sf_dir, "events_versioned_evolve", table_fingerprint(
+        sf_dir, ("events",), params="q148_evolve_v1"), build)
+
+
+def _ensure_q148(spark: SparkSession, sf_dir: str) -> str:
+    return _q148_fixture(spark, sf_dir)[0]
 
 
 def q148_versioned_schema_evolution(spark: SparkSession,
@@ -743,8 +658,8 @@ def q148_versioned_schema_evolution(spark: SparkSession,
     sweep over every file); legacy files are never rewritten."""
     from ..sources import versioned_store as vstore
 
-    root = _ensure_q148(spark, sf_dir)
-    b = _load_bounds(root)["b"]
+    root, bnd = _q148_fixture(spark, sf_dir)
+    b = bnd["b"]
 
     v1 = vstore.read_version(spark, root, 1)
     v2 = vstore.read_version(spark, root, 2)
@@ -807,20 +722,9 @@ def _cdf_chain_root(spark: SparkSession, sf_dir: str) -> str:
     shifted past the max), v3 = DELETE of the ``% 17`` takedown
     slice. Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    base = (load(spark, sf_dir, "events")
-            .select("event_id", "user_id", "event_type",
-                    F.floor(F.col("value") * 1000000).cast("long")
-                    .alias("value_q")))
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_cdf_typed")
-    fp = table_fingerprint(sf_dir, ("events",), params="q150_cdf_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bounds: warm runs never scan the input table
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
@@ -845,9 +749,9 @@ def _cdf_chain_root(spark: SparkSession, sf_dir: str) -> str:
                              (F.col("event_id") % 17 == 0)
                              & (F.col("event_id") <= b),
                              stats_cols=("event_id",), txn="q150-delete")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_cdf_typed", table_fingerprint(
+        sf_dir, ("events",), params="q150_cdf_v1"), build)[0]
 
 
 def q150_versioned_cdf_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,23 +857,12 @@ FROM feed GROUP BY transition, change_type
 
 
 def _ensure_q151(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q151 (conditional-merge
-    chain store), q147's ensure pattern. Returns the store root."""
+    """q151's conditional-merge chain store (q147's fixture pattern).
+    Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_versioned_condmerge")
-    fp = table_fingerprint(sf_dir, ("events",), params="q151_condmerge_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bounds: warm runs never scan the input table
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
@@ -997,9 +890,9 @@ def _ensure_q151(spark: SparkSession, sf_dir: str) -> str:
                         "value_q": F.col("s.value_q")},
             not_matched_by_source_delete=(F.col("t.event_id") % 19 == 0)
             & (F.col("t.event_id") > b))
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_versioned_condmerge", table_fingerprint(
+        sf_dir, ("events",), params="q151_condmerge_v1"), build)[0]
 
 
 def q151_versioned_conditional_merge(spark: SparkSession,
@@ -1193,23 +1086,12 @@ FROM v3 GROUP BY event_type
 
 
 def _ensure_q153(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q153 (restore chain store),
-    q147's ensure pattern. Returns the store root."""
+    """q153's restore chain store (q147's fixture pattern). Returns the
+    store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_versioned_restore")
-    fp = table_fingerprint(sf_dir, ("events",), params="q153_restore_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        base = _events_q(spark, sf_dir)
         # build-only bound: warm runs never scan the input table
         mx, = base.agg(F.max("event_id")).first()
         vstore.commit_append(spark, root,
@@ -1223,9 +1105,9 @@ def _ensure_q153(spark: SparkSession, sf_dir: str) -> str:
         vstore.commit_append(spark, root, fresh,
                              stats_cols=("event_id",), txn="q153-append")
         vstore.restore(spark, root, 1, txn="q153-restore")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_versioned_restore", table_fingerprint(
+        sf_dir, ("events",), params="q153_restore_v1"), build)[0]
 
 
 def q153_versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,46 +1202,28 @@ FROM base
 """
 
 
-def _ensure_q154(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q154 (zorder chain store);
-    owns the bounds sidecar + backfill. Returns the store root."""
+def _q154_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q154's zorder chain store and its probe windows' input maxima
+    (``emax``, ``umax``)."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_versioned_zorder")
-    fp = table_fingerprint(sf_dir, ("events",), params="q154_zorder_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    def _base() -> DataFrame:
-        return (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = _base()
+    def build(root: str) -> dict:
+        base = _events_q(spark, sf_dir)
         # build-only bounds; the probe windows the gated read needs
-        # persist beside the fingerprint
+        # ride the fixture's bounds
         emax, umax = base.agg(F.max("event_id"), F.max("user_id")).first()
         vstore.commit_append(spark, root, base.repartition(8),
                              stats_cols=("user_id", "event_id"))
         vstore.optimize_zorder(spark, root, "user_id", "event_id",
                                n_files=8, txn="q154-zorder")
-        _store_bounds(root, {"emax": emax, "umax": umax})
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    try:
-        b = _load_bounds(root)
-        b["emax"], b["umax"]
-    except (OSError, ValueError, KeyError):
-        # sidecar missing or corrupt: backfill once (r17 ADVICE)
-        emax, umax = _base().agg(F.max("event_id"),
-                                 F.max("user_id")).first()
-        _store_bounds(root, {"emax": emax, "umax": umax})
-    return root
+        return {"emax": emax, "umax": umax}
+
+    return fixture(sf_dir, "events_versioned_zorder", table_fingerprint(
+        sf_dir, ("events",), params="q154_zorder_v1"), build)
+
+
+def _ensure_q154(spark: SparkSession, sf_dir: str) -> str:
+    return _q154_fixture(spark, sf_dir)[0]
 
 
 def q154_versioned_optimize_zorder(spark: SparkSession,
@@ -1394,9 +1258,8 @@ def q154_versioned_optimize_zorder(spark: SparkSession,
     vacuum; commit metadata O(delta)."""
     from ..sources import versioned_store as vstore
 
-    root = _ensure_q154(spark, sf_dir)
-    _bounds = _load_bounds(root)
-    emax, umax = _bounds["emax"], _bounds["umax"]
+    root, bnd = _q154_fixture(spark, sf_dir)
+    emax, umax = bnd["emax"], bnd["umax"]
 
     probes = {
         1: {"user_id": (0, umax // 2), "event_id": (0, emax // 4)},
@@ -1468,20 +1331,12 @@ FROM agg CROSS JOIN (SELECT 1 AS version UNION ALL SELECT 2) v
 
 
 def _ensure_q157(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q157 (HLL register store),
-    q147's ensure pattern. Returns the store root."""
+    """q157's HLL register store (q147's fixture pattern). Returns the
+    store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
     from .events_analytics import phll_bucket_rho
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_hll_store")
-    fp = table_fingerprint(sf_dir, ("events",), params="q157_sketch_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         base = load(spark, sf_dir, "events").select(
             F.col("event_id").alias("x"))
         # build-only bounds: warm runs never scan the input table
@@ -1505,9 +1360,9 @@ def _ensure_q157(spark: SparkSession, sf_dir: str) -> str:
                                   stats_cols=("bucket",),
                                   txn=("q157-ingest", i),
                                   based_on=prev)
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_hll_store", table_fingerprint(
+        sf_dir, ("events",), params="q157_sketch_v1"), build)[0]
 
 
 def q157_versioned_sketch_maintenance(spark: SparkSession,
@@ -1586,43 +1441,26 @@ FROM regs_{v}"""
             f"{ctes}\n{body}")
 
 
-def _ensure_q158(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q158 (bloom-indexed store);
-    owns the bounds sidecar + backfill. Returns the store root."""
+def _q158_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q158's bloom-indexed store and its probe-id base ``mx``."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_bloom_index")
-    fp = table_fingerprint(sf_dir, ("events",), params="q158_bloom_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    def _base() -> DataFrame:
-        return (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = _base()
+    def build(root: str) -> dict:
+        base = _events_q(spark, sf_dir)
         # build-only input scan; the probe-id base the gated read
-        # needs persists beside the fingerprint
+        # needs rides the fixture's bounds
         mx, = base.agg(F.max("event_id")).first()
         vstore.commit_append(spark, root, base.repartition(8),
                              stats_cols=("event_id",),
                              bloom_cols=("event_id",))
-        _store_bounds(root, {"mx": mx})
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    try:
-        _load_bounds(root)["mx"]
-    except (OSError, ValueError, KeyError):
-        # sidecar missing or corrupt: backfill once (r17 ADVICE)
-        mx, = _base().agg(F.max("event_id")).first()
-        _store_bounds(root, {"mx": mx})
-    return root
+        return {"mx": mx}
+
+    return fixture(sf_dir, "events_bloom_index", table_fingerprint(
+        sf_dir, ("events",), params="q158_bloom_v1"), build)
+
+
+def _ensure_q158(spark: SparkSession, sf_dir: str) -> str:
+    return _q158_fixture(spark, sf_dir)[0]
 
 
 def q158_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1655,8 +1493,8 @@ def q158_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and touching one file."""
     from ..sources import versioned_store as vstore
 
-    root = _ensure_q158(spark, sf_dir)
-    mx = _load_bounds(root)["mx"]
+    root, bnd = _q158_fixture(spark, sf_dir)
+    mx = bnd["mx"]
 
     # dedup: at degenerate scale factors (mx <= 2) the arithmetic
     # probes collide, and the oracle's GROUP BY probe_id would collapse
@@ -1705,25 +1543,14 @@ GROUP BY p.probe_id
 
 
 def _ensure_q159(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q159 (deletion-vector
-    chain store), q147's ensure pattern. Returns the store root."""
+    """q159's deletion-vector chain store (q147's fixture pattern).
+    Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_deletion_vectors")
-    fp = table_fingerprint(sf_dir, ("events",), params="q159_dv_v2")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
         vstore.commit_append(spark, root,
-                             base.repartitionByRange(4, "event_id"),
+                             _events_q(spark, sf_dir)
+                             .repartitionByRange(4, "event_id"),
                              stats_cols=("event_id",))
         vstore.commit_delete_mor(spark, root, F.col("event_id") % 997 == 0,
                                  txn="q159-mor-1")
@@ -1732,9 +1559,9 @@ def _ensure_q159(spark: SparkSession, sf_dir: str) -> str:
         vstore.purge_deletion_vectors(spark, root,
                                       stats_cols=("event_id",),
                                       txn="q159-purge")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_deletion_vectors", table_fingerprint(
+        sf_dir, ("events",), params="q159_dv_v2"), build)[0]
 
 
 def q159_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1859,25 +1686,14 @@ SELECT 'feed_v3_v4_del', CAST(NULL AS VARCHAR), CAST(0 AS BIGINT),
 
 
 def _ensure_q160(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Fingerprint-gated fixture build for q160 (clone + divergence),
-    q147's ensure pattern. Returns (src_root, branch_root)."""
+    """q160's clone + divergence fixture: the source store and its
+    clone nest under one fixture dir (``src``, ``branch``). Returns
+    (src_root, branch_root)."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    src = os.path.join(scratch, "events_clone_src")
-    dst = os.path.join(scratch, "events_clone_branch")
-    fp = table_fingerprint(sf_dir, ("events",), params="q160_clone_v1")
-    fp_file = os.path.join(src, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(src) != fp:
-        import shutil
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        src, dst = os.path.join(root, "src"), os.path.join(root, "branch")
+        base = _events_q(spark, sf_dir)
         # build-only bound: warm runs never scan the input table
         mx, = base.agg(F.max("event_id")).first()
         vstore.commit_append(spark, src,
@@ -1898,9 +1714,10 @@ def _ensure_q160(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "user_id", "value_q")
         vstore.commit_append(spark, src, fresh, stats_cols=("event_id",),
                              txn="q160-append")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return src, dst
+
+    root = fixture(sf_dir, "events_clone", table_fingerprint(
+        sf_dir, ("events",), params="q160_clone_v2"), build)[0]
+    return os.path.join(root, "src"), os.path.join(root, "branch")
 
 
 def q160_versioned_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2006,19 +1823,11 @@ FROM br_v2
 
 
 def _ensure_q161(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q161 (row-tracking store),
-    q147's ensure pattern. Returns the store root."""
+    """q161's row-tracking store (q147's fixture pattern). Returns the
+    store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "documents_row_tracking")
-    fp = table_fingerprint(sf_dir, ("documents",), params="q161_rt_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         base = (load(spark, sf_dir, "documents")
                 .select("doc_id", "lang", "n_chars"))
         # build-only bound: warm runs never scan the input table
@@ -2041,9 +1850,9 @@ def _ensure_q161(spark: SparkSession, sf_dir: str) -> str:
                             stats_cols=("doc_id",), txn="q161-merge")
         vstore.commit_delete(spark, root, F.col("doc_id") % 5 == 2,
                              stats_cols=("doc_id",), txn="q161-delete")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "documents_row_tracking", table_fingerprint(
+        sf_dir, ("documents",), params="q161_rt_v1"), build)[0]
 
 
 def q161_row_tracking_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2108,26 +1917,15 @@ FROM ins WHERE doc_id % 5 <> 2
 
 
 def _ensure_q162(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Fingerprint-gated fixture build for q162 (atomic cross-store
-    commit chain), q147's ensure pattern. Returns (facts, index)."""
+    """q162's atomic cross-store commit chain: both participant stores
+    and the coordinator log nest under one fixture dir (``facts``,
+    ``index``, ``txlog``). Returns (facts, index)."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    facts = os.path.join(scratch, "events_mc_facts")
-    index = os.path.join(scratch, "events_mc_index")
-    txlog = os.path.join(scratch, "events_mc_txlog")
-    fp = table_fingerprint(sf_dir, ("events",), params="q162_mc_v2")
-    fp_file = os.path.join(facts, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(facts) != fp:
-        import shutil
-        for d in (facts, index, txlog):
-            shutil.rmtree(d, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        facts, index, txlog = (os.path.join(root, d)
+                               for d in ("facts", "index", "txlog"))
+        base = _events_q(spark, sf_dir)
 
         def batch(lo, hi):
             return base.filter((F.col("event_id") > lo)
@@ -2173,9 +1971,10 @@ def _ensure_q162(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             (index, index_agg(b2, mx).coalesce(1),
              {"stats_cols": ("user_id",), "txn": ("q162", 3)}),
         ], txlog)
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return facts, index
+
+    root = fixture(sf_dir, "events_mc", table_fingerprint(
+        sf_dir, ("events",), params="q162_mc_v3"), build)[0]
+    return os.path.join(root, "facts"), os.path.join(root, "index")
 
 
 def q162_multi_store_atomic_commit(spark: SparkSession,
@@ -2294,19 +2093,11 @@ GROUP BY v.version
 
 
 def _ensure_q163(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q163 (column-mapping
-    chain store), q147's ensure pattern. Returns the store root."""
+    """q163's column-mapping chain store (q147's fixture pattern).
+    Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "documents_column_mapping")
-    fp = table_fingerprint(sf_dir, ("documents",), params="q163_cm_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         base = (load(spark, sf_dir, "documents")
                 .select("doc_id", "lang", "n_chars"))
         # build-only bound: warm runs never scan the input table
@@ -2322,9 +2113,9 @@ def _ensure_q163(spark: SparkSession, sf_dir: str) -> str:
                          F.lit("xx").alias("lang")))
         vstore.commit_append(spark, root, readd, stats_cols=("doc_id",),
                              allow_evolution=True, txn="q163-readd")
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "documents_column_mapping", table_fingerprint(
+        sf_dir, ("documents",), params="q163_cm_v1"), build)[0]
 
 
 def q163_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2460,31 +2251,17 @@ def _q164_run_stream(spark: SparkSession, src_root: str, mv_root: str,
         q.stop()
 
 
-def _ensure_q164(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q164 (CDF follower chain:
-    source store + two streaming passes into the MV store), q147's
-    ensure pattern. Returns the MV store root."""
+def _q164_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q164's CDF follower chain: the source store, the MV store and
+    the stream checkpoint nest under one fixture dir (``src``, ``mv``,
+    ``ck``). Returns the MV store root and the MV version each
+    streaming pass ended at (``v_run1``, ``v_run2``)."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
 
-    scratch, _ = _scratch_base(sf_dir)
-    src = os.path.join(scratch, "events_cdf_stream_src")
-    mv_root = os.path.join(scratch, "events_cdf_stream_mv")
-    ck = os.path.join(scratch, "events_cdf_stream_ck")
-    phases_file = os.path.join(mv_root, "_Q164_PHASES")
-    fp = table_fingerprint(sf_dir, ("events",), params="q164_follow_v1")
-    fp_file = os.path.join(mv_root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(mv_root) != fp:
-        import json
-        import shutil
-        for d in (src, mv_root, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> dict:
+        src, mv_root, ck = (os.path.join(root, d)
+                            for d in ("src", "mv", "ck"))
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bounds: warm runs never scan the input table
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
@@ -2512,12 +2289,15 @@ def _ensure_q164(spark: SparkSession, sf_dir: str) -> str:
                              & (F.col("event_id") <= b),
                              stats_cols=("event_id",), txn="q164-delete")
         _q164_run_stream(spark, src, mv_root, ck)  # pass 2: v2 + v3
-        v_run2 = vstore.latest_version(mv_root)
-        with open(phases_file, "w", encoding="ascii") as f:
-            json.dump({"v_run1": v_run1, "v_run2": v_run2}, f)
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return mv_root
+        return {"v_run1": v_run1, "v_run2": vstore.latest_version(mv_root)}
+
+    root, phases = fixture(sf_dir, "events_cdf_stream", table_fingerprint(
+        sf_dir, ("events",), params="q164_follow_v2"), build)
+    return os.path.join(root, "mv"), phases
+
+
+def _ensure_q164(spark: SparkSession, sf_dir: str) -> str:
+    return _q164_fixture(spark, sf_dir)[0]
 
 
 def q164_streaming_cdf_follower(spark: SparkSession,
@@ -2555,12 +2335,7 @@ def q164_streaming_cdf_follower(spark: SparkSession,
     subscription."""
     from ..sources import versioned_store as vstore
 
-    mv_root = _ensure_q164(spark, sf_dir)
-    phases_file = os.path.join(mv_root, "_Q164_PHASES")
-
-    import json
-    with open(phases_file, encoding="ascii") as f:
-        ph = json.load(f)
+    mv_root, ph = _q164_fixture(spark, sf_dir)
     parts = []
     for phase, v in ((1, ph["v_run1"]), (2, ph["v_run2"])):
         parts.append(
@@ -2608,20 +2383,18 @@ FROM v3 GROUP BY event_type
 
 
 def _update_cert_rollup(spark, vstore, root: str,
-                        versions: tuple[int, ...]) -> None:
+                        versions: tuple[int, ...]) -> dict:
     """Build-time INCREMENTAL certification for the UPDATE-verb
     fixtures (r15 verdict finding 2): instead of re-reading every full
     snapshot at gate time (cost ∝ table × versions — the 100× decade
     probes grew 3.8×), aggregate version 1 ONCE, then roll each later
     version forward with the SIGNED per-commit change feed
     (:func:`version_diff` — cost ∝ that commit's changed files/
-    positions, never the table). The rollup persists next to the
-    fixture's fingerprint; the gated read is then metadata-only. The
-    DuckDB oracle still recomputes every version's aggregate from
-    scratch, so a green row certifies the whole incremental
-    maintenance chain: base read + every signed delta."""
-    import json
-
+    positions, never the table). The rollup is the fixture's bounds;
+    the gated read is then metadata-only. The DuckDB oracle still
+    recomputes every version's aggregate from scratch, so a green row
+    certifies the whole incremental maintenance chain: base read +
+    every signed delta."""
     def agg(df) -> list[int]:
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -2638,42 +2411,22 @@ def _update_cert_rollup(spark, vstore, root: str,
         plus, minus = agg(ins), agg(dels)
         rows[v] = [a + p - m
                    for a, p, m in zip(rows[v - 1], plus, minus)]
-    with open(os.path.join(root, "_CERT_ROLLUP.json"), "w",
-              encoding="ascii") as f:
-        json.dump({str(v): r for v, r in rows.items()}, f)
+    return {str(v): r for v, r in rows.items()}
 
 
-def _read_cert_rollup(spark, root: str) -> DataFrame:
-    import json
-
-    with open(os.path.join(root, "_CERT_ROLLUP.json",),
-              encoding="ascii") as f:
-        rows = json.load(f)
+def _read_cert_rollup(spark, rows: dict) -> DataFrame:
     return spark.createDataFrame(
         [(int(v), r[0], r[1], r[2], r[3]) for v, r in rows.items()],
         "version int, n_rows long, id_sum long, value_q_sum long, "
         "n_corrected long")
 
 
-def _ensure_q165(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q165 (CoW UPDATE chain +
-    cert rollup), q147's ensure pattern. Returns the store root."""
+def _q165_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q165's CoW UPDATE chain store and its certification rollup."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_update_verb")
-    fp = table_fingerprint(sf_dir, ("events",), params="q165_update_v2")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> dict:
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bound: the gated read must never scan the input
         # table (its cost is the rollup + history — metadata-scale)
         mx, = base.agg(F.max("event_id")).first()
@@ -2691,10 +2444,14 @@ def _ensure_q165(spark: SparkSession, sf_dir: str) -> str:
             spark, root, F.col("event_type") == "corrected",
             {"value_q": "value_q * 2"},
             stats_cols=("event_id",), txn="q165-double")
-        _update_cert_rollup(spark, vstore, root, (1, 2, 3))
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+        return _update_cert_rollup(spark, vstore, root, (1, 2, 3))
+
+    return fixture(sf_dir, "events_update_verb", table_fingerprint(
+        sf_dir, ("events",), params="q165_update_v2"), build)
+
+
+def _ensure_q165(spark: SparkSession, sf_dir: str) -> str:
+    return _q165_fixture(spark, sf_dir)[0]
 
 
 def q165_versioned_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2725,13 +2482,13 @@ def q165_versioned_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached rollup — metadata-scale at any table size."""
     from ..sources import versioned_store as vstore
 
-    root = _ensure_q165(spark, sf_dir)
+    root, rollup = _q165_fixture(spark, sf_dir)
     hist = (vstore.history(spark, root)
             .select(F.col("version").cast("int").alias("version"), "op"))
     # certification is the build-time incremental rollup (base read +
     # signed per-commit deltas — see _update_cert_rollup); the gated
     # read is metadata-scale, the ORACLE recomputes every version full
-    return _read_cert_rollup(spark, root).join(hist, "version").select(
+    return _read_cert_rollup(spark, rollup).join(hist, "version").select(
         "version", "op", "n_rows", "id_sum", "value_q_sum",
         "n_corrected")
 
@@ -2780,25 +2537,12 @@ FROM u3
 """
 
 
-def _ensure_q166(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q166 (MoR UPDATE chain +
-    cert rollup), q147's ensure pattern. Returns the store root."""
+def _q166_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q166's MoR UPDATE chain store and its certification rollup."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_update_mor")
-    fp = table_fingerprint(sf_dir, ("events",), params="q166_updmor_v2")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> dict:
+        base = _events_q(spark, sf_dir, "event_type")
         # build-only bound (see q165): gated read stays metadata-scale
         mx, = base.agg(F.max("event_id")).first()
         b = (2 * mx) // 3
@@ -2818,10 +2562,14 @@ def _ensure_q166(spark: SparkSession, sf_dir: str) -> str:
         vstore.purge_deletion_vectors(spark, root,
                                       stats_cols=("event_id",),
                                       txn="q166-purge")
-        _update_cert_rollup(spark, vstore, root, (1, 2, 3, 4))
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+        return _update_cert_rollup(spark, vstore, root, (1, 2, 3, 4))
+
+    return fixture(sf_dir, "events_update_mor", table_fingerprint(
+        sf_dir, ("events",), params="q166_updmor_v2"), build)
+
+
+def _ensure_q166(spark: SparkSession, sf_dir: str) -> str:
+    return _q166_fixture(spark, sf_dir)[0]
 
 
 def q166_versioned_update_mor(spark: SparkSession,
@@ -2855,7 +2603,7 @@ def q166_versioned_update_mor(spark: SparkSession,
     construction, and the gated read is the cached rollup."""
     from ..sources import versioned_store as vstore
 
-    root = _ensure_q166(spark, sf_dir)
+    root, rollup = _q166_fixture(spark, sf_dir)
     hist = (vstore.history(spark, root)
             .select(F.col("version").cast("int").alias("version"), "op",
                     F.when(F.col("op") == "update_mor",
@@ -2865,7 +2613,7 @@ def q166_versioned_update_mor(spark: SparkSession,
     # signed per-commit deltas, ∝ marked positions for the MoR verbs
     # and EMPTY for the purge — see _update_cert_rollup); the gated
     # read is metadata-scale, the ORACLE recomputes every version full
-    return _read_cert_rollup(spark, root).join(hist, "version").select(
+    return _read_cert_rollup(spark, rollup).join(hist, "version").select(
         "version", "op", "n_new_files", "n_rows", "id_sum",
         "value_q_sum", "n_corrected")
 
@@ -2923,32 +2671,20 @@ FROM agg
 
 
 def _ensure_q167(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q167 (streaming store-sink
-    chain), q147's ensure pattern. Returns the store root."""
+    """q167's streaming store-sink chain: the store, its input feed and
+    the stream checkpoint nest under one fixture dir (``store``,
+    ``feed``, ``ck``). Returns the store root."""
     import time as _time
 
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
     from ..streaming import store_sink
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_sink_store")
-    feed = os.path.join(scratch, "events_sink_feed")
-    ck = os.path.join(scratch, "events_sink_ck")
-    fp = table_fingerprint(sf_dir, ("events",), params="q167_sink_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        store, feed, ck = (os.path.join(root, d)
+                           for d in ("store", "feed", "ck"))
+        base = _events_q(spark, sf_dir)
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         half = mx // 2
-        for d in (root, feed, ck):
-            shutil.rmtree(d, ignore_errors=True)
         (base.filter(F.col("event_id") <= half).coalesce(1)
          .write.parquet(feed))
         first = {f for f in os.listdir(feed) if f.endswith(".parquet")}
@@ -2963,16 +2699,16 @@ def _ensure_q167(spark: SparkSession, sf_dir: str) -> str:
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1").parquet(feed))
         q = (store_sink.write_stream_to_store(
-                stream, root, ck, app_id="q167",
+                stream, store, ck, app_id="q167",
                 stats_cols=("event_id",))
              .trigger(availableNow=True).start())
         try:
             q.awaitTermination()
         finally:
             q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return os.path.join(fixture(sf_dir, "events_sink", table_fingerprint(
+        sf_dir, ("events",), params="q167_sink_v2"), build)[0], "store")
 
 
 def q167_streaming_store_sink(spark: SparkSession,
@@ -3040,35 +2776,19 @@ FROM base
 
 
 def _ensure_q168(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q168 (incremental
-    replication chain), q147's ensure pattern. Returns the replica
-    store root."""
+    """q168's incremental replication chain: source, replica, stream
+    checkpoint and feed cursor nest under one fixture dir (``src``,
+    ``dst``, ``ck``, ``cursor``). Returns the replica store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
     from ..streaming import cdf_source, store_sink
 
-    scratch, _ = _scratch_base(sf_dir)
-    src = os.path.join(scratch, "events_repl_src")
-    dst = os.path.join(scratch, "events_repl_dst")
-    ck = os.path.join(scratch, "events_repl_ck")
-    cursor = os.path.join(scratch, "events_repl_cursor")
-    fp = table_fingerprint(sf_dir, ("events",), params="q168_repl_v1")
-    fp_file = os.path.join(dst, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(dst) != fp:
-        import shutil
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        src, dst, ck, cursor = (os.path.join(root, d)
+                                for d in ("src", "dst", "ck", "cursor"))
+        base = _events_q(spark, sf_dir)
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         b1, b2 = mx // 3, (2 * mx) // 3
-        for d in (src, dst, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        if os.path.exists(cursor):
-            os.remove(cursor)
         for lo, hi in ((None, b1), (b1, b2), (b2, mx)):
             batch = base.filter(
                 (F.col("event_id") <= hi)
@@ -3090,9 +2810,9 @@ def _ensure_q168(spark: SparkSession, sf_dir: str) -> str:
                 q.awaitTermination()
             finally:
                 q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return dst
+
+    return os.path.join(fixture(sf_dir, "events_repl", table_fingerprint(
+        sf_dir, ("events",), params="q168_repl_v2"), build)[0], "dst")
 
 
 def q168_incremental_replication(spark: SparkSession,
@@ -3163,52 +2883,43 @@ FROM base
 
 
 def _ensure_q169(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q169 (column-mapped sink
-    chain), q147's ensure pattern. Returns the store root."""
+    """q169's column-mapped sink chain: the store, its input feed and
+    the stream checkpoint nest under one fixture dir (``sink``,
+    ``feed``, ``ck``). Returns the store root."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
     from ..streaming import store_sink
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "documents_mapped_sink")
-    feed = os.path.join(scratch, "documents_mapped_feed")
-    ck = os.path.join(scratch, "documents_mapped_ck")
-    fp = table_fingerprint(sf_dir, ("documents",),
-                           params="q169_mapped_sink_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
+    def build(root: str) -> None:
+        sink, feed, ck = (os.path.join(root, d)
+                          for d in ("sink", "feed", "ck"))
         base = (load(spark, sf_dir, "documents")
                 .select("doc_id", "lang", "n_chars"))
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("doc_id")).first()
         half = mx // 2
-        for d in (root, feed, ck):
-            shutil.rmtree(d, ignore_errors=True)
         vstore.commit_append(
-            spark, root,
+            spark, sink,
             base.filter(F.col("doc_id") <= half)
             .repartitionByRange(2, "doc_id"),
             stats_cols=("doc_id",), column_mapping=True)
-        vstore.rename_column(spark, root, "n_chars", "chars")
+        vstore.rename_column(spark, sink, "n_chars", "chars")
         (base.filter(F.col("doc_id") > half)
          .withColumnRenamed("n_chars", "chars").coalesce(2)
          .write.parquet(feed))
         schema = spark.read.parquet(feed).schema
         stream = spark.readStream.schema(schema).parquet(feed)
         q = (store_sink.write_stream_to_store(
-                stream, root, ck, app_id="q169",
+                stream, sink, ck, app_id="q169",
                 stats_cols=("doc_id",))
              .trigger(availableNow=True).start())
         try:
             q.awaitTermination()
         finally:
             q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return os.path.join(fixture(sf_dir, "documents_mapped", table_fingerprint(
+        sf_dir, ("documents",), params="q169_mapped_sink_v2"), build)[0],
+        "sink")
 
 
 def q169_mapped_store_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3283,38 +2994,24 @@ FROM documents
 
 
 def _ensure_q170(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q170 (restore-feed chain),
-    q147's ensure pattern. Returns the drained-feed parquet dir."""
+    """q170's restore-feed chain: the source store, the drained feed
+    and the stream checkpoint nest under one fixture dir (``src``,
+    ``out``, ``ck``). Returns the drained-feed parquet dir."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
     from ..streaming import cdf_source
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_restore_feed_src")
-    out = os.path.join(scratch, "events_restore_feed_out")
-    ck = os.path.join(scratch, "events_restore_feed_ck")
-    fp = table_fingerprint(sf_dir, ("events",),
-                           params="q170_restore_feed_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-        for d in (root, out, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        base = (load(spark, sf_dir, "events")
-                .select("event_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
-        vstore.commit_append(spark, root,
-                             base.repartitionByRange(2, "event_id"),
+    def build(root: str) -> None:
+        src, out, ck = (os.path.join(root, d) for d in ("src", "out", "ck"))
+        vstore.commit_append(spark, src,
+                             _events_q(spark, sf_dir).drop("user_id")
+                             .repartitionByRange(2, "event_id"),
                              stats_cols=("event_id",))
-        vstore.commit_delete_mor(spark, root, F.col("event_id") % 7 == 0,
+        vstore.commit_delete_mor(spark, src, F.col("event_id") % 7 == 0,
                                  txn="q170-mor7")
-        vstore.restore(spark, root, 1)
-        vstore.commit_delete_mor(spark, root, F.col("event_id") % 5 == 0,
+        vstore.restore(spark, src, 1)
+        vstore.commit_delete_mor(spark, src, F.col("event_id") % 5 == 0,
                                  txn="q170-mor5")
-        q = (cdf_source.read_change_feed_stream(spark, root)
+        q = (cdf_source.read_change_feed_stream(spark, src)
              .writeStream.trigger(availableNow=True)
              .option("checkpointLocation", ck)
              .foreachBatch(lambda bdf, bid:
@@ -3324,9 +3021,11 @@ def _ensure_q170(spark: SparkSession, sf_dir: str) -> str:
             q.awaitTermination()
         finally:
             q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return out
+
+    return os.path.join(fixture(
+        sf_dir, "events_restore_feed", table_fingerprint(
+            sf_dir, ("events",), params="q170_restore_feed_v2"),
+        build)[0], "out")
 
 
 def q170_cdf_restore_follower(spark: SparkSession,
@@ -3465,24 +3164,16 @@ def q171_streaming_cdc_merge(spark: SparkSession,
 
 
 def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q171 (streaming CDC merge
-    chain), q147's ensure pattern. Returns the store root."""
+    """q171's streaming CDC merge chain: the store, its CDC feed and
+    the stream checkpoint nest under one fixture dir (``store``,
+    ``feed``, ``ck``). Returns the store root."""
     import time as _time
 
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "customer_cdc_merge")
-    feed_dir = os.path.join(scratch, "customer_cdc_feed")
-    ck = os.path.join(scratch, "customer_cdc_ck")
-    fp = table_fingerprint(sf_dir, ("customer", "orders"),
-                           params="q171_cdc_merge_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
+    def build(root: str) -> None:
+        store, feed_dir, ck = (os.path.join(root, d)
+                               for d in ("store", "feed", "ck"))
         base = load(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("cust_id"),
             F.floor(F.col("c_acctbal") * 100).cast("long").alias("bal"))
@@ -3495,9 +3186,7 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
             .alias("bal"))
         mx, = feed.agg(F.max("v")).first()
         half = mx // 2
-        for d in (root, feed_dir, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        vstore.commit_append(spark, root,
+        vstore.commit_append(spark, store,
                              base.repartitionByRange(2, "cust_id"),
                              stats_cols=("cust_id",))
         (feed.filter(F.col("v") <= half).coalesce(1)
@@ -3520,7 +3209,7 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
                       .select("cust_id", F.col("m.bal").alias("bal"),
                               F.col("m.op").alias("op")))
             vstore.commit_merge(
-                sess, root, latest, key_cols=("cust_id",),
+                sess, store, latest, key_cols=("cust_id",),
                 stats_cols=("cust_id",),
                 matched_delete=F.col("s.op") == "D",
                 not_matched_insert_condition=F.col("op") != "D",
@@ -3536,9 +3225,10 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
             q.awaitTermination()
         finally:
             q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return os.path.join(fixture(sf_dir, "customer_cdc", table_fingerprint(
+        sf_dir, ("customer", "orders"), params="q171_cdc_merge_v2"),
+        build)[0], "store")
 
 
 _Q171_SQL = """
@@ -3587,32 +3277,18 @@ FROM sa
 """
 
 
-def _ensure_q172(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q172 (batch data-source API
-    chain), q147's ensure pattern. Returns the store root."""
-    import json
-
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
+def _q172_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """q172's batch data-source API chain store and its v1/v2 split
+    bound ``half``."""
     from ..streaming import store_sink
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_batch_api")
-    fp = table_fingerprint(sf_dir, ("events",),
-                           params="q172_batch_api_v1")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-    bounds_file = os.path.join(root, "_BOUNDS")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-
+    def build(root: str) -> dict:
         store_sink.register(spark)
         base = (load(spark, sf_dir, "events")
                 .select("event_id", "user_id", "value"))
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         half = mx // 2
-        shutil.rmtree(root, ignore_errors=True)
 
         def _write(df, mode, txn=None):
             w = (df.repartitionByRange(4, "event_id")
@@ -3628,11 +3304,14 @@ def _ensure_q172(spark: SparkSession, sf_dir: str) -> str:
         _write(high, "append", txn=("q172", 2))
         _write(high, "append", txn=("q172", 2))  # replay: must no-op
         _write(base.filter(F.col("event_id") % 3 == 0), "overwrite")
-        with open(bounds_file, "w", encoding="ascii") as f:
-            json.dump({"half": half}, f)
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+        return {"half": half}
+
+    return fixture(sf_dir, "events_batch_api", table_fingerprint(
+        sf_dir, ("events",), params="q172_batch_api_v1"), build)
+
+
+def _ensure_q172(spark: SparkSession, sf_dir: str) -> str:
+    return _q172_fixture(spark, sf_dir)[0]
 
 
 def q172_batch_source_api(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3668,16 +3347,13 @@ def q172_batch_source_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     executemany and reads with ``read_sql`` over one psycopg2 socket;
     this is the same two-verb surface as a distributed table format
     with time travel and idempotent replay."""
-    import json
-
     from ..sources import versioned_store as vstore
     from ..streaming import store_sink
 
-    root = _ensure_q172(spark, sf_dir)
+    root, bnd = _q172_fixture(spark, sf_dir)
     store_sink.register(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    with open(os.path.join(root, "_BOUNDS"), encoding="ascii") as f:
-        half = json.load(f)["half"]
+    half = bnd["half"]
     hist = vstore.history(spark, root).collect()
     ops = {r["version"]: r["op"] for r in hist}
     val = F.col("value").cast("decimal(18,4)")
@@ -3743,23 +3419,12 @@ def _cdf_range_root(spark: SparkSession, sf_dir: str) -> str:
     live ``% 11`` slice to value = -1. Fingerprint-gated build; the
     gated reads never scan the input table."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
 
-    scratch, _ = _scratch_base(sf_dir)
-    root = os.path.join(scratch, "events_cdf_range")
-    fp = table_fingerprint(sf_dir, ("events",),
-                           params="q173_cdf_range_v3")
-    fp_file = os.path.join(root, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(root) != fp:
-        import shutil
-
+    def build(root: str) -> None:
         base = (load(spark, sf_dir, "events")
                 .select("event_id", "user_id", "value"))
         mx, = base.agg(F.max("event_id")).first()
         half = mx // 2
-        shutil.rmtree(root, ignore_errors=True)
         vstore.commit_append(
             spark, root, base.filter(F.col("event_id") <= half)
             .repartitionByRange(2, "event_id"),
@@ -3773,9 +3438,9 @@ def _cdf_range_root(spark: SparkSession, sf_dir: str) -> str:
         vstore.commit_update(spark, root, F.col("event_id") % 11 == 0,
                              {"value": F.lit(-1.0)},
                              stats_cols=("event_id",))
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return root
+
+    return fixture(sf_dir, "events_cdf_range", table_fingerprint(
+        sf_dir, ("events",), params="q173_cdf_range_v3"), build)[0]
 
 
 def q173_cdf_batch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3892,36 +3557,20 @@ SELECT 'window_1_3', (SELECT n FROM w13), (SELECT s FROM w13),
 
 
 def _ensure_q174(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-gated fixture build for q174 (file-granular
-    admission chain), q147's ensure pattern. Returns the drained-feed
-    parquet dir."""
+    """q174's file-granular admission chain: the source store, the
+    drained feed, the stream checkpoint and the feed cursor nest under
+    one fixture dir (``src``, ``out``, ``ck``, ``cursor``). Returns the
+    drained-feed parquet dir."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import (_stored_fingerprint,
-                                         table_fingerprint)
     from ..streaming import cdf_source
 
-    scratch, _ = _scratch_base(sf_dir)
-    src = os.path.join(scratch, "events_admission_src")
-    out = os.path.join(scratch, "events_admission_out")
-    ck = os.path.join(scratch, "events_admission_ck")
-    cursor = os.path.join(scratch, "events_admission_cursor")
-    fp = table_fingerprint(sf_dir, ("events",),
-                           params="q174_file_admission_v1")
-    fp_file = os.path.join(src, "_INPUT_FINGERPRINT")
-
-    if _stored_fingerprint(src) != fp:
-        import shutil
-        base = (load(spark, sf_dir, "events")
-                .select("event_id", "user_id",
-                        F.floor(F.col("value") * 1000000).cast("long")
-                        .alias("value_q")))
+    def build(root: str) -> None:
+        src, out, ck, cursor = (os.path.join(root, d)
+                                for d in ("src", "out", "ck", "cursor"))
+        base = _events_q(spark, sf_dir)
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         half = mx // 2
-        for d in (src, out, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        if os.path.exists(cursor):
-            os.remove(cursor)
         # exact file counts: repartition(n) is round-robin — never an
         # empty partition at these row counts, so v1 has exactly 5
         # change partitions and v2 exactly 4
@@ -3948,9 +3597,10 @@ def _ensure_q174(spark: SparkSession, sf_dir: str) -> str:
                 q.awaitTermination()
             finally:
                 q.stop()
-        with open(fp_file, "w", encoding="ascii") as f:
-            f.write(fp)
-    return out
+
+    return os.path.join(fixture(sf_dir, "events_admission", table_fingerprint(
+        sf_dir, ("events",), params="q174_file_admission_v2"), build)[0],
+        "out")
 
 
 def q174_streaming_file_admission(spark: SparkSession,

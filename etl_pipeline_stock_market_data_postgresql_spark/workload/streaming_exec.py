@@ -10,9 +10,12 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 
 # Stateful-stage parallelism. State-store instances are one-per-shuffle-
 # partition long-lived services whose per-batch snapshot/commit overhead
@@ -66,12 +69,29 @@ def _stream_scratch(prefix: str, sf_dir: str) -> tuple[str, str]:
     recreated fresh per invocation."""
     import shutil
 
-    from .storage import _scratch_base
-
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     root = os.path.join(base, f"stream_{prefix}")
     shutil.rmtree(root, ignore_errors=True)
     return os.path.join(root, "out"), os.path.join(root, "ckpt")
+
+
+def _two_deliveries(root: str, feed: str, first: DataFrame,
+                    second: Callable[[int], DataFrame]) -> dict:
+    """Write a two-delivery stream feed: ``first`` into ``feed``, then
+    ``second(n_first_files)`` appended. Returns the fixture bounds —
+    the batch-1 file names and EVERY parquet file (root-relative), so
+    ``derived_cache.fixture``'s file-equality check turns a stray file
+    into a rebuild instead of replayed batch-2 data (r17 ADVICE)."""
+    def names() -> list[str]:
+        return sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
+
+    first.write.mode("overwrite").parquet(feed)
+    first_names = names()
+    second(len(first_names)).write.mode("append").parquet(feed)
+    rel = os.path.relpath(feed, root)
+    return {"first": first_names,
+            "files": [os.path.normpath(os.path.join(rel, f))
+                      for f in names()]}
 
 
 def _unload_state_stores(spark: SparkSession) -> None:
@@ -166,7 +186,7 @@ def _run_stream_append_to_files(df: DataFrame, prefix: str, sf_dir: str,
     go through ``_run_stream_complete_to_files`` — the native file sink
     cannot accept complete mode, so they use a foreachBatch write.)
     Sink+checkpoint live under the per-SF scratch root
-    (storage._scratch_base) and are recreated per invocation."""
+    (derived_cache.scratch_base) and are recreated per invocation."""
     out_dir, ckpt = _stream_scratch(prefix, sf_dir)
     spark = df.sparkSession
     with _stateful_shuffle_partitions(spark, n_parts), \
@@ -414,58 +434,23 @@ def _ensure_q106_feed(spark: SparkSession, sf_dir: str) -> tuple[str, set]:
     trigger 1 is precisely the older-mtime batch-1 set and trigger 2
     the rest. (The HWM kernel filters a whole batch against
     batch-START state, so row placement across a trigger's files is
-    immaterial.) The marker records the FULL expected file set and the
-    check is equality (r17 ADVICE: a stray parquet file must force a
-    rebuild, not silently replay as batch-2 data). Returns
-    ``(feed_dir, batch-1 file names)``."""
-    import json
-    import shutil
-
-    from ..sources.derived_cache import table_fingerprint
+    immaterial.) Returns ``(feed_dir, batch-1 file names)``."""
     from ..sources.tables import load
-    from .storage import _scratch_base
 
-    base, _ = _scratch_base(sf_dir)
-    path = os.path.join(base, "q106_hwm_feed")
-    feed_fp = table_fingerprint(sf_dir, ("events",),
-                                params=f"q106_feed_v1_f{FEED_FILES}")
-    batch1_file = os.path.join(path, "_Q106_BATCH1")
-
-    def _feed_current() -> bool:
-        try:
-            with open(batch1_file, encoding="ascii") as fh:
-                d = json.load(fh)
-        except (OSError, ValueError):
-            return False
-        have = ({f for f in os.listdir(path) if f.endswith(".parquet")}
-                if os.path.isdir(path) else set())
-        return (d.get("fp") == feed_fp and bool(d.get("first"))
-                and bool(d.get("all")) and set(d["all"]) == have
-                and set(d["first"]) <= set(d["all"]))
-
-    if not _feed_current():
-        shutil.rmtree(path, ignore_errors=True)
+    def build(root: str) -> dict:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts")
         # != 0, not == 1: C-style % gives -1 for negative odd ids,
         # which would silently land them in batch 1 here while the
         # oracle's sl arithmetic dropped them entirely
         is_second = F.col("event_id") % 2 != 0
-        cols = ["event_id", "event_type", "ts"]
-        ev.filter(~is_second).select(*cols).repartition(FEED_FILES) \
-            .write.mode("overwrite").parquet(path)
-        first_names = sorted(f for f in os.listdir(path)
-                             if f.endswith(".parquet"))
-        ev.filter(is_second).select(*cols) \
-            .repartition(max(1, len(first_names))) \
-            .write.mode("append").parquet(path)
-        all_names = sorted(f for f in os.listdir(path)
-                           if f.endswith(".parquet"))
-        with open(batch1_file, "w", encoding="ascii") as fh:
-            json.dump({"fp": feed_fp, "first": first_names,
-                       "all": all_names}, fh)
-    with open(batch1_file, encoding="ascii") as fh:
-        return path, set(json.load(fh)["first"])
+        return _two_deliveries(
+            root, root, ev.filter(~is_second).repartition(FEED_FILES),
+            lambda n: ev.filter(is_second).repartition(max(1, n)))
+
+    path, bounds = fixture(sf_dir, "q106_hwm_feed", table_fingerprint(
+        sf_dir, ("events",), params=f"q106_feed_v1_f{FEED_FILES}"), build)
+    return path, set(bounds["first"])
 
 
 def q106_streaming_stateful_hwm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,70 +577,35 @@ def _ensure_q122_seed(spark: SparkSession,
                       sf_dir: str) -> tuple[str, str, set, int]:
     """Fingerprint-gated build of q122's pristine seed index store and
     two-delivery delta feed (fixture state derived from the corpus0
-    signature cache). The marker records the FULL expected file set
-    and the check is equality (r17 ADVICE: stray parquet files force a
-    rebuild). Returns ``(seed_root, feed_dir, batch-1 names, mid)``."""
-    import json
-    import shutil
-
+    signature cache), nested under one fixture dir (``store``,
+    ``feed``). Returns ``(seed_root, feed_dir, batch-1 names, mid)``."""
     from ..sources import versioned_store as vstore
-    from ..sources.derived_cache import _stored_fingerprint, table_fingerprint
     from ..sources.tables import load
-    from .storage import _scratch_base
     from .text_dedup import (LSH_BANDS as _B, LSH_ROWS as _R,
                              LSH_VERIFY_THRESHOLD, corpus0_doc_max,
                              corpus0_signature_index)
 
-    base, _ = _scratch_base(sf_dir)
-    feed = os.path.join(base, "q122_feed")
-    seed_root = os.path.join(base, "q122_seed")
-    batch1_file = os.path.join(seed_root, "_Q122_BATCH1")
-
     _index, b, cache_path = corpus0_signature_index(spark, sf_dir)
-    # the split point comes from the fixture's bounds sidecar — no
+    # the split point comes from the corpus0 bounds fixture — no
     # per-run documents scan
     mid = (b + corpus0_doc_max(spark, sf_dir)) // 2
-    fp = table_fingerprint(
-        sf_dir, ("documents",),
-        params=f"q122_seed_v1_n3_b{_B}_r{_R}_t{LSH_VERIFY_THRESHOLD}")
 
-    def _feed_current() -> bool:
-        try:
-            with open(batch1_file, encoding="ascii") as fh:
-                d = json.load(fh)
-        except (OSError, ValueError):
-            return False
-        if not isinstance(d, dict):
-            return False  # pre-r17 marker format: rebuild once
-        have = ({f for f in os.listdir(feed) if f.endswith(".parquet")}
-                if os.path.isdir(feed) else set())
-        return (bool(d.get("first")) and bool(d.get("all"))
-                and set(d["all"]) == have
-                and set(d["first"]) <= set(d["all"]))
-
-    if _stored_fingerprint(seed_root) != fp or not _feed_current():
-        shutil.rmtree(seed_root, ignore_errors=True)
-        shutil.rmtree(feed, ignore_errors=True)
+    def build(root: str) -> dict:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        vstore.commit_append(spark, seed_root,
+        vstore.commit_append(spark, os.path.join(root, "store"),
                              spark.read.parquet(cache_path),
                              stats_cols=("doc_id",))
         d1 = docs.filter((F.col("doc_id") > b) & (F.col("doc_id") <= mid))
         d2 = docs.filter(F.col("doc_id") > mid)
-        d1.coalesce(1).write.mode("overwrite").parquet(feed)
-        first_names = sorted(f for f in os.listdir(feed)
-                             if f.endswith(".parquet"))
-        d2.coalesce(1).write.mode("append").parquet(feed)
-        all_names = sorted(f for f in os.listdir(feed)
-                           if f.endswith(".parquet"))
-        with open(batch1_file, "w", encoding="ascii") as fh:
-            json.dump({"first": first_names, "all": all_names}, fh)
-        with open(os.path.join(seed_root, "_INPUT_FINGERPRINT"), "w",
-                  encoding="ascii") as fh:
-            fh.write(fp)
-    with open(batch1_file, encoding="ascii") as fh:
-        first = set(json.load(fh)["first"])
-    return seed_root, feed, first, mid
+        return _two_deliveries(root, os.path.join(root, "feed"),
+                               d1.coalesce(1), lambda _n: d2.coalesce(1))
+
+    root, bounds = fixture(sf_dir, "q122_seed", table_fingerprint(
+        sf_dir, ("documents",),
+        params=f"q122_seed_v2_n3_b{_B}_r{_R}_t{LSH_VERIFY_THRESHOLD}"),
+        build)
+    return (os.path.join(root, "store"), os.path.join(root, "feed"),
+            set(bounds["first"]), mid)
 
 
 def q122_streaming_incremental_dedup(spark: SparkSession,
@@ -687,12 +637,11 @@ def q122_streaming_incremental_dedup(spark: SparkSession,
     text work, columnar index scan); the stream adds only the
     foreachBatch commit (one manifest write). Batch-count-agnostic;
     two batches are the gate-sized stand-in for a day's thousands."""
-    from ..sources import versioned_store as vstore
-    from .storage import _scratch_base
-
     import shutil
 
-    base, _ = _scratch_base(sf_dir)
+    from ..sources import versioned_store as vstore
+
+    base, _ = scratch_base(sf_dir)
     index_root = os.path.join(base, "q122_index")
     out_dir = os.path.join(base, "q122_out")
     ckpt = os.path.join(base, "q122_ckpt")
@@ -848,20 +797,12 @@ def _ensure_q140_feed(spark: SparkSession,
                       sf_dir: str) -> tuple[str, set, int, int]:
     """Fingerprint-gated build of q140's two delta feed files plus the
     frozen base model they encode against (q122's cached-feed
-    pattern; only the mtime pinning is per-run). Marker records the
-    FULL expected file set, checked by equality (r17 ADVICE). Returns
+    pattern; only the mtime pinning is per-run). Returns
     ``(feed_dir, batch-1 names, b, b2)``."""
-    import json
-    import shutil
-
-    from ..sources.derived_cache import table_fingerprint
     from ..sources.tables import load
     from .similarity import (_emb_vec_max, _ivfpq_base_index,
                              _spread_vectors)
-    from .storage import _scratch_base
 
-    base_dir, _ = _scratch_base(sf_dir)
-    feed = os.path.join(base_dir, "q140_feed")
     emb = load(spark, sf_dir, "embeddings")
     max_id = _emb_vec_max(spark, sf_dir)
     b = (2 * max_id) // 3
@@ -872,38 +813,16 @@ def _ensure_q140_feed(spark: SparkSession,
     _ivfpq_base_index(spark, sf_dir, vecs, b)
     vecs.unpersist()  # the stream side re-reads per batch
 
-    feed_fp = table_fingerprint(sf_dir, ("embeddings",),
-                                params=f"q140_feed_v1_b{b}_b2{b2}")
-    batch1_file = os.path.join(feed, "_Q140_BATCH1")
-
-    def _feed_current() -> bool:
-        try:
-            with open(batch1_file, encoding="ascii") as fh:
-                d = json.load(fh)
-        except (OSError, ValueError):
-            return False
-        have = ({f for f in os.listdir(feed) if f.endswith(".parquet")}
-                if os.path.isdir(feed) else set())
-        return (d.get("fp") == feed_fp and bool(d.get("first"))
-                and bool(d.get("all")) and set(d["all"]) == have
-                and set(d["first"]) <= set(d["all"]))
-
-    if not _feed_current():
-        shutil.rmtree(feed, ignore_errors=True)
+    def build(root: str) -> dict:
         d1 = emb.filter((F.col("vec_id") > b) & (F.col("vec_id") <= b2))
         d2 = emb.filter(F.col("vec_id") > b2)
-        d1.coalesce(1).write.mode("overwrite").parquet(feed)
-        first_names = sorted(f for f in os.listdir(feed)
-                             if f.endswith(".parquet"))
-        d2.coalesce(1).write.mode("append").parquet(feed)
-        all_names = sorted(f for f in os.listdir(feed)
-                           if f.endswith(".parquet"))
-        with open(batch1_file, "w", encoding="ascii") as fh:
-            json.dump({"fp": feed_fp, "first": first_names,
-                       "all": all_names}, fh)
-    with open(batch1_file, encoding="ascii") as fh:
-        first = set(json.load(fh)["first"])
-    return feed, first, b, b2
+        return _two_deliveries(root, root, d1.coalesce(1),
+                               lambda _n: d2.coalesce(1))
+
+    feed, bounds = fixture(sf_dir, "q140_feed", table_fingerprint(
+        sf_dir, ("embeddings",), params=f"q140_feed_v1_b{b}_b2{b2}"),
+        build)
+    return feed, set(bounds["first"]), b, b2
 
 
 def q140_streaming_ann_ingest(spark: SparkSession,
@@ -937,9 +856,8 @@ def q140_streaming_ann_ingest(spark: SparkSession,
     import shutil
 
     from ..sources import versioned_store as vstore
-    from .storage import _scratch_base
 
-    base_dir, _ = _scratch_base(sf_dir)
+    base_dir, _ = scratch_base(sf_dir)
     store = os.path.join(base_dir, "q140_store")
     ckpt = os.path.join(base_dir, "q140_ckpt")
     # feed is fingerprint-cached; only the run-private state resets

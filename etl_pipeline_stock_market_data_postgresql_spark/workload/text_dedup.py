@@ -7,8 +7,6 @@ below is generated from the same hashing constants
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import Query
@@ -370,26 +368,11 @@ def corpus0_signature_index(spark: SparkSession,
     import os
 
     from ..operators import incremental_dedup as inc
-    from ..sources.derived_cache import cached_parquet, table_fingerprint
-    from .storage import _scratch_base
+    from ..sources.derived_cache import cached_parquet, scratch_base
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    base, _ = _scratch_base(sf_dir)
-    path = os.path.join(base, "dedup_sig_index")
-    fp = table_fingerprint(
-        sf_dir, ("documents",),
-        params=f"dedup_index_v1_n3_b{LSH_BANDS}_r{LSH_ROWS}"
-               f"_t{LSH_VERIFY_THRESHOLD}")
-    # build-only input bounds, persisted in a fingerprint-keyed sidecar
-    # so warm runs never scan the documents table (q172's _BOUNDS
-    # pattern): at 100 TB the per-run max() IS a fixture-sized scan
-    bounds = _corpus0_bounds_if_current(path, fp)
-    if bounds is None:
-        max_id = docs.agg(F.max("doc_id")).first()[0]
-        b = (2 * max_id) // 3
-    else:
-        max_id, b = bounds["max_id"], bounds["b"]
+    b = _corpus0_bounds(spark, sf_dir)["b"]
+    path = os.path.join(scratch_base(sf_dir)[0], "dedup_sig_index")
 
     caches: list[DataFrame] = []
 
@@ -412,47 +395,41 @@ def corpus0_signature_index(spark: SparkSession,
                                        rows_per_band=LSH_ROWS,
                                        cache_out=caches)
 
-    index = cached_parquet(spark, path, fp, build)
+    index = cached_parquet(spark, path, _corpus0_fp(sf_dir), build)
     for c in caches:  # build-side persists, dead once written
         c.unpersist()
-    if bounds is None:
-        with open(path + ".bounds.json", "w", encoding="ascii") as f:
-            json.dump({"fp": fp, "max_id": max_id, "b": b}, f)
     return index, b, path
 
 
-def _corpus0_bounds_if_current(path: str, fp: str) -> dict | None:
-    """The corpus0 fixture's input-derived constants, valid only when
-    the stored fingerprint matches the sidecar's."""
-    try:
-        with open(path + ".bounds.json", encoding="ascii") as f:
-            d = json.load(f)
-    except (OSError, ValueError):
-        return None
-    return d if d.get("fp") == fp else None
+def _corpus0_fp(sf_dir: str) -> str:
+    from ..sources.derived_cache import table_fingerprint
+
+    return table_fingerprint(
+        sf_dir, ("documents",),
+        params=f"dedup_index_v1_n3_b{LSH_BANDS}_r{LSH_ROWS}"
+               f"_t{LSH_VERIFY_THRESHOLD}")
+
+
+def _corpus0_bounds(spark: SparkSession, sf_dir: str) -> dict:
+    """The corpus0 fixture's input-derived constants (``max_id`` and
+    the 2/3 boundary ``b``) as a bounds-only fixture under the
+    signature index's fingerprint, so warm runs never scan the
+    documents table: at 100 TB the per-run max() IS a fixture-sized
+    scan."""
+    from ..sources.derived_cache import fixture
+
+    def build(_root: str) -> dict:
+        max_id = (load(spark, sf_dir, "documents")
+                  .agg(F.max("doc_id")).first()[0])
+        return {"max_id": max_id, "b": (2 * max_id) // 3}
+
+    return fixture(sf_dir, "corpus0_bounds", _corpus0_fp(sf_dir), build)[1]
 
 
 def corpus0_doc_max(spark: SparkSession, sf_dir: str) -> int:
     """max(doc_id) of the documents table as the corpus0 fixture saw
-    it — from the bounds sidecar when current (no scan), else
-    computed. Callers that already ran :func:`corpus0_signature_index`
-    in this process always hit the sidecar."""
-    import os
-
-    from ..sources.derived_cache import table_fingerprint
-    from .storage import _scratch_base
-
-    base, _ = _scratch_base(sf_dir)
-    path = os.path.join(base, "dedup_sig_index")
-    fp = table_fingerprint(
-        sf_dir, ("documents",),
-        params=f"dedup_index_v1_n3_b{LSH_BANDS}_r{LSH_ROWS}"
-               f"_t{LSH_VERIFY_THRESHOLD}")
-    bounds = _corpus0_bounds_if_current(path, fp)
-    if bounds is not None:
-        return bounds["max_id"]
-    docs = load(spark, sf_dir, "documents")
-    return docs.agg(F.max("doc_id")).first()[0]
+    it (its bounds fixture — no scan once built)."""
+    return _corpus0_bounds(spark, sf_dir)["max_id"]
 
 
 def q120_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

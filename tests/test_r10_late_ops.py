@@ -16,15 +16,13 @@ from pyspark.sql import functions as F
 from etl_pipeline_stock_market_data_postgresql_spark.sources.compaction import (
     compact_flat, content_fingerprint, flat_file_stats, multiset_equal)
 from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import (
-    _stored_fingerprint)
+    _stored_fingerprint, scratch_base)
 from etl_pipeline_stock_market_data_postgresql_spark.sources.tables import load
 from etl_pipeline_stock_market_data_postgresql_spark.workload.relational import (
     _kcore_converged_summary, q135_pagerank_convergence)
 from etl_pipeline_stock_market_data_postgresql_spark.workload.similarity import (
     _ivfpq_base_index, _ivfpq_encode, _ivfpq_model_fp, _spread_vectors,
     q134_incremental_ann, q137_ann_index_writeback)
-from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-    _scratch_base)
 
 
 # --- q134: frozen-model equivalence ----------------------------------------
@@ -63,7 +61,7 @@ def test_q134_model_cache_invalidates_on_embedding_change(spark, tmp_path):
     shutil.copyfile(src, dst)
     fp1 = _ivfpq_model_fp(str(d), 10)
     q134_incremental_ann(spark, str(d))
-    scratch, _ = _scratch_base(str(d))
+    scratch, _ = scratch_base(str(d))
     cache = os.path.join(scratch, "ann_centroids")
     stored1 = _stored_fingerprint(cache)
     assert stored1 is not None
@@ -161,7 +159,7 @@ def test_q136_tripwire_flips_false_past_the_bound(spark):
 @pytest.fixture(scope="module")
 def q137_store(spark, sf_dir):
     q137_ann_index_writeback(spark, sf_dir).collect()
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     return os.path.join(scratch, "ann_store")
 
 
@@ -251,7 +249,7 @@ def test_q122_index_store_ends_compacted_and_versioned(spark, sf_dir):
     from etl_pipeline_stock_market_data_postgresql_spark.workload.streaming_exec import (
         STREAM_STORE_TARGET_BYTES, q122_streaming_incremental_dedup)
     q122_streaming_incremental_dedup(spark, sf_dir).collect()
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     root = os.path.join(base, "q122_index")
     nb, na = compact_latest_noop = vstore.compact_latest(
         spark, root, STREAM_STORE_TARGET_BYTES, cluster_by=None,
@@ -348,7 +346,7 @@ def test_q139_gc_store_is_exactly_the_survivor_multiset(spark, sf_dir):
     from etl_pipeline_stock_market_data_postgresql_spark.workload.similarity import (
         ANN_GC_MOD, _ivfpq_base_index, q139_ann_store_delete)
     q139_ann_store_delete(spark, sf_dir).collect()
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     gc = os.path.join(scratch, "ann_store_gc")
     emb = load(spark, sf_dir, "embeddings")
     b = (2 * emb.agg(F.max("vec_id")).first()[0]) // 3
@@ -380,7 +378,7 @@ def test_q140_streamed_store_equals_batch_chain_deltas(
     q140_streaming_ann_ingest(spark, sf_dir).collect()
     emb = load(spark, sf_dir, "embeddings")
     b = (2 * emb.agg(F.max("vec_id")).first()[0]) // 3
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     root = os.path.join(base, "q140_store")
     streamed = (vstore.read_version(spark, root,
                                     vstore.latest_version(root))
@@ -443,7 +441,7 @@ def test_q141_snapshots_are_the_id_range_encodes(spark, sf_dir):
     r3, r4 = by_v[3], by_v[4]
     assert (r3.n_rows, r3.code_sum, r3.code_sq_sum, r3.id_sum) == \
         (r4.n_rows, r4.code_sum, r4.code_sq_sum, r4.id_sum)
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     root = os.path.join(scratch, "ann_store_versioned")
     emb = load(spark, sf_dir, "embeddings")
     b = (2 * emb.agg(F.max("vec_id")).first()[0]) // 3

@@ -174,14 +174,14 @@ def test_commit_merge_replaces_matched_inserts_unmatched(spark, tmp_path):
 
 
 def test_q147_merge_chain_invariants(spark, sf_dir):
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base, q147_versioned_merge)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
+    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import q147_versioned_merge
     rows = q147_versioned_merge(spark, sf_dir).collect()
     by = {(r.version, r.event_type): r for r in rows}
     assert not any(t == "corrected" for v, t in by if v == 2)
     assert ("corrected" in {t for v, t in by if v == 3}
             and "backfill" in {t for v, t in by if v == 3})
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     root = os.path.join(scratch, "events_versioned_merge")
     f2 = set(vstore.read_manifest(root, 2)["files"])
     f3 = set(vstore.read_manifest(root, 3)["files"])
@@ -562,8 +562,7 @@ def test_q140_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     from etl_pipeline_stock_market_data_postgresql_spark.sources.tables import load
     from etl_pipeline_stock_market_data_postgresql_spark.workload.similarity import (
         _ivfpq_base_index, _spread_vectors)
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
     from etl_pipeline_stock_market_data_postgresql_spark.workload.streaming_exec import (
         _q140_commit_batch)
     emb = load(spark, sf_dir, "embeddings")
@@ -574,7 +573,7 @@ def test_q140_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
         _ivfpq_base_index(spark, sf_dir, vecs, b)
     finally:
         vecs.unpersist()
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     cpath = os.path.join(scratch, "ann_centroids")
     cbpath = os.path.join(scratch, "ann_codebook")
     store = str(tmp_path / "q140replay")
@@ -696,11 +695,10 @@ def test_q145_cutover_retains_frozen_snapshot_and_models_coexist(
     from etl_pipeline_stock_market_data_postgresql_spark.sources.tables import load
     from etl_pipeline_stock_market_data_postgresql_spark.workload.similarity import (
         _ann_retrain_root, _ivfpq_base_index, _ivfpq_encode, _spread_vectors)
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
     root = _ann_retrain_root(spark, sf_dir)
     assert vstore.txn_seen(root) == {"frozen-full": 0, "cutover": 0}
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     # both models cached side by side (no thrash between them)
     assert os.path.isdir(os.path.join(scratch, "ann_centroids"))
     assert os.path.isdir(os.path.join(scratch, "ann_centroids_retrained"))

@@ -427,8 +427,7 @@ def test_q140_checkpoint_restart_is_exactly_once(spark, sf_dir, tmp_path):
         load)
     from etl_pipeline_stock_market_data_postgresql_spark.workload.similarity import (
         _ivfpq_base_index, _spread_vectors)
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
     from etl_pipeline_stock_market_data_postgresql_spark.workload.streaming_exec import (
         _q140_commit_batch)
 
@@ -437,7 +436,7 @@ def test_q140_checkpoint_restart_is_exactly_once(spark, sf_dir, tmp_path):
     vecs = _spread_vectors(spark, emb).persist()
     _ivfpq_base_index(spark, sf_dir, vecs, b)  # frozen model -> cache
     vecs.unpersist()
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     centroids = os.path.join(scratch, "ann_centroids")
     codebook = os.path.join(scratch, "ann_codebook")
 
@@ -505,8 +504,8 @@ def test_q150_typed_feed_chain_invariants(spark, sf_dir):
     pair up, the delete feed carries amended values for
     amended-then-deleted keys, and carried files are byte-identical
     across the chain."""
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base, q150_versioned_cdf_typed)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
+    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import q150_versioned_cdf_typed
 
     rows = q150_versioned_cdf_typed(spark, sf_dir).collect()
     by = {(r.transition, r.change_type): r for r in rows}
@@ -518,7 +517,7 @@ def test_q150_typed_feed_chain_invariants(spark, sf_dir):
     assert (post.value_q_sum - pre.value_q_sum
             == 1000000 * pre.n_rows)
     assert ("v1_v2", "insert") in by and ("v2_v3", "delete") in by
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     root = os.path.join(scratch, "events_cdf_typed")
     # replayed mutation txns no-op (chain-level exactly-once)
     assert vstore.txn_committed(root, "q150-merge")
@@ -538,11 +537,12 @@ def test_q151_conditional_merge_chain_invariants(spark, sf_dir):
     insert/delete arithmetic, and the replayed txn no-ops."""
     from etl_pipeline_stock_market_data_postgresql_spark.sources.tables import (
         load)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
     from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _scratch_base, q151_versioned_conditional_merge)
+        q151_versioned_conditional_merge)
 
     rows = q151_versioned_conditional_merge(spark, sf_dir).collect()
-    scratch, _ = _scratch_base(sf_dir)
+    scratch, _ = scratch_base(sf_dir)
     root = os.path.join(scratch, "events_versioned_condmerge")
     v2 = vstore.read_version(spark, root, 2)
     # column-subset: the poisoned -1 user_id must never appear

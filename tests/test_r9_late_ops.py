@@ -117,9 +117,9 @@ def test_schema_evolution_merged_read_carries_union_schema(spark, sf_dir):
     # the gated aggregate hides the schema; assert the mechanism directly
     import os
 
-    from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import _scratch_base
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
     q127_schema_evolution(spark, sf_dir).collect()
-    base, _ = _scratch_base(sf_dir)
+    base, _ = scratch_base(sf_dir)
     merged = (spark.read.option("mergeSchema", "true")
               .parquet(os.path.join(base, "evolve_legacy"),
                        os.path.join(base, "evolve_current")))

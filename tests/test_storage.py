@@ -65,13 +65,14 @@ def test_q93_zorder_prunes_and_pushes_down(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_pipeline_stock_market_data_postgresql_spark.workload.storage import (
-        _q93_bounds, _q93_files_hit, _scratch_base, q93_zorder_pruning)
+        _q93_bounds, _q93_files_hit, q93_zorder_pruning)
+    from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache import scratch_base
 
     rows = q93_zorder_pruning(spark, sf_dir).collect()
     assert rows and all(r["files_pruned_ok"] for r in rows)
 
     u_lo, u_hi, t_lo, t_hi = _q93_bounds(spark, sf_dir)
-    zpath = os.path.join(_scratch_base(sf_dir)[0], "events_z")
+    zpath = os.path.join(scratch_base(sf_dir)[0], "events_z")
     hits, total = _q93_files_hit(zpath, (u_lo, u_hi), (t_lo, t_hi))
     assert total == 16 and hits <= total // 4, (hits, total)
 
