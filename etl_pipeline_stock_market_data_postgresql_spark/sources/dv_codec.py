@@ -15,12 +15,12 @@ Both encode and decode are numpy-VECTORIZED (no per-position Python
 loop): encode emits the k-th varint byte of every position in one
 array pass (≤10 passes total — positions are < 2^63); decode
 reassembles values with ``np.add.reduceat`` over continuation-bit
-boundaries. Executor-side readers (the change-feed source, the
-distributed sidecar scan) import THIS module only — it is pure
-numpy/stdlib, no Spark-session machinery.
-
-This module is deliberately standalone so the streaming source's
-executor ``read()`` can use it without importing the store module.
+boundaries. Executor-side readers (the data-file reader
+``store_batch.read_file`` behind the batch source and the change
+feed, the distributed sidecar scan) import THIS module only — it is
+pure numpy/stdlib, no Spark-session machinery, so executors never
+import the store module. :func:`read_positions` is the one sidecar
+FILE reader, on the driver and on executors alike.
 """
 
 from __future__ import annotations
@@ -126,6 +126,15 @@ def decode_positions_doc(doc: dict) -> list[int]:
             np.int64).tolist()
     raise ValueError(f"unknown deletion-vector sidecar format {fmt!r} "
                      f"(this build reads ≤ {CURRENT_FORMAT})")
+
+
+def read_positions(path: str) -> list[int]:
+    """Positions of the sidecar FILE at ``path`` — the one sidecar
+    reader, shared by the driver and the executor file reader."""
+    import json
+
+    with open(path, encoding="ascii") as f:
+        return decode_positions_doc(json.load(f))
 
 
 def decode_payload_array(payload: str, n: int) -> np.ndarray:

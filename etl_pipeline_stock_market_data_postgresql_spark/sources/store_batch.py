@@ -15,23 +15,27 @@ READER — snapshot scan with PLANNING-TIME file skipping:
 ``partitions()`` is one :class:`InputPartition` per LIVE data file of
 the resolved version (``versionAsOf`` option; default the latest
 VISIBLE version — 2PC invisibility and aborted-hole semantics are the
-store's, not re-derived here). Spark's ``pushFilters`` hands the scan
-the query's conjunctive predicates at plan time; supported
-comparisons (=, <, <=, >, >=, IN on top-level columns) fold into
-per-column [lo, hi] ranges that prune through the SAME two-level
-manifest statistics :func:`versioned_store.read_version_pruned_multi`
-uses — a whole segment whose summary misses a conjunct is skipped
-without even reading the segment file, then surviving files prune by
-their footer-stats entries, then an equality on a bloom-indexed
+store's, not re-derived here) that survives pruning. Spark's
+``pushFilters`` hands the scan the query's conjunctive predicates at
+plan time; supported comparisons (=, <, <=, >, >=, IN on top-level
+columns) fold into per-column [lo, hi] ranges and equality sets, and
+``partitions()`` hands them to :func:`versioned_store._plan` — the
+SAME planner :func:`versioned_store.read_version_pruned_multi` and
+:func:`versioned_store.read_version_point_lookup` call: a whole
+segment whose summary misses a conjunct is skipped without even
+reading the segment file, surviving files prune by their footer-stats
+entries (date and timestamp bounds in their ISO form; bounds of
+another type keep the file), then an equality on a bloom-indexed
 column probes the per-file sidecar. EVERY filter is returned to Spark
 as "still needs evaluating" (the API's safe mode): pruning only ever
 skips files PROVEN rowless for the conjunction, Spark re-applies the
 exact predicates to the rows that do flow, so answers are exact even
 for filters the range model only approximates. Rows never touch the
-driver: executors pyarrow-read their one file, subtract its deletion
-vector's positions, NULL-fill columns the file predates, and emit
-Arrow record batches under the pinned logical schema (physical names
-mapped on column-mapped stores).
+driver: executors run :func:`read_file` — the one executor-side file
+reader, shared with the change feed — which pyarrow-reads one file,
+maps physical names to logical on column-mapped stores, subtracts its
+deletion vector's positions, and casts or NULL-fills to the pinned
+logical schema with nullability relaxed.
 
 Spark requires ``spark.sql.python.filterPushdown.enabled=true`` when
 a reader overrides ``pushFilters`` (it refuses to silently drop the
@@ -72,16 +76,18 @@ from pyspark.sql.datasource import (DataSourceArrowWriter,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
 
-_DATA = "data"  # versioned_store._DATA (executor-side literal, same
-# convention as streaming/cdf_source.py)
+_DATA = "data"  # versioned_store._DATA — executors read files without
+# importing the store module (the same rule as dv_codec)
 
 
-def nullable_schema(schema: StructType) -> StructType:
-    """Recursively relax nullability — the scan's declared schema must
-    match what parquet snapshot reads actually produce (parquet-backed
-    frames are nullable throughout; the manifest may record NOT NULL
-    from the writer's frame, and evolution NULL-fills old files
-    regardless)."""
+def nullable_schema(schema):
+    """``schema`` (any data type) with every nested nullability flag
+    relaxed — the scan's declared schema must match what parquet
+    snapshot reads actually produce (parquet-backed frames are
+    nullable throughout; the manifest may record NOT NULL from the
+    writer's frame, and evolution NULL-fills old files regardless).
+    Schema enforcement compares types under it too: nullability is a
+    per-batch inference artifact, never schema drift."""
     from pyspark.sql.types import ArrayType, MapType, StructField
 
     def _relax(dt):
@@ -99,6 +105,53 @@ def nullable_schema(schema: StructType) -> StructType:
     return _relax(schema)
 
 
+def read_file(root: str, file: str, colmap: dict, schema_json,
+              exclude: str | None = None, include: str | None = None):
+    """EXECUTOR-side: the ONE Arrow reader of a store data file, behind
+    both the batch source and the change feed. Reads ``file``, renames
+    physical columns to logical (``colmap``: logical → physical),
+    keeps the rows at deletion-vector positions — ``include``'s minus
+    ``exclude``'s, or every row minus ``exclude``'s (both are sidecar
+    names, None when absent) — and casts or NULL-fills (a file that
+    predates a column) to the :func:`nullable_schema` of the pinned
+    ``schema_json``. Returns a ``pyarrow.Table``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .dv_codec import read_positions
+
+    def positions(name: str):
+        return np.asarray(read_positions(os.path.join(root, _DATA, name)),
+                          dtype=np.int64)
+
+    table = pq.read_table(os.path.join(root, _DATA, file))
+    if colmap:  # physical field names → logical
+        inv = {phys: log for log, phys in colmap.items()}
+        table = table.rename_columns(
+            [inv.get(c, c) for c in table.column_names])
+    if include or exclude:
+        n = table.num_rows
+        rows = np.arange(n) if include is None else np.unique(
+            positions(include))
+        if exclude:
+            rows = rows[~np.isin(rows, positions(exclude))]
+        table = table.take(pa.array(rows[rows < n], type=pa.int64()))
+    target = to_arrow_schema(nullable_schema(
+        StructType.fromJson(schema_json)))
+    cols = []
+    for field in target:
+        if field.name in table.column_names:
+            col = table.column(field.name)
+            if col.type != field.type:
+                col = col.cast(field.type)
+        else:  # file predates the column: NULL-fill
+            col = pa.nulls(table.num_rows, type=field.type)
+        cols.append(col)
+    return pa.table(cols, names=[f.name for f in target])
+
+
 class _FilePartition(InputPartition):
     """One live data file — the executor work unit. ``dv`` is the
     file's deletion-vector sidecar name (None when unmarked)."""
@@ -108,48 +161,25 @@ class _FilePartition(InputPartition):
         self.dv = dv
 
 
-def _read_dv_positions(root: str, name: str) -> set:
-    import json
-
-    from .dv_codec import decode_positions_doc
-
-    with open(os.path.join(root, _DATA, name), encoding="ascii") as f:
-        return set(decode_positions_doc(json.load(f)))
-
-
 def _intersect(a: tuple, b: tuple) -> tuple:
     lo = b[0] if a[0] is None else a[0] if b[0] is None else max(a[0], b[0])
     hi = b[1] if a[1] is None else a[1] if b[1] is None else min(a[1], b[1])
     return (lo, hi)
 
 
-def _stats_hit(rng: tuple, s) -> bool:
-    """May file-range ``s=[min,max]`` contain a row in ``rng``?
-    Conservative: un-comparable (mixed-type) bounds never prune."""
-    lo, hi = rng
-    try:
-        if hi is not None and not s[0] <= hi:
-            return False
-        if lo is not None and not s[1] >= lo:
-            return False
-    except TypeError:
-        return True
-    return True
-
-
 class StoreBatchReader(DataSourceReader):
-    """Pruning batch reader (see module docstring). Planning state is
-    driver-side manifest metadata; the pickled reader ships only the
-    root, pinned schema and column map to executors."""
+    """Pruning batch reader (see module docstring). Planning is
+    :func:`versioned_store._plan` on the driver; the pickled reader
+    ships only the root, pinned schema and column map to executors."""
 
     def __init__(self, root: str, version: int):
         from . import versioned_store as vstore
 
         self._root = root
         self._version = version
+        # the schema and column mapping executors read under;
+        # visibility is checked when partitions() plans
         raw = vstore._read_manifest_raw(root, version)
-        vstore._check_tx_visible(root, version, raw)
-        self._raw: dict | None = raw
         if raw.get("schema") is None:
             raise ValueError(
                 f"{root} predates recorded schemas — the batch source "
@@ -179,8 +209,7 @@ class StoreBatchReader(DataSourceReader):
                 if f.value is None:
                     continue  # NULL literal: never prune on it
                 rng = (f.value, f.value)
-                if isinstance(f.value, int):  # bloom keys are ints
-                    self._eq_values.setdefault(col, []).append(f.value)
+                self._eq_values.setdefault(col, []).append(f.value)
             elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
                 if f.value is None:
                     continue
@@ -207,107 +236,23 @@ class StoreBatchReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         from . import versioned_store as vstore
 
-        raw = self._raw
-        if raw is None:  # re-planned after a prior partitions() call
-            raw = vstore._read_manifest_raw(self._root, self._version)
-        cm = self._colmap
-        # stats (and bloom sidecars) are keyed PHYSICAL on mapped stores
-        ranges = {cm.get(c, c): rng for c, rng in self._ranges.items()}
-        eq = {cm.get(c, c): vs for c, vs in self._eq_values.items()}
-
-        def _hits(fs: dict) -> bool:
-            for col, rng in ranges.items():
-                s = fs.get(col)
-                if s is not None and not _stats_hit(rng, s):
-                    return False
-            return True
-
-        if "segments" in raw:
-            files: list[str] = []
-            stats: dict = {}
-            n_total = 0
-            for entry in raw["segments"]:
-                if isinstance(entry, dict) and not _hits(entry["stats"]):
-                    n_total += entry["n"]  # segment skipped unread
-                    continue
-                sd = vstore._read_segment(self._root,
-                                          vstore._seg_name(entry))
-                n_total += len(sd["files"])
-                for f in sd["files"]:
-                    if _hits(sd["stats"].get(f, {})):
-                        files.append(f)
-                        stats[f] = sd["stats"].get(f, {})
-        else:
-            stats = raw.get("stats", {})
-            files = [f for f in raw["files"]
-                     if _hits(stats.get(f, {}))]
-            n_total = len(raw["files"])
-
-        if eq:  # bloom probe the range survivors (point lookups)
-            kept = []
-            for f in files:
-                fs = stats.get(f, {})
-                drop = False
-                for col, vals in eq.items():
-                    marker = fs.get(vstore._BLOOM_PREFIX + col)
-                    if marker is None:
-                        continue
-                    try:
-                        bl = vstore._read_file_bloom(
-                            os.path.join(self._root, _DATA, f)).get(col)
-                    except OSError:
-                        continue  # sidecar gone: cannot prune
-                    if bl is not None and not any(
-                            vstore._bloom_maybe_contains(
-                                bl["words"], v, k=bl["k"])
-                            for v in vals):
-                        drop = True
-                        break
-                if not drop:
-                    kept.append(f)
-            files = kept
-
+        _, files, stats, n_total = vstore._plan(
+            self._root, self._version, self._ranges, self._eq_values)
         self.plan_report = {"n_files": len(files), "n_total": n_total}
-        self._raw = None  # slim the reader pickle shipped to executors
-        dvm = {f: stats.get(f, {}).get(vstore._DV_KEY) for f in files}
-        return [_FilePartition(f, dvm[f]) for f in sorted(files)]
+        return [_FilePartition(f, stats[f].get(vstore._DV_KEY))
+                for f in sorted(files)]
 
     # -- execution (executor) ----------------------------------------
 
     def read(self, partition: _FilePartition | None) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         if partition is None:
             # an empty partitions() list (every file pruned) runs one
             # task with no partition object: emit nothing — the scan's
             # schema still comes from schema(), so shape is preserved
             return
-        table = pq.read_table(
-            os.path.join(self._root, _DATA, partition.file))
-        if self._colmap:  # physical field names → logical
-            inv = {p: l for l, p in self._colmap.items()}
-            table = table.rename_columns(
-                [inv.get(c, c) for c in table.column_names])
-        if partition.dv:
-            exc = _read_dv_positions(self._root, partition.dv)
-            n = table.num_rows
-            table = table.take(pa.array(
-                [i for i in range(n) if i not in exc], type=pa.int64()))
-        target = to_arrow_schema(nullable_schema(
-            StructType.fromJson(self._schema_json)))
-        cols = []
-        for field in target:
-            if field.name in table.column_names:
-                col = table.column(field.name)
-                if col.type != field.type:
-                    col = col.cast(field.type)
-            else:  # file predates the column: NULL-fill
-                col = pa.nulls(table.num_rows, type=field.type)
-            cols.append(col)
-        out = pa.table(cols, names=[f.name for f in target])
-        yield from out.to_batches(max_chunksize=1 << 16)
+        yield from read_file(
+            self._root, partition.file, self._colmap, self._schema_json,
+            exclude=partition.dv).to_batches(max_chunksize=1 << 16)
 
 
 class StoreBatchPlainReader(StoreBatchReader):

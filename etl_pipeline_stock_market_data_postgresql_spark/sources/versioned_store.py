@@ -29,6 +29,18 @@ cannot give:
   name into the new manifest, and the pre-change snapshot stays
   readable.
 
+Reads run on ONE core per layer. On the driver, :func:`_plan` is the
+only file planner: it checks 2PC visibility, maps logical names to
+physical, skips whole segments on their summaries, range-prunes files
+with :func:`_overlaps` and probes bloom sidecars — the pruned reads,
+the point lookups and the batch data source's ``partitions()`` call
+it. In Spark, :func:`_pinned_scan` is the only scan of data files
+(pinned schema, physical→logical projection, optional tag columns);
+:func:`_logical_rows` keeps the tag-free fast path for reads that need
+neither deletion vectors nor row ids. On executors,
+``store_batch.read_file`` is the only reader of a data file, shared by
+the batch data source and the change feed.
+
 Reference parity: the reference delegates durability/versioning to
 PostgreSQL (MVCC); this is the Spark-native equivalent for immutable
 file storage.
@@ -502,21 +514,6 @@ def read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
     return _logical_rows(spark, root, man, files)
 
 
-def _version_reader(spark: SparkSession, man: dict):
-    """A parquet reader pinned to ``man``'s recorded union schema (when
-    present) — EVERY read of a manifest's data files must go through
-    this, including the victim-file re-reads inside
-    :func:`commit_delete` / :func:`commit_merge`: on a schema-evolved
-    store a bare ``spark.read.parquet`` would infer from footers and
-    miss evolved columns, breaking the copy-on-write rewrite."""
-    from pyspark.sql.types import StructType
-
-    reader = spark.read
-    if man.get("schema") is not None:
-        reader = reader.schema(StructType.fromJson(man["schema"]))
-    return reader
-
-
 #: stats-dict key prefix for bloom MARKERS: ``bloom:<col>`` →
 #: ``[bits, k]``. The bitsets themselves live in per-file SIDECAR
 #: files (``data/<file>.bloom``) — Delta's bloom filter index /
@@ -680,12 +677,9 @@ def _write_dv(root: str, positions: list[int], version: int) -> str:
 
 
 def _read_dv(root: str, name: str) -> list[int]:
-    import json
+    from .dv_codec import read_positions
 
-    from .dv_codec import decode_positions_doc
-
-    with open(os.path.join(root, _DATA, name), encoding="ascii") as f:
-        return decode_positions_doc(json.load(f))
+    return read_positions(os.path.join(root, _DATA, name))
 
 
 def _dv_map(stats: dict, files) -> dict[str, str]:
@@ -758,46 +752,61 @@ def _strip_row_id(schema):
     return StructType([f for f in schema.fields if f.name != _ROW_ID])
 
 
-def _tagged_rows(spark: SparkSession, root: str, schema_json,
-                 stats: dict, names: list[str],
-                 row_ids: bool, cmap: dict | None = None) -> DataFrame:
-    """Scan the named files under the pinned schema with ``_rt_f`` /
-    ``_rt_ri`` (file name / row index) tags attached — and, when
-    ``row_ids``, the stable :data:`_ROW_ID` materialized as
-    ``coalesce(physical column, __brid__ base + row index)``. Callers
-    apply their DV anti-join / position semi-join on the tags, then
-    drop them. The base map is one broadcast of O(#files) rows —
-    manifest-scale, never row-scale.
+def _pinned_scan(spark: SparkSession, root: str, schema_json,
+                 names: list[str], cmap: dict | None = None,
+                 tags=(), row_ids: bool = False) -> DataFrame:
+    """The ONE Spark-side scan of store data files: the named files
+    under the manifest's pinned schema, projected to logical names,
+    plus the ``tags`` columns evaluated directly above the scan
+    (``_metadata`` and ``input_file_name`` resolve only there).
 
     ``cmap`` is the manifest's COLUMN MAPPING (logical → physical
     field name, column-mapped stores only): files store PHYSICAL
     names, so the scan pins the physical schema and the projection
     renames to the logical names the recorded schema (and every
-    caller) speaks — rename/drop are thereby pure metadata."""
+    caller) speaks — rename/drop are thereby pure metadata.
+    ``row_ids`` also reads the materialized :data:`_ROW_ID` column.
+    Without tags or a mapping the bare pinned scan is returned — no
+    per-row columns at all."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    reader = spark.read
-    lschema = None
+    reader, logical = spark.read, []
     if schema_json is not None:
         lschema = StructType.fromJson(schema_json)
-        schema = (StructType([StructField(cmap.get(f.name, f.name),
-                                          f.dataType, True)
-                              for f in lschema.fields])
-                  if cmap else StructType(list(lschema.fields)))
+        cmap = cmap or {}
+        schema = StructType([StructField(cmap.get(f.name, f.name),
+                                         f.dataType, True)
+                             for f in lschema.fields])
         if row_ids:
             schema = schema.add(_ROW_ID, LongType())
         reader = reader.schema(schema)
+        if cmap:  # physical → logical projection
+            logical = [F.col(cmap.get(f.name, f.name)).alias(f.name)
+                       for f in lschema.fields]
+            if row_ids:
+                logical.append(F.col(_ROW_ID))
     elif row_ids:
         raise ValueError("row-id reads need a recorded schema")
-    df = (reader.parquet(*[os.path.join(root, _DATA, f) for f in names])
-          .select("*", F.col("_metadata.file_name").alias("_rt_f"),
-                  F.col("_metadata.row_index").alias("_rt_ri")))
-    if cmap and lschema is not None:  # physical → logical projection
-        keep = [F.col(cmap.get(f.name, f.name)).alias(f.name)
-                for f in lschema.fields]
-        if row_ids:
-            keep.append(F.col(_ROW_ID))
-        df = df.select(*keep, F.col("_rt_f"), F.col("_rt_ri"))
+    df = reader.parquet(*[os.path.join(root, _DATA, f) for f in names])
+    if logical or tags:
+        df = df.select(*(logical or ["*"]), *tags)
+    return df
+
+
+def _tagged_rows(spark: SparkSession, root: str, schema_json,
+                 stats: dict, names: list[str],
+                 row_ids: bool, cmap: dict | None = None) -> DataFrame:
+    """:func:`_pinned_scan` with ``_rt_f`` / ``_rt_ri`` (file name /
+    row index) tags attached — and, when ``row_ids``, the stable
+    :data:`_ROW_ID` materialized as ``coalesce(physical column,
+    __brid__ base + row index)``. Callers apply their DV anti-join /
+    position semi-join on the tags, then drop them. The base map is
+    one broadcast of O(#files) rows — manifest-scale, never
+    row-scale."""
+    df = _pinned_scan(spark, root, schema_json, names, cmap,
+                      tags=(F.col("_metadata.file_name").alias("_rt_f"),
+                            F.col("_metadata.row_index").alias("_rt_ri")),
+                      row_ids=row_ids)
     if row_ids:
         base_rows = [(f, int(stats[f][_BRID_KEY])) for f in names
                      if _BRID_KEY in stats.get(f, {})]
@@ -813,27 +822,19 @@ def _tagged_rows(spark: SparkSession, root: str, schema_json,
     return df
 
 
-def _plain_scan(spark: SparkSession, root: str, schema_json,
-                names: list[str], cmap: dict | None) -> DataFrame:
-    """Pinned-schema scan with NO per-row tag columns — the fast path
-    for reads that need neither deletion-vector filtering nor row ids
-    (materializing ``_metadata`` costs real per-row work at scale; it
-    must never be paid by a store that doesn't use it)."""
-    from pyspark.sql.types import StructField, StructType
-
-    reader = spark.read
-    lschema = None
-    if schema_json is not None:
-        lschema = StructType.fromJson(schema_json)
-        reader = reader.schema(
-            StructType([StructField(cmap.get(f.name, f.name),
-                                    f.dataType, True)
-                        for f in lschema.fields])
-            if cmap else lschema)
-    df = reader.parquet(*[os.path.join(root, _DATA, f) for f in names])
-    if cmap and lschema is not None:
-        df = df.select(*[F.col(cmap.get(f.name, f.name)).alias(f.name)
-                         for f in lschema.fields])
+def _live_tagged(spark: SparkSession, root: str, man: dict,
+                 names: list[str], row_ids: bool = False) -> DataFrame:
+    """:func:`_tagged_rows` of the named files of manifest ``man``
+    minus the positions their deletion vectors mark (the tags
+    survive)."""
+    stats = man.get("stats", {})
+    df = _tagged_rows(spark, root, man.get("schema"), stats, names,
+                      row_ids, cmap=man.get("colmap"))
+    dvm = _dv_map(stats, names)
+    if dvm:
+        df = df.join(
+            _dv_positions_df(spark, root, dvm, "_rt_f", "_rt_ri"),
+            ["_rt_f", "_rt_ri"], "left_anti")
     return df
 
 
@@ -841,20 +842,15 @@ def _logical_rows(spark: SparkSession, root: str, man: dict,
                   names: list[str], row_ids: bool = False) -> DataFrame:
     """The LOGICAL rows of the named files of manifest ``man`` — pinned
     schema, column mapping resolved, deletion vectors applied,
-    optional stable row ids. DV-free, id-free reads take the
-    tag-free fast path (zero plan changes vs a plain pinned scan)."""
-    stats = man.get("stats", {})
-    dvm = _dv_map(stats, names)
-    cmap = man.get("colmap")
-    if not dvm and not row_ids:
-        return _plain_scan(spark, root, man.get("schema"), names, cmap)
-    df = _tagged_rows(spark, root, man.get("schema"), stats, names,
-                      row_ids, cmap=cmap)
-    if dvm:
-        df = df.join(
-            _dv_positions_df(spark, root, dvm, "_rt_f", "_rt_ri"),
-            ["_rt_f", "_rt_ri"], "left_anti")
-    return df.drop("_rt_f", "_rt_ri")
+    optional stable row ids. This is the tag-free fast path: a read
+    that needs neither deletion vectors nor row ids is a bare
+    :func:`_pinned_scan` (``_metadata`` tags cost real per-row work at
+    scale and must never be paid by a store that doesn't use them)."""
+    if not row_ids and not _dv_map(man.get("stats", {}), names):
+        return _pinned_scan(spark, root, man.get("schema"), names,
+                            man.get("colmap"))
+    return _live_tagged(spark, root, man, names,
+                        row_ids).drop("_rt_f", "_rt_ri")
 
 
 def read_version_rows(spark: SparkSession, root: str,
@@ -923,20 +919,28 @@ def _stat_bound(v):
 
 def _overlaps(s, lo, hi) -> bool:
     """May a file whose stats range is ``s = [min, max]`` hold a value
-    in ``[lo, hi]``? Temporal bounds compare in :func:`_stat_bound`
-    form; a date against a timestamp compares on their common prefix
-    (the date), which never skips a file Spark's date-as-midnight
-    promotion could match."""
-    if not isinstance(lo, datetime.date) and not isinstance(
-            hi, datetime.date):
-        return s[0] <= hi and s[1] >= lo
-    lo, hi = _stat_bound(lo), _stat_bound(hi)
+    in ``[lo, hi]``? ``None`` is an open bound. Temporal bounds compare
+    in :func:`_stat_bound` form; a date against a timestamp compares on
+    their common prefix (the date), which never skips a file Spark's
+    date-as-midnight promotion could match. Bounds that cannot be
+    compared with the stats (another type) keep the file open."""
+    temporal = isinstance(lo, datetime.date) or isinstance(
+        hi, datetime.date)
+    if temporal:
+        lo, hi = _stat_bound(lo), _stat_bound(hi)
 
-    def le(a: str, b: str) -> bool:
-        n = min(len(a), len(b))
-        return a[:n] <= b[:n]
+    def le(a, b) -> bool:
+        if a is None or b is None:
+            return True
+        if temporal:
+            n = min(len(a), len(b))
+            a, b = a[:n], b[:n]
+        return a <= b
 
-    return le(s[0], hi) and le(lo, s[1])
+    try:
+        return le(s[0], hi) and le(lo, s[1])
+    except TypeError:
+        return True
 
 
 class ConstraintViolationError(ValueError):
@@ -1096,22 +1100,6 @@ def _publish_cas(root: str, version: int, body: str) -> bool:
         os.unlink(mtmp)
 
 
-def _norm_type(dt):
-    """Type with every nested nullability flag erased — nullability
-    (incl. array containsNull / map valueContainsNull) is a per-batch
-    inference artifact, never schema drift."""
-    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
-
-    if isinstance(dt, ArrayType):
-        return ArrayType(_norm_type(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_norm_type(dt.keyType), _norm_type(dt.valueType), True)
-    if isinstance(dt, StructType):
-        return StructType([StructField(f.name, _norm_type(f.dataType), True)
-                           for f in dt.fields])
-    return dt
-
-
 def _evolve_schema(prev_schema, df_schema, allow_evolution: bool):
     """Schema enforcement / evolution for a commit against a store with
     recorded schema ``prev_schema``: identical (name, type) sets pass
@@ -1122,8 +1110,11 @@ def _evolve_schema(prev_schema, df_schema, allow_evolution: bool):
     (legacy files surface them as NULL under the pinned-union read)."""
     from pyspark.sql.types import StructField, StructType
 
-    prev_by = {f.name: _norm_type(f.dataType) for f in prev_schema.fields}
-    df_by = {f.name: _norm_type(f.dataType) for f in df_schema.fields}
+    from .store_batch import nullable_schema
+
+    prev_by = {f.name: nullable_schema(f.dataType)
+               for f in prev_schema.fields}
+    df_by = {f.name: nullable_schema(f.dataType) for f in df_schema.fields}
     retyped = [n for n, t in df_by.items()
                if n in prev_by and prev_by[n] != t]
     if retyped:
@@ -1290,8 +1281,8 @@ def _transact(root: str, op: str, build, *, spark=None, staged=(),
                                             cmap=body.get("colmap"))
             else:
                 _validate_constraints(
-                    _plain_scan(spark, root, body["schema"], list(staged),
-                                body.get("colmap")),
+                    _pinned_scan(spark, root, body["schema"],
+                                 list(staged), body.get("colmap")),
                     cons, unresolvable_pass=True)
             validated = cons
         if len(body["segments"]) > _SEG_COMPACT_EVERY:
@@ -1565,76 +1556,110 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
         pending_tx=pending_tx)
 
 
+def _plan(root: str, version: int, ranges: dict | None = None,
+          eq: dict | None = None) -> tuple[dict, list[str], dict, int]:
+    """The ONE driver-side file planner of every pruning read
+    (:func:`read_version_pruned_multi`,
+    :func:`read_version_point_lookup`, the batch data source's
+    ``partitions()``): which live files of ``version`` may hold a row
+    matching EVERY ``col: (lo, hi)`` range of ``ranges`` (``None`` an
+    open bound) and, per ``eq`` column, one of its equality values.
+    Returns ``(raw, files, stats, n_total)``: the raw manifest (schema,
+    column mapping), the surviving files in manifest order with their
+    stats entries, and the live-file count before pruning.
+
+    Pruning is a pure planning decision over driver-side metadata and
+    only ever skips a file PROVEN rowless for the conjunction — a file
+    without stats for a column, or with bounds of another type, stays
+    open; the caller applies the precise predicate to the rows. 2PC
+    visibility is enforced first (a prepared or aborted cross-store
+    transaction raises). Columns are LOGICAL; stats and bloom sidecars
+    are keyed PHYSICAL on column-mapped stores (stable across renames),
+    so names are mapped here.
+
+    TWO-LEVEL on a manifest-list store (Iceberg's planning shape):
+    segment reference entries carry a per-column SUMMARY of their
+    files' ranges, so a whole segment whose summary misses a range is
+    skipped WITHOUT READING THE SEGMENT FILE — planning costs
+    O(#segments + files of matching segments). Summary-less entries
+    (legacy strings, mixed-stats segments) are read and pruned
+    file-by-file. Range survivors then probe the bloom sidecars of
+    their ``eq`` columns (integer keys; a file without a marker or
+    sidecar stays open) — Delta's bloom filter index."""
+    raw = _read_manifest_raw(root, version)
+    _check_tx_visible(root, version, raw)
+    cm = raw.get("colmap") or {}
+    ranges = {cm.get(c, c): r for c, r in (ranges or {}).items()}
+    eq = {cm.get(c, c): vs for c, vs in (eq or {}).items()}
+
+    def hits(fs: dict) -> bool:
+        return all(fs.get(c) is None or _overlaps(fs[c], lo, hi)
+                   for c, (lo, hi) in ranges.items())
+
+    def bloomed_out(f: str, fs: dict) -> bool:
+        for col, vals in eq.items():
+            if fs.get(_BLOOM_PREFIX + col) is None or not all(
+                    isinstance(v, int) for v in vals):
+                continue
+            try:
+                bl = _read_file_bloom(os.path.join(root, _DATA, f)).get(col)
+            except OSError:
+                continue  # sidecar gone: cannot prune
+            if bl is not None and not any(
+                    _bloom_maybe_contains(bl["words"], v, k=bl["k"])
+                    for v in vals):
+                return True
+        return False
+
+    n_total = 0
+    if "segments" in raw:
+        parts = []
+        for entry in raw["segments"]:
+            if isinstance(entry, dict) and not hits(entry["stats"]):
+                n_total += entry["n"]  # whole segment skipped unread
+            else:
+                parts.append(_read_segment(root, _seg_name(entry)))
+    else:
+        parts = [{"files": raw["files"], "stats": raw.get("stats", {})}]
+    files: list[str] = []
+    stats: dict = {}
+    for sd in parts:
+        n_total += len(sd["files"])
+        for f in sd["files"]:
+            fs = sd["stats"].get(f, {})
+            if hits(fs) and not bloomed_out(f, fs):
+                files.append(f)
+                stats[f] = fs
+    return raw, files, stats, n_total
+
+
+def _read_planned(spark: SparkSession, root: str, version: int,
+                  plan: tuple) -> tuple[DataFrame, int, int]:
+    """A :func:`_plan` result as ``(df, n_opened, n_total)``: the
+    logical rows of the surviving files (the schema preserved on an
+    empty match)."""
+    raw, files, stats, n_total = plan
+    if not files:
+        return read_version(spark, root, version).limit(0), 0, n_total
+    df = _logical_rows(spark, root, {**raw, "stats": stats}, files)
+    return df, len(files), n_total
+
+
 def read_version_pruned_multi(
         spark: SparkSession, root: str, version: int,
         preds: dict[str, tuple]) -> tuple[DataFrame, int, int]:
     """Snapshot read that OPENS only files whose manifest [min, max]
     stats overlap EVERY ``col: (lo, hi)`` range in ``preds`` — Iceberg-
-    style file skipping on a conjunction, as a pure planning decision
-    over driver-side metadata (no footer reads at plan time, no data
-    reads for skipped files). Returns ``(df, n_opened, n_total)``.
+    style file skipping on a conjunction, planned by :func:`_plan`
+    (two-level segment/file pruning; no footer reads at plan time, no
+    data reads for skipped files). Returns ``(df, n_opened, n_total)``.
     The skipped set is a proven superset-complement: a file whose
     min/max misses ANY conjunct cannot hold a row matching all of
     them, so the caller applying the PRECISE predicate to the returned
-    frame gets exactly the unpruned answer. A file without recorded
-    stats for a column is conservatively opened (that conjunct cannot
-    prune it).
-
-    TWO-LEVEL on a manifest-list store (Iceberg's actual planning
-    shape): segment reference entries carry a per-column SUMMARY of
-    their files' ranges, so a whole segment whose summary misses a
-    conjunct is skipped WITHOUT READING THE SEGMENT FILE — planning
-    cost is O(#segments + files of matching segments), not O(live
-    files). A range-clustered store (each append/compaction bin
-    covering a disjoint key range) makes most probes touch one
-    segment. Summary-less entries (legacy strings, mixed-stats
-    segments) are conservatively read and pruned file-by-file.
-
-    Column-mapped stores record stats under PHYSICAL names (stable
-    across renames, so a rename never rewrites O(live files) of
-    stats); callers keep passing LOGICAL predicate columns — mapped
-    here."""
-    raw = _read_manifest_raw(root, version)
-    _check_tx_visible(root, version, raw)  # pruning must not leak a
-    # prepared/aborted cross-store transaction's rows (2PC invisibility
-    # holds on EVERY read path, not just read_version/version_diff)
-    cm = raw.get("colmap") or {}
-    if cm:
-        preds = {cm.get(c, c): rng for c, rng in preds.items()}
-
-    def _hits(fs: dict) -> bool:
-        for col, (lo, hi) in preds.items():
-            s = fs.get(col)
-            if s is not None and not _overlaps(s, lo, hi):
-                return False
-        return True
-
-    if "segments" in raw:
-        keep: list[str] = []
-        kept_stats: dict = {}
-        n_total = 0
-        for entry in raw["segments"]:
-            if isinstance(entry, dict) and not _hits(entry["stats"]):
-                n_total += entry["n"]  # whole segment skipped unread
-                continue
-            sd = _read_segment(root, _seg_name(entry))
-            n_total += len(sd["files"])
-            sstats = sd["stats"]
-            for f in sd["files"]:
-                if _hits(sstats.get(f, {})):
-                    keep.append(f)
-                    kept_stats[f] = sstats.get(f, {})
-    else:
-        kept_stats = raw.get("stats", {})
-        keep = [f for f in raw["files"] if _hits(kept_stats.get(f, {}))]
-        n_total = len(raw["files"])
-    if not keep:  # preserve schema on an empty match
-        return (read_version(spark, root, version).limit(0),
-                0, n_total)
-    df = _logical_rows(spark, root,
-                       {"schema": raw.get("schema"), "stats": kept_stats,
-                        "colmap": raw.get("colmap")}, keep)
-    return (df, len(keep), n_total)
+    frame gets exactly the unpruned answer. Predicate columns are
+    LOGICAL on column-mapped stores too."""
+    return _read_planned(spark, root, version,
+                         _plan(root, version, ranges=preds))
 
 
 def read_version_pruned(spark: SparkSession, root: str, version: int,
@@ -1656,62 +1681,17 @@ def read_version_point_lookup(
     ``(df, n_opened, n_total)``; the caller applies the precise
     ``col = value`` filter to the returned frame.
 
-    Plan shape: range-prune FIRST through the manifest stats (free,
-    and decisive on clustered stores), then probe the SIDECAR blooms
-    of only the surviving candidates whose stats carry a bloom marker
-    — planning I/O is O(range-surviving candidates) small sidecar
-    reads, exactly what Delta's index pays, and nothing at all for
-    stores that never opted in. A file lacking a marker (pre-bloom
-    commits, copy-on-write victim rewrites) is conservatively opened —
-    absence can never drop a row, only forgo the skip; a bloom false
-    positive only ever OPENS an extra file, the precise filter keeps
-    the answer exact."""
-    raw = _read_manifest_raw(root, version)
-    _check_tx_visible(root, version, raw)  # same 2PC invisibility
-    # contract as read_version_pruned_multi — no leak via point lookups
-    cm = raw.get("colmap") or {}
-    col = cm.get(col, col)  # stats + sidecars are keyed PHYSICAL
-    key = _BLOOM_PREFIX + col
-
-    if "segments" in raw:
-        cand: list[str] = []
-        stats: dict = {}
-        n_total = 0
-        for entry in raw["segments"]:
-            if isinstance(entry, dict):
-                s = entry["stats"].get(col)
-                if s is not None and not _overlaps(s, value, value):
-                    n_total += entry["n"]  # range-skipped unread
-                    continue
-            sd = _read_segment(root, _seg_name(entry))
-            n_total += len(sd["files"])
-            cand += sd["files"]
-            stats.update(sd["stats"])
-    else:
-        cand = list(raw["files"])
-        stats = raw.get("stats", {})
-        n_total = len(cand)
-
-    keep: list[str] = []
-    for f in cand:
-        fs = stats.get(f, {})
-        rng = fs.get(col)
-        if rng is not None and not _overlaps(rng, value, value):
-            continue  # range stats already exclude it
-        marker = fs.get(key)
-        if marker is not None:
-            bl = _read_file_bloom(os.path.join(root, _DATA, f)).get(col)
-            if bl is not None and not _bloom_maybe_contains(
-                    bl["words"], value, k=bl["k"]):
-                continue  # definitely absent
-        keep.append(f)
-    if not keep:
-        return (read_version(spark, root, version).limit(0),
-                0, n_total)
-    df = _logical_rows(spark, root,
-                       {"schema": raw.get("schema"), "stats": stats,
-                        "colmap": raw.get("colmap")}, keep)
-    return (df, len(keep), n_total)
+    Plan shape (:func:`_plan`): range-prune FIRST through the manifest
+    stats (free, and decisive on clustered stores), then probe the
+    SIDECAR blooms of only the surviving candidates whose stats carry
+    a bloom marker — planning I/O is O(range-surviving candidates)
+    small sidecar reads, and nothing at all for stores that never
+    opted in. A file lacking a marker (pre-bloom commits, copy-on-write
+    victim rewrites) is conservatively opened; a bloom false positive
+    only ever OPENS an extra file, the precise filter keeps the answer
+    exact."""
+    return _read_planned(spark, root, version, _plan(
+        root, version, ranges={col: (value, value)}, eq={col: [value]}))
 
 
 def snapshot_row_count(root: str, version: int) -> int | None:
@@ -1867,32 +1847,14 @@ def _census_frame(spark: SparkSession, root: str, man: dict) -> DataFrame:
     are filtered out, so already-MoR-deleted rows never count as
     victims or matches. On a column-mapped store the rows surface
     under their LOGICAL names (the census conditions are logical)."""
-    from pyspark.sql.types import StructField, StructType
-
     files = man["files"]
-    cmap = man.get("colmap")
-    if cmap and man.get("schema") is not None:
-        lschema = StructType.fromJson(man["schema"])
-        reader = spark.read.schema(StructType(
-            [StructField(cmap.get(f.name, f.name), f.dataType, True)
-             for f in lschema.fields]))
-        logical = [F.col(cmap.get(f.name, f.name)).alias(f.name)
-                   for f in lschema.fields]
-    else:
-        reader = _version_reader(spark, man)
-        logical = [F.col("*")]
-    raw = reader.parquet(*[os.path.join(root, _DATA, f) for f in files])
-    dvm = _dv_map(man.get("stats", {}), files)
-    if not dvm:
-        return raw.select(
-            *logical, F.element_at(F.split(F.input_file_name(), "/"), -1)
-            .alias("_f"))
-    aug = raw.select(*logical,
-                     F.col("_metadata.file_name").alias("_f"),
-                     F.col("_metadata.row_index").alias("_dv_ri"))
-    pos = _dv_positions_df(spark, root, dvm, fn_col="_f", ri_col="_dv_ri")
-    return (aug.join(pos, ["_f", "_dv_ri"], "left_anti")
-            .drop("_dv_ri"))
+    if not _dv_map(man.get("stats", {}), files):
+        return _pinned_scan(
+            spark, root, man.get("schema"), files, man.get("colmap"),
+            tags=(F.element_at(F.split(F.input_file_name(), "/"), -1)
+                  .alias("_f"),))
+    return (_live_tagged(spark, root, man, files)
+            .withColumnRenamed("_rt_f", "_f").drop("_rt_ri"))
 
 
 def commit_delete(spark: SparkSession, root: str, condition,
@@ -2200,16 +2162,9 @@ def commit_update_mor(spark: SparkSession, root: str, condition,
                 f"{unknown}; table columns: {sorted(known)}")
     stats = man.get("stats", {})
     tracked = bool(man.get("row_tracking"))
-    aug = (_tagged_rows(spark, root, man.get("schema"), stats,
-                        man["files"], row_ids=tracked,
-                        cmap=man.get("colmap"))
+    aug = (_live_tagged(spark, root, man, man["files"], row_ids=tracked)
            .withColumnRenamed("_rt_f", "_f")
            .withColumnRenamed("_rt_ri", "_ri"))
-    dvm = _dv_map(stats, man["files"])
-    if dvm:
-        aug = aug.join(
-            _dv_positions_df(spark, root, dvm, fn_col="_f", ri_col="_ri"),
-            ["_f", "_ri"], "left_anti")
     hit = F.coalesce(condition, F.lit(False))
     # victims materialize ONCE (they are the matched rows only — small
     # by the verb's premise) and feed BOTH the sidecar staging and the
@@ -2220,7 +2175,8 @@ def commit_update_mor(spark: SparkSession, root: str, condition,
         return prev, 0, 0
     _, stage_version = _latest_and_claim(root)
     marked = _stage_dv_sidecars(root, victims.select("_f", "_ri"),
-                                dict(dvm), stage_version)
+                                _dv_map(stats, man["files"]),
+                                stage_version)
     by_file = {r["_f"]: r["dv"] for r in marked}
     types = ({f.name: f.dataType for f in schema.fields}
              if schema is not None else {})
@@ -2320,28 +2276,21 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     if txn is not None and txn_committed(root, txn):
         return prev, 0, 0
     man = read_manifest(root, prev)
-    stats = man.get("stats", {})
     # census with BOTH tags projected directly above the scan (the
     # `_metadata` column does not reliably resolve through joins, so
     # project first, then apply any existing vectors); column-mapped
     # stores surface logical names for the condition
-    aug = (_tagged_rows(spark, root, man.get("schema"), stats,
-                        man["files"], row_ids=False,
-                        cmap=man.get("colmap"))
+    aug = (_live_tagged(spark, root, man, man["files"])
            .withColumnRenamed("_rt_f", "_f")
            .withColumnRenamed("_rt_ri", "_ri"))
-    dvm = _dv_map(stats, man["files"])
-    if dvm:
-        aug = aug.join(
-            _dv_positions_df(spark, root, dvm, fn_col="_f", ri_col="_ri"),
-            ["_f", "_ri"], "left_anti")
     victims = aug.filter(condition).select("_f", "_ri")
     # provisional number for sidecar NAMING only (uniqueness + the
     # dead-writer vacuum rule key on it; manifests reference sidecars
     # BY NAME, so a rebase publishing at a later version keeps every
     # staged sidecar valid as named)
     _, stage_version = _latest_and_claim(root)
-    existing_dvs = dict(dvm)  # {file: old sidecar name}, O(#files)
+    # {file: old sidecar name}, O(#files)
+    existing_dvs = _dv_map(man.get("stats", {}), man["files"])
     marked = _stage_dv_sidecars(root, victims, existing_dvs,
                                 stage_version)
     if not marked:
@@ -2689,17 +2638,9 @@ def _version_diff(spark: SparkSession, root: str, v_from: int,
     def _read(names: list[str], stats: dict) -> DataFrame:
         if not names:
             return _empty()
-        names = sorted(names)
-        dvm = _dv_map(stats, names)
-        if not dvm and not row_ids:  # tag-free fast path
-            return _plain_scan(spark, root, schema_json, names, cmap)
-        df = _tagged_rows(spark, root, schema_json, stats, names,
-                          row_ids, cmap=cmap)
-        if dvm:
-            df = df.join(
-                _dv_positions_df(spark, root, dvm, "_rt_f", "_rt_ri"),
-                ["_rt_f", "_rt_ri"], "left_anti")
-        return df.drop("_rt_f", "_rt_ri")
+        return _logical_rows(
+            spark, root, {"schema": schema_json, "stats": stats,
+                          "colmap": cmap}, sorted(names), row_ids)
 
     def _rows_at(by_file: dict[str, set]) -> DataFrame:
         """The rows of exactly the given (file → positions) sets."""

@@ -36,21 +36,27 @@ pairing matters.
 Scale shape: offsets and change classification are DRIVER-side
 manifest metadata (O(#changed files) per commit — the same planning
 cost any snapshot read pays); row reads are EXECUTOR-side, one input
-partition per changed file, pyarrow-vectorized into Arrow record
-batches. A 1000-file commit fans out as 1000 tasks; nothing row-scale
-ever touches the driver. Aborted 2PC holes feed nothing; an in-doubt
-top-of-chain prepare simply holds ``latestOffset`` back until the
-transaction decides (2PC invisibility, preserved under streaming).
+partition per changed file, through the store's one executor file
+reader (``store_batch.read_file``, which the batch source's scan also
+runs: deletion-vector positions, physical→logical names, NULL-fill);
+the feed only appends its two change columns. A 1000-file commit fans
+out as 1000 tasks; nothing row-scale ever touches the driver. Aborted
+2PC holes feed nothing; an in-doubt top-of-chain prepare simply holds
+``latestOffset`` back until the transaction decides (2PC invisibility,
+preserved under streaming).
 
 Schema contract: the stream's schema (and column mapping) is pinned at
 QUERY START from the store's then-latest manifest — Spark streaming
-schemas are static. Files predating a schema evolution surface added
-columns as NULL; physical field names are stable under column mapping,
-so renames never break the feed. A RESTART from checkpoint re-resolves
-the schema from the then-latest manifest (``DataSource.schema()`` and
-the reader are re-instantiated per query), so after an ALTER/evolution
-the follower picks up the new columns by restarting — offsets carry
-over, exactly-once holds, pre-evolution files NULL-fill (pinned by
+schemas are static. Its data columns are declared NULLABLE, as every
+snapshot read's are: files predating a schema evolution surface added
+columns as NULL, and so do newer files an evolving append wrote
+without a column the manifest records NOT NULL; physical field names
+are stable under column mapping, so renames never break the feed. A
+RESTART from checkpoint re-resolves the schema from the then-latest
+manifest (``DataSource.schema()`` and the reader are re-instantiated
+per query), so after an ALTER/evolution the follower picks up the new
+columns by restarting — offsets carry over, exactly-once holds,
+pre-evolution files NULL-fill (pinned by
 ``tests/test_r16_ops.py::
 test_cdf_restart_from_checkpoint_picks_up_evolved_schema``). While a
 query is IN FLIGHT its pinned schema stays what it was at start:
@@ -65,7 +71,6 @@ change-feed subscription — the shape a 100 TB pipeline needs.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator, Sequence
 
@@ -78,9 +83,6 @@ FORMAT_NAME = "store_cdf"
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
-
-_DATA = "data"  # versioned_store._DATA (kept in sync; executor-side
-# reads must not import the Spark-session-level store module lazily)
 
 
 class _ChangePartition(InputPartition):
@@ -104,13 +106,6 @@ class _ChangePartition(InputPartition):
         self.mode = mode
         self.dv_exclude = dv_exclude
         self.dv_include = dv_include
-
-
-def _read_dv_positions(root: str, name: str) -> set:
-    from ..sources.dv_codec import decode_positions_doc
-
-    with open(os.path.join(root, _DATA, name), encoding="ascii") as f:
-        return set(decode_positions_doc(json.load(f)))
 
 
 def _visible_manifest_at(root: str, v: int):
@@ -201,54 +196,26 @@ def _plan_changes(root: str, lo: int, hi: int) -> list[_ChangePartition]:
     return parts
 
 
-def _read_change_partition(root: str, colmap: dict, schema_json,
-                           p: _ChangePartition) -> Iterator:
-    """EXECUTOR-side: pyarrow-read one changed file, apply the
-    position semantics, emit Arrow record batches under the pinned
-    schema (physical→logical mapping resolved here; columns predating
-    an evolution fill as NULL). Shared by the streaming source and
-    the batch range reader."""
+def _read_changes(root: str, colmap: dict, schema_json,
+                  p: _ChangePartition) -> Iterator:
+    """EXECUTOR-side: one changed file through the store's one file
+    reader (:func:`store_batch.read_file` — position semantics,
+    physical→logical names, NULL-fill under the relaxed pinned schema)
+    plus the two change columns, as Arrow record batches. Shared by
+    the streaming source and the batch range reader."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    table = pq.read_table(os.path.join(root, _DATA, p.file))
-    if colmap:  # physical field names → logical
-        inv = {phys: log for log, phys in colmap.items()}
-        table = table.rename_columns(
-            [inv.get(c, c) for c in table.column_names])
+    from ..sources.store_batch import read_file
+
+    table = read_file(root, p.file, colmap, schema_json,
+                      exclude=p.dv_exclude, include=p.dv_include)
     n = table.num_rows
-    if p.mode == "dv_diff":
-        inc = _read_dv_positions(root, p.dv_include)
-        exc = (_read_dv_positions(root, p.dv_exclude)
-               if p.dv_exclude else set())
-        # indices typed explicitly: an EMPTY diff (a restore that
-        # SHRANK the vector makes dv_t−dv_f empty) would otherwise
-        # hand pyarrow a null-typed list and crash array_take
-        table = table.take(pa.array(
-            sorted(q for q in inc - exc if q < n), type=pa.int64()))
-    elif p.dv_exclude:
-        exc = _read_dv_positions(root, p.dv_exclude)
-        table = table.take(pa.array(
-            [i for i in range(n) if i not in exc], type=pa.int64()))
-    target = to_arrow_schema(StructType.fromJson(schema_json))
-    cols = []
-    for field in target:
-        if field.name in table.column_names:
-            col = table.column(field.name)
-            if col.type != field.type:
-                col = col.cast(field.type)
-        else:  # pre-evolution file: the added column is NULL
-            col = pa.nulls(table.num_rows, type=field.type)
-        cols.append(col)
-    cols.append(pa.array([p.kind] * table.num_rows,
-                         type=pa.string()))
-    cols.append(pa.array([p.version] * table.num_rows,
-                         type=pa.int64()))
-    out = pa.table(
-        cols, names=[f.name for f in target]
-        + [CHANGE_TYPE_COL, COMMIT_VERSION_COL])
-    yield from out.to_batches(max_chunksize=1 << 16)
+    table = (table
+             .append_column(CHANGE_TYPE_COL,
+                            pa.array([p.kind] * n, type=pa.string()))
+             .append_column(COMMIT_VERSION_COL,
+                            pa.array([p.version] * n, type=pa.int64())))
+    yield from table.to_batches(max_chunksize=1 << 16)
 
 
 class StoreCDFStreamReader(DataSourceStreamReader):
@@ -436,8 +403,8 @@ class StoreCDFStreamReader(DataSourceStreamReader):
     def read(self, partition: _ChangePartition) -> Iterator:
         """EXECUTOR-side: one changed file → Arrow record batches
         under the stream's pinned schema (shared core:
-        :func:`_read_change_partition`)."""
-        yield from _read_change_partition(
+        :func:`_read_changes`)."""
+        yield from _read_changes(
             self._root, self._colmap, self._schema_json, partition)
 
     def commit(self, end: dict) -> None:
@@ -478,7 +445,7 @@ class StoreCDFBatchReader(DataSourceReader):
     def read(self, partition: _ChangePartition | None) -> Iterator:
         if partition is None:
             return  # empty range: one no-op task, schema preserved
-        yield from _read_change_partition(
+        yield from _read_changes(
             self._root, self._colmap, self._schema_json, partition)
 
 
@@ -510,9 +477,9 @@ class StoreChangeFeedDataSource(DataSource):
         ``table_changes(start, end)``.
 
     The source schema is the store's logical schema at the range end
-    (CURRENT for streams) plus ``_change_type`` (string) and
-    ``_commit_version`` (long) — the Delta ``readChangeFeed`` column
-    contract."""
+    (CURRENT for streams), nullability relaxed, plus ``_change_type``
+    (string) and ``_commit_version`` (long) — the Delta
+    ``readChangeFeed`` column contract."""
 
     @classmethod
     def name(cls) -> str:
@@ -520,6 +487,7 @@ class StoreChangeFeedDataSource(DataSource):
 
     def schema(self) -> StructType:
         from ..sources import versioned_store as vstore
+        from ..sources.store_batch import nullable_schema
 
         root = self.options.get("path")
         if not root:
@@ -539,7 +507,9 @@ class StoreChangeFeedDataSource(DataSource):
             raise ValueError(
                 f"{root} predates recorded schemas — the change-feed "
                 f"source needs a pinned schema to stream under")
-        out = StructType.fromJson(schema_json)
+        # nullability relaxed like every snapshot read: a file that
+        # predates a column feeds it as NULL whatever the manifest says
+        out = nullable_schema(StructType.fromJson(schema_json))
         out = out.add(CHANGE_TYPE_COL, StringType(), False)
         return out.add(COMMIT_VERSION_COL, LongType(), False)
 

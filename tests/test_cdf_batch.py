@@ -148,3 +148,37 @@ def test_ending_version_respects_2pc_invisibility(spark, tmp_path):
     # explicit ending at the last decided version still reads
     ok = cdf_source.read_change_feed(spark, root, ending_version=1)
     assert ok.count() == 10
+
+
+def test_feed_after_drop_column_evolution(spark, tmp_path):
+    """An evolving append that drops a column the first commit recorded
+    NOT NULL feeds that column as NULL — the feed is declared under the
+    relaxed schema every snapshot read uses, on the batch range read
+    and on the stream alike."""
+    root = str(tmp_path / "s")
+    vstore.commit_append(spark, root, spark.range(0, 5).select(
+        "id", (F.col("id") * 10).alias("x")).coalesce(1))
+    vstore.commit_append(spark, root, spark.range(0, 3).select(
+        (F.col("id") + 100).alias("x")).coalesce(1),
+        allow_evolution=True)
+    want = sorted([(i, i * 10, 1) for i in range(5)]
+                  + [(None, 100 + i, 2) for i in range(3)],
+                  key=lambda r: (r[2], r[1]))
+
+    def rows(df):
+        return sorted(((r["id"], r["x"], r["_commit_version"])
+                       for r in df.collect()),
+                      key=lambda r: (r[2], r[1]))
+
+    assert vstore.read_version(spark, root, 2).filter(
+        F.col("id").isNull()).count() == 3
+    assert rows(cdf_source.read_change_feed(spark, root)) == want
+    out = str(tmp_path / "feed")
+    q = (cdf_source.read_change_feed_stream(spark, root)
+         .writeStream.trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .foreachBatch(lambda bdf, bid:
+                       bdf.write.mode("append").parquet(out))
+         .start())
+    q.awaitTermination()
+    assert rows(spark.read.parquet(out)) == want

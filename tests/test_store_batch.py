@@ -178,6 +178,28 @@ def test_pushdown_range_conjunction_and_in(spark, tmp_path):
     assert len(r3.partitions()) == 1
 
 
+def test_pushdown_prunes_on_date_bounds(spark, tmp_path):
+    """Spark pushes a date filter as ``datetime.date``; the manifest
+    records date bounds as ISO strings. The shared planner compares
+    them in ISO form, so the scan opens only the overlapping file."""
+    import datetime
+
+    root = str(tmp_path / "s")
+    for lo in (0, 10, 20, 30):  # 10 days per append from 2024-01-01
+        vstore.commit_append(spark, root, spark.range(lo, lo + 10).select(
+            "id", F.date_add(F.lit("2024-01-01").cast("date"),
+                             F.col("id").cast("int")).alias("d"))
+            .coalesce(1), stats_cols=("id", "d"))
+    lo, hi = datetime.date(2024, 1, 31), datetime.date(2024, 2, 5)
+    r = StoreBatchReader(root, 4)
+    list(r.pushFilters([GreaterThan(("d",), lo), LessThan(("d",), hi)]))
+    parts = r.partitions()
+    assert (len(parts), r.plan_report["n_total"]) == (1, 4)
+    got = _bread(spark, root).filter(
+        (F.col("d") > F.lit(lo)) & (F.col("d") < F.lit(hi)))
+    assert sorted(x.id for x in got.collect()) == [31, 32, 33, 34]
+
+
 def test_pushdown_segment_level_skip(spark, tmp_path):
     """Each append is its own manifest segment; a filter inside one
     append's range skips the other segments WITHOUT reading their
