@@ -24,6 +24,14 @@ Scale notes (100 TB design):
   instead of the reference's N point queries — one pass, map-side partial
   aggregation, then a broadcast join back against the (tiny, one row per
   symbol) watermark table.
+- When the anti-join is skipped: a row strictly newer than its key's
+  watermark cannot match a stored PK if the PK is exactly (watermark
+  key, time column), so after ``filter_newer_than_watermark`` in-batch
+  dedup alone is conflict-free. ``pipeline.StockStore.ingest`` derives
+  that from ``schemas.PRIMARY_KEYS``/``TIME_COLUMNS`` and then calls
+  ``dedup_within_batch`` only; it saves the target probe and the bounds
+  action. Without the watermark (or with any other PK shape) the
+  anti-join stays: it is what takes older rows absent from the target.
 - Order-independence: the reference's sequential variants `break` on the
   first already-seen row and rely on API descending order
   (``main.py:137-140``). Sets in Spark are unordered; the anti-join gives

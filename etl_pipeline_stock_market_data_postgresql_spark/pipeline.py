@@ -5,18 +5,29 @@ reference stage                      → here
 1. config from env                   → PipelineConfig.from_env
 2. connection pool                   → (none — Spark session)
 3. CREATE TABLE IF NOT EXISTS ×4     → StockStore.ensure_tables (parquet dirs)
-4. dimension load (companies first)  → ensure_companies (anti-join append)
+4. dimension load (companies first)  → ensure_companies: one collect of the
+                                        stored symbols, a write of the
+                                        unseen ones only
 5-7. per-(symbol,endpoint) fetch →
    parse → watermark-skip → batch
-   insert ON CONFLICT DO NOTHING     → ingest(): parse_* → quarantine split
-                                        → watermark pre-filter → idempotent
-                                        anti-join append (operators.upsert)
-8. per-task result envelope + summary→ IngestReport per call
+   insert ON CONFLICT DO NOTHING     → ingest(): one lazy plan, one action
+                                        (the append write): envelope
+                                        split → parse_flagged quarantine
+                                        split → strict watermark filter →
+                                        in-batch PK dedup → broadcast FK
+                                        flag → append (operators.upsert)
+8. per-task result envelope + summary→ IngestReport per call, its counters
+                                        observed on that one write
 
 Differences by design (intent over buggy letter, SURVEY.md §7.3): loads
 are order-independent (no reliance on API descending order), malformed
-rows land in a quarantine table instead of log lines, and the watermark
-is read for all symbols in one grouped aggregation.
+rows are split off and counted instead of logged, and the watermark is
+read for all symbols in one grouped aggregation, which runs as a stage
+inside the append write. Every fact table's PK is exactly (symbol,
+time), so a row newer than its symbol's watermark cannot already be
+stored: under the watermark, in-batch dedup alone makes the append
+idempotent. ``use_watermark=False`` keeps the time-pruned anti-join
+(``upsert.idempotent_append``), which also takes older absent rows.
 
 Storage: one parquet dataset per table, fact tables partitioned by
 ``company_symbol`` (every reference read filters on symbol — SURVEY §4),
@@ -28,18 +39,45 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import schemas
 from .operators import upsert
 from .sources import alpha_vantage as av
 
-_PARSERS = {
-    "daily": (av.parse_daily, "daily_stock_prices"),
-    "intraday": (av.parse_intraday, "intraday_stock_prices"),
-    "sma": (av.parse_sma, "sma_indicators"),
+_TABLES = {
+    "daily": "daily_stock_prices",
+    "intraday": "intraday_stock_prices",
+    "sma": "sma_indicators",
 }
+_WM_KEYS = ["company_symbol"]  # the watermark's grouping
+
+
+def _observed(counters: list, df: DataFrame, **flags) -> DataFrame:
+    """``df`` observed with the number of rows where each boolean flag
+    holds; ``counters`` keeps the observation and what to recount."""
+    exprs = [F.count_if(flag).alias(name) for name, flag in flags.items()]
+    obs = Observation()
+    counters.append((obs, df, exprs))
+    return df.observe(obs, *exprs)
+
+
+def _counts(counters: list) -> dict[str, int]:
+    """The observed counters of the action that ran. AQE's empty-relation
+    propagation drops ``CollectMetricsExec`` from the final plan when it
+    proves the write's input empty, and ``get`` on a lost observation
+    raises. Nothing was written then, so recounting the same plans in one
+    aggregate is exact; no other path runs it."""
+    try:
+        return {k: v for obs, _, _ in counters for k, v in obs.get.items()}
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        aggs = [df.agg(*exprs) for _, df, exprs in counters]
+        return reduce(DataFrame.crossJoin, aggs).first().asDict()
 
 
 @dataclass
@@ -122,64 +160,59 @@ class StockStore:
 
     def ensure_companies(self, symbols: list[str]) -> int:
         """Dimension-first upsert (reference K4, ``ensure_company_exists``
-        ``main_parallel.py:221-227``): insert unseen symbols only."""
-        incoming = self.spark.createDataFrame(
-            [(s,) for s in symbols], schemas.COMPANIES)
-        delta = upsert.idempotent_append(
-            incoming, self.read("companies"), ["company_symbol"])
-        n = delta.count()
-        if n:
-            self.append("companies", delta)
-        return n
+        ``main_parallel.py:221-227``): insert unseen symbols only. One
+        collect of the stored symbols; a write only when one is new."""
+        seen = {r[0] for r in self.read("companies").collect()}
+        new = sorted(set(symbols) - seen)
+        if new:
+            self.append("companies", self.spark.createDataFrame(
+                [(s,) for s in new], schemas.COMPANIES))
+        return len(new)
 
     def ingest(self, endpoint: str, payloads: list[tuple[str, str]],
                use_watermark: bool = True) -> IngestReport:
-        """Full ingest of (symbol, raw_json) payloads for one endpoint."""
-        parser, table = _PARSERS[endpoint]
-        report = IngestReport(table=table)
-        pk = schemas.PRIMARY_KEYS[table]
-        time_col = schemas.TIME_COLUMNS[table]
-
-        raw = av.payloads_df(self.spark, payloads)
-        ok, rejected = av.split_error_envelopes(raw)
-        report.rejected_payloads = rejected.count()
-
-        # persist both parse outputs: every report counter below is an
-        # action, and without this each one re-runs the JSON parse DAG
-        good, bad = parser(ok)
-        good = good.persist()
-        bad = bad.persist()
-        report.rows_in = good.count()
-        report.rows_quarantined = bad.count()
+        """Full ingest of (symbol, raw_json) payloads for one endpoint:
+        one lazy plan and one action, the append write. Every counter
+        rides that write as an observed metric at the split it counts."""
+        table = _TABLES[endpoint]
+        pk, time_col = schemas.PRIMARY_KEYS[table], schemas.TIME_COLUMNS[table]
+        counters = []
+        raw = _observed(counters, av.flag_error_envelopes(
+            av.payloads_df(self.spark, payloads)),
+            rejected_payloads=F.col(av.ERROR))
+        rows = _observed(counters, av.parse_flagged(
+            raw.filter(~F.col(av.ERROR)), endpoint),
+            rows_in=~F.col(av.BAD), rows_quarantined=F.col(av.BAD))
+        batch, _ = av.split(rows, av.BAD)
 
         target = self.read(table)
-        batch = good
         if use_watermark:
-            wm = upsert.read_watermarks(target, ["company_symbol"], time_col)
+            wm = upsert.read_watermarks(target, _WM_KEYS, time_col)
             batch = upsert.filter_newer_than_watermark(
-                batch, wm, ["company_symbol"], time_col)
-        delta = upsert.idempotent_append(batch, target, pk, time_col=time_col)
+                batch, wm, _WM_KEYS, time_col)
+        # a row newer than its symbol's max time cannot share a stored PK
+        # when the PK is exactly (symbol, time): no anti-join needed
+        if use_watermark and pk == _WM_KEYS + [time_col]:
+            delta = upsert.dedup_within_batch(batch, pk)
+        else:
+            delta = upsert.idempotent_append(batch, target, pk, time_col=time_col)
 
         # FK check before append (reference loads companies first and
-        # relies on the DB FK; we validate explicitly)
-        violations = upsert.validate_foreign_key(
-            delta, self.read("companies"), ["company_symbol"])
-        n_bad_fk = violations.count()
-        if n_bad_fk:
-            report.errors.append(f"{n_bad_fk} rows violate FK to companies")
-            delta = delta.join(self.read("companies").select("company_symbol"),
-                               ["company_symbol"], "left_semi")
+        # relies on the DB FK; we validate explicitly). The dimension is
+        # PK-unique (ensure_companies), so the left join keeps rows 1:1.
+        known = self.read("companies").withColumn("_orphan", F.lit(False))
+        flagged = _observed(counters, delta.join(
+            F.broadcast(known), "company_symbol", "left"
+        ).fillna(True, ["_orphan"]), fk_violations=F.col("_orphan"),
+            rows_appended=~F.col("_orphan"))
+        self.append(table, flagged.filter(~F.col("_orphan")).drop("_orphan"))
 
-        appended = delta.persist()
-        report.rows_appended = appended.count()
-        report.rows_skipped_existing = (
-            report.rows_in - report.rows_appended
-            - (0 if not n_bad_fk else n_bad_fk))
-        if report.rows_appended:
-            self.append(table, appended)
-        appended.unpersist()
-        good.unpersist()
-        bad.unpersist()
+        n = _counts(counters)
+        fk = n.pop("fk_violations")
+        report = IngestReport(table=table, rows_skipped_existing=(
+            n["rows_in"] - n["rows_appended"] - fk), **n)
+        if fk:
+            report.errors.append(f"{fk} rows violate FK to companies")
         return report
 
     def validate(self) -> dict[str, int]:

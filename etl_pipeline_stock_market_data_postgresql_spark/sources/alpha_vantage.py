@@ -17,10 +17,16 @@ Error envelopes (``'Error Message'`` / ``'Note'`` keys,
 rows that fail projection/cast land in a quarantine DataFrame instead of
 being silently skipped (better observability than the reference's log
 lines — SURVEY.md §2.3 P7). Casts are ``try_cast`` — permissive NULL on
-failure, never an ANSI runtime error from one malformed row.
+failure, never an ANSI runtime error from one malformed row. Both splits
+also come in a flagged form (``flag_error_envelopes``, ``parse_flagged``):
+one frame with a boolean column, so a caller can count both sides of a
+split in the same pass that consumes one of them (``StockStore.ingest``).
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -40,11 +46,12 @@ _PAYLOAD_MAP = T.MapType(
     T.MapType(T.StringType(), T.MapType(T.StringType(), T.StringType())),
 )
 
-_OHLCV_METRICS = [
-    ("1. open", "open_price"),
-    ("2. high", "high_price"),
-    ("3. low", "low_price"),
-    ("4. close", "close_price"),
+_OHLCV = [
+    ("1. open", "open_price", PRICE),
+    ("2. high", "high_price", PRICE),
+    ("3. low", "low_price", PRICE),
+    ("4. close", "close_price", PRICE),
+    ("5. volume", "volume", "long"),
 ]
 
 
@@ -55,22 +62,33 @@ def payloads_df(spark: SparkSession, payloads: list[tuple[str, str]]) -> DataFra
     return spark.createDataFrame(payloads, "company_symbol string, payload_json string")
 
 
-def split_error_envelopes(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(ok, rejected): payloads whose JSON carries 'Error Message' or
-    'Note' are API failures / rate-limit notices (reference S3)."""
+# Boolean flag columns of the flagged forms below.
+ERROR = "_is_error"
+BAD = "_quarantined"
+
+
+def flag_error_envelopes(raw: DataFrame) -> DataFrame:
+    """``raw`` plus the :data:`ERROR` flag: the payload's JSON carries an
+    'Error Message' or 'Note' key, an API failure or rate-limit notice
+    (reference S3)."""
     keys = F.map_keys(
         F.from_json("payload_json", T.MapType(T.StringType(), T.StringType()))
     )
-    flagged = raw.withColumn(
-        "_is_error",
-        F.coalesce(
-            F.arrays_overlap(keys, F.array(F.lit("Error Message"), F.lit("Note"))),
-            F.lit(False),
-        ),
-    )
-    ok = flagged.filter(~F.col("_is_error")).drop("_is_error")
-    rejected = flagged.filter(F.col("_is_error")).drop("_is_error")
-    return ok, rejected
+    return raw.withColumn(ERROR, F.coalesce(
+        F.arrays_overlap(keys, F.array(F.lit("Error Message"), F.lit("Note"))),
+        F.lit(False),
+    ))
+
+
+def split(flagged: DataFrame, flag: str) -> tuple[DataFrame, DataFrame]:
+    """(rows without ``flag``, rows with it), the flag column dropped."""
+    return (flagged.filter(~F.col(flag)).drop(flag),
+            flagged.filter(F.col(flag)).drop(flag))
+
+
+def split_error_envelopes(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(ok, rejected) payloads: :func:`flag_error_envelopes`, split."""
+    return split(flag_error_envelopes(raw), ERROR)
 
 
 def _exploded_series(raw: DataFrame, endpoint: str) -> DataFrame:
@@ -89,53 +107,43 @@ def _exploded_series(raw: DataFrame, endpoint: str) -> DataFrame:
     )
 
 
-def _split_quarantine(df: DataFrame, required: list[str]) -> tuple[DataFrame, DataFrame]:
-    """Split permissively-cast rows into (good, quarantined): any NULL in
-    a required output column means a missing metric key or an
-    unparseable numeric/time string (reference KeyError/ValueError skip
-    path, ``main_parallel.py:277-278``, ``:352-353``)."""
-    null_any = None
-    for c in required:
-        piece = F.col(c).isNull()
-        null_any = piece if null_any is None else (null_any | piece)
-    return df.filter(~null_any), df.filter(null_any)
+# endpoint -> (time column, time parser, [(metric key, column, type)]);
+# metric keys cited at reference ``main_parallel.py:271-275``, ``:291-362``
+_LAYOUT = {
+    "daily": ("date", parse_date, _OHLCV),
+    "intraday": ("date_time", parse_timestamp_multi, _OHLCV),
+    "sma": ("date_time", parse_timestamp_multi, [("SMA", "sma_value", PRICE)]),
+}
 
 
-def _ohlcv_rows(raw: DataFrame, endpoint: str, time_expr, time_name: str) -> DataFrame:
-    cols = [
-        "company_symbol",
-        time_expr.alias(time_name),
-    ]
-    cols += [
-        F.element_at("metrics", F.lit(metric)).try_cast(PRICE).alias(out)
-        for metric, out in _OHLCV_METRICS
-    ]
-    cols.append(F.element_at("metrics", F.lit("5. volume")).try_cast("long").alias("volume"))
-    return _exploded_series(raw, endpoint).select(*cols)
+def parse_flagged(raw: DataFrame, endpoint: str) -> DataFrame:
+    """The endpoint's payloads → rows of its table's schema plus the
+    :data:`BAD` flag. Casts are permissive, so a NULL in any output
+    column means a missing metric key or an unparseable numeric/time
+    string: the row is flagged for quarantine (reference KeyError /
+    ValueError skip path, ``main_parallel.py:277-278``, ``:352-353``)."""
+    time_col, parse_time, metrics = _LAYOUT[endpoint]
+    rows = _exploded_series(raw, endpoint).select(
+        "company_symbol", parse_time(F.col("time_str")).alias(time_col),
+        *[F.element_at("metrics", F.lit(key)).try_cast(typ).alias(col)
+          for key, col, typ in metrics])
+    return rows.withColumn(BAD, reduce(
+        operator.or_, [F.col(c).isNull() for c in rows.columns[1:]]))
 
 
 def parse_daily(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Daily OHLCV payloads → (rows matching schemas.DAILY_STOCK_PRICES,
-    quarantine). Metric keys cited at reference ``main_parallel.py:271-275``."""
-    rows = _ohlcv_rows(raw, "daily", parse_date(F.col("time_str")), "date")
-    return _split_quarantine(rows, ["date", "open_price", "high_price",
-                                    "low_price", "close_price", "volume"])
+    quarantine)."""
+    return split(parse_flagged(raw, "daily"), BAD)
 
 
 def parse_intraday(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Intraday 5-minute OHLCV payloads (reference ``main_parallel.py:291-325``)."""
-    rows = _ohlcv_rows(raw, "intraday", parse_timestamp_multi(F.col("time_str")), "date_time")
-    return _split_quarantine(rows, ["date_time", "open_price", "high_price",
-                                    "low_price", "close_price", "volume"])
+    return split(parse_flagged(raw, "intraday"), BAD)
 
 
 def parse_sma(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """SMA indicator payloads (reference ``main_parallel.py:328-362``),
     including the 'yyyy-MM-dd HH:mm' timestamps the reference cannot parse
     (evidence ``etl_log.log:5136``)."""
-    rows = _exploded_series(raw, "sma").select(
-        "company_symbol",
-        parse_timestamp_multi(F.col("time_str")).alias("date_time"),
-        F.element_at("metrics", F.lit("SMA")).try_cast(PRICE).alias("sma_value"),
-    )
-    return _split_quarantine(rows, ["date_time", "sma_value"])
+    return split(parse_flagged(raw, "sma"), BAD)

@@ -121,3 +121,153 @@ def test_cli_lifecycle_via_run(spark, tmp_path, monkeypatch):
     assert all(r.rows_appended == 0 and r.rows_skipped_existing == r.rows_in
                for r in s2["ingests"].values())
     assert all(v == 0 for v in s2["validation"].values())
+
+
+# --- one observed write per ingest ------------------------------------------
+
+
+def _parquet_files(root) -> set[str]:
+    return {str(p) for p in root.rglob("*.parquet")}
+
+
+def _report(r) -> dict:
+    return {k: getattr(r, k) for k in (
+        "rows_in", "rows_appended", "rows_quarantined",
+        "rows_skipped_existing", "rejected_payloads", "errors")}
+
+
+class _ActionListener:
+    """``QueryExecutionListener`` over py4j: one entry per action."""
+
+    def __init__(self):
+        self.funcs = []
+
+    def onSuccess(self, func, qe, duration_ns):
+        self.funcs.append(func)
+
+    def onFailure(self, func, qe, exc):
+        self.funcs.append(func)
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+@pytest.fixture
+def actions(spark):
+    """Yields a callable that runs ``fn`` and returns the names of the
+    actions it ran."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    manager = spark._jsparkSession.listenerManager()
+    listener = _ActionListener()
+    manager.register(listener)
+
+    def run(fn):
+        bus.waitUntilEmpty()
+        listener.funcs.clear()
+        fn()
+        bus.waitUntilEmpty()
+        return list(listener.funcs)
+
+    yield run
+    manager.unregister(listener)
+
+
+AAPL_2 = _daily_payload({
+    "2025-12-09": (278.16, 280.03, 276.92, 277.18, 31753410),
+    "2025-12-08": (278.13, 279.6693, 276.15, 277.89, 36406317),
+})
+
+
+@pytest.mark.parametrize("payloads, expected", [
+    ([("AAPL", json.dumps({"Note": "rate limit"}))],
+     dict(rows_in=0, rows_appended=0, rows_quarantined=0,
+          rows_skipped_existing=0, rejected_payloads=1, errors=[])),
+    ([("AAPL", AAPL_2)],
+     dict(rows_in=2, rows_appended=0, rows_quarantined=0,
+          rows_skipped_existing=2, rejected_payloads=0, errors=[])),
+    ([("GHOST", AAPL_2)],
+     dict(rows_in=2, rows_appended=0, rows_quarantined=0,
+          rows_skipped_existing=0, rejected_payloads=0,
+          errors=["2 rows violate FK to companies"])),
+    ([], dict(rows_in=0, rows_appended=0, rows_quarantined=0,
+              rows_skipped_existing=0, rejected_payloads=0, errors=[])),
+], ids=["note_only", "exact_rerun", "fk_only", "no_payloads"])
+def test_zero_row_write_keeps_exact_counters(spark, tmp_path, payloads,
+                                             expected):
+    """When the write's input is empty, AQE drops the observed metrics
+    from the final plan. The counters are recounted and equal what one
+    count per counter gives, and no parquet file appears."""
+    store = StockStore(spark, str(tmp_path / "warehouse"))
+    store.ensure_companies(["AAPL"])
+    assert store.ingest("daily", [("AAPL", AAPL_2)]).rows_appended == 2
+    before = _parquet_files(tmp_path)
+    assert _report(store.ingest("daily", payloads)) == expected
+    assert _parquet_files(tmp_path) == before
+    assert store.read("daily_stock_prices").count() == 2
+
+
+def test_use_watermark_false_takes_older_absent_day(store):
+    """An older day absent from the table is below the watermark: the
+    watermark path skips it, the anti-join path appends it, and a re-run
+    is a no-op on both paths."""
+    store.ensure_companies(["AAPL"])
+    days = {"2025-12-10": (1, 2, 0.5, 1.5, 10), "2025-12-12": (2, 3, 1, 2, 20)}
+    assert store.ingest("daily", [("AAPL", _daily_payload(days))]).rows_appended == 2
+    older = [("AAPL", _daily_payload({"2025-12-11": (3, 4, 2, 3, 30),
+                                      "2025-12-12": (9, 9, 9, 9, 90)}))]
+
+    skipped = store.ingest("daily", older)
+    assert (skipped.rows_in, skipped.rows_appended,
+            skipped.rows_skipped_existing) == (2, 0, 2)
+    taken = store.ingest("daily", older, use_watermark=False)
+    assert (taken.rows_in, taken.rows_appended,
+            taken.rows_skipped_existing) == (2, 1, 1)
+    for use_watermark in (False, True):
+        again = store.ingest("daily", older, use_watermark=use_watermark)
+        assert (again.rows_appended, again.rows_skipped_existing) == (0, 2)
+
+    rows = {str(r["date"]): int(r["volume"])
+            for r in store.read("daily_stock_prices").collect()}
+    assert rows == {"2025-12-10": 10, "2025-12-11": 30, "2025-12-12": 20}
+
+
+def test_ensure_companies_known_symbols_one_action(store, tmp_path, actions):
+    store.ensure_companies(["AAPL", "MSFT"])
+    before = _parquet_files(tmp_path)
+    n = []
+    assert len(actions(lambda: n.append(
+        store.ensure_companies(["MSFT", "AAPL", "MSFT"])))) == 1
+    assert n == [0] and _parquet_files(tmp_path) == before
+
+
+def test_ingest_runs_one_action_the_write(store, tmp_path, actions):
+    store.ensure_companies(["AAPL"])
+    store.ingest("daily", [("AAPL", AAPL_2)])
+    before = _parquet_files(tmp_path)
+    payload = _daily_payload({"2025-12-10": (1, 2, 0.5, 1.5, 10)})
+    reports = []
+    ran = actions(lambda: reports.append(
+        store.ingest("daily", [("AAPL", payload), ("AAPL", payload)])))
+    assert len(ran) == 1
+    assert _report(reports[0]) == dict(
+        rows_in=2, rows_appended=1, rows_quarantined=0,
+        rows_skipped_existing=1, rejected_payloads=0, errors=[])
+    assert len(_parquet_files(tmp_path) - before) == 1
+
+
+def test_ingest_body_runs_no_action_but_the_write():
+    """``ingest`` builds one lazy plan: no counting, caching or result
+    fetch in its body (the zero-row recount lives in ``_counts``)."""
+    import ast
+    import inspect
+    import textwrap
+
+    src = textwrap.dedent(inspect.getsource(StockStore.ingest))
+    called = {node.func.attr for node in ast.walk(ast.parse(src))
+              if isinstance(node, ast.Call)
+              and isinstance(node.func, ast.Attribute)}
+    assert not called & {"count", "persist", "cache", "first", "collect",
+                         "take", "head", "toPandas"}, called

@@ -115,3 +115,83 @@ def test_bpe_driver_local_matches_reference(corpus, n_merges):
                     i += 1
             syms[w] = tuple(out)
     assert got == want
+
+
+# --- StockStore.ingest vs a plain-Python model of the lifecycle -------------
+
+_KNOWN = ("AAPL", "MSFT")
+
+
+@st.composite
+def daily_batches(draw):
+    """2-3 successive batches of (symbol, payload_json) with overlapping
+    days, one in-batch duplicate payload, malformed rows, one error
+    envelope and one payload of a symbol missing from companies."""
+    batches = []
+    for b in range(draw(st.integers(2, 3))):
+        def payload(sym):
+            days = draw(st.lists(st.integers(1, 12), min_size=1, max_size=6,
+                                 unique=True))
+            bad = draw(st.sets(st.sampled_from(days)))
+            return sym, json.dumps({"Time Series (Daily)": {
+                f"2025-11-{d:02d}": {"1. open": "oops"} if d in bad else {
+                    "1. open": f"{b}.{d}", "2. high": "2", "3. low": "1",
+                    "4. close": "1.5", "5. volume": str(100 * d + b)}
+                for d in days}})
+        batch = [payload(sym) for sym in _KNOWN]
+        batch.append(batch[draw(st.integers(0, len(_KNOWN) - 1))])
+        batch.append((draw(st.sampled_from(_KNOWN)), json.dumps({"Note": "x"})))
+        batch.append(payload("GHOST"))
+        batches.append(draw(st.permutations(batch)))
+    return batches
+
+
+def _model_ingest(table: dict, batch) -> dict:
+    """Insert-if-absent of the rows strictly newer than their symbol's
+    stored max date, malformed rows quarantined, FK to ``_KNOWN``."""
+    n = dict(rows_in=0, rows_quarantined=0, rejected_payloads=0)
+    marks = {}
+    for sym, day in table:
+        marks[sym] = max(marks.get(sym, day), day)
+    delta = {}
+    for sym, raw in batch:
+        doc = json.loads(raw)
+        if "Note" in doc:
+            n["rejected_payloads"] += 1
+            continue
+        for day, metrics in doc["Time Series (Daily)"].items():
+            if len(metrics) < 5:
+                n["rows_quarantined"] += 1
+                continue
+            n["rows_in"] += 1
+            if day > marks.get(sym, ""):
+                delta[(sym, day)] = (metrics["1. open"], metrics["5. volume"])
+    fk = sum(sym not in _KNOWN for sym, _ in delta)
+    appended = {k: v for k, v in delta.items() if k[0] in _KNOWN}
+    table.update(appended)
+    return dict(n, rows_appended=len(appended), rows_skipped_existing=(
+        n["rows_in"] - len(appended) - fk),
+        errors=[f"{fk} rows violate FK to companies"] if fk else [])
+
+
+@settings(max_examples=3, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(batches=daily_batches())
+def test_ingest_matches_lifecycle_model(spark, tmp_path_factory, batches):
+    from etl_pipeline_stock_market_data_postgresql_spark.pipeline import (
+        StockStore)
+
+    store = StockStore(spark, str(tmp_path_factory.mktemp("warehouse")))
+    store.ensure_companies(list(_KNOWN))
+    model = {}
+    for batch in batches:
+        r = store.ingest("daily", batch)
+        got = {k: getattr(r, k) for k in (
+            "rows_in", "rows_quarantined", "rejected_payloads",
+            "rows_appended", "rows_skipped_existing", "errors")}
+        assert got == _model_ingest(model, batch)
+    stored = {(r["company_symbol"], r["date"].isoformat()):
+              (f"{float(r['open_price']):g}", str(r["volume"]))
+              for r in store.read("daily_stock_prices").collect()}
+    assert stored == {k: (f"{float(o):g}", v) for k, (o, v) in model.items()}
