@@ -34,8 +34,8 @@ def _warm_engine_surfaces(spark) -> None:
         store_sink)
     from etl_pipeline_stock_market_data_postgresql_spark.streaming.ingest \
         import stateful_hwm_filter
-    from etl_pipeline_stock_market_data_postgresql_spark.workload import (
-        streaming_exec as se)
+    from etl_pipeline_stock_market_data_postgresql_spark.streaming.runner \
+        import run_available_now
 
     # Arrow Python-worker pool (mapInPandas / pandas_udf path)
     def _identity(batches):
@@ -58,13 +58,11 @@ def _warm_engine_surfaces(spark) -> None:
             .coalesce(1).write.mode("overwrite").parquet(feed)
         schema = spark.read.parquet(feed).schema
         stream = spark.readStream.schema(schema).parquet(feed)
-        q = (stateful_hwm_filter(stream, "k", "ts")
-             .writeStream.foreachBatch(lambda b, _i: b.count())
-             .option("checkpointLocation", os.path.join(base, "ck"))
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-        se._unload_state_stores(spark)
+        run_available_now(
+            stateful_hwm_filter(stream, "k", "ts")
+            .writeStream.foreachBatch(lambda b, _i: b.count())
+            .option("checkpointLocation", os.path.join(base, "ck")),
+            "bench_warm_stream")
         # Python DataSource planner/reader/writer worker processes
         store_sink.register(spark)
         root = os.path.join(base, "store")

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from .runner import run_available_now
+
 
 def read_stream(spark: SparkSession, path: str, schema: StructType,
                 fmt: str = "parquet") -> DataFrame:
@@ -97,10 +99,7 @@ def stateful_hwm_filter(stream: DataFrame, key_col: str, time_col: str) -> DataF
 
 def run_to_memory(df: DataFrame, name: str) -> StreamingQuery:
     """Drive a streaming plan to completion against a memory sink
-    (tests / smoke); caller reads ``spark.sql(f"SELECT * FROM {name}")``."""
-    q = (df.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         .start())
-    q.processAllAvailable()
-    return q
+    (tests / smoke) and return the stopped query; caller reads
+    ``spark.sql(f"SELECT * FROM {name}")``."""
+    return run_available_now(
+        df.writeStream.outputMode("append").format("memory"), name)

@@ -27,6 +27,8 @@ from ..sources.bucketed import colocated_join, write_bucketed
 from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 from ..sources.tables import load
 from ..sources.zorder import write_zordered
+from ..streaming.runner import (replay_deliveries, run_available_now,
+                                write_two_deliveries)
 
 Q75_BUCKETS = 8
 
@@ -2239,16 +2241,12 @@ def _q164_run_stream(spark: SparkSession, src_root: str, mv_root: str,
     continuously with a processing-time trigger."""
     from ..streaming import cdf_source
 
-    q = (cdf_source.read_change_feed_stream(spark, src_root)
-         .writeStream.trigger(availableNow=True)
-         .option("checkpointLocation", ck)
-         .foreachBatch(lambda bdf, bid: _q164_apply_batch(
-             bdf.sparkSession, mv_root, bdf, bid))
-         .start())
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_available_now(
+        cdf_source.read_change_feed_stream(spark, src_root).writeStream
+        .option("checkpointLocation", ck)
+        .foreachBatch(lambda bdf, bid: _q164_apply_batch(
+            bdf.sparkSession, mv_root, bdf, bid)),
+        "q164_change_feed_follower")
 
 
 def _q164_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
@@ -2674,8 +2672,6 @@ def _ensure_q167(spark: SparkSession, sf_dir: str) -> str:
     """q167's streaming store-sink chain: the store, its input feed and
     the stream checkpoint nest under one fixture dir (``store``,
     ``feed``, ``ck``). Returns the store root."""
-    import time as _time
-
     from ..streaming import store_sink
 
     def build(root: str) -> None:
@@ -2685,27 +2681,13 @@ def _ensure_q167(spark: SparkSession, sf_dir: str) -> str:
         # build-only bound: the gated read never scans the input table
         mx, = base.agg(F.max("event_id")).first()
         half = mx // 2
-        (base.filter(F.col("event_id") <= half).coalesce(1)
-         .write.parquet(feed))
-        first = {f for f in os.listdir(feed) if f.endswith(".parquet")}
-        (base.filter(F.col("event_id") > half).coalesce(1)
-         .write.mode("append").parquet(feed))
-        now = _time.time()
-        for f in os.listdir(feed):  # deterministic trigger order
-            if f.endswith(".parquet"):
-                t = now - 10.0 if f in first else now
-                os.utime(os.path.join(feed, f), (t, t))
-        schema = spark.read.parquet(feed).schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", "1").parquet(feed))
-        q = (store_sink.write_stream_to_store(
-                stream, store, ck, app_id="q167",
-                stats_cols=("event_id",))
-             .trigger(availableNow=True).start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        first = write_two_deliveries(
+            root, feed, base.filter(F.col("event_id") <= half).coalesce(1),
+            lambda _n: base.filter(F.col("event_id") > half).coalesce(1)
+        )["first"]
+        run_available_now(store_sink.write_stream_to_store(
+            replay_deliveries(spark, feed, first), store, ck,
+            app_id="q167", stats_cols=("event_id",)), "q167_store_sink")
 
     return os.path.join(fixture(sf_dir, "events_sink", table_fingerprint(
         sf_dir, ("events",), params="q167_sink_v2"), build)[0], "store")
@@ -2802,14 +2784,9 @@ def _ensure_q168(spark: SparkSession, sf_dir: str) -> str:
                 cursor_path=cursor)
             repl = (feed.filter(F.col("_change_type") == "insert")
                     .drop("_change_type", "_commit_version"))
-            q = (store_sink.write_stream_to_store(
-                    repl, dst, ck, app_id="q168",
-                    stats_cols=("event_id",))
-                 .trigger(availableNow=True).start())
-            try:
-                q.awaitTermination()
-            finally:
-                q.stop()
+            run_available_now(store_sink.write_stream_to_store(
+                repl, dst, ck, app_id="q168", stats_cols=("event_id",)),
+                "q168_incremental_replication")
 
     return os.path.join(fixture(sf_dir, "events_repl", table_fingerprint(
         sf_dir, ("events",), params="q168_repl_v2"), build)[0], "dst")
@@ -2907,15 +2884,9 @@ def _ensure_q169(spark: SparkSession, sf_dir: str) -> str:
          .withColumnRenamed("n_chars", "chars").coalesce(2)
          .write.parquet(feed))
         schema = spark.read.parquet(feed).schema
-        stream = spark.readStream.schema(schema).parquet(feed)
-        q = (store_sink.write_stream_to_store(
-                stream, sink, ck, app_id="q169",
-                stats_cols=("doc_id",))
-             .trigger(availableNow=True).start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        run_available_now(store_sink.write_stream_to_store(
+            spark.readStream.schema(schema).parquet(feed), sink, ck,
+            app_id="q169", stats_cols=("doc_id",)), "q169_mapped_store_sink")
 
     return os.path.join(fixture(sf_dir, "documents_mapped", table_fingerprint(
         sf_dir, ("documents",), params="q169_mapped_sink_v2"), build)[0],
@@ -3011,16 +2982,12 @@ def _ensure_q170(spark: SparkSession, sf_dir: str) -> str:
         vstore.restore(spark, src, 1)
         vstore.commit_delete_mor(spark, src, F.col("event_id") % 5 == 0,
                                  txn="q170-mor5")
-        q = (cdf_source.read_change_feed_stream(spark, src)
-             .writeStream.trigger(availableNow=True)
-             .option("checkpointLocation", ck)
-             .foreachBatch(lambda bdf, bid:
-                           bdf.write.mode("append").parquet(out))
-             .start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        run_available_now(
+            cdf_source.read_change_feed_stream(spark, src).writeStream
+            .option("checkpointLocation", ck)
+            .foreachBatch(lambda bdf, bid:
+                          bdf.write.mode("append").parquet(out)),
+            "q170_restore_feed")
 
     return os.path.join(fixture(
         sf_dir, "events_restore_feed", table_fingerprint(
@@ -3167,8 +3134,6 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
     """q171's streaming CDC merge chain: the store, its CDC feed and
     the stream checkpoint nest under one fixture dir (``store``,
     ``feed``, ``ck``). Returns the store root."""
-    import time as _time
-
     from ..sources import versioned_store as vstore
 
     def build(root: str) -> None:
@@ -3189,17 +3154,10 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
         vstore.commit_append(spark, store,
                              base.repartitionByRange(2, "cust_id"),
                              stats_cols=("cust_id",))
-        (feed.filter(F.col("v") <= half).coalesce(1)
-         .write.parquet(feed_dir))
-        first = {f for f in os.listdir(feed_dir)
-                 if f.endswith(".parquet")}
-        (feed.filter(F.col("v") > half).coalesce(1)
-         .write.mode("append").parquet(feed_dir))
-        now = _time.time()
-        for f in os.listdir(feed_dir):  # deterministic trigger order
-            if f.endswith(".parquet"):
-                t = now - 10.0 if f in first else now
-                os.utime(os.path.join(feed_dir, f), (t, t))
+        first = write_two_deliveries(
+            root, feed_dir, feed.filter(F.col("v") <= half).coalesce(1),
+            lambda _n: feed.filter(F.col("v") > half).coalesce(1)
+        )["first"]
 
         def apply_batch(bdf, bid):
             sess = bdf.sparkSession
@@ -3215,16 +3173,10 @@ def _ensure_q171(spark: SparkSession, sf_dir: str) -> str:
                 not_matched_insert_condition=F.col("op") != "D",
                 txn=("q171", bid))
 
-        schema = spark.read.parquet(feed_dir).schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", "1").parquet(feed_dir))
-        q = (stream.writeStream.trigger(availableNow=True)
-             .option("checkpointLocation", ck)
-             .foreachBatch(apply_batch).start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        run_available_now(
+            replay_deliveries(spark, feed_dir, first).writeStream
+            .option("checkpointLocation", ck).foreachBatch(apply_batch),
+            "q171_cdc_merge")
 
     return os.path.join(fixture(sf_dir, "customer_cdc", table_fingerprint(
         sf_dir, ("customer", "orders"), params="q171_cdc_merge_v2"),
@@ -3587,16 +3539,11 @@ def _ensure_q174(spark: SparkSession, sf_dir: str) -> str:
              .write.mode("append").parquet(out))
 
         for _ in range(4):  # 3 draining passes + 1 idle (cap = 4)
-            q = (cdf_source.read_change_feed_stream(
-                    spark, src, max_files_per_batch=4,
-                    cursor_path=cursor)
-                 .writeStream.trigger(availableNow=True)
-                 .option("checkpointLocation", ck)
-                 .foreachBatch(sink).start())
-            try:
-                q.awaitTermination()
-            finally:
-                q.stop()
+            run_available_now(
+                cdf_source.read_change_feed_stream(
+                    spark, src, max_files_per_batch=4, cursor_path=cursor)
+                .writeStream.option("checkpointLocation", ck)
+                .foreachBatch(sink), "q174_file_admission")
 
     return os.path.join(fixture(sf_dir, "events_admission", table_fingerprint(
         sf_dir, ("events",), params="q174_file_admission_v2"), build)[0],

@@ -1,21 +1,31 @@
-"""A query that actually EXECUTES through Structured Streaming inside
-the driver gate: the events parquet is consumed as a stream
-(availableNow micro-batches), aggregated with the streaming tumbling-
-window operator in complete output mode, and the materialized result is
-returned — hash-matching the same plain-SQL aggregation. Proves the
+"""Queries that actually EXECUTE through Structured Streaming inside
+the driver gate: the events parquet (or a two-delivery fixture feed) is
+consumed as a stream of availableNow micro-batches, run through a
+streaming operator (tumbling/session/sliding windows, stream-stream
+join, dedup within watermark, a custom stateful HWM filter, foreachBatch
+commits into a versioned store), and the materialized result is
+returned — hash-matching the same plain-SQL computation. Proves the
 batch/stream unification claim (SURVEY.md §2.9) with the correctness
-gate, not just unit tests."""
+gate, not just unit tests.
+
+Every query here runs through ``streaming/runner.run_available_now``:
+it names the query, drains it with ``awaitTermination`` and, in a
+``finally``, stops it, unloads the JVM's state stores and restores the
+shuffle-width / no-data-batch settings it was given — so a raising
+micro-batch leaves no active query and no loaded state behind."""
 
 from __future__ import annotations
 
 import os
-import time
-from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
+from ..streaming.runner import (replay_deliveries, run_available_now,
+                                write_two_deliveries)
+# re-exported: benchmark warm-ups and the replay tests import it here
+from ..streaming.runner import (  # noqa: F401
+    unload_state_stores as _unload_state_stores)
 
 # Stateful-stage parallelism. State-store instances are one-per-shuffle-
 # partition long-lived services whose per-batch snapshot/commit overhead
@@ -30,38 +40,28 @@ from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 STREAM_SMALL_STATE_PARTITIONS = 8
 FEED_FILES = 8  # q106's parallel per-delivery feed-write fan-out
 _STATE_WIDTH_BYTES = 64 * 1024 * 1024  # input size above which a
-                                       # key-per-row state (q96) keeps
-                                       # the session's full width
+                                       # stream keeps the session's
+                                       # full width
 
 
-def _state_width_for_input(sf_dir: str) -> int | None:
-    """Adaptive form of the sizing rule above for stages whose state is
-    one entry PER INPUT ROW (q96's PK-dedup): small inputs pay store
-    commit overhead and want few stores; large inputs are store-load
-    bound and want the session's full width (measured at 100×:
-    28.6s at 32 stores vs 55.7s at 8; at 1× the reverse, 2.1s vs
-    3.9s). Decided from file METADATA (no scan, no driver collect)."""
+def _state_width(path: str) -> int | None:
+    """Adaptive form of the sizing rule above, decided from the parquet
+    bytes at ``path`` (a file, or a feed directory's parquet files) —
+    file METADATA, no scan, no driver collect. A key-per-row state
+    (q96's PK-dedup) at small inputs pays store commit overhead and
+    wants few stores; large inputs are store-load bound and want the
+    session's full width (measured at 100×: 28.6s at 32 stores vs
+    55.7s at 8; at 1× the reverse, 2.1s vs 3.9s). A foreachBatch
+    commit over a delta feed (q122, q140) has only delta-proportional
+    shuffles, so the same rule sizes it to the delta, not the session
+    core count."""
     try:
-        big = (os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-               > _STATE_WIDTH_BYTES)
+        size = (sum(os.path.getsize(os.path.join(path, f))
+                    for f in os.listdir(path) if f.endswith(".parquet"))
+                if os.path.isdir(path) else os.path.getsize(path))
     except OSError:
-        big = False
-    return None if big else STREAM_SMALL_STATE_PARTITIONS
-
-
-@contextmanager
-def _stateful_shuffle_partitions(spark: SparkSession, n_parts: int | None):
-    """Pin shuffle partitions for a streaming query's lifetime (the
-    value is captured at query START), then restore the batch setting.
-    ``None`` keeps the session default (large-state queries)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    if n_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(min(int(old), n_parts)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        size = 0
+    return None if size > _STATE_WIDTH_BYTES else STREAM_SMALL_STATE_PARTITIONS
 
 
 def _stream_scratch(prefix: str, sf_dir: str) -> tuple[str, str]:
@@ -75,40 +75,13 @@ def _stream_scratch(prefix: str, sf_dir: str) -> tuple[str, str]:
     return os.path.join(root, "out"), os.path.join(root, "ckpt")
 
 
-def _two_deliveries(root: str, feed: str, first: DataFrame,
-                    second: Callable[[int], DataFrame]) -> dict:
-    """Write a two-delivery stream feed: ``first`` into ``feed``, then
-    ``second(n_first_files)`` appended. Returns the fixture bounds —
-    the batch-1 file names and EVERY parquet file (root-relative), so
-    ``derived_cache.fixture``'s file-equality check turns a stray file
-    into a rebuild instead of replayed batch-2 data (r17 ADVICE)."""
-    def names() -> list[str]:
-        return sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-
-    first.write.mode("overwrite").parquet(feed)
-    first_names = names()
-    second(len(first_names)).write.mode("append").parquet(feed)
-    rel = os.path.relpath(feed, root)
-    return {"first": first_names,
-            "files": [os.path.normpath(os.path.join(rel, f))
-                      for f in names()]}
-
-
-def _unload_state_stores(spark: SparkSession) -> None:
-    """Unload every loaded state-store provider after a finished
-    streaming query. Providers live in a JVM-wide singleton and are
-    NOT released when their query stops (only a lazy maintenance sweep
-    eventually evicts them), so a multi-query process (gate, bench,
-    probe sweep) accumulates every stopped query's in-heap state maps —
-    the round-8 sweep OOMed on q62's 9.5M-row session state only when
-    it ran AFTER five other streaming queries, while succeeding in
-    isolation. stop() also halts the maintenance thread; Spark restarts
-    it lazily on the next stateful query."""
+def _read_back(df: DataFrame, out_dir: str) -> DataFrame:
     try:
-        (spark._jvm.org.apache.spark.sql.execution.streaming
-         .state.StateStore.stop())
+        return df.sparkSession.read.parquet(out_dir)
     except Exception:
-        pass  # internal API; a rename only costs the eager unload
+        # zero committed batches/files (empty source + fresh
+        # checkpoint): out_dir holds no parquet schema to infer
+        return df.sparkSession.createDataFrame([], df.schema)
 
 
 def _run_stream_complete_to_files(df: DataFrame, prefix: str, sf_dir: str,
@@ -128,48 +101,13 @@ def _run_stream_complete_to_files(df: DataFrame, prefix: str, sf_dir: str,
     OVERWRITES the previous output, so the surviving files are exactly
     the final complete result."""
     out_dir, ckpt = _stream_scratch(prefix, sf_dir)
-    spark = df.sparkSession
-    with _stateful_shuffle_partitions(spark, n_parts):
-        q = (df.writeStream.outputMode("complete")
-             .foreachBatch(lambda bdf, _bid:
-                           bdf.write.mode("overwrite").parquet(out_dir))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-    _unload_state_stores(spark)
-    try:
-        return spark.read.parquet(out_dir)
-    except Exception:
-        # zero committed batches (empty source + fresh checkpoint):
-        # foreachBatch never ran, so out_dir was never created — same
-        # guard the append-mode twin below applies
-        return spark.createDataFrame([], df.schema)
-
-
-@contextmanager
-def _no_data_batches(spark: SparkSession, enabled: bool):
-    """Optionally disable the post-data NO-DATA micro-batch for a
-    query's lifetime. The engine schedules one extra empty batch after
-    the last data batch whenever the watermark advanced, to evict
-    state and emit watermark-FINALIZED results (window aggregates in
-    append mode). For emission-on-arrival operators — stream-stream
-    INNER joins, dropDuplicates[WithinWatermark] — that batch can only
-    evict state, never emit or retract a row, so its output is
-    byte-identical either way; measured r17 (sf0.1): the empty batch
-    costs nearly a full batch's fixed overhead (q73 addBatch 2.1 s for
-    0 rows vs 2.7 s for 200k — state-store load/commit per partition
-    per stateful op, planning, WAL). Callers whose results DEPEND on
-    watermark finalization (append-mode window aggs) must keep it
-    enabled."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    if not enabled:
-        spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    run_available_now(
+        df.writeStream.outputMode("complete")
+        .foreachBatch(lambda bdf, _bid:
+                      bdf.write.mode("overwrite").parquet(out_dir))
+        .option("checkpointLocation", ckpt),
+        prefix, shuffle_partitions=n_parts)
+    return _read_back(df, out_dir)
 
 
 def _run_stream_append_to_files(df: DataFrame, prefix: str, sf_dir: str,
@@ -188,21 +126,11 @@ def _run_stream_append_to_files(df: DataFrame, prefix: str, sf_dir: str,
     Sink+checkpoint live under the per-SF scratch root
     (derived_cache.scratch_base) and are recreated per invocation."""
     out_dir, ckpt = _stream_scratch(prefix, sf_dir)
-    spark = df.sparkSession
-    with _stateful_shuffle_partitions(spark, n_parts), \
-            _no_data_batches(spark, no_data_batches):
-        q = (df.writeStream.outputMode("append")
-             .format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-    _unload_state_stores(spark)
-    try:
-        return spark.read.parquet(out_dir)
-    except Exception:  # zero committed files -> schema can't be inferred
-        return spark.createDataFrame([], df.schema)
+    run_available_now(
+        df.writeStream.outputMode("append").format("parquet")
+        .option("path", out_dir).option("checkpointLocation", ckpt),
+        prefix, shuffle_partitions=n_parts, no_data_batches=no_data_batches)
+    return _read_back(df, out_dir)
 
 
 def _event_stream(spark: SparkSession, sf_dir: str):
@@ -410,9 +338,10 @@ def q96_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .dropDuplicatesWithinWatermark(["event_id"]))
     # first delivery emits on arrival, duplicates never retract: the
     # no-data batch could only evict key state — skip it (q73's rule)
-    return _run_stream_append_to_files(deduped, "q96_out", sf_dir,
-                                       _state_width_for_input(sf_dir),
-                                       no_data_batches=False)
+    return _run_stream_append_to_files(
+        deduped, "q96_out", sf_dir,
+        _state_width(os.path.join(sf_dir, "events.parquet")),
+        no_data_batches=False)
 
 
 _Q96_SQL = """
@@ -444,7 +373,7 @@ def _ensure_q106_feed(spark: SparkSession, sf_dir: str) -> tuple[str, set]:
         # which would silently land them in batch 1 here while the
         # oracle's sl arithmetic dropped them entirely
         is_second = F.col("event_id") % 2 != 0
-        return _two_deliveries(
+        return write_two_deliveries(
             root, root, ev.filter(~is_second).repartition(FEED_FILES),
             lambda n: ev.filter(is_second).repartition(max(1, n)))
 
@@ -457,9 +386,9 @@ def q106_streaming_stateful_hwm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CUSTOM stateful operator (applyInPandasWithState —
     streaming/ingest.stateful_hwm_filter) executed under the driver
     gate with REAL cross-batch state: the events table is split by
-    event_id parity into two files written in order, the file source
-    replays them as two micro-batches (maxFilesPerTrigger=1), and the
-    per-key high-water-mark filter — the reference's
+    event_id parity into two deliveries written in order, the file
+    source replays them as two micro-batches (runner.replay_deliveries),
+    and the per-key high-water-mark filter — the reference's
     ``check_last_date`` + skip loop as checkpointed streaming state —
     passes batch 1 through while filtering batch 2 against each key's
     batch-1 maximum. The parity split makes the second delivery
@@ -479,23 +408,10 @@ def q106_streaming_stateful_hwm(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds (ns→us inside the kernel), ties drop (strict >)."""
     from ..streaming.ingest import stateful_hwm_filter
 
-    path, batch1 = _ensure_q106_feed(spark, sf_dir)
-    files_per_trigger = max(1, len(batch1))
-    # pin the batch order explicitly: on a filesystem with coarse mtime
-    # resolution the two back-to-back writes can share a timestamp and
-    # the file-source ordering (hence the HWM result) would be
-    # nondeterministic — set strictly increasing mtimes instead of
-    # relying on write latency exceeding the fs granularity
-    now = time.time()
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            t = now - 10.0 if f in batch1 else now
-            os.utime(os.path.join(path, f), (t, t))
-    schema = spark.read.parquet(path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(files_per_trigger))
-              .parquet(path))
-    kept = stateful_hwm_filter(stream, "event_type", "ts")
+    # the file-source order (hence the HWM result) is pinned per run
+    kept = stateful_hwm_filter(
+        replay_deliveries(spark, *_ensure_q106_feed(spark, sf_dir)),
+        "event_type", "ts")
     out = _run_stream_append_to_files(kept, "q106_out", sf_dir,
                                       STREAM_SMALL_STATE_PARTITIONS)
     return out.select("event_id", "event_type",
@@ -597,8 +513,8 @@ def _ensure_q122_seed(spark: SparkSession,
                              stats_cols=("doc_id",))
         d1 = docs.filter((F.col("doc_id") > b) & (F.col("doc_id") <= mid))
         d2 = docs.filter(F.col("doc_id") > mid)
-        return _two_deliveries(root, os.path.join(root, "feed"),
-                               d1.coalesce(1), lambda _n: d2.coalesce(1))
+        return write_two_deliveries(root, os.path.join(root, "feed"),
+                                    d1.coalesce(1), lambda _n: d2.coalesce(1))
 
     root, bounds = fixture(sf_dir, "q122_seed", table_fingerprint(
         sf_dir, ("documents",),
@@ -622,9 +538,9 @@ def q122_streaming_incremental_dedup(spark: SparkSession,
 
     Fixture: the first 2/3 of documents (by id) batch-dedup into the
     index; the last 1/3 arrives as TWO micro-batches (file source,
-    maxFilesPerTrigger=1, mtime-pinned order — q106's determinism
-    recipe). Each ``foreachBatch``: read the index's latest snapshot,
-    run ``incremental_neardup``, commit verdicts + new index rows.
+    mtime-pinned order — runner.replay_deliveries). Each
+    ``foreachBatch``: read the index's latest snapshot, run
+    ``incremental_neardup``, commit verdicts + new index rows.
     Batch 2 therefore dedups against index ∪ kept(batch 1): sequential
     semantics, which near-dup REQUIRES (dropping a batch-1 doc removes
     its edges — a full batch recompute over everything would link
@@ -658,38 +574,18 @@ def q122_streaming_incremental_dedup(spark: SparkSession,
     # every run.
     seed_root, feed, first, mid = _ensure_q122_seed(spark, sf_dir)
     vstore.clone(seed_root, index_root)
-    # the two deliveries replay as two mtime-ordered micro-batches;
-    # mtimes are pinned fresh every run (coarse-fs determinism)
-    now = time.time()
-    for f in os.listdir(feed):
-        if f.endswith(".parquet"):
-            t = now - 10.0 if f in first else now
-            os.utime(os.path.join(feed, f), (t, t))
-
-    schema = spark.read.parquet(feed).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(feed))
-    # per-batch shuffle width sized to the DELTA, not the session core
-    # count: each trigger admits one feed file, and every shuffle in
-    # the commit (shingle spread, minhash agg, band/verify joins) is
-    # delta-proportional — the same metadata-derived adaptive rule as
-    # _state_width_for_input (guide §2: scale-adaptive partitioning;
-    # a feed above the width threshold keeps the session default)
-    feed_bytes = sum(
-        os.path.getsize(os.path.join(feed, f))
-        for f in os.listdir(feed) if f.endswith(".parquet"))
-    n_parts = (None if feed_bytes > _STATE_WIDTH_BYTES
-               else STREAM_SMALL_STATE_PARTITIONS)
-    with _stateful_shuffle_partitions(spark, n_parts):
-        q = (stream.writeStream
-             .foreachBatch(lambda bdf, bid: _q122_commit_batch(
-                 bdf.sparkSession, index_root, out_dir, bdf, bid))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-    _unload_state_stores(spark)
+    # the two deliveries replay as two mtime-ordered micro-batches; the
+    # per-batch shuffle width is sized to the DELTA, not the session
+    # core count — every shuffle in the commit (shingle spread, minhash
+    # agg, band/verify joins) is delta-proportional (guide §2:
+    # scale-adaptive partitioning)
+    run_available_now(
+        replay_deliveries(spark, feed, first).writeStream
+        .foreachBatch(lambda bdf, bid: _q122_commit_batch(
+            bdf.sparkSession, index_root, out_dir, bdf, bid))
+        .option("checkpointLocation", ckpt),
+        "q122_streaming_incremental_dedup",
+        shuffle_partitions=_state_width(feed))
     # maintenance pass: each micro-batch committed its kept rows as its
     # own small file(s), so the index accretes exactly the backlog the
     # q118/q137 compaction contract exists for — bin-pack it as a NEW
@@ -816,8 +712,8 @@ def _ensure_q140_feed(spark: SparkSession,
     def build(root: str) -> dict:
         d1 = emb.filter((F.col("vec_id") > b) & (F.col("vec_id") <= b2))
         d2 = emb.filter(F.col("vec_id") > b2)
-        return _two_deliveries(root, root, d1.coalesce(1),
-                               lambda _n: d2.coalesce(1))
+        return write_two_deliveries(root, root, d1.coalesce(1),
+                                    lambda _n: d2.coalesce(1))
 
     feed, bounds = fixture(sf_dir, "q140_feed", table_fingerprint(
         sf_dir, ("embeddings",), params=f"q140_feed_v1_b{b}_b2{b2}"),
@@ -869,34 +765,16 @@ def q140_streaming_ann_ingest(spark: SparkSession,
     # state comes from disk, not closures)
     centroids_path = os.path.join(base_dir, "ann_centroids")
     codebook_path = os.path.join(base_dir, "ann_codebook")
-    now = time.time()
-    for f in os.listdir(feed):
-        if f.endswith(".parquet"):
-            t = now - 10.0 if f in first else now
-            os.utime(os.path.join(feed, f), (t, t))
-
-    schema = spark.read.parquet(feed).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(feed))
-    # per-batch shuffle width sized to the DELTA (q122's rule): one
-    # feed file per trigger, and the commit's shuffles (argmin agg,
-    # code join, store write) are all batch-proportional
-    feed_bytes = sum(
-        os.path.getsize(os.path.join(feed, f))
-        for f in os.listdir(feed) if f.endswith(".parquet"))
-    n_parts = (None if feed_bytes > _STATE_WIDTH_BYTES
-               else STREAM_SMALL_STATE_PARTITIONS)
-    with _stateful_shuffle_partitions(spark, n_parts):
-        q = (stream.writeStream
-             .foreachBatch(lambda bdf, bid: _q140_commit_batch(
-                 bdf.sparkSession, store, bdf, bid,
-                 centroids_path, codebook_path))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-    _unload_state_stores(spark)
+    # per-batch shuffle width sized to the DELTA (q122's rule): the
+    # commit's shuffles (argmin agg, code join, store write) are all
+    # batch-proportional
+    run_available_now(
+        replay_deliveries(spark, feed, first).writeStream
+        .foreachBatch(lambda bdf, bid: _q140_commit_batch(
+            bdf.sparkSession, store, bdf, bid,
+            centroids_path, codebook_path))
+        .option("checkpointLocation", ckpt),
+        "q140_streaming_ann_ingest", shuffle_partitions=_state_width(feed))
     vstore.compact_latest(spark, store, STREAM_STORE_TARGET_BYTES,
                           cluster_by=("id",), stats_cols=("id", "cell"))
     st = vstore.read_version(spark, store, vstore.latest_version(store))
