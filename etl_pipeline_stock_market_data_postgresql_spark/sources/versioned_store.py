@@ -41,6 +41,14 @@ neither deletion vectors nor row ids. On executors,
 ``store_batch.read_file`` is the only reader of a data file, shared by
 the batch data source and the change feed.
 
+Every verb that replaces or masks files of one snapshot runs on three
+private steps. :func:`_snapshot` reads the latest version, its manifest
+and the txn ledger. :func:`_rewrite` is the one copy-on-write step
+(delete, update, both merge paths, DV purge, compaction, z-order
+clustering): it re-reads only the victim files and publishes their
+replacement. :func:`_mark` is the one merge-on-read step (MoR delete and
+update): it stages deletion-vector sidecars for the matched rows.
+
 Reference parity: the reference delegates durability/versioning to
 PostgreSQL (MVCC); this is the Spark-native equivalent for immutable
 file storage.
@@ -229,7 +237,8 @@ _SEG_DIR = "segments"
 #: on changes an OLD reader would silently MISREAD (Delta's
 #: minReaderVersion): 1 = flat file list (implicit — pre-r13 manifests
 #: carry no field), 2 = manifest-list segments + per-app txn ledger.
-#: Additive fields (op, n_new_files) never bump it.
+#: Additive fields (op, n_new_files, attempts, rebased_from) never bump
+#: it.
 _FORMAT_VERSION = 2
 
 
@@ -1234,7 +1243,8 @@ def _transact(root: str, op: str, build, *, spark=None, staged=(),
        (segments, schema, constraints, mapping and row tracking — the
        verb's only contribution; its own checks raise from there);
     4. CAS-publishes it (:func:`_publish_cas`), recording the number
-       of CAS attempts as ``attempts``.
+       of CAS attempts as ``attempts`` and, when it rebased, the
+       snapshot it was derived from as ``rebased_from``.
 
     One retry rule on a lost CAS: a file-scoped commit (``touched`` is
     a set — blind appends touch nothing; deletes, merges, compactions
@@ -1255,7 +1265,8 @@ def _transact(root: str, op: str, build, *, spark=None, staged=(),
         prev, version = _latest_and_claim(root)
         praw = _read_manifest_raw(root, prev) if prev is not None else None
         pm = _resolve(root, praw) if praw is not None else None
-        if based_on is not None and (prev or 0) != based_on:
+        rebased = based_on is not None and (prev or 0) != based_on
+        if rebased:
             if touched is not None and pm is not None and base_man is None:
                 base_man = read_manifest(root, based_on)
             if (touched is None or pm is None
@@ -1293,6 +1304,8 @@ def _transact(root: str, op: str, build, *, spark=None, staged=(),
         raw = {"version": version, "format": _FORMAT_VERSION,
                "txns": txns, **body, "op": op,
                "n_new_files": len(staged), "attempts": attempts}
+        if rebased:  # published over commits it was not derived from
+            raw["rebased_from"] = based_on
         if pending_tx is not None:  # phase 1 of a cross-store commit:
             # invisible until the coordinator's decision record says so
             raw["pending_tx"] = list(pending_tx)
@@ -1857,6 +1870,132 @@ def _census_frame(spark: SparkSession, root: str, man: dict) -> DataFrame:
             .withColumnRenamed("_rt_f", "_f").drop("_rt_ri"))
 
 
+def _snapshot(root: str, txn=None, required: bool = True):
+    """The snapshot every row-level and maintenance verb derives its
+    plan from: ``(version, manifest, done)`` of the latest visible
+    version, where ``done`` is True when ``txn`` is already recorded in
+    that manifest's ledger (exactly-once: the verb returns without
+    work). An empty store raises — or, with ``required=False``, yields
+    None."""
+    v = latest_version(root)
+    if v is None:
+        if not required:
+            return None
+        raise ValueError(f"no committed version under {root}")
+    man = read_manifest(root, v)
+    return v, man, _ledger(man, _txn_key(txn)) is None
+
+
+def _files_of(census: DataFrame) -> set[str]:
+    """The data files (``_f``) holding the census rows — one collect
+    of O(#files) names, never of rows."""
+    return {r["_f"] for r in census.select("_f").distinct().collect()}
+
+
+def _rewrite(spark: SparkSession, root: str, snap, victims, rows_of, *,
+             op: str, stats_cols: tuple[str, ...], txn
+             ) -> tuple[int, int, int]:
+    """THE copy-on-write step of every verb that replaces files of one
+    snapshot (delete, update, merge, DV purge, compaction, clustering):
+    re-read ONLY the ``victims`` files of ``snap`` — logical rows under
+    the manifest's pinned union schema (a schema-evolved store's victim
+    files may predate evolved columns), deletion vectors applied, and
+    on a row-tracked store with their MATERIALIZED ids (a rewrite
+    scrambles positions, so base + row index no longer identifies a
+    row) — and publish ``rows_of(rows)`` in their place. ``rows`` is
+    None when files carry but none is a victim (a MERGE that only
+    inserts); a zero-file snapshot reads as an empty frame. Every other
+    file carries BY NAME, byte-untouched. The commit is based on the
+    snapshot and scoped to the victims, so a disjoint interleaved
+    commit rebases and an overlapping one raises
+    (:func:`_rebase_safe`). Returns ``(version, n_files_rewritten,
+    n_files_carried)``."""
+    v, man, _ = snap
+    victim_list = [f for f in man["files"] if f in victims]
+    carried = [f for f in man["files"] if f not in victims]
+    rows = (None if carried and not victim_list else _logical_rows(
+        spark, root, man, victim_list, row_ids=bool(man.get("row_tracking"))))
+    newv = _commit(spark, root, rows_of(rows), carry=carried,
+                   stats_cols=stats_cols, txn=txn, op=op, based_on=v,
+                   removed_files=victim_list)
+    return newv, len(victim_list), len(carried)
+
+
+def _mark(spark: SparkSession, root: str, snap, hit,
+          keep_rows: bool = False) -> tuple[DataFrame, dict, int]:
+    """THE merge-on-read step: mask the live rows of ``snap`` where
+    ``hit`` holds with deletion vectors, one sidecar per victim file
+    (:func:`_stage_dv_sidecars`). The census projects BOTH tags — file
+    ``_f`` and row index ``_ri`` — directly above the scan (the
+    ``_metadata`` column does not reliably resolve through joins, so
+    tag first, then apply existing vectors: already-masked rows never
+    match again); column-mapped stores surface logical names for the
+    condition. With ``keep_rows`` the victims, with their ids on a
+    row-tracked store, materialize ONCE (the matched rows only — small
+    by the verb's premise) so the caller writes postimages from them
+    without re-running the census. Returns ``(victims, {file:
+    sidecar}, n_rows_marked)``; the count comes from the staged
+    sidecars, not from an action of its own."""
+    v, man, _ = snap
+    victims = (_live_tagged(spark, root, man, man["files"],
+                            row_ids=keep_rows
+                            and bool(man.get("row_tracking")))
+               .withColumnRenamed("_rt_f", "_f")
+               .withColumnRenamed("_rt_ri", "_ri").filter(hit))
+    if keep_rows:
+        victims = victims.localCheckpoint(eager=True)
+    # provisional number for sidecar NAMING only (uniqueness + the
+    # dead-writer vacuum rule key on it; manifests reference sidecars
+    # BY NAME, so a rebase publishing at a later version keeps every
+    # staged sidecar valid as named)
+    _, stage_version = _latest_and_claim(root)
+    marked = _stage_dv_sidecars(root, victims.select("_f", "_ri"),
+                                _dv_map(man.get("stats", {}), man["files"]),
+                                stage_version)
+    return (victims, {r["_f"]: r["dv"] for r in marked},
+            int(sum(r["n_new"] for r in marked)))
+
+
+def _update_set(root: str, man: dict, set_exprs: dict):
+    """UPDATE's typed ``SET``, shared by the copy-on-write and the
+    merge-on-read verb. Raises on an assigned column the table lacks;
+    returns ``cols(frame, hit=None)``, the output columns over
+    ``frame``'s data columns: each assigned column takes its
+    expression (Column or SQL string) cast to the recorded type
+    (schema enforcement never loosens through an UPDATE) — only where
+    ``hit`` holds, when given — the rest pass through, and a
+    row-tracked store's ``_row_id`` rides along (an update changes
+    values, never identity)."""
+    from pyspark.sql.types import StructType
+
+    types = ({f.name: f.dataType for f in
+              StructType.fromJson(man["schema"]).fields}
+             if man.get("schema") is not None else {})
+    unknown = sorted(set(set_exprs) - set(types))
+    if types and unknown:
+        raise ValueError(
+            f"UPDATE on {root} assigns unknown column(s) "
+            f"{unknown}; table columns: {sorted(types)}")
+    tail = [F.col(_ROW_ID)] if man.get("row_tracking") else []
+
+    def cols(frame: DataFrame, hit=None) -> list:
+        out = []
+        for c in frame.columns:
+            if c in (_ROW_ID, "_f", "_ri"):
+                continue
+            e = set_exprs.get(c)
+            if e is None:
+                out.append(F.col(c))
+                continue
+            e = F.expr(e) if isinstance(e, str) else e
+            e = e.cast(types[c]) if c in types else e
+            out.append((e if hit is None
+                        else F.when(hit, e).otherwise(F.col(c))).alias(c))
+        return out + tail
+
+    return cols
+
+
 def commit_delete(spark: SparkSession, root: str, condition,
                   stats_cols: tuple[str, ...] = ("id",),
                   txn: str | tuple[str, int] | None = None) -> tuple[int, int, int]:
@@ -1866,10 +2005,11 @@ def commit_delete(spark: SparkSession, root: str, condition,
     victim census (one column-pruned scan grouped by
     ``input_file_name``) identifies exactly the files holding matching
     rows; ONLY those files are re-read, filtered to survivors, and
-    re-emitted; every other file is carried BY NAME into the new
-    manifest, byte-untouched. Old snapshots keep reading the pre-delete
-    state until vacuum. An all-victim file simply contributes no
-    survivors — nothing to resurrect, no directory bookkeeping.
+    re-emitted (:func:`_rewrite`); every other file is carried BY NAME
+    into the new manifest, byte-untouched. Old snapshots keep reading
+    the pre-delete state until vacuum. An all-victim file simply
+    contributes no survivors — nothing to resurrect, no directory
+    bookkeeping.
 
     Returns ``(new_version, n_files_rewritten, n_files_carried)``;
     when nothing matches, no commit happens and the current version is
@@ -1879,39 +2019,22 @@ def commit_delete(spark: SparkSession, root: str, condition,
     skipping applies to it like any read); rewrite cost ∝ victim-
     bearing files only — a clustered purge (a crawl snapshot, a domain)
     touches the few files whose stats ranges cover it."""
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
-    if txn is not None and txn_committed(root, txn):
-        man = read_manifest(root, v)
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
         return v, 0, len(man["files"])
-    man = read_manifest(root, v)
-    victims = {r["_f"] for r in
-               _census_frame(spark, root, man).filter(condition)
-               .select("_f").distinct().collect()}
+    victims = _files_of(_census_frame(spark, root, man).filter(condition))
     if not victims:
         return v, 0, len(man["files"])
-    carried = [f for f in man["files"] if f not in victims]
     # survivors = rows where the predicate is NOT TRUE — the null-safe
     # complement (SQL three-valued logic: filter(~cond) would DROP
     # rows where cond evaluates to NULL, silently deleting
     # non-matching rows; Delta DELETE keeps them). The victim census
     # above is consistent: filter(cond) keeps only TRUE rows, so a
     # file whose only "matches" are NULLs is never rewritten at all.
-    # The re-read pins the manifest's recorded union schema, exactly
-    # like read_version — a schema-evolved store's victim files may
-    # predate evolved columns, and bare inference would miss them. On
-    # a row-tracked store the survivors carry their MATERIALIZED ids
-    # into the rewritten files (rewrites scramble positions, so the
-    # base+index arithmetic no longer identifies them).
-    victim_list = [f for f in man["files"] if f in victims]
-    survivors = (_logical_rows(spark, root, man, victim_list,
-                               row_ids=bool(man.get("row_tracking")))
-                 .filter(~F.coalesce(condition, F.lit(False))))
-    newv = _commit(spark, root, survivors, carry=carried,
-                   stats_cols=stats_cols, txn=txn, op="delete",
-                   based_on=v, removed_files=victim_list)
-    return newv, len(victims), len(carried)
+    return _rewrite(spark, root, snap, victims,
+                    lambda rows: rows.filter(
+                        ~F.coalesce(condition, F.lit(False))),
+                    op="delete", stats_cols=stats_cols, txn=txn)
 
 
 def commit_update(spark: SparkSession, root: str, condition,
@@ -1940,51 +2063,17 @@ def commit_update(spark: SparkSession, root: str, condition,
     matches → no commit. Scale shape: census ∝ one pruned scan,
     rewrite ∝ victim-bearing files — a key-clustered correction
     touches the files whose stats cover it, never the table."""
-    from pyspark.sql.types import StructType
-
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
-    man = read_manifest(root, v)
-    if txn is not None and txn_committed(root, txn):
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
         return v, 0, len(man["files"])
-    schema = (StructType.fromJson(man["schema"])
-              if man.get("schema") is not None else None)
-    if schema is not None:
-        known = {f.name for f in schema.fields}
-        unknown = sorted(set(set_exprs) - known)
-        if unknown:
-            raise ValueError(
-                f"UPDATE on {root} assigns unknown column(s) "
-                f"{unknown}; table columns: {sorted(known)}")
-    victims = {r["_f"] for r in
-               _census_frame(spark, root, man).filter(condition)
-               .select("_f").distinct().collect()}
+    set_cols = _update_set(root, man, set_exprs)
+    victims = _files_of(_census_frame(spark, root, man).filter(condition))
     if not victims:
         return v, 0, len(man["files"])
-    carried = [f for f in man["files"] if f not in victims]
-    victim_list = [f for f in man["files"] if f in victims]
-    tracked = bool(man.get("row_tracking"))
-    rows = _logical_rows(spark, root, man, victim_list, row_ids=tracked)
     hit = F.coalesce(condition, F.lit(False))
-    types = ({f.name: f.dataType for f in schema.fields}
-             if schema is not None else {})
-    out_cols = []
-    for c in [x for x in rows.columns if x != _ROW_ID]:
-        if c in set_exprs:
-            e = set_exprs[c]
-            e = F.expr(e) if isinstance(e, str) else e
-            if c in types:
-                e = e.cast(types[c])
-            out_cols.append(F.when(hit, e).otherwise(F.col(c)).alias(c))
-        else:
-            out_cols.append(F.col(c))
-    if tracked:
-        out_cols.append(F.col(_ROW_ID))
-    newv = _commit(spark, root, rows.select(*out_cols), carry=carried,
-                   stats_cols=stats_cols, txn=txn, op="update",
-                   based_on=v, removed_files=victim_list)
-    return newv, len(victims), len(carried)
+    return _rewrite(spark, root, snap, victims,
+                    lambda rows: rows.select(*set_cols(rows, hit)),
+                    op="update", stats_cols=stats_cols, txn=txn)
 
 
 def commit_staged_files(root: str, new_files: list[str],
@@ -2142,67 +2231,24 @@ def commit_update_mor(spark: SparkSession, root: str, condition,
 
     Returns ``(version, n_files_marked, n_rows_updated)``; no matches
     → no commit."""
-    from pyspark.sql.types import StructType
-
-    tk = _txn_key(txn)
-    prev = latest_version(root)
-    if prev is None:
-        raise ValueError(f"no committed version under {root}")
-    if tk is not None and txn_committed(root, txn):
-        return prev, 0, 0
-    man = read_manifest(root, prev)
-    schema = (StructType.fromJson(man["schema"])
-              if man.get("schema") is not None else None)
-    if schema is not None:
-        known = {f.name for f in schema.fields}
-        unknown = sorted(set(set_exprs) - known)
-        if unknown:
-            raise ValueError(
-                f"UPDATE on {root} assigns unknown column(s) "
-                f"{unknown}; table columns: {sorted(known)}")
-    stats = man.get("stats", {})
-    tracked = bool(man.get("row_tracking"))
-    aug = (_live_tagged(spark, root, man, man["files"], row_ids=tracked)
-           .withColumnRenamed("_rt_f", "_f")
-           .withColumnRenamed("_rt_ri", "_ri"))
-    hit = F.coalesce(condition, F.lit(False))
-    # victims materialize ONCE (they are the matched rows only — small
-    # by the verb's premise) and feed BOTH the sidecar staging and the
-    # postimage write without re-running the census
-    victims = aug.filter(hit).localCheckpoint(eager=True)
-    n_updated = victims.count()
-    if n_updated == 0:
-        return prev, 0, 0
-    _, stage_version = _latest_and_claim(root)
-    marked = _stage_dv_sidecars(root, victims.select("_f", "_ri"),
-                                _dv_map(stats, man["files"]),
-                                stage_version)
-    by_file = {r["_f"]: r["dv"] for r in marked}
-    types = ({f.name: f.dataType for f in schema.fields}
-             if schema is not None else {})
-    data_cols = [c for c in victims.columns
-                 if c not in ("_f", "_ri", _ROW_ID)]
-    out_cols = []
-    for c in data_cols:
-        if c in set_exprs:
-            e = set_exprs[c]
-            e = F.expr(e) if isinstance(e, str) else e
-            if c in types:
-                e = e.cast(types[c])
-            out_cols.append(e.alias(c))
-        else:
-            out_cols.append(F.col(c))
-    if tracked:  # postimages keep their identity
-        out_cols.append(F.col(_ROW_ID))
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
+        return v, 0, 0
+    set_cols = _update_set(root, man, set_exprs)
+    victims, by_file, n_updated = _mark(
+        spark, root, snap, F.coalesce(condition, F.lit(False)),
+        keep_rows=True)
+    if not by_file:
+        return v, 0, 0
     # ONE postimage file: the verb's premise is matched rows ≪ table
     # (a correction touching a large fraction belongs to the CoW
     # UPDATE, whose rewrite amortizes); the narrow coalesce avoids a
     # per-census-partition spray of tiny files
-    corrected = victims.select(*out_cols).coalesce(1)
+    corrected = victims.select(*set_cols(victims)).coalesce(1)
     newv = _commit(spark, root, corrected, carry=list(man["files"]),
                    stats_cols=stats_cols, txn=txn, op="update_mor",
-                   based_on=prev, dv_updates=by_file)
-    return newv, len(by_file), int(n_updated)
+                   based_on=v, dv_updates=by_file)
+    return newv, len(by_file), n_updated
 
 
 def _stage_dv_sidecars(root: str, victims: DataFrame,
@@ -2216,8 +2262,8 @@ def _stage_dv_sidecars(root: str, victims: DataFrame,
     marking 10^8 scattered rows costs a shuffle of the victim rows,
     not driver memory. A retried/speculated task writes an extra
     orphan sidecar; only the winning attempt's row is referenced and
-    vacuum reclaims the rest. Shared by the MoR DELETE and MoR UPDATE
-    verbs."""
+    vacuum reclaims the rest. Called only by :func:`_mark`, the one
+    merge-on-read step."""
     def _emit_dv(pdf):
         import pandas as pd
 
@@ -2270,34 +2316,12 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     raises on any overlap."""
     from pyspark.sql.types import StructType
 
-    prev = latest_version(root)
-    if prev is None:
-        raise ValueError(f"no committed version under {root}")
-    if txn is not None and txn_committed(root, txn):
-        return prev, 0, 0
-    man = read_manifest(root, prev)
-    # census with BOTH tags projected directly above the scan (the
-    # `_metadata` column does not reliably resolve through joins, so
-    # project first, then apply any existing vectors); column-mapped
-    # stores surface logical names for the condition
-    aug = (_live_tagged(spark, root, man, man["files"])
-           .withColumnRenamed("_rt_f", "_f")
-           .withColumnRenamed("_rt_ri", "_ri"))
-    victims = aug.filter(condition).select("_f", "_ri")
-    # provisional number for sidecar NAMING only (uniqueness + the
-    # dead-writer vacuum rule key on it; manifests reference sidecars
-    # BY NAME, so a rebase publishing at a later version keeps every
-    # staged sidecar valid as named)
-    _, stage_version = _latest_and_claim(root)
-    # {file: old sidecar name}, O(#files)
-    existing_dvs = _dv_map(man.get("stats", {}), man["files"])
-    marked = _stage_dv_sidecars(root, victims, existing_dvs,
-                                stage_version)
-    if not marked:
-        return prev, 0, 0
-    n_victims = int(sum(r["n_new"] for r in marked))
-    by_file = {r["_f"]: r["dv"] for r in marked}
-
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
+        return v, 0, 0
+    _, by_file, n_victims = _mark(spark, root, snap, condition)
+    if not by_file:
+        return v, 0, 0
     # publish with FILE-GRANULARITY conflict checking (Delta's
     # WriteSerializable): the expensive staging above is paid ONCE; a
     # commit that interleaved is a conflict only when its changes
@@ -2306,11 +2330,11 @@ def commit_delete_mor(spark: SparkSession, root: str, condition,
     # MoR-deleting disjoint files both land with one staging pass
     # each; a blind append never conflicts with a delete it wasn't
     # visible to.
-    v = _publish_files(
+    newv = _publish_files(
         spark, root, [], StructType.fromJson(man["schema"]), txn=txn,
-        op="delete_mor", dv_updates=by_file, based_on=prev,
+        op="delete_mor", dv_updates=by_file, based_on=v,
         colmap=man.get("colmap"), colmax=int(man.get("colmax", 0)))
-    return v, len(by_file), n_victims
+    return newv, len(by_file), n_victims
 
 
 def _rebase_safe(base_man: dict, cur_man: dict, removed) -> bool:
@@ -2348,23 +2372,16 @@ def purge_deletion_vectors(spark: SparkSession, root: str,
     pays the copy-on-write cost the MoR delete deferred, restoring the
     zero-read-tax plan. Only DV-bearing files rewrite; clean files
     carry by name. Returns ``(version, n_files_purged)``."""
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
-    if txn is not None and txn_committed(root, txn):
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
         return v, 0
-    man = read_manifest(root, v)
-    dvm = _dv_map(man.get("stats", {}), man["files"])
-    if not dvm:
+    dirty = _dv_map(man.get("stats", {}), man["files"])
+    if not dirty:
         return v, 0
-    carried = [f for f in man["files"] if f not in dvm]
-    dirty = list(dvm)
-    survivors = _logical_rows(spark, root, man, dirty,
-                              row_ids=bool(man.get("row_tracking")))
-    newv = _commit(spark, root, survivors, carry=carried,
-                   stats_cols=stats_cols, txn=txn, op="purge_dv",
-                   based_on=v, removed_files=dirty)
-    return newv, len(dirty)
+    newv, n_purged, _ = _rewrite(spark, root, snap, dirty, lambda rows: rows,
+                                 op="purge_dv", stats_cols=stats_cols,
+                                 txn=txn)
+    return newv, n_purged
 
 
 def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
@@ -2439,14 +2456,12 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
     in the upsert pattern — against one pruned scan); the rewrite is
     ∝ affected files + |updates| — a key-clustered store localizes
     matches to few files exactly as it localizes deletes."""
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
-    man = read_manifest(root, v)
-    if txn is not None and txn_committed(root, txn):
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
         return v, 0, len(man["files"])
     tracked = bool(man.get("row_tracking"))
     df = read_version(spark, root, v)
+    tcols = df.columns
     keys = updates.select(*key_cols).distinct()
     extended = (matched_condition is not None or update_set is not None
                 or not_matched_by_source_delete is not None
@@ -2457,38 +2472,31 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
         # key columns. _census_frame tags rows with their file name
         # directly above the scan (PreReadCheck-safe; DV-aware), then
         # the semi-join reduces to matched file names.
-        tagged = _census_frame(spark, root, man).select(*key_cols, "_f")
-        affected = {r["_f"] for r in
-                    tagged.join(keys, list(key_cols), "left_semi")
-                    .select("_f").distinct().collect()}
-        carried = [f for f in man["files"] if f not in affected]
-        if affected:
-            victim_list = [f for f in man["files"] if f in affected]
-            victims_df = _logical_rows(spark, root, man, victim_list,
-                                       row_ids=tracked)
-            survivors = victims_df.join(keys, list(key_cols), "left_anti")
-            ups = updates.select(*df.columns)
+        affected = _files_of(
+            _census_frame(spark, root, man).select(*key_cols, "_f")
+            .join(keys, list(key_cols), "left_semi"))
+
+        def rows_of(victims):
+            ups = updates.select(*tcols)
+            if victims is None:
+                return ups
             if tracked:
                 # an UPDATE keeps the target row's stable id (Delta row
                 # tracking's contract): attach matched targets' ids by
                 # key; unmatched source rows insert with NULL and get a
-                # fresh id from the new file's __brid__ base
-                matched_ids = (victims_df
+                # fresh id from the new file's __brid__ base. min() so
+                # a duplicate-keyed target still collapses to ONE
+                # surviving row, exactly like the untracked path
+                matched_ids = (victims
                                .join(keys, list(key_cols), "left_semi")
                                .groupBy(*key_cols)
                                .agg(F.min(_ROW_ID).alias(_ROW_ID)))
-                # min() so a duplicate-keyed target still collapses to
-                # ONE surviving row, exactly like the untracked path
                 ups = ups.join(matched_ids, list(key_cols), "left")
-            out = survivors.unionByName(ups)
-        else:
-            out = updates.select(*df.columns)
-        newv = _commit(spark, root, out, carry=carried,
-                       stats_cols=stats_cols, txn=txn, op="merge",
-                       based_on=v,
-                       removed_files=[f for f in man["files"]
-                                      if f in affected])
-        return newv, len(affected), len(carried)
+            return (victims.join(keys, list(key_cols), "left_anti")
+                    .unionByName(ups))
+
+        return _rewrite(spark, root, snap, affected, rows_of, op="merge",
+                        stats_cols=stats_cols, txn=txn)
 
     def _joined(target: DataFrame):
         """target ⟕ source on keys, plus ``_m`` (match flag), ``_md``
@@ -2517,56 +2525,39 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
         return (j.withColumn("_m", m).withColumn("_md", md)
                 .withColumn("_u", upd).withColumn("_d", dele))
 
+    def rows_of(victims):
+        # inserts: source keys matching NO target row anywhere (a key
+        # that matched a row in a CARRIED file — e.g. matched_condition
+        # false — must not insert), as whole rows; the not-matched
+        # condition (over plain source column names) gates them — a
+        # CDC tombstone for a never-seen key is a no-op, not an insert
+        ins_src = updates
+        if not_matched_insert_condition is not None:
+            ins_src = ins_src.filter(
+                F.coalesce(not_matched_insert_condition, F.lit(False)))
+        inserts = (ins_src.join(df.select(*key_cols).distinct(),
+                                list(key_cols), "left_anti")
+                   .select(*tcols))
+        if victims is None:
+            return inserts
+        j = _joined(victims).filter(~F.col("_d") & ~F.col("_md"))
+        out_cols = [F.when(F.col("_u"), F.col(f"s.{c}") if update_set is None
+                           else update_set.get(c, F.col(f"t.{c}")))
+                    .otherwise(F.col(f"t.{c}")).alias(c) for c in tcols]
+        if tracked:  # updated AND untouched survivors keep their ids;
+            # a NULL insert id => the reader assigns base + row index
+            # from the new file's __brid__ — a fresh id, as an insert wants
+            out_cols.append(F.col(f"t.{_ROW_ID}").alias(_ROW_ID))
+            inserts = inserts.withColumn(_ROW_ID, F.lit(None).cast("long"))
+        return j.select(*out_cols).unionByName(inserts)
+
     # census: one pruned-column scan joined to the source — affected
     # files are those holding an updating match or a deleting
     # unmatched row. _census_frame tags the scan (DV-aware).
-    census = _joined(_census_frame(spark, root, man))
-    affected = {r["_f"] for r in
-                census.filter(F.col("_u") | F.col("_d") | F.col("_md"))
-                .select("_f").distinct().collect()}
-    carried = [f for f in man["files"] if f not in affected]
-    tcols = df.columns
-    if affected:
-        victim_list = [f for f in man["files"] if f in affected]
-        victims = _logical_rows(spark, root, man, victim_list,
-                                row_ids=tracked)
-        j = _joined(victims).filter(~F.col("_d") & ~F.col("_md"))
-        if update_set is None:
-            out_cols = [F.when(F.col("_u"), F.col(f"s.{c}"))
-                        .otherwise(F.col(f"t.{c}")).alias(c)
-                        for c in tcols]
-        else:
-            out_cols = [F.when(F.col("_u"),
-                               update_set.get(c, F.col(f"t.{c}")))
-                        .otherwise(F.col(f"t.{c}")).alias(c)
-                        for c in tcols]
-        if tracked:  # updated AND untouched survivors keep their ids
-            out_cols.append(F.col(f"t.{_ROW_ID}").alias(_ROW_ID))
-        rewritten = j.select(*out_cols)
-    else:
-        rewritten = None
-    # inserts: source keys matching NO target row anywhere (a key that
-    # matched a row in a CARRIED file — e.g. matched_condition false —
-    # must not insert), as whole rows; the not-matched condition (over
-    # plain source column names) gates them — a CDC tombstone for a
-    # never-seen key is a no-op, not an insert
-    ins_src = updates
-    if not_matched_insert_condition is not None:
-        ins_src = ins_src.filter(
-            F.coalesce(not_matched_insert_condition, F.lit(False)))
-    inserts = (ins_src.join(df.select(*key_cols).distinct(),
-                            list(key_cols), "left_anti")
-               .select(*tcols))
-    if tracked and rewritten is not None:
-        # NULL materialized id => the reader assigns base + row index
-        # from the new file's __brid__ — a fresh id, as an insert wants
-        inserts = inserts.withColumn(_ROW_ID, F.lit(None).cast("long"))
-    out = inserts if rewritten is None else rewritten.unionByName(inserts)
-    newv = _commit(spark, root, out, carry=carried,
-                   stats_cols=stats_cols, txn=txn, op="merge",
-                   based_on=v,
-                   removed_files=[f for f in man["files"] if f in affected])
-    return newv, len(affected), len(carried)
+    affected = _files_of(_joined(_census_frame(spark, root, man))
+                         .filter(F.col("_u") | F.col("_d") | F.col("_md")))
+    return _rewrite(spark, root, snap, affected, rows_of, op="merge",
+                    stats_cols=stats_cols, txn=txn)
 
 
 def _and_all(conds):
@@ -2914,8 +2905,6 @@ def _metadata_commit(root: str, mutate, op: str,
     window where a commit lands between the derivation and this
     publish."""
     def build(version: int, praw: dict | None, pm: dict | None) -> dict:
-        if pm is None:
-            raise ValueError(f"no committed version under {root}")
         body = _carry_row_tracking(
             {"segments": _segments_of(root, praw),
              "schema": pm.get("schema"),
@@ -2945,9 +2934,7 @@ def add_check_constraint(spark: SparkSession, root: str, name: str,
     raises :class:`ConcurrentCommitError` instead of letting rows the
     scan never saw slip in under the new rule — the symmetric half of
     the commit path's in-loop revalidation."""
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
+    v = _snapshot(root)[0]
     _validate_constraints(read_version(spark, root, v),
                           {name: expr_sql})
 
@@ -2960,6 +2947,8 @@ def add_check_constraint(spark: SparkSession, root: str, name: str,
 def drop_check_constraint(spark: SparkSession, root: str,
                           name: str) -> int:
     """``ALTER TABLE ... DROP CONSTRAINT`` — metadata-only."""
+    _snapshot(root)
+
     def mutate(raw):
         if name not in raw["constraints"]:
             raise KeyError(f"no CHECK constraint named {name!r}")
@@ -2977,10 +2966,7 @@ def check_constraints(root: str) -> dict[str, str]:
 
 
 def _require_mapping(root: str) -> tuple[int, dict]:
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"no committed version under {root}")
-    man = read_manifest(root, v)
+    v, man, _ = _snapshot(root)
     if man.get("colmap") is None:
         raise ValueError(
             f"{root} was created without column mapping — rename/drop "
@@ -3098,9 +3084,7 @@ def restore(spark: SparkSession, root: str, to_version: int,
     no retained manifest references, but the caller may have passed a
     narrower ``keep_versions``); a missing file raises here, at
     restore time, rather than at first read."""
-    prev = latest_version(root)
-    if prev is None:
-        raise ValueError(f"cannot restore {root}: no committed version")
+    prev = _snapshot(root)[0]
     if not 1 <= to_version <= prev:
         raise ValueError(f"cannot restore {root} to version {to_version}: "
                          f"latest is {prev}")
@@ -3171,10 +3155,8 @@ def clone(root_src: str, root_dst: str,
     ``root_dst`` must not already be a store."""
     if latest_version(root_dst) is not None:
         raise ValueError(f"clone destination {root_dst} already exists")
-    v = version if version is not None else latest_version(root_src)
-    if v is None:
-        raise ValueError(f"no committed version under {root_src}")
-    res = read_manifest(root_src, v)
+    v, res = ((version, read_manifest(root_src, version))
+              if version is not None else _snapshot(root_src)[:2])
     os.makedirs(os.path.join(root_dst, _DATA), exist_ok=True)
 
     def _link(name: str) -> None:
@@ -3231,18 +3213,14 @@ def optimize_zorder(spark: SparkSession, root: str, col_a: str,
     manifest metadata."""
     from .zorder import zordered_frame
 
-    v = latest_version(root)
-    if v is None:
-        raise ValueError(f"cannot optimize {root}: no committed version")
-    man = read_manifest(root, v)
-    tracked = bool(man.get("row_tracking"))
-    df = (read_version_rows(spark, root, v) if tracked
-          else read_version(spark, root, v))  # maintenance keeps ids
-    clustered = zordered_frame(df, col_a, col_b, n_files, bits=bits)
-    return commit_rewrite(spark, root, clustered,
-                          stats_cols=stats_cols or (col_a, col_b),
-                          txn=txn, based_on=v,
-                          removed_files=man["files"])
+    v, man, done = snap = _snapshot(root, txn)
+    if done:
+        return v
+    return _rewrite(spark, root, snap, set(man["files"]),
+                    lambda rows: zordered_frame(rows, col_a, col_b,
+                                                n_files, bits=bits),
+                    op="rewrite", stats_cols=stats_cols or (col_a, col_b),
+                    txn=txn)[0]
 
 
 def commit_multi_append(spark: SparkSession, targets, txlog: str,
@@ -3398,22 +3376,21 @@ def compact_latest(spark: SparkSession, root: str, target_bytes: int,
     (``cluster_by=None``) smears every file across the full key range
     and silently disables pruning; reserve it for stores that are
     never range-read. Returns ``(n_files_before, n_files_after)``."""
-    v = latest_version(root)
-    if v is None:
+    snap = _snapshot(root, txn, required=False)
+    if snap is None:
         return 0, 0
-    man = read_manifest(root, v)
+    _, man, done = snap
     files = man["files"]
     pre_bytes = sum(os.path.getsize(os.path.join(root, _DATA, f))
                     for f in files)
     bins = max(min_bins, math.ceil(pre_bytes / target_bytes))
-    if len(files) <= bins:
+    if done or len(files) <= bins:
         return len(files), len(files)
-    df = (read_version_rows(spark, root, v)  # maintenance keeps ids
-          if man.get("row_tracking") else read_version(spark, root, v))
-    df = (df.repartitionByRange(bins, *cluster_by) if cluster_by
-          else df.repartition(bins))
-    newv = commit_rewrite(spark, root, df, stats_cols=stats_cols, txn=txn,
-                          based_on=v, removed_files=files)
+    newv, _, _ = _rewrite(
+        spark, root, snap, set(files),
+        lambda rows: (rows.repartitionByRange(bins, *cluster_by)
+                      if cluster_by else rows.repartition(bins)),
+        op="rewrite", stats_cols=stats_cols, txn=txn)
     return len(files), len(read_manifest(root, newv)["files"])
 
 

@@ -21,6 +21,44 @@ def sf_dir():
     return SF_SMOKE
 
 
+class _ActionListener:
+    """``QueryExecutionListener`` over py4j: one entry per action."""
+
+    def __init__(self):
+        self.funcs = []
+
+    def onSuccess(self, func, qe, duration_ns):
+        self.funcs.append(func)
+
+    def onFailure(self, func, qe, exc):
+        self.funcs.append(func)
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+@pytest.fixture
+def actions(spark):
+    """Yields a callable that runs ``fn`` and returns the names of the
+    DataFrame actions it ran (``count``, ``collect``, ``save``, ...)."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    manager = spark._jsparkSession.listenerManager()
+    listener = _ActionListener()
+    manager.register(listener)
+
+    def run(fn):
+        bus.waitUntilEmpty()
+        listener.funcs.clear()
+        fn()
+        bus.waitUntilEmpty()
+        return list(listener.funcs)
+
+    yield run
+    manager.unregister(listener)
+
 # Shared result-normalization for all differential-oracle suites (the
 # parity, text-edge, and events-edge tests must agree on what "equal"
 # means — %.9g float formatting was tuned for q31's dyadic ties).

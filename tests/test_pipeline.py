@@ -136,45 +136,6 @@ def _report(r) -> dict:
         "rows_skipped_existing", "rejected_payloads", "errors")}
 
 
-class _ActionListener:
-    """``QueryExecutionListener`` over py4j: one entry per action."""
-
-    def __init__(self):
-        self.funcs = []
-
-    def onSuccess(self, func, qe, duration_ns):
-        self.funcs.append(func)
-
-    def onFailure(self, func, qe, exc):
-        self.funcs.append(func)
-
-    class Java:
-        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
-
-
-@pytest.fixture
-def actions(spark):
-    """Yields a callable that runs ``fn`` and returns the names of the
-    actions it ran."""
-    from pyspark.java_gateway import ensure_callback_server_started
-
-    ensure_callback_server_started(spark.sparkContext._gateway)
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    manager = spark._jsparkSession.listenerManager()
-    listener = _ActionListener()
-    manager.register(listener)
-
-    def run(fn):
-        bus.waitUntilEmpty()
-        listener.funcs.clear()
-        fn()
-        bus.waitUntilEmpty()
-        return list(listener.funcs)
-
-    yield run
-    manager.unregister(listener)
-
-
 AAPL_2 = _daily_payload({
     "2025-12-09": (278.16, 280.03, 276.92, 277.18, 31753410),
     "2025-12-08": (278.13, 279.6693, 276.15, 277.89, 36406317),

@@ -105,6 +105,7 @@ def test_mor_delete_rebases_over_interleaved_append(spark, tmp_path,
     monkeypatch.setattr(vstore, "_publish_cas", real_cas)
     assert nvict == 10
     assert v == vstore.latest_version(root) == 3
+    assert vstore._read_manifest_raw(root, 3)["rebased_from"] == 1
     df = vstore.read_version(spark, root, 3)
     # both commits visible: evens of the snapshot gone, append intact
     # (including its even ids — the delete was derived before them)
@@ -842,6 +843,8 @@ def test_merge_rebases_over_disjoint_append(spark, tmp_path, monkeypatch):
     assert got[5] == -5 and got[200] == -200
     assert got[900] == 9000
     assert len(got) == 100 + 1 + 3
+    assert vstore._read_manifest_raw(
+        root, vstore.latest_version(root))["rebased_from"] == 1
 
 
 # --- merge-on-read UPDATE (deletion vectors + appended postimages) ------------
@@ -981,6 +984,7 @@ def test_commit_update_mor_rebases_over_append(spark, tmp_path,
            vstore.read_version(spark, root, 3).collect()}
     assert all(got[i] == 0 for i in range(0, 40, 10))
     assert got[500] == 5000 and len(got) == 45
+    assert vstore._read_manifest_raw(root, 3)["rebased_from"] == 1
 
 
 def test_cdf_source_admission_control(spark, tmp_path):
