@@ -184,10 +184,12 @@ def latest_version(root: str) -> int | None:
     return _latest_and_claim(root)[0]
 
 
-def _latest_and_claim(root: str) -> tuple[int | None, int]:
-    """The latest VISIBLE version AND the version number a writer must
-    claim, derived from ONE directory listing. Committers need both,
-    and deriving them from separate listings is a lost-update race: a
+def _latest_and_claim(root: str) -> tuple[int | None, int, dict | None]:
+    """The latest VISIBLE version, the version number a writer must
+    claim, and the raw manifest of that latest (None on an empty
+    store), all from ONE sweep — the only place a commit reads the
+    latest manifest. Committers need latest and claim together, and
+    deriving them from separate listings is a lost-update race: a
     concurrent commit landing between a ``latest_version()`` call and
     a later ``_claimed_versions()`` call makes the claim skip PAST the
     interloper — the manifest built from the stale latest then
@@ -211,18 +213,16 @@ def _latest_and_claim(root: str) -> tuple[int | None, int]:
             # option); nothing visible remains beneath this point
             break
         tx = raw.get("pending_tx")
-        if tx is None:
-            return v, claim
-        status = _tx_decide(tx[0], tx[1])
+        status = "committed" if tx is None else _tx_decide(tx[0], tx[1])
         if status == "committed":
-            return v, claim
+            return v, claim, raw
         if status == "in_doubt":
             raise InDoubtTransactionError(
                 f"version {v} of {root} is prepared by in-doubt "
                 f"transaction {tx[1]} (coordinator alive); retry after "
                 f"it decides")
         # aborted: a permanent hole — keep walking down
-    return None, claim
+    return None, claim, None
 
 
 #: consolidate the segment list into ONE segment whenever a commit
@@ -473,19 +473,21 @@ def txn_seen(root: str) -> dict[str, int]:
     """The CURRENT manifest's per-app txn ledger ``{app_id:
     latest_committed_version}`` (the chain carries it forward through
     appends, rewrites and deletes, so membership survives compaction —
-    the property a replayed streaming micro-batch relies on)."""
-    v = latest_version(root)
-    if v is None:
-        return {}
-    return _normalize_txns(read_manifest(root, v).get("txns"))
+    the property a replayed streaming micro-batch relies on). The
+    ledger is a top-level field of the raw manifest: no segment is
+    read."""
+    raw = _latest_and_claim(root)[2]
+    return _normalize_txns(raw.get("txns")) if raw is not None else {}
 
 
 def txn_committed(root: str, txn) -> bool:
     """True iff ``txn`` (``(app, version)`` or a plain-string app id)
     is already recorded — i.e. the app's ledger entry is ≥ the txn's
-    version. This is the read-txnVersion-before-work check a streaming
-    ``foreachBatch`` sink runs FIRST, so a replayed batch skips the
-    compute, not just the write."""
+    version. It is for callers that want to skip their OWN compute: a
+    streaming ``foreachBatch`` sink runs it first, so a replayed batch
+    skips the compute, not just the write. The commit verbs need no
+    pre-check — they check the ledger themselves (:func:`_commit`,
+    :func:`_snapshot`)."""
     tk = _txn_key(txn)
     if tk is None:
         return False
@@ -1262,8 +1264,7 @@ def _transact(root: str, op: str, build, *, spark=None, staged=(),
     attempts = 0
     while True:
         attempts += 1
-        prev, version = _latest_and_claim(root)
-        praw = _read_manifest_raw(root, prev) if prev is not None else None
+        prev, version, praw = _latest_and_claim(root)
         pm = _resolve(root, praw) if praw is not None else None
         rebased = based_on is not None and (prev or 0) != based_on
         if rebased:
@@ -1506,13 +1507,20 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
     and the expensive staging is NEVER repaid. Any overlap raises.
 
     The per-app txn ledger carries across the chain regardless of
-    carry semantics and is re-checked under the latest manifest on
-    every CAS attempt, so even a txn race resolves to exactly-once.
-    The manifest records the frame's LOGICAL schema so a zero-file
-    version still reads with the right shape; on a column-mapped store
+    carry semantics. The ONE replay check runs first, on the manifest
+    the claim sweep read: an already-recorded ``txn`` returns the
+    latest version before anything is staged — no Spark job runs, no
+    staging directory is made. :func:`_transact` re-checks the ledger
+    under the latest manifest on every CAS attempt, so even a
+    CONCURRENT txn race resolves to exactly-once. The manifest records
+    the frame's LOGICAL schema so a zero-file version still reads with
+    the right shape; on a column-mapped store
     (Delta columnMapping name mode) the files hold stable PHYSICAL
     field names (c0, c1, ...), so a logical RENAME/DROP is pure
     metadata."""
+    prev, claim, praw = _latest_and_claim(root)
+    if _ledger(praw, _txn_key(txn)) is None:
+        return prev  # type: ignore[return-value]
     pid = os.getpid()
     seq = next(_COMMIT_SEQ)
     os.makedirs(os.path.join(root, _DATA), exist_ok=True)
@@ -1523,8 +1531,6 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
         if not (owner.isdigit() and _pid_alive(int(owner))):
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
     df_schema = _strip_row_id(df.schema)  # recorded schema: LOGICAL
-    prev, claim = _latest_and_claim(root)
-    praw = _read_manifest_raw(root, prev) if prev is not None else None
     mapped = column_mapping if praw is None else (
         praw.get("colmap") is not None)
     if column_mapping and not mapped:
@@ -1798,12 +1804,15 @@ def commit_append(spark: SparkSession, root: str, df: DataFrame,
     recorded per file for :func:`read_version_pruned`. With ``txn``
     set, an id already recorded in the chain makes this a no-op
     returning the current version — the exactly-once contract for
-    replayed streaming micro-batches (the data files a crashed first
-    attempt may have orphaned are never referenced; vacuum reclaims
-    them). Schema drift is REJECTED by default
-    (:class:`SchemaMismatchError`); ``allow_evolution=True`` evolves
-    the recorded schema to the union, and every snapshot read applies
-    that pinned union so legacy files surface new columns as NULL.
+    replayed streaming micro-batches. The ledger is checked once, on
+    the manifest the commit's claim sweep reads, before ``df`` is
+    written: a replay runs no Spark job and stages nothing (the data
+    files a crashed first attempt may have orphaned are never
+    referenced; vacuum reclaims them). Schema drift is REJECTED by
+    default (:class:`SchemaMismatchError`); ``allow_evolution=True``
+    evolves the recorded schema to the union, and every snapshot read
+    applies that pinned union so legacy files surface new columns as
+    NULL.
 
     ``row_ids=True`` on the store's FIRST commit enables row tracking
     (Delta's baseRowId): every row gets a stable 64-bit id that
@@ -1818,8 +1827,6 @@ def commit_append(spark: SparkSession, root: str, df: DataFrame,
     pure metadata commits — no data rewrite at any table size, and a
     re-added name never resurrects dropped data. Later commits
     inherit the setting."""
-    if txn is not None and txn_committed(root, txn):
-        return latest_version(root)  # type: ignore[return-value]
     return _commit(spark, root, df, carry="prev",
                    stats_cols=stats_cols, txn=txn,
                    allow_evolution=allow_evolution, op="append",
@@ -1842,8 +1849,6 @@ def commit_rewrite(spark: SparkSession, root: str, df: DataFrame,
     the publish raises instead of being silently replaced away
     (:func:`_commit`'s snapshot validation). Leave it None only for
     intentional last-writer-wins overwrites of the whole table."""
-    if txn is not None and txn_committed(root, txn):
-        return latest_version(root)  # type: ignore[return-value]
     return _commit(spark, root, df, carry=None,
                    stats_cols=stats_cols, txn=txn, op="rewrite",
                    based_on=based_on, bloom_cols=bloom_cols,
@@ -1948,7 +1953,7 @@ def _mark(spark: SparkSession, root: str, snap, hit,
     # dead-writer vacuum rule key on it; manifests reference sidecars
     # BY NAME, so a rebase publishing at a later version keeps every
     # staged sidecar valid as named)
-    _, stage_version = _latest_and_claim(root)
+    stage_version = _latest_and_claim(root)[1]
     marked = _stage_dv_sidecars(root, victims.select("_f", "_ri"),
                                 _dv_map(man.get("stats", {}), man["files"]),
                                 stage_version)
@@ -2460,8 +2465,8 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
     if done:
         return v, 0, len(man["files"])
     tracked = bool(man.get("row_tracking"))
-    df = read_version(spark, root, v)
-    tcols = df.columns
+    census = _census_frame(spark, root, man)  # logical rows + ``_f``
+    tcols = [c for c in census.columns if c != "_f"]
     keys = updates.select(*key_cols).distinct()
     extended = (matched_condition is not None or update_set is not None
                 or not_matched_by_source_delete is not None
@@ -2472,9 +2477,8 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
         # key columns. _census_frame tags rows with their file name
         # directly above the scan (PreReadCheck-safe; DV-aware), then
         # the semi-join reduces to matched file names.
-        affected = _files_of(
-            _census_frame(spark, root, man).select(*key_cols, "_f")
-            .join(keys, list(key_cols), "left_semi"))
+        affected = _files_of(census.select(*key_cols, "_f")
+                             .join(keys, list(key_cols), "left_semi"))
 
         def rows_of(victims):
             ups = updates.select(*tcols)
@@ -2535,7 +2539,7 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
         if not_matched_insert_condition is not None:
             ins_src = ins_src.filter(
                 F.coalesce(not_matched_insert_condition, F.lit(False)))
-        inserts = (ins_src.join(df.select(*key_cols).distinct(),
+        inserts = (ins_src.join(census.select(*key_cols).distinct(),
                                 list(key_cols), "left_anti")
                    .select(*tcols))
         if victims is None:
@@ -2554,7 +2558,7 @@ def commit_merge(spark: SparkSession, root: str, updates: DataFrame,
     # census: one pruned-column scan joined to the source — affected
     # files are those holding an updating match or a deleting
     # unmatched row. _census_frame tags the scan (DV-aware).
-    affected = _files_of(_joined(_census_frame(spark, root, man))
+    affected = _files_of(_joined(census)
                          .filter(F.col("_u") | F.col("_d") | F.col("_md")))
     return _rewrite(spark, root, snap, affected, rows_of, op="merge",
                     stats_cols=stats_cols, txn=txn)
@@ -2958,11 +2962,10 @@ def drop_check_constraint(spark: SparkSession, root: str,
 
 
 def check_constraints(root: str) -> dict[str, str]:
-    """The CHECK constraints in force at the latest version."""
-    v = latest_version(root)
-    if v is None:
-        return {}
-    return dict(read_manifest(root, v).get("constraints") or {})
+    """The CHECK constraints in force at the latest version (a
+    top-level field of the raw manifest: no segment is read)."""
+    raw = _latest_and_claim(root)[2]
+    return dict((raw or {}).get("constraints") or {})
 
 
 def _require_mapping(root: str) -> tuple[int, dict]:
@@ -3309,13 +3312,10 @@ def commit_multi_append(spark: SparkSession, targets, txlog: str,
     versions: list[int] = []
     try:
         for root, df, opts in targets:
+            # a replayed batch whose earlier transaction COMMITTED gets
+            # that store's latest version back from _commit's ledger
+            # check, nothing staged: exactly-once holds per store
             opts = opts or {}
-            if opts.get("txn") is not None and txn_committed(
-                    root, opts["txn"]):
-                # a replayed batch whose earlier transaction COMMITTED:
-                # exactly-once holds per store; nothing to re-prepare
-                versions.append(latest_version(root))
-                continue
             versions.append(_commit(
                 spark, root, df, carry="prev",
                 stats_cols=opts.get("stats_cols", ("id",)),

@@ -1,10 +1,12 @@
-"""The versioned store's single commit path (one CAS call site) and
-min/max stats on date and timestamp columns (recorded as ISO-8601
-strings and pruned exactly)."""
+"""The versioned store's single commit path (one CAS call site, one
+read of the latest manifest per claim, one txn replay check before
+anything is staged) and min/max stats on date and timestamp columns
+(recorded as ISO-8601 strings and pruned exactly)."""
 from __future__ import annotations
 
 import ast
 import datetime
+import os
 
 from pyspark.sql import functions as F
 
@@ -131,3 +133,91 @@ def test_timestamp_stats_from_staged_files_prune_exactly(spark, tmp_path):
     assert _rows(df.filter(_between("ts", tlo, thi))) == _rows(
         full.filter(_between("ts", tlo, thi)))
     assert df.filter(_between("ts", tlo, thi)).count() == 4
+
+
+def _vals(spark, lo: int, hi: int):
+    """Rows ``lo..hi-1`` as ``(id, v = 10 * id)``, one file."""
+    return spark.range(lo, hi).select(
+        "id", (F.col("id") * 10).alias("v")).coalesce(1)
+
+
+def _two_versions(spark, root: str) -> str:
+    """A store of rows 0..19 in two appended versions."""
+    for lo in (0, 10):
+        vstore.commit_append(spark, root, _vals(spark, lo, lo + 10))
+    return root
+
+
+def test_commit_reads_the_latest_manifest_once(spark, tmp_path,
+                                               monkeypatch):
+    """Commits take the latest manifest from their claim sweep and do
+    not read it again: counted as (raw manifest reads, segment
+    resolves) on a 2-version store. A txn append reads it in ``_commit``'s sweep and
+    in ``_transact``'s, which resolves it once; the restatement MERGE
+    adds ``_snapshot``'s read; a replay and ``txn_seen`` stop at the
+    first sweep and resolve nothing."""
+    n = {"_read_manifest_raw": 0, "_resolve": 0}
+    for name in n:
+        def counted(*a, _fn=getattr(vstore, name), _name=name, **kw):
+            n[_name] += 1
+            return _fn(*a, **kw)
+        monkeypatch.setattr(vstore, name, counted)
+
+    def reads(fn) -> tuple[int, int]:
+        n.update(dict.fromkeys(n, 0))
+        fn()
+        return n["_read_manifest_raw"], n["_resolve"]
+
+    root = _two_versions(spark, str(tmp_path / "append"))
+    batch = _vals(spark, 20, 25)
+    assert reads(lambda: vstore.commit_append(
+        spark, root, batch, txn=("load", 0))) == (2, 1)
+    assert reads(lambda: vstore.commit_append(
+        spark, root, batch, txn=("load", 0))) == (1, 0)
+    assert reads(lambda: vstore.txn_seen(root)) == (1, 0)
+    assert vstore.latest_version(root) == 3
+
+    # the MERGE incremental loads run: restate matched rows whose value
+    # differs, insert nothing
+    root = _two_versions(spark, str(tmp_path / "merge"))
+    restated = spark.createDataFrame([(3, -1), (14, 140), (99, 0)],
+                                     "id long, v long")
+    assert reads(lambda: vstore.commit_merge(
+        spark, root, restated, ("id",),
+        matched_condition=~F.col("t.v").eqNullSafe(F.col("s.v")),
+        not_matched_insert_condition=F.lit(False))) == (4, 2)
+    got = {r["id"]: r["v"] for r in vstore.read_version(spark, root, 3)
+           .collect()}
+    assert got == {i: (-1 if i == 3 else i * 10) for i in range(20)}
+
+
+def test_replayed_txn_stages_nothing_and_runs_no_action(spark, tmp_path,
+                                                        actions):
+    """Replaying an already-recorded txn through ``commit_append``,
+    ``commit_rewrite`` and ``commit_multi_append`` returns the latest
+    version from ``_commit``'s ledger check, before staging: no Spark
+    action runs, ``data/`` is unchanged and no staging directory is
+    left behind."""
+    root = _two_versions(spark, str(tmp_path / "replay"))
+    other = _two_versions(spark, str(tmp_path / "replay_multi"))
+    txlog = str(tmp_path / "txlog")
+    batch = _vals(spark, 20, 25)
+    assert vstore.commit_append(spark, root, batch, txn=("app", 0)) == 3
+    assert vstore.commit_multi_append(
+        spark, [(other, batch, {"txn": ("mc", 0)})], txlog) == [3]
+
+    def debris(r):
+        return (sorted(os.listdir(os.path.join(r, "data"))),
+                [e for e in os.listdir(r) if e.startswith(".commit-tmp-")])
+
+    before = {r: debris(r) for r in (root, other)}
+    out = []
+    ran = actions(lambda: out.extend([
+        vstore.commit_append(spark, root, batch, txn=("app", 0)),
+        vstore.commit_rewrite(spark, root, batch, txn=("app", 0)),
+        *vstore.commit_multi_append(
+            spark, [(other, batch, {"txn": ("mc", 0)})], txlog)]))
+    assert out == [3, 3, 3]
+    assert ran == []
+    assert {r: debris(r) for r in (root, other)} == before
+    assert all(not tmp for _, tmp in before.values())

@@ -4,7 +4,7 @@ version, manifest, txn ledger), ``_rewrite`` (the one copy-on-write
 step) or ``_mark`` (the one merge-on-read step).
 
 - an AST pin that the public verbs reach the store only through those
-  steps;
+  steps, and that the commit path reads the latest manifest once;
 - an action pin: the MoR UPDATE takes its row count from the staged
   sidecars and runs no ``count``;
 - a property test that the copy-on-write and merge-on-read verbs give
@@ -58,6 +58,19 @@ def test_row_level_verbs_go_through_the_dml_core():
               if isinstance(n, ast.Raise)
               and "no committed version under" in ast.unparse(n)]
     assert len(raises) == 1
+
+
+def test_commit_path_reads_the_latest_manifest_once():
+    """The commit verbs carry no txn pre-check of their own (``_commit``
+    checks the ledger once, before staging), and ``_commit`` and
+    ``_transact`` take the latest manifest from the claim sweep rather
+    than reading it a second time."""
+    fns = _functions()
+    for name in ("commit_append", "commit_rewrite", "commit_multi_append"):
+        calls = _called(fns[name])
+        assert not calls & {"txn_committed", "latest_version"}, (name, calls)
+    for name in ("_commit", "_transact"):
+        assert "_read_manifest_raw" not in _called(fns[name]), name
 
 
 def _tracked_store(spark, root):
