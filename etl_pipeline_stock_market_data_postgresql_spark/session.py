@@ -11,6 +11,12 @@ are chosen so the same code scales to a multi-executor cluster:
   DuckDB oracle (UTC-naive timestamps) and stable across clusters.
 - Arrow enabled for the Pandas-UDF slow path.
 - G1 heap regions of 32 MB (``_G1_JAVA_OPTIONS``), as a large heap gets.
+- Python workers fork from the package's own daemon
+  (``_PYTHON_DAEMON_MODULE``, ``pyworker_daemon``): on each task,
+  ``importlib.invalidate_caches()`` made every zipimporter re-read the
+  whole ``pyspark.zip`` directory (about 0.2 s of worker CPU per task);
+  under this daemon an archive is re-read only when its mtime or size
+  changed.
 """
 
 from __future__ import annotations
@@ -31,6 +37,13 @@ from pyspark.sql import SparkSession
 #: humongous. ``defaultJavaOptions`` leaves ``extraJavaOptions`` to the
 #: deployment, whose flags come later and win.
 _G1_JAVA_OPTIONS = "-XX:G1HeapRegionSize=32m"
+
+#: The module every Python worker forks from: ``pyspark.daemon`` whose
+#: workers re-read a zip archive's directory only when the archive
+#: changed (see ``pyworker_daemon``). It is found on the ``PYTHONPATH``
+#: that ``get_spark`` exports before the JVM starts.
+_PYTHON_DAEMON_MODULE = (
+    "etl_pipeline_stock_market_data_postgresql_spark.pyworker_daemon")
 
 #: Spark's bundled beyond-heap state-store backend. The default heap
 #: provider (HDFSBackedStateStoreProvider) is fastest at every probed
@@ -109,6 +122,7 @@ def get_spark(app_name: str = "etl_pipeline_stock_market_data_postgresql_spark",
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.defaultJavaOptions", _G1_JAVA_OPTIONS)
         .config("spark.executor.defaultJavaOptions", _G1_JAVA_OPTIONS)
+        .config("spark.python.daemon.module", _PYTHON_DAEMON_MODULE)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -28,6 +28,7 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions.timeparse import parse_date, parse_timestamp_multi
@@ -58,8 +59,15 @@ _OHLCV = [
 def payloads_df(spark: SparkSession, payloads: list[tuple[str, str]]) -> DataFrame:
     """Driver-fetched (symbol, raw_json) pairs → DataFrame. At scale,
     replace with ``spark.read.text`` / ``spark.read.json`` over landed
-    payload files — the downstream plan is identical."""
-    return spark.createDataFrame(payloads, "company_symbol string, payload_json string")
+    payload files — the downstream plan is identical.
+
+    The pairs go in as one Arrow table, which Spark plans as a
+    ``LocalRelation``; a Python list would be a PythonRDD, one Python
+    worker task per partition on every evaluation."""
+    symbols, jsons = zip(*payloads) if payloads else ((), ())
+    table = pa.table({"company_symbol": pa.array(symbols, pa.string()),
+                      "payload_json": pa.array(jsons, pa.string())})
+    return spark.createDataFrame(table, "company_symbol string, payload_json string")
 
 
 # Boolean flag columns of the flagged forms below.

@@ -1880,14 +1880,15 @@ def _snapshot(root: str, txn=None, required: bool = True):
     plan from: ``(version, manifest, done)`` of the latest visible
     version, where ``done`` is True when ``txn`` is already recorded in
     that manifest's ledger (exactly-once: the verb returns without
-    work). An empty store raises — or, with ``required=False``, yields
-    None."""
-    v = latest_version(root)
+    work). Version and manifest come from the one claim sweep
+    (:func:`_latest_and_claim`), whose raw manifest is resolved once.
+    An empty store raises — or, with ``required=False``, yields None."""
+    v, _, raw = _latest_and_claim(root)
     if v is None:
         if not required:
             return None
         raise ValueError(f"no committed version under {root}")
-    man = read_manifest(root, v)
+    man = _resolve(root, raw)
     return v, man, _ledger(man, _txn_key(txn)) is None
 
 

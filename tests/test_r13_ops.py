@@ -743,6 +743,24 @@ def test_q152_incremental_mv_equals_direct_recompute(spark, sf_dir):
 
 # --- snapshot validation (the lost-update window) ----------------------------
 
+def _stale_sweep(monkeypatch, stale: int):
+    """Patch the claim sweep so that its FIRST call — the verb's
+    snapshot read — returns what a sweep taken when ``stale`` was the
+    latest version returned; later calls sweep for real. The returned
+    callable's ``served`` turns True once the stale sweep was taken."""
+    orig = vstore._latest_and_claim
+
+    def stale_then_real(r):
+        if stale_then_real.served:
+            return orig(r)
+        stale_then_real.served = True
+        return stale, stale + 1, vstore._read_manifest_raw(r, stale)
+
+    stale_then_real.served = False
+    monkeypatch.setattr(vstore, "_latest_and_claim", stale_then_real)
+    return stale_then_real
+
+
 def test_delete_snapshot_validation_prevents_lost_update(
         spark, tmp_path, monkeypatch):
     """The CAS alone cannot catch a concurrent append that lands
@@ -759,19 +777,12 @@ def test_delete_snapshot_validation_prevents_lost_update(
     # the interloper's append is already durable...
     vstore.commit_append(spark, root, _mk(spark, 900, 910, 9).coalesce(1))
     # ...but the deleter's snapshot read happened BEFORE it: simulate
-    # by serving the stale version to the delete's entry read only
-    orig = vstore.latest_version
-    state = {"stale_reads": 1}
-
-    def stale_then_real(r):
-        if state["stale_reads"] > 0:
-            state["stale_reads"] -= 1
-            return 1
-        return orig(r)
-
-    monkeypatch.setattr(vstore, "latest_version", stale_then_real)
+    # by serving the stale sweep to the delete's entry read only
+    stale_then_real = _stale_sweep(monkeypatch, 1)
     v, _, _ = vstore.commit_delete(spark, root, F.col("id") < 10)
-    monkeypatch.setattr(vstore, "latest_version", orig)
+    monkeypatch.undo()
+    assert stale_then_real.served
+    assert vstore._read_manifest_raw(root, v)["rebased_from"] == 1
     got = vstore.read_version(spark, root, v)
     assert got.filter("id < 10").count() == 0
     assert got.filter("k = 9").count() == 10  # interloper intact
@@ -791,20 +802,15 @@ def test_compaction_snapshot_validation(spark, tmp_path, monkeypatch):
         vstore.commit_append(spark, root,
                              _mk(spark, lo, lo + 50, 0).coalesce(1))
     vstore.commit_append(spark, root, _mk(spark, 900, 905, 9).coalesce(1))
-    orig = vstore.latest_version
-    state = {"stale_reads": 1}
-
-    def stale_then_real(r):
-        if state["stale_reads"] > 0:
-            state["stale_reads"] -= 1
-            return 3  # the compactor read BEFORE the 4th append
-        return orig(r)
-
-    monkeypatch.setattr(vstore, "latest_version", stale_then_real)
+    # the compactor read BEFORE the 4th append
+    stale_then_real = _stale_sweep(monkeypatch, 3)
     nb, na = vstore.compact_latest(spark, root, target_bytes=1 << 30)
-    monkeypatch.setattr(vstore, "latest_version", orig)
+    monkeypatch.undo()
+    assert stale_then_real.served
     assert nb == 3  # compacted the three files of the snapshot it read
-    got = vstore.read_version(spark, root, vstore.latest_version(root))
+    latest = vstore.latest_version(root)
+    assert vstore._read_manifest_raw(root, latest)["rebased_from"] == 3
+    got = vstore.read_version(spark, root, latest)
     assert got.filter("k = 9").count() == 5  # interloper intact
     assert got.count() == 155
     # pre-compaction snapshots are untouched

@@ -154,8 +154,9 @@ def test_commit_reads_the_latest_manifest_once(spark, tmp_path,
     not read it again: counted as (raw manifest reads, segment
     resolves) on a 2-version store. A txn append reads it in ``_commit``'s sweep and
     in ``_transact``'s, which resolves it once; the restatement MERGE
-    adds ``_snapshot``'s read; a replay and ``txn_seen`` stop at the
-    first sweep and resolve nothing."""
+    adds ``_snapshot``'s sweep, whose manifest it resolves once; a
+    replay and ``txn_seen`` stop at the first sweep and resolve
+    nothing."""
     n = {"_read_manifest_raw": 0, "_resolve": 0}
     for name in n:
         def counted(*a, _fn=getattr(vstore, name), _name=name, **kw):
@@ -185,7 +186,7 @@ def test_commit_reads_the_latest_manifest_once(spark, tmp_path,
     assert reads(lambda: vstore.commit_merge(
         spark, root, restated, ("id",),
         matched_condition=~F.col("t.v").eqNullSafe(F.col("s.v")),
-        not_matched_insert_condition=F.lit(False))) == (4, 2)
+        not_matched_insert_condition=F.lit(False))) == (3, 2)
     got = {r["id"]: r["v"] for r in vstore.read_version(spark, root, 3)
            .collect()}
     assert got == {i: (-1 if i == 3 else i * 10) for i in range(20)}

@@ -62,15 +62,17 @@ def test_row_level_verbs_go_through_the_dml_core():
 
 def test_commit_path_reads_the_latest_manifest_once():
     """The commit verbs carry no txn pre-check of their own (``_commit``
-    checks the ledger once, before staging), and ``_commit`` and
-    ``_transact`` take the latest manifest from the claim sweep rather
-    than reading it a second time."""
+    checks the ledger once, before staging), and ``_commit``,
+    ``_transact`` and ``_snapshot`` take the latest manifest from the
+    claim sweep rather than reading it a second time."""
     fns = _functions()
     for name in ("commit_append", "commit_rewrite", "commit_multi_append"):
         calls = _called(fns[name])
         assert not calls & {"txn_committed", "latest_version"}, (name, calls)
     for name in ("_commit", "_transact"):
         assert "_read_manifest_raw" not in _called(fns[name]), name
+    calls = _called(fns["_snapshot"])
+    assert not calls & {"latest_version", "read_manifest"}, calls
 
 
 def _tracked_store(spark, root):
