@@ -47,16 +47,6 @@ from pyspark.sql import DataFrame, functions as F
 DEFAULT_ACCURACY = 10_000
 
 
-def _spark_interpolate(pos: float, ranked: list[float]) -> float:
-    """Value at fractional rank ``pos`` over ascending ``ranked`` —
-    the exact arithmetic of Spark Percentile.getPercentile."""
-    lower = math.floor(pos)
-    higher = math.ceil(pos)
-    if lower == higher:
-        return ranked[lower]
-    return (higher - pos) * ranked[lower] + (pos - lower) * ranked[higher]
-
-
 def exact_percentiles(df: DataFrame, col: str, ps: list[float],
                       accuracy: int = DEFAULT_ACCURACY) -> list[float | None]:
     """The exact values ``percentile(col, array(*ps))`` would return,

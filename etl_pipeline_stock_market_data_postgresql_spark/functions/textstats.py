@@ -67,8 +67,3 @@ def occurrence_count(text_lower: Column, needle: str) -> Column:
         / F.lit(len(needle))
     ).cast("long")
 
-
-def word_occurrence_count(col: Column, word: str) -> Column:
-    """Whole-word occurrences: count ' word ' within ' text ' padding."""
-    padded = F.concat(F.lit(" "), F.lower(col), F.lit(" "))
-    return occurrence_count(padded, f" {word} ")

@@ -32,10 +32,10 @@ skips files PROVEN rowless for the conjunction, Spark re-applies the
 exact predicates to the rows that do flow, so answers are exact even
 for filters the range model only approximates. Rows never touch the
 driver: executors run :func:`read_file` — the one executor-side file
-reader, shared with the change feed — which pyarrow-reads one file,
-maps physical names to logical on column-mapped stores, subtracts its
-deletion vector's positions, and casts or NULL-fills to the pinned
-logical schema with nullability relaxed.
+reader, shared with the streaming change feed — which pyarrow-reads
+one file, maps physical names to logical on column-mapped stores,
+subtracts its deletion vector's positions, and casts or NULL-fills to
+the pinned logical schema with nullability relaxed.
 
 Spark requires ``spark.sql.python.filterPushdown.enabled=true`` when
 a reader overrides ``pushFilters`` (it refuses to silently drop the
@@ -108,7 +108,10 @@ def nullable_schema(schema):
 def read_file(root: str, file: str, colmap: dict, schema_json,
               exclude: str | None = None, include: str | None = None):
     """EXECUTOR-side: the ONE Arrow reader of a store data file, behind
-    both the batch source and the change feed. Reads ``file``, renames
+    both Python data sources — this module's batch source and the
+    streaming change feed (the batch change feed is a Spark plan over
+    ``versioned_store._pinned_scan`` and needs no executor Python).
+    Reads ``file``, renames
     physical columns to logical (``colmap``: logical → physical),
     keeps the rows at deletion-vector positions — ``include``'s minus
     ``exclude``'s, or every row minus ``exclude``'s (both are sidecar

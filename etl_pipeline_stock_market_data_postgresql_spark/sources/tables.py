@@ -66,10 +66,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql use."""
     for t in TESTDATA_TABLES:

@@ -39,7 +39,14 @@ it. In Spark, :func:`_pinned_scan` is the only scan of data files
 :func:`_logical_rows` keeps the tag-free fast path for reads that need
 neither deletion vectors nor row ids. On executors,
 ``store_batch.read_file`` is the only reader of a data file, shared by
-the batch data source and the change feed.
+the batch data source and the streaming change feed.
+
+Change feeds run on ONE rule and ONE Spark-side reader:
+:func:`_classify_commit` maps a manifest pair to the changed files
+(added, removed, and carried files whose deletion vector changed),
+and :func:`_change_frames` reads them through :func:`_pinned_scan`.
+The streaming change-feed source, the batch change feed and
+:func:`version_diff` all classify with it.
 
 Every verb that replaces or masks files of one snapshot runs on three
 private steps. :func:`_snapshot` reads the latest version, its manifest
@@ -87,6 +94,7 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.datasource import InputPartition
 
 _DATA = "data"
 _MANIFESTS = "manifests"
@@ -708,23 +716,39 @@ def _dv_map(stats: dict, files) -> dict[str, str]:
 _DV_DRIVER_BYTES = 4 << 20
 
 
+def _local_frame(spark: SparkSession, strings: dict[str, list],
+                 longs: dict[str, list] | None = None) -> DataFrame:
+    """A small driver-side frame of string columns then long columns,
+    as an Arrow local relation: planned as a ``LocalTableScan`` (a
+    list of tuples would run a PythonRDD job to reach the JVM)."""
+    import pyarrow as pa
+
+    cols = {c: pa.array(v, pa.string()) for c, v in strings.items()}
+    cols.update({c: pa.array(v, pa.int64())
+                 for c, v in (longs or {}).items()})
+    return spark.createDataFrame(pa.table(cols))
+
+
 def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
                      fn_col: str = "_dv_fn",
                      ri_col: str = "_dv_ri") -> DataFrame:
     """(data-file name, deleted row position) pairs for a ``{file:
     dv_sidecar}`` map, as the DataFrame every DV-aware read anti-joins.
     Two plans by sidecar volume: below ``_DV_DRIVER_BYTES`` the
-    positions load driver-side and broadcast (tiny, no job); above it
-    ``spark.read.json`` scans the sidecars in executor tasks and
-    explodes positions distributed — driver memory stays O(#marked
-    files) regardless of how many rows the vectors mark."""
+    positions load driver-side and broadcast as a local relation (no
+    job, no Python worker); above it ``spark.read.json`` scans the
+    sidecars in executor tasks and explodes positions distributed —
+    driver memory stays O(#marked files) regardless of how many rows
+    the vectors mark."""
     total = sum(os.path.getsize(os.path.join(root, _DATA, dv))
                 for dv in dvm.values())
     if total <= _DV_DRIVER_BYTES:
-        rows = [(f, int(p)) for f, dv in dvm.items()
-                for p in _read_dv(root, dv)]
-        return F.broadcast(spark.createDataFrame(
-            rows, f"{fn_col} string, {ri_col} long"))
+        fs, ps = [], []
+        for f, dv in dvm.items():
+            pos = _read_dv(root, dv)
+            fs += [f] * len(pos)
+            ps += pos
+        return F.broadcast(_local_frame(spark, {fn_col: fs}, {ri_col: ps}))
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -737,9 +761,8 @@ def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
             None if p is None else decode_payload_array(p, c)
             for p, c in zip(payload, n)])
 
-    name_map = spark.createDataFrame(
-        [(dv, f) for f, dv in dvm.items()],
-        f"_dv_sidecar string, {fn_col} string")
+    name_map = _local_frame(spark, {"_dv_sidecar": list(dvm.values()),
+                                    fn_col: list(dvm)})
     exploded = (spark.read
                 .schema("positions array<long>, n long, payload string")
                 .json([os.path.join(root, _DATA, dv)
@@ -750,6 +773,66 @@ def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
                             _decode_v2("payload", "n"))).alias(ri_col)))
     return (exploded.join(F.broadcast(name_map), "_dv_sidecar")
             .select(fn_col, ri_col))
+
+
+class _ChangePartition(InputPartition):
+    """One changed FILE of one commit — the unit of a change feed.
+
+    ``mode``:
+      - ``"all"``: every row of ``file`` (minus ``dv_exclude``'s
+        positions) feeds with ``kind``;
+      - ``"dv_diff"``: only positions in ``dv_include`` minus
+        ``dv_exclude`` feed (carried file whose vector changed).
+    Both vectors are sidecar names; positions never touch the
+    classifier."""
+
+    def __init__(self, file: str, kind: str, version: int, mode: str,
+                 dv_exclude: str | None = None,
+                 dv_include: str | None = None):
+        self.file = file
+        self.kind = kind
+        self.version = version
+        self.mode = mode
+        self.dv_exclude = dv_exclude
+        self.dv_include = dv_include
+
+
+def _classify_commit(man: dict, prev: dict | None,
+                     v: int) -> list[_ChangePartition]:
+    """DRIVER-side change classification of manifest ``man`` against
+    ``prev`` (None: an empty predecessor), labelled version ``v``, in a
+    deterministic order (file-granular stream offsets slice it):
+
+    - an ADDED file feeds as ``insert``, minus the positions its
+      deletion vector in ``man`` marks;
+    - a REMOVED file feeds as ``delete``, minus the positions its
+      vector in ``prev`` had already marked (those rows were gone);
+    - a CARRIED file whose vector changed feeds its newly marked
+      positions as ``delete`` and, after a restore that rolled a
+      vector back, its unmarked positions as ``insert``. An identical
+      sidecar name means identical positions (sidecars are immutable
+      and carried by name), so unchanged vectors are never read."""
+    ft, st = set(man["files"]), man.get("stats", {})
+    ff = set(prev["files"]) if prev is not None else set()
+    sf_ = prev.get("stats", {}) if prev is not None else {}
+    out = [_ChangePartition(f, "insert", v, "all",
+                            dv_exclude=st.get(f, {}).get(_DV_KEY))
+           for f in sorted(ft - ff)]
+    out += [_ChangePartition(f, "delete", v, "all",
+                             dv_exclude=sf_.get(f, {}).get(_DV_KEY))
+            for f in sorted(ff - ft)]
+    for f in sorted(ft & ff):
+        dv_f = sf_.get(f, {}).get(_DV_KEY)
+        dv_t = st.get(f, {}).get(_DV_KEY)
+        if dv_f == dv_t:
+            continue
+        if dv_t is not None:  # a removed vector marks nothing new
+            out.append(_ChangePartition(f, "delete", v, "dv_diff",
+                                        dv_include=dv_t, dv_exclude=dv_f))
+        if dv_f is not None:  # rolled back → insert
+            out.append(_ChangePartition(f, "insert", v, "dv_diff",
+                                        dv_include=dv_f, dv_exclude=dv_t))
+    return out
 
 
 def _strip_row_id(schema):
@@ -819,11 +902,11 @@ def _tagged_rows(spark: SparkSession, root: str, schema_json,
                             F.col("_metadata.row_index").alias("_rt_ri")),
                       row_ids=row_ids)
     if row_ids:
-        base_rows = [(f, int(stats[f][_BRID_KEY])) for f in names
-                     if _BRID_KEY in stats.get(f, {})]
-        if base_rows:
-            bdf = F.broadcast(spark.createDataFrame(
-                base_rows, "_rt_f string, _rt_base long"))
+        based = [f for f in names if _BRID_KEY in stats.get(f, {})]
+        if based:
+            bdf = F.broadcast(_local_frame(
+                spark, {"_rt_f": based},
+                {"_rt_base": [int(stats[f][_BRID_KEY]) for f in based]}))
             df = (df.join(bdf, "_rt_f", "left")
                   .withColumn(_ROW_ID,
                               F.coalesce(F.col(_ROW_ID),
@@ -862,6 +945,47 @@ def _logical_rows(spark: SparkSession, root: str, man: dict,
                             man.get("colmap"))
     return _live_tagged(spark, root, man, names,
                         row_ids).drop("_rt_f", "_rt_ri")
+
+
+def _change_frames(spark: SparkSession, root: str, pin: dict, parts,
+                   row_ids: bool = False) -> list[tuple[tuple, DataFrame]]:
+    """The rows of classified changes (:func:`_classify_commit`) as
+    Spark frames under the pinned manifest ``pin`` (its schema and
+    column mapping; its stats supply the row-id bases): one
+    ``((version, kind, mode), rows)`` pair per group of partitions that
+    share the three, so a plan grows with the versions read, never
+    with their files. A group with no deletion vector is the bare
+    pinned scan (:func:`_logical_rows`' fast path); otherwise ``all``
+    drops its ``dv_exclude`` positions and ``dv_diff`` keeps its
+    ``dv_include`` positions minus its ``dv_exclude`` ones, both from
+    :func:`_dv_positions_df` (driver broadcast or distributed sidecar
+    scan, by ``_DV_DRIVER_BYTES``)."""
+    groups: dict[tuple, list[_ChangePartition]] = {}
+    for p in parts:
+        groups.setdefault((p.version, p.kind, p.mode), []).append(p)
+    tags = ["_rt_f", "_rt_ri"]
+    out = []
+    for (v, kind, mode), ps in sorted(groups.items()):
+        names = sorted(p.file for p in ps)
+        drop = {p.file: p.dv_exclude for p in ps if p.dv_exclude}
+        if mode == "all" and not drop and not row_ids:
+            out.append(((v, kind, mode), _pinned_scan(
+                spark, root, pin.get("schema"), names, pin.get("colmap"))))
+            continue
+        df = _tagged_rows(spark, root, pin.get("schema"),
+                          pin.get("stats", {}), names, row_ids,
+                          cmap=pin.get("colmap"))
+        gone = _dv_positions_df(spark, root, drop, *tags) if drop else None
+        if mode == "dv_diff":
+            keep = _dv_positions_df(
+                spark, root, {p.file: p.dv_include for p in ps}, *tags)
+            if gone is not None:
+                keep = keep.join(gone, tags, "left_anti")
+            df = df.join(keep, tags, "left_semi")
+        elif gone is not None:
+            df = df.join(gone, tags, "left_anti")
+        out.append(((v, kind, mode), df.drop(*tags)))
+    return out
 
 
 def read_version_rows(spark: SparkSession, root: str,
@@ -2615,107 +2739,27 @@ def _version_diff(spark: SparkSession, root: str, v_from: int,
     from pyspark.sql.types import LongType, StructType
 
     mf, mt = read_manifest(root, v_from), read_manifest(root, v_to)
-    ff, ft = set(mf["files"]), set(mt["files"])
-    sf_, st_ = mf.get("stats", {}), mt.get("stats", {})
     schema_json = mt.get("schema")
-    cmap = mt.get("colmap")  # physical names never change; both sides
-    # read under v_to's logical names (a rename feeds NO changes)
-    merged_stats = {**sf_, **st_}  # __brid__ never changes for a file
+    # both sides read under v_to's schema and logical names (physical
+    # names never change, so a rename feeds NO changes); a file's
+    # __brid__ never changes, so either manifest's stats serve
+    pin = {**mt, "stats": {**mf.get("stats", {}), **mt.get("stats", {})}}
+    got = {key[1:]: df for key, df in _change_frames(
+        spark, root, pin, _classify_commit(mt, mf, v_to), row_ids)}
 
-    def _empty() -> DataFrame:
-        if schema_json is not None:
-            schema = StructType.fromJson(schema_json)
-            if row_ids:
-                schema = StructType(list(schema.fields)).add(
-                    _ROW_ID, LongType())
-            return spark.createDataFrame([], schema)
-        return read_version(spark, root, v_to).limit(0)
+    def _side(kind: str, mode: str) -> DataFrame:
+        if (kind, mode) in got:
+            return got[kind, mode]
+        if schema_json is None:
+            return read_version(spark, root, v_to).limit(0)
+        schema = StructType.fromJson(schema_json)
+        return spark.createDataFrame(
+            [], schema.add(_ROW_ID, LongType()) if row_ids else schema)
 
-    def _read(names: list[str], stats: dict) -> DataFrame:
-        if not names:
-            return _empty()
-        return _logical_rows(
-            spark, root, {"schema": schema_json, "stats": stats,
-                          "colmap": cmap}, sorted(names), row_ids)
-
-    def _rows_at(by_file: dict[str, set]) -> DataFrame:
-        """The rows of exactly the given (file → positions) sets."""
-        if not by_file:
-            return _empty()
-        raw = _tagged_rows(spark, root, schema_json, merged_stats,
-                           sorted(by_file), row_ids, cmap=cmap)
-        pos = spark.createDataFrame(
-            [(f, int(p)) for f, ps in by_file.items() for p in ps],
-            "_rt_f string, _rt_ri long")
-        return (raw.join(F.broadcast(pos), ["_rt_f", "_rt_ri"],
-                         "left_semi")
-                .drop("_rt_f", "_rt_ri"))
-
-    def _rows_at_df(pos_df, files: list[str]) -> DataFrame:
-        """The rows at a DISTRIBUTED (file, position) frame — the
-        above-threshold twin of :func:`_rows_at`."""
-        if pos_df is None or not files:
-            return _empty()
-        raw = _tagged_rows(spark, root, schema_json, merged_stats,
-                           sorted(files), row_ids, cmap=cmap)
-        return (raw.join(pos_df, ["_rt_f", "_rt_ri"], "left_semi")
-                .drop("_rt_f", "_rt_ri"))
-
-    def _positions(stats: dict, f: str) -> set:
-        fs = stats.get(f, {})
-        return (set(_read_dv(root, fs[_DV_KEY]))
-                if _DV_KEY in fs else set())
-
-    # DV deltas on CARRIED files: only files whose vector CHANGED
-    # between the versions can contribute (an identical sidecar name
-    # means identical positions — DV files are immutable and carried
-    # by name — so unchanged vectors are skipped without reading them)
-    carried = ff & ft
-    dv_files = [f for f in carried
-                if _DV_KEY in sf_.get(f, {}) or _DV_KEY in st_.get(f, {})]
-    changed_dv = [f for f in dv_files
-                  if sf_.get(f, {}).get(_DV_KEY)
-                  != st_.get(f, {}).get(_DV_KEY)]
-    dvm_from = _dv_map(sf_, changed_dv)
-    dvm_to = _dv_map(st_, changed_dv)
-    total_dv_bytes = sum(
-        os.path.getsize(os.path.join(root, _DATA, dv))
-        for dv in {*dvm_from.values(), *dvm_to.values()})
-
-    added_rows = _read(list(ft - ff), st_)
-    removed_rows = _read(list(ff - ft), sf_)
-    if total_dv_bytes <= _DV_DRIVER_BYTES:
-        # small vectors: driver set-difference (no extra Spark jobs)
-        dv_deleted: dict[str, set] = {}
-        dv_restored: dict[str, set] = {}
-        for f in changed_dv:
-            pf, pt = _positions(sf_, f), _positions(st_, f)
-            if pt - pf:
-                dv_deleted[f] = pt - pf
-            if pf - pt:
-                dv_restored[f] = pf - pt
-        ins_extra = _rows_at(dv_restored)
-        del_extra = _rows_at(dv_deleted)
-    else:
-        # large vectors: set-difference the (file, position) frames
-        # DISTRIBUTED — positions never materialize on the driver
-        # (the same threshold & sidecar-scan plan as _logical_rows)
-        pf_df = (_dv_positions_df(spark, root, dvm_from,
-                                  "_rt_f", "_rt_ri")
-                 if dvm_from else None)
-        pt_df = (_dv_positions_df(spark, root, dvm_to, "_rt_f", "_rt_ri")
-                 if dvm_to else None)
-        if pf_df is None:
-            del_pos, res_pos = pt_df, None
-        elif pt_df is None:
-            del_pos, res_pos = None, pf_df
-        else:
-            del_pos, res_pos = _mutual_except_all(pt_df, pf_df)
-        ins_extra = _rows_at_df(res_pos, changed_dv)
-        del_extra = _rows_at_df(del_pos, changed_dv)
-    ins_core, del_core = _mutual_except_all(added_rows, removed_rows)
-    return (ins_core.unionByName(ins_extra),
-            del_core.unionByName(del_extra))
+    ins, dels = _mutual_except_all(_side("insert", "all"),
+                                   _side("delete", "all"))
+    return (ins.unionByName(_side("insert", "dv_diff")),
+            dels.unionByName(_side("delete", "dv_diff")))
 
 
 def _mutual_except_all(a: DataFrame, b: DataFrame) -> tuple[DataFrame,

@@ -1,7 +1,9 @@
-"""Structured Streaming SOURCE over the versioned store's change feed
-— Delta's ``readChangeFeed`` shape, implemented as a real PySpark 4
-Python Data Source (SPARK-44076): ``spark.readStream.format(...)`` on
-a store root yields every committed change as typed rows, with Spark's
+"""The versioned store's change feed: a Structured Streaming SOURCE
+and a batch range read (:func:`read_change_feed`, Delta's
+``table_changes``). The source is Delta's ``readChangeFeed`` shape,
+implemented as a real PySpark 4 Python Data Source (SPARK-44076):
+``spark.readStream.format(...)`` on a store root yields every
+committed change as typed rows, with Spark's
 own checkpoint offset log tracking the last processed VERSION. This is
 the consumer half the r14 verdict asked for: an incremental
 materialized view (or any downstream pipeline) follows the store
@@ -35,15 +37,29 @@ pairing matters.
 
 Scale shape: offsets and change classification are DRIVER-side
 manifest metadata (O(#changed files) per commit — the same planning
-cost any snapshot read pays); row reads are EXECUTOR-side, one input
-partition per changed file, through the store's one executor file
-reader (``store_batch.read_file``, which the batch source's scan also
-runs: deletion-vector positions, physical→logical names, NULL-fill);
-the feed only appends its two change columns. A 1000-file commit fans
-out as 1000 tasks; nothing row-scale ever touches the driver. Aborted
-2PC holes feed nothing; an in-doubt top-of-chain prepare simply holds
-``latestOffset`` back until the transaction decides (2PC invisibility,
-preserved under streaming).
+cost any snapshot read pays). The classification rule lives once, in
+``versioned_store._classify_commit``, which the streaming source, the
+batch feed and ``version_diff`` all call. The two halves read the
+classified files differently:
+
+- the STREAMING source reads them EXECUTOR-side, one input partition
+  per changed file, through the store's one executor file reader
+  (``store_batch.read_file``: deletion-vector positions,
+  physical→logical names, NULL-fill) and appends its two change
+  columns — a 1000-file commit fans out as 1000 tasks;
+- the BATCH feed (:func:`read_change_feed`) is a plain Spark plan:
+  ``versioned_store._change_frames`` scans the changed files with the
+  store's pinned scan, one scan per version and change kind, takes
+  deletion-vector positions from the store's position frame (driver
+  broadcast or distributed sidecar scan), and the feed adds the two
+  change columns as literals. No Python data source runs; only the
+  distributed decode of large v2 sidecars uses a pandas UDF.
+
+Nothing row-scale ever touches the driver. Aborted 2PC holes feed
+nothing; an in-doubt top-of-chain prepare simply holds
+``latestOffset`` back until the transaction decides (2PC
+invisibility, preserved under streaming), and makes the batch feed
+raise ``InDoubtTransactionError`` unless its range ends below it.
 
 Schema contract: the stream's schema (and column mapping) is pinned at
 QUERY START from the store's then-latest manifest — Spark streaming
@@ -74,8 +90,7 @@ from __future__ import annotations
 import os
 from typing import Iterator, Sequence
 
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader,
+from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import LongType, StringType, StructType
 
@@ -83,29 +98,6 @@ FORMAT_NAME = "store_cdf"
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
-
-
-class _ChangePartition(InputPartition):
-    """One changed FILE of one commit — the unit of executor work.
-
-    ``mode``:
-      - ``"all"``: every row of ``file`` (minus ``dv_exclude``'s
-        positions) feeds with ``kind``;
-      - ``"dv_diff"``: only positions in ``dv_include`` minus
-        ``dv_exclude`` feed (carried file whose vector changed) —
-        both sidecars are read executor-side, positions never touch
-        the driver.
-    """
-
-    def __init__(self, file: str, kind: str, version: int, mode: str,
-                 dv_exclude: str | None = None,
-                 dv_include: str | None = None):
-        self.file = file
-        self.kind = kind
-        self.version = version
-        self.mode = mode
-        self.dv_exclude = dv_exclude
-        self.dv_include = dv_include
 
 
 def _visible_manifest_at(root: str, v: int):
@@ -122,48 +114,7 @@ def _visible_manifest_at(root: str, v: int):
     return None
 
 
-def _classify_commit(man: dict, prev: dict | None,
-                     v: int) -> list[_ChangePartition]:
-    """DRIVER-side change classification of ONE commit vs its
-    predecessor — the shared planning core of the streaming source
-    and the batch range reader (semantics in the module docstring)."""
-    from ..sources.versioned_store import _DV_KEY
-
-    ft = set(man["files"])
-    st = man.get("stats", {})
-    ff = set(prev["files"]) if prev is not None else set()
-    sf_ = prev.get("stats", {}) if prev is not None else {}
-    out = []
-    for f in sorted(ft - ff):  # added → insert (minus v's DV)
-        out.append(_ChangePartition(
-            f, "insert", v, "all",
-            dv_exclude=st.get(f, {}).get(_DV_KEY)))
-    for f in sorted(ff - ft):  # removed → delete (its LIVE rows)
-        out.append(_ChangePartition(
-            f, "delete", v, "all",
-            dv_exclude=sf_.get(f, {}).get(_DV_KEY)))
-    for f in sorted(ft & ff):  # carried: only a CHANGED vector feeds
-        dv_f = sf_.get(f, {}).get(_DV_KEY)
-        dv_t = st.get(f, {}).get(_DV_KEY)
-        if dv_f == dv_t:
-            continue
-        if dv_t is not None:
-            # newly marked = dv_t − dv_f → delete; when the commit
-            # REMOVED the vector entirely (dv_t None, e.g. restore
-            # to a pre-MoR-delete version) that set is empty by
-            # construction and no delete partition exists — emitting
-            # one with dv_include=None would crash read()
-            out.append(_ChangePartition(
-                f, "delete", v, "dv_diff",
-                dv_include=dv_t, dv_exclude=dv_f))
-        if dv_f is not None:
-            out.append(_ChangePartition(  # rolled back → insert
-                f, "insert", v, "dv_diff",
-                dv_include=dv_f, dv_exclude=dv_t))
-    return out
-
-
-def _classify_version(root: str, v: int) -> list[_ChangePartition]:
+def _classify_version(root: str, v: int) -> list:
     """The change partitions of ONE version, in the deterministic
     classification order (a pure function of the immutable manifests
     — required by file-granular offsets, whose slices must be stable
@@ -175,47 +126,25 @@ def _classify_version(root: str, v: int) -> list[_ChangePartition]:
     except vstore.AbortedTransactionError:
         return []
     prev = _visible_manifest_at(root, v - 1) if v >= 2 else None
-    return _classify_commit(man, prev, v)
+    return vstore._classify_commit(man, prev, v)
 
 
-def _plan_changes(root: str, lo: int, hi: int) -> list[_ChangePartition]:
+def _plan_changes(root: str, lo: int, hi: int) -> list:
     """All change partitions of the commit range ``(lo, hi]`` —
     aborted holes feed nothing; the baseline below ``lo`` walks down
     past holes."""
     from ..sources import versioned_store as vstore
 
-    parts: list[_ChangePartition] = []
+    parts: list = []
     prev = _visible_manifest_at(root, lo) if lo >= 1 else None
     for v in range(lo + 1, hi + 1):
         try:
             man = vstore.read_manifest(root, v)
         except vstore.AbortedTransactionError:
             continue  # a hole feeds nothing; prev carries forward
-        parts.extend(_classify_commit(man, prev, v))
+        parts.extend(vstore._classify_commit(man, prev, v))
         prev = man
     return parts
-
-
-def _read_changes(root: str, colmap: dict, schema_json,
-                  p: _ChangePartition) -> Iterator:
-    """EXECUTOR-side: one changed file through the store's one file
-    reader (:func:`store_batch.read_file` — position semantics,
-    physical→logical names, NULL-fill under the relaxed pinned schema)
-    plus the two change columns, as Arrow record batches. Shared by
-    the streaming source and the batch range reader."""
-    import pyarrow as pa
-
-    from ..sources.store_batch import read_file
-
-    table = read_file(root, p.file, colmap, schema_json,
-                      exclude=p.dv_exclude, include=p.dv_include)
-    n = table.num_rows
-    table = (table
-             .append_column(CHANGE_TYPE_COL,
-                            pa.array([p.kind] * n, type=pa.string()))
-             .append_column(COMMIT_VERSION_COL,
-                            pa.array([p.version] * n, type=pa.int64())))
-    yield from table.to_batches(max_chunksize=1 << 16)
 
 
 class StoreCDFStreamReader(DataSourceStreamReader):
@@ -400,12 +329,27 @@ class StoreCDFStreamReader(DataSourceStreamReader):
             parts += _classify_version(self._root, v2 + 1)[:k2]
         return parts
 
-    def read(self, partition: _ChangePartition) -> Iterator:
-        """EXECUTOR-side: one changed file → Arrow record batches
-        under the stream's pinned schema (shared core:
-        :func:`_read_changes`)."""
-        yield from _read_changes(
-            self._root, self._colmap, self._schema_json, partition)
+    def read(self, partition) -> Iterator:
+        """EXECUTOR-side: one changed file through the store's one
+        file reader (:func:`store_batch.read_file` — position
+        semantics, physical→logical names, NULL-fill under the
+        stream's relaxed pinned schema) plus the two change columns,
+        as Arrow record batches."""
+        import pyarrow as pa
+
+        from ..sources.store_batch import read_file
+
+        part = partition
+        table = read_file(self._root, part.file, self._colmap,
+                          self._schema_json, exclude=part.dv_exclude,
+                          include=part.dv_include)
+        n = table.num_rows
+        table = (table
+                 .append_column(CHANGE_TYPE_COL,
+                                pa.array([part.kind] * n, pa.string()))
+                 .append_column(COMMIT_VERSION_COL,
+                                pa.array([part.version] * n, pa.int64())))
+        yield from table.to_batches(max_chunksize=1 << 16)
 
     def commit(self, end: dict) -> None:
         # Spark's checkpoint offset log is the durable cursor for DATA;
@@ -415,43 +359,10 @@ class StoreCDFStreamReader(DataSourceStreamReader):
             self._persist_floor()
 
 
-class StoreCDFBatchReader(DataSourceReader):
-    """BATCH range read of the change feed — Delta's
-    ``spark.read.format("delta").option("readChangeFeed", ...)`` /
-    ``table_changes(…, start, end)`` shape: all changes in
-    ``(startingVersion, endingVersion]`` as one DataFrame, same typed
-    column contract and per-changed-file executor fan-out as the
-    streaming source, no checkpoint machinery. Planning is the SAME
-    driver-side manifest walk the stream performs per micro-batch;
-    the schema (and column mapping) pins at ``endingVersion`` so a
-    range ending before a schema evolution reads under the schema of
-    its own era."""
-
-    def __init__(self, root: str, lo: int, hi: int):
-        self._root = root
-        self._lo = lo
-        self._hi = hi
-        man = _visible_manifest_at(root, hi)
-        if man is None or man.get("schema") is None:
-            raise ValueError(
-                f"{root} has no visible schema-bearing manifest at or "
-                f"below version {hi}")
-        self._schema_json = man["schema"]
-        self._colmap = man.get("colmap") or {}
-
-    def partitions(self) -> Sequence[InputPartition]:
-        return _plan_changes(self._root, self._lo, self._hi)
-
-    def read(self, partition: _ChangePartition | None) -> Iterator:
-        if partition is None:
-            return  # empty range: one no-op task, schema preserved
-        yield from _read_changes(
-            self._root, self._colmap, self._schema_json, partition)
-
-
 class StoreChangeFeedDataSource(DataSource):
-    """``spark.readStream.format("store_cdf").option("path", root)``
-    (streaming), or ``spark.read.format("store_cdf")`` (batch range).
+    """``spark.readStream.format("store_cdf").option("path", root)`` —
+    the streaming change feed (the batch feed is
+    :func:`read_change_feed`, a plain Spark plan).
 
     Options:
       - ``path`` (required): the versioned-store root;
@@ -470,16 +381,12 @@ class StoreChangeFeedDataSource(DataSource):
       - ``cursorPath``: a small file this source owns (one per query,
         conventionally next to the checkpoint) holding the admission
         floor across restarts — ADVISORY only, exactly-once stays with
-        Spark's offset log;
-      - ``endingVersion`` (BATCH reads only; default latest visible):
-        the inclusive upper bound of the change range — with
-        ``startingVersion`` (exclusive) this is Delta's
-        ``table_changes(start, end)``.
+        Spark's offset log.
 
-    The source schema is the store's logical schema at the range end
-    (CURRENT for streams), nullability relaxed, plus ``_change_type``
-    (string) and ``_commit_version`` (long) — the Delta
-    ``readChangeFeed`` column contract."""
+    The source schema is the store's CURRENT logical schema,
+    nullability relaxed, plus ``_change_type`` (string) and
+    ``_commit_version`` (long) — the Delta ``readChangeFeed`` column
+    contract (:func:`_feed_schema`)."""
 
     @classmethod
     def name(cls) -> str:
@@ -487,31 +394,20 @@ class StoreChangeFeedDataSource(DataSource):
 
     def schema(self) -> StructType:
         from ..sources import versioned_store as vstore
-        from ..sources.store_batch import nullable_schema
 
         root = self.options.get("path")
         if not root:
             raise ValueError("store_cdf requires option 'path' "
                              "(the versioned-store root)")
-        if self.options.get("endingVersion") is not None:
-            # batch range read: pin the schema of the range's END era
-            man = _visible_manifest_at(
-                root, int(self.options["endingVersion"]))
-            schema_json = man.get("schema") if man else None
-        else:
-            v = vstore.latest_version(root)
-            if v is None:
-                raise ValueError(f"no committed version under {root}")
-            schema_json = vstore.read_manifest(root, v).get("schema")
+        v = vstore.latest_version(root)
+        if v is None:
+            raise ValueError(f"no committed version under {root}")
+        schema_json = vstore.read_manifest(root, v).get("schema")
         if schema_json is None:
             raise ValueError(
                 f"{root} predates recorded schemas — the change-feed "
                 f"source needs a pinned schema to stream under")
-        # nullability relaxed like every snapshot read: a file that
-        # predates a column feeds it as NULL whatever the manifest says
-        out = nullable_schema(StructType.fromJson(schema_json))
-        out = out.add(CHANGE_TYPE_COL, StringType(), False)
-        return out.add(COMMIT_VERSION_COL, LongType(), False)
+        return _feed_schema(schema_json)
 
     def streamReader(self, schema: StructType) -> StoreCDFStreamReader:
         mv = self.options.get("maxVersionsPerBatch")
@@ -523,25 +419,17 @@ class StoreChangeFeedDataSource(DataSource):
             cursor_path=self.options.get("cursorPath"),
             max_files_per_batch=int(mf) if mf is not None else None)
 
-    def _ending_version(self, root: str) -> int:
-        from ..sources import versioned_store as vstore
 
-        ev = self.options.get("endingVersion")
-        if ev is not None:
-            return int(ev)
-        v = vstore.latest_version(root)  # 2PC invisibility applies
-        if v is None:
-            raise ValueError(f"no committed version under {root}")
-        return v
+def _feed_schema(schema_json) -> StructType:
+    """The feed's schema: the pinned logical schema with nullability
+    relaxed like every snapshot read (a file that predates a column
+    feeds it as NULL whatever the manifest says), plus the two change
+    columns."""
+    from ..sources.store_batch import nullable_schema
 
-    def reader(self, schema: StructType) -> StoreCDFBatchReader:
-        root = self.options.get("path")
-        if not root:
-            raise ValueError("store_cdf requires option 'path' "
-                             "(the versioned-store root)")
-        return StoreCDFBatchReader(
-            root, int(self.options.get("startingVersion", 0)),
-            self._ending_version(root))
+    out = nullable_schema(StructType.fromJson(schema_json))
+    out = out.add(CHANGE_TYPE_COL, StringType(), False)
+    return out.add(COMMIT_VERSION_COL, LongType(), False)
 
 
 def register(spark) -> None:
@@ -573,12 +461,37 @@ def read_change_feed_stream(spark, root: str, starting_version: int = 0,
 def read_change_feed(spark, root: str, starting_version: int = 0,
                      ending_version: int | None = None):
     """BATCH ``table_changes``: every change in
-    ``(starting_version, ending_version]`` as one DataFrame
-    (registers the source on first use)."""
-    register(spark)
-    reader = (spark.read.format(FORMAT_NAME)
-              .option("path", root)
-              .option("startingVersion", starting_version))
-    if ending_version is not None:
-        reader = reader.option("endingVersion", ending_version)
-    return reader.load()
+    ``(starting_version, ending_version]`` as one plain Spark
+    DataFrame, under the schema (and column mapping) of the range
+    end's era — a range ending before a schema evolution reads under
+    its own schema. The default end is the latest VISIBLE version, so
+    an in-doubt prepared top raises
+    :class:`versioned_store.InDoubtTransactionError` here, before any
+    Spark job. Planning is the driver-side manifest walk of the range
+    (:func:`_plan_changes`); the rows come from the store's change
+    reader (:func:`versioned_store._change_frames`: pinned scans, one
+    per version and change kind, that Catalyst plans like any other
+    scan), tagged with the two change columns."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, functions as F
+
+    from ..sources import versioned_store as vstore
+
+    hi = (vstore.latest_version(root) if ending_version is None
+          else ending_version)
+    if hi is None:
+        raise ValueError(f"no committed version under {root}")
+    pin = _visible_manifest_at(root, hi)
+    if pin is None or pin.get("schema") is None:
+        raise ValueError(
+            f"{root} has no visible schema-bearing manifest at or "
+            f"below version {hi}")
+    frames = [df.select("*", F.lit(kind).alias(CHANGE_TYPE_COL),
+                        F.lit(v).cast("long").alias(COMMIT_VERSION_COL))
+              for (v, kind, _), df in vstore._change_frames(
+                  spark, root, pin,
+                  _plan_changes(root, starting_version, hi))]
+    if not frames:
+        return spark.createDataFrame([], _feed_schema(pin["schema"]))
+    return reduce(DataFrame.unionByName, frames)

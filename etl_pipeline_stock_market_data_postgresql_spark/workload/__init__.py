@@ -52,8 +52,8 @@ _EVIDENCE_PRIORITY: tuple[str, ...] = (
     # the BATCH data-source halves (spark.read/df.write
     # format("versioned_store") with versionAsOf + pushFilters stats
     # pruning + idempotent txn replay), and the batch change-feed
-    # range read (table_changes(start, end) through
-    # spark.read.format("store_cdf")), and file-granular stream
+    # range read (table_changes(start, end) as a native Spark plan
+    # over the store's pinned scan), and file-granular stream
     # admission (maxFilesPerBatch splitting inside a commit), and
     # metadata-answered COUNT/min-max with exactness guards —
     # slots 1-7;

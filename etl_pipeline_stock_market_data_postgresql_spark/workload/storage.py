@@ -3397,13 +3397,15 @@ def _cdf_range_root(spark: SparkSession, sf_dir: str) -> str:
 
 def q173_cdf_batch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH CHANGE-FEED RANGE READ — Delta's ``table_changes(start,
-    end)`` as the batch half of the ``store_cdf`` data source
-    (``spark.read.format("store_cdf")`` with exclusive
-    ``startingVersion`` / inclusive ``endingVersion``): all committed
-    changes of a version range as ONE DataFrame, the same typed column
-    contract and per-changed-file executor fan-out as the q164
-    streaming source, with no checkpoint machinery — the shape an
-    ad-hoc backfill or audit query needs.
+    end)``: :func:`cdf_source.read_change_feed` with an exclusive
+    start and an inclusive end returns all committed changes of a
+    version range as ONE plain Spark DataFrame, with the same typed
+    column contract as the q164 streaming source and no checkpoint
+    machinery — the shape an ad-hoc backfill or audit query needs.
+    The feed classifies each commit with the store's one change rule
+    and scans the changed files with the store's pinned parquet scan,
+    so Catalyst plans it like any snapshot read (no Python data
+    source).
 
     The chain (events → event_id/user_id/value): v1 appends the
     low-id half, v2 the high half, v3 MoR-deletes the ``% 5`` slice
@@ -3417,9 +3419,9 @@ def q173_cdf_batch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends).
 
     Scale shape: planning is a driver-side manifest walk of the
-    requested range only (O(changed files)); each changed file is one
-    executor task; a bounded range over a million-commit store reads
-    only its own commits' files. The fixture is built once
+    requested range only (O(changed files)); the plan holds one scan
+    per version and change kind, never one per file; a bounded range
+    over a million-commit store reads only its own commits' files. The fixture is built once
     (fingerprint-gated); the gated read scans only the feed.
 
     Reference parity: the reference has no change history at all —

@@ -182,3 +182,85 @@ def test_feed_after_drop_column_evolution(spark, tmp_path):
          .start())
     q.awaitTermination()
     assert rows(spark.read.parquet(out)) == want
+
+
+def _leaf_scans(plan) -> set[str]:
+    """Class names of the leaves of a physical plan, through adaptive
+    query stages and reused exchanges."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _leaf_scans(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _leaf_scans(plan.plan())
+    if name == "ReusedExchangeExec":
+        return _leaf_scans(plan.child())
+    if name == "BatchScanExec":
+        return {f"BatchScanExec[{plan.scan().getClass().getSimpleName()}]"}
+    kids = plan.children()
+    if kids.isEmpty():
+        return {name}
+    out = set()
+    it = kids.iterator()
+    while it.hasNext():
+        out |= _leaf_scans(it.next())
+    return out
+
+
+def test_batch_feed_is_a_native_plan(spark, tmp_path):
+    """The batch feed over every verb class scans parquet (and local
+    position relations) in Spark: no Python data-source scan."""
+    root = str(tmp_path / "s")
+    _chain(spark, root)
+    feed = cdf_source.read_change_feed(spark, root)
+    feed.collect()
+    leaves = _leaf_scans(feed._jdf.queryExecution().executedPlan())
+    assert "FileSourceScanExec" in leaves
+    assert leaves <= {"FileSourceScanExec", "LocalTableScanExec"}, leaves
+
+
+def test_in_doubt_top_raises_its_own_type_before_any_job(spark,
+                                                         tmp_path):
+    """Reading past an in-doubt prepared top raises the store's own
+    InDoubtTransactionError from the driver-side planning, before any
+    Spark job runs."""
+    import os
+
+    root = str(tmp_path / "s")
+    txlog = str(tmp_path / "txlog")
+    vstore.commit_append(spark, root, _ids(spark, 0, 10))
+    txid = f"tx-p{os.getpid()}-cdfn"
+    vstore._commit(spark, root, _ids(spark, 10, 20), carry="prev",
+                   stats_cols=("id",), txn=None, op="append",
+                   pending_tx=(os.path.abspath(txlog), txid))
+    sc = spark.sparkContext
+    group = f"cdf-in-doubt-{txid}"
+    sc.setJobGroup(group, "batch change feed past an in-doubt top")
+    try:
+        with pytest.raises(vstore.InDoubtTransactionError):
+            cdf_source.read_change_feed(spark, root)
+        with pytest.raises(vstore.InDoubtTransactionError):
+            cdf_source.read_change_feed(spark, root, ending_version=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_distributed_dv_batch_feed_matches_streaming_feed(
+        spark, tmp_path, monkeypatch):
+    """With every deletion vector read by the distributed sidecar
+    scan, the batch feed still equals the streaming feed."""
+    root = str(tmp_path / "s")
+    _chain(spark, root)
+    monkeypatch.setattr(vstore, "_DV_DRIVER_BYTES", 0)
+    batch = cdf_source.read_change_feed(spark, root)
+    out = str(tmp_path / "feed")
+    q = (cdf_source.read_change_feed_stream(spark, root)
+         .writeStream.trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .foreachBatch(lambda bdf, bid:
+                       bdf.write.mode("append").parquet(out))
+         .start())
+    q.awaitTermination()
+    streamed = spark.read.parquet(out)
+    assert batch.exceptAll(streamed).count() == 0
+    assert streamed.exceptAll(batch).count() == 0
