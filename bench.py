@@ -1,22 +1,72 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every workload query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Query-timing harness: workload queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], each forced
+end to end with a noop write (every output row materialized, nothing
+collected to the driver).
 
-Each query is forced end-to-end with a noop write (full materialization
-of every output row — no collect-to-driver bottleneck, no lazy
-short-circuit)."""
+    python bench.py                                # full run
+    python bench.py NAME... [--reps N] [--plans DIR]
+    python bench.py --sf-probe [NAME...] [--reps N] [--plans DIR]
+
+Every mode follows one protocol. ``prepare`` runs once per data dir,
+untimed: the q09 warm-up, ``_warm_engine_surfaces`` and the fixture
+phase. ``measure`` times each query: its jobs run under the query's
+name as job group, the timer covers ``spark_fn`` plus the noop sink,
+a failure is recorded (never raised), the per-layer census of
+``perfbench.census.SparkCensus`` is taken outside the timer, and the
+same untimed reset (``clearCache``, ``gc.collect()``, ``System.gc()``)
+follows every run.
+
+- Full run (no NAME): one timed run per query. Prints the full JSON
+  line ``{"queries": {name: sec}, ..., "value": total_sec, ...}`` and
+  then a compact summary line, last. The same result plus the census
+  of every query lands in ``BENCH_FULL_c{cpus}.json`` and in
+  ``BENCH_FULL.json`` (the last run's copy).
+- Named: one untimed run, then ``--reps`` timed runs of each NAME
+  (default 2; a full run's default is 1); one JSON line per query with
+  its times, best and census.
+  ``--plans DIR`` writes each query's formatted final plan to
+  ``DIR/<name>.txt``.
+- ``--sf-probe``: each query (the NAMEs, else the ten slowest of this
+  CPU count's ``BENCH_FULL_c{cpus}.json``, else of ``BENCH_FULL.json``)
+  measured like a named one at sf0.01 and at $SPARK_GRAFT_SF_DIR. Prints
+  one JSON line with the scaling exponent log(time ratio) / log(input
+  ratio), the input ratio taken from the ``lineitem`` row counts in the
+  parquet footers, and flags exponents above 1.2.
+
+Witness queries (exact twins of a scale path, super-linear on purpose)
+are skipped in full and probe runs on a dir whose ``events.parquet`` is
+over 64 MB; a query named on the command line always runs."""
 
 from __future__ import annotations
 
+import argparse
+import gc
 import json
+import math
 import os
 import sys
 import time
 
 from etl_pipeline_stock_market_data_postgresql_spark.session import get_spark
 from etl_pipeline_stock_market_data_postgresql_spark.workload import all_queries
+from perfbench.census import SparkCensus
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+SMALL_DIR = "/root/testdata/sf0.01"
+PROBE_TOP = 10
+FLAG_EXPONENT = 1.2
+
+#: exact witnesses of a scale path (and the path they witness): their
+#: cost beyond gate scale is the cliff the twin exists to avoid
+WITNESS_QUERIES = {
+    "q98_semantic_dedup": "q111_semantic_dedup_hier",
+    "q102_equidepth_histogram": "q112_equidepth_sketch",
+    # q29's fixed 256-bucket sign blocking makes ~n^2/256 candidate
+    # pairs; the corpus-proportional cell path is q111
+    "q29_embedding_neardup": "q111_semantic_dedup_hier",
+}
+_GATE_CLASS_BYTES = 64 * 1024 * 1024  # events.parquet above this: probe scale
 
 
 def _warm_engine_surfaces(spark) -> None:
@@ -84,18 +134,14 @@ def _scratch_marker_snapshot(sf_dir: str) -> dict[str, int]:
     from etl_pipeline_stock_market_data_postgresql_spark.sources.derived_cache \
         import _FP_NAME, scratch_base
 
-    base, _ = scratch_base(sf_dir)
     snap: dict[str, int] = {}
-    if not os.path.isdir(base):
-        return snap
-    for dirpath, _dirs, files in os.walk(base):
-        for fn in files:
-            if fn == _FP_NAME:
-                p = os.path.join(dirpath, fn)
-                try:
-                    snap[p] = os.stat(p).st_mtime_ns
-                except OSError:
-                    pass
+    for dirpath, _dirs, files in os.walk(scratch_base(sf_dir)[0]):
+        if _FP_NAME in files:
+            p = os.path.join(dirpath, _FP_NAME)
+            try:
+                snap[p] = os.stat(p).st_mtime_ns
+            except OSError:
+                pass
     return snap
 
 
@@ -128,218 +174,155 @@ def _build_fixtures_untimed(spark, sf_dir: str) -> tuple[float, dict, int]:
     return total, per, built
 
 
-def _sf_probe(n_queries: int = 10) -> None:
-    """``bench.py --sf-probe``: demonstrate scaling with SCALE FACTOR
-    rather than cores (r16 VERDICT item 5 — at sf0.1 the c8/c32 ratio
-    is ≈1 everywhere because the workload is overhead-dominated, so
-    core-scaling cannot distinguish good plans from bad; input-scaling
-    can). Runs the N most expensive queries (per BENCH_FULL.json when
-    present, else a static list of the historically expensive ones) at
-    sf0.01 and at $SPARK_GRAFT_SF_DIR (default sf0.1), unchanged
-    methodology (untimed fixture phase + noop sink + clearCache), and
-    prints ONE JSON line with per-query times, the time ratio, and the
-    implied scaling exponent log(t_ratio)/log(sf_ratio). A query is
-    FLAGGED when its exponent exceeds 1.2 — superlinear growth that no
-    declared operator should exhibit (linear operators ≈1 minus the
-    fixed per-query overhead, blocked/indexed ones well below)."""
-    big_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    small_dir = os.path.join(os.path.dirname(big_dir.rstrip("/")), "sf0.01")
-    try:
-        sf_big = float(os.path.basename(
-            big_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf_big = 0.1
-    sf_ratio = sf_big / 0.01
+def drop_witnesses(names: list[str], dirs) -> list[str]:
+    """``names`` without the witness queries when any of ``dirs`` is
+    probe scale (its ``events.parquet`` is over 64 MB)."""
+    def probe_scale(d: str) -> bool:
+        try:
+            return (os.path.getsize(os.path.join(d, "events.parquet"))
+                    > _GATE_CLASS_BYTES)
+        except OSError:
+            return False
 
-    names: list[str] = []
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json")) as f:
-            prev = json.load(f)["queries"]
-        names = [n for n, _ in sorted(prev.items(),
-                                      key=lambda kv: -kv[1])[:n_queries]]
-    except (OSError, ValueError, KeyError):
-        names = ["q122_streaming_incremental_dedup",
-                 "q140_streaming_ann_ingest", "q120_incremental_dedup",
-                 "q130_importance_resample", "q118_small_file_compaction",
-                 "q159_deletion_vectors", "q131_kcore", "q113_ivfpq_adc",
-                 "q149_versioned_change_feed", "q128_pagerank"][:n_queries]
+    if not any(probe_scale(d) for d in dirs):
+        return names
+    for n in sorted(set(names) & WITNESS_QUERIES.keys()):
+        print(f"  {n}: skipped (witness of {WITNESS_QUERIES[n]})",
+              file=sys.stderr)
+    return [n for n in names if n not in WITNESS_QUERIES]
 
-    spark = get_spark("bench-sf-probe")
+
+def prepare(spark, sf_dir: str) -> tuple[float | None, dict, int | None]:
+    """Untimed set-up of one data dir. JVM/codegen spin-up (the q09
+    warm-up) and the one-time start of each lazily initialized engine
+    surface must not be charged to whichever query first uses them;
+    the fixture phase keeps fixture builds out of every timer. Returns
+    ``_build_fixtures_untimed``'s result, ``(None, {}, None)`` when the
+    phase failed (queries then build their fixtures inline)."""
     try:
+        all_queries()["q09_decimal_agg"].spark_fn(spark, sf_dir) \
+            .write.format("noop").mode("overwrite").save()
         _warm_engine_surfaces(spark)
     except Exception as ex:
-        print(f"  engine warmup failed (continuing): {ex}", file=sys.stderr)
-    queries = all_queries()
-    import math
-    out: dict[str, dict] = {}
-    for sf_dir in (small_dir, big_dir):
+        print(f"  warm-up failed (continuing): {ex}", file=sys.stderr)
+    try:
+        return _build_fixtures_untimed(spark, sf_dir)
+    except Exception as ex:
+        print(f"  fixture phase failed (queries build inline): {ex}",
+              file=sys.stderr)
+        return None, {}, None
+
+
+def _failure(ex: Exception) -> str:
+    """Exception class, first message line (Spark analysis errors
+    front-load the useful part) and the innermost stack frame in this
+    repo (streaming queries run inside spark_fn), in 300 chars."""
+    frame = ""
+    tb = ex.__traceback__
+    while tb is not None:
+        fname = os.path.abspath(tb.tb_frame.f_code.co_filename)
+        if fname.startswith(HERE):
+            frame = f" at {os.path.basename(fname)}:{tb.tb_lineno}"
+        tb = tb.tb_next
+    msg = str(ex).strip().splitlines()[0] if str(ex).strip() else ""
+    return f"{type(ex).__name__}: {msg}"[:300 - len(frame)] + frame
+
+
+def measure(spark, census: SparkCensus, name: str, sf_dir: str,
+            reps: int = 1, plans: str | None = None) -> dict:
+    """Run query ``name`` ``reps`` times; see the module docstring for
+    the protocol. Returns ``{"name", "times", "best", "census",
+    "census_overhead_s"}``, plus ``"error"`` when a run raised (the
+    remaining runs are skipped). ``census`` holds the counters of the
+    fastest run (of the failed one on error); ``census_overhead_s`` is
+    the time spent in the census's listener callbacks."""
+    fn = all_queries()[name].spark_fn
+    spark.sparkContext.setJobGroup(name, name)
+    row: dict = {"name": name, "times": []}
+    callback_s = census.callback_s
+    for _ in range(reps):
+        lo = census.begin()
+        t0 = time.perf_counter()
         try:
-            _build_fixtures_untimed(spark, sf_dir)
-        except Exception as ex:
-            print(f"  fixture phase failed ({sf_dir}): {ex}",
-                  file=sys.stderr)
-        for name in names:
-            if name not in queries:
-                continue
-            t0 = time.perf_counter()
-            try:
-                queries[name].spark_fn(spark, sf_dir) \
-                    .write.format("noop").mode("overwrite").save()
-                sec = round(time.perf_counter() - t0, 4)
-            except Exception as ex:
-                print(f"  {name} FAILED at {sf_dir}: {ex}", file=sys.stderr)
-                sec = None
-            key = "t_small" if sf_dir == small_dir else "t_large"
-            out.setdefault(name, {})[key] = sec
-            print(f"  [{os.path.basename(sf_dir)}] {name}: {sec}",
-                  file=sys.stderr)
-            spark.catalog.clearCache()
-    flagged = []
-    for name, d in out.items():
-        ts, tl = d.get("t_small"), d.get("t_large")
-        if ts and tl and ts > 0:
-            d["ratio"] = round(tl / ts, 3)
-            d["exponent"] = round(math.log(max(tl / ts, 1e-9))
-                                  / math.log(sf_ratio), 3)
-            if d["exponent"] > 1.2:
-                flagged.append(name)
-    print(json.dumps({"metric": "sf_scaling_probe", "unit": "sec",
-                      "sf_small": 0.01, "sf_large": sf_big,
-                      "queries": out, "flagged": flagged}))
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            err = None
+        except Exception as ex:  # one bad query must not sink the run
+            df, err = None, _failure(ex)
+        t1 = time.perf_counter()
+        counters = census.end(lo, t0, t1)
+        if err is None and plans:
+            os.makedirs(plans, exist_ok=True)
+            with open(os.path.join(plans, f"{name}.txt"), "w") as f:
+                f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"))
+        # drop cached blocks, then the py4j proxies, so that the JVM
+        # collection lets ContextCleaner free the checkpoint and
+        # broadcast blocks of this run before the next one
+        del df
+        spark.catalog.clearCache()
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        if err is not None:
+            row.update(error=err, census=counters)
+            break
+        row["times"].append(round(t1 - t0, 4))
+        if row["times"][-1] == min(row["times"]):
+            row["census"] = counters
+    row["best"] = min(row["times"], default=None)
+    print(f"  [{os.path.basename(sf_dir)}] {name}: "
+          + (f"FAILED {err}" if err else f"{row['best']:.3f}s"),
+          file=sys.stderr)
+    row["census_overhead_s"] = round(census.callback_s - callback_s, 4)
+    return row
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def full_run(spark, census: SparkCensus, sf_dir: str, reps: int,
+             plans: str | None) -> None:
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.0  # non-standard dir name; timings still meaningful
-    spark = get_spark("bench")
-
-    # untimed warmup: JVM/codegen spin-up must not be charged to the
-    # alphabetically-first query
-    try:
-        warm = all_queries()["q09_decimal_agg"]
-        warm.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    except Exception as ex:
-        print(f"  warmup failed (continuing): {ex}", file=sys.stderr)
-    # Same rationale, engine-wide (r16 measurement fix, documented in
-    # OPTIMIZATION_r16.md with pre-fix numbers): one-time engine
-    # spin-up — Python worker pools (Arrow map path, stateful-streaming
-    # path, the Python DataSource planner/reader processes), streaming
-    # state-store machinery, the py4j foreachBatch callback server,
-    # localCheckpoint plumbing — used to be charged to whichever query
-    # sorted first among its users (q106 carried the streaming stack,
-    # q172 the DataSource processes: measured ~5-6 s each of pure
-    # first-use cost, 0 s on a second run in the same JVM). Warm each
-    # surface once on ~10 synthetic rows, untimed; no query input or
-    # result is touched, so every timed query still computes from the
-    # parquet inputs alone.
-    try:
-        _warm_engine_surfaces(spark)
-    except Exception as ex:
-        print(f"  engine warmup failed (continuing): {ex}", file=sys.stderr)
-    # untimed fixture phase (r17): fingerprint-gated fixture builds run
-    # here, reported as fixture_build_sec — never inside a timed query
-    try:
-        fixture_sec, fixture_per, fixtures_built = \
-            _build_fixtures_untimed(spark, sf_dir)
-    except Exception as ex:
-        print(f"  fixture phase failed (queries build inline): {ex}",
-              file=sys.stderr)
-        fixture_sec, fixture_per, fixtures_built = None, {}, None
-
-    queries = all_queries()
-    timings: dict[str, float] = {}
-    failures: dict[str, str] = {}
-    for i, (name, q) in enumerate(sorted(queries.items())):
-        t0 = time.perf_counter()
-        df = None
-        try:
-            df = q.spark_fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 4)
-            print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
-        except Exception as ex:  # one bad query must not sink the bench
-            # Keep enough context to diagnose from the JSON alone: the
-            # exception class, the first message line (Spark analysis
-            # errors front-load the useful part), and the innermost
-            # repo-local stack frame (streaming queries execute inside
-            # spark_fn, so "where in OUR code" is the actionable bit).
-            repo_root = os.path.dirname(os.path.abspath(__file__))
-            frame = ""
-            tb = ex.__traceback__
-            while tb is not None:
-                fname = os.path.abspath(tb.tb_frame.f_code.co_filename)
-                if fname.startswith(repo_root):
-                    frame = f" at {os.path.basename(fname)}:{tb.tb_lineno}"
-                tb = tb.tb_next
-            msg = str(ex).strip().splitlines()[0] if str(ex).strip() else ""
-            # budget the frame suffix into the 300-char cap so recorded
-            # entries never exceed it
-            failures[name] = (
-                f"{type(ex).__name__}: {msg}"[:300 - len(frame)] + frame)
-            print(f"  {name}: FAILED {failures[name]}", file=sys.stderr)
-        del df
-        # queries that persist intermediates (dedup/LSH pipelines) must
-        # not leak cache blocks into the next query's timing — each
-        # query is measured cold against the page-cached parquet only
-        spark.catalog.clearCache()
-        # localCheckpoint blocks (q61/q81 label rounds, streaming sink
-        # materializations) are reclaimed by ContextCleaner only after a
-        # JVM GC notices the RDDs are unreachable; nudge periodically so
-        # one run's blocks can't pile up into memory pressure that
-        # poisons later queries' timings (untimed: between queries)
-        if i % 10 == 9:
-            # drop the py4j proxies first: ContextCleaner only frees
-            # checkpoint/broadcast blocks whose JVM-side RDDs have no
-            # live reference, and those references are held from Python
-            import gc
-
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+    fixture_sec, fixture_per, fixtures_built = prepare(spark, sf_dir)
+    names = sorted(all_queries())
+    run = drop_witnesses(names, [sf_dir])
+    rows = [measure(spark, census, n, sf_dir, reps, plans) for n in run]
+    timings = {r["name"]: r["best"] for r in rows if "error" not in r}
+    failures = {r["name"]: r["error"] for r in rows if "error" in r}
 
     total = round(sum(timings.values()), 4)
-    # Key order matters for the driver's TAIL capture (BENCH_r13 and
-    # every prior round recorded "parsed": null because the one giant
-    # line was cut mid-"queries", losing the scalars): the big
-    # per-query map prints FIRST and the cheap scalars LAST, so
-    # whatever suffix of the line survives always carries the totals.
-    out = {
-        "queries": timings,
-        "fixtures": fixture_per,
-    }
+    scratch_state = ("unknown" if fixtures_built is None else
+                     "cold" if fixtures_built else "warm")
+    # the big per-query map prints FIRST and the cheap scalars LAST, so
+    # whatever suffix of the line a tail capture keeps carries the totals
+    out = {"queries": timings, "fixtures": fixture_per}
     if failures:
         out["failures"] = failures
+    if len(run) < len(names):
+        out["skipped"] = sorted(set(names) - set(run))
     out.update({
         "metric": "workload_total_runtime",
         "value": total,
         "unit": "sec",
         "sf": sf,
-        # untimed fixture phase (see _build_fixtures_untimed): lets the
-        # driver interpret the timed total independently of scratch
-        # state — fixture_build_sec is near-zero on a warm scratch
         "fixture_build_sec": fixture_sec,
         "fixtures_built": fixtures_built,
-        "scratch_state": ("unknown" if fixtures_built is None else
-                          "cold" if fixtures_built else "warm"),
+        "scratch_state": scratch_state,
     })
-    # The complete result also lands in a repo file, so round-over-round
-    # per-query comparison never depends on how much stdout the driver
-    # kept.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json"), "w") as f:
-            json.dump(out, f)
-            f.write("\n")
-    except OSError as ex:
-        print(f"  could not write BENCH_FULL.json: {ex}", file=sys.stderr)
+    cpus = spark.sparkContext.defaultParallelism
+    full = {"census": {r["name"]: r["census"] for r in rows}, **out,
+            "cpus": cpus, "census_overhead_s": round(
+                sum(r["census_overhead_s"] for r in rows), 4)}
+    for fname in (f"BENCH_FULL_c{cpus}.json", "BENCH_FULL.json"):
+        try:
+            with open(os.path.join(HERE, fname), "w") as f:
+                json.dump(full, f)
+                f.write("\n")
+        except OSError as ex:
+            print(f"  could not write {fname}: {ex}", file=sys.stderr)
     print(json.dumps(out))
-    # ...and a compact summary line LAST: small enough to always fit
-    # complete inside any tail window, so the driver has one
-    # parseable JSON line carrying the total even if the full line
-    # above was truncated.
+    # a compact summary LAST: it fits whole inside any tail window even
+    # when the full line above was cut
     print(json.dumps({
         "metric": "workload_total_runtime",
         "value": total,
@@ -348,14 +331,84 @@ def main() -> None:
         "n_queries": len(timings),
         "n_failures": len(failures),
         "fixture_build_sec": fixture_sec,
-        "scratch_state": ("unknown" if fixtures_built is None else
-                          "cold" if fixtures_built else "warm"),
+        "scratch_state": scratch_state,
         "full_results": "BENCH_FULL.json",
     }))
 
 
-if __name__ == "__main__":
-    if "--sf-probe" in sys.argv[1:]:
-        _sf_probe()
+def scaling_exponent(t_small: float, t_large: float, ratio: float) -> float:
+    """The power of the input ratio that the time ratio is: 1 for a
+    linear query, 0 for a fixed cost."""
+    return round(math.log(t_large / t_small) / math.log(ratio), 3)
+
+
+def _slowest(cpus: int) -> list[str]:
+    for fname in (f"BENCH_FULL_c{cpus}.json", "BENCH_FULL.json"):
+        try:
+            with open(os.path.join(HERE, fname)) as f:
+                prev = json.load(f)["queries"]
+        except (OSError, ValueError, KeyError):
+            continue
+        return sorted(prev, key=lambda n: -prev[n])[:PROBE_TOP]
+    sys.exit("bench.py --sf-probe: no BENCH_FULL*.json; run bench.py first")
+
+
+def sf_probe(spark, census: SparkCensus, names: list[str], big_dir: str,
+             reps: int, plans: str | None) -> None:
+    import pyarrow.parquet as pq
+
+    dirs = (SMALL_DIR, big_dir)
+    small, large = (pq.read_metadata(os.path.join(d, "lineitem.parquet"))
+                    .num_rows for d in dirs)
+    ratio = large / small
+    names = names or drop_witnesses(
+        _slowest(spark.sparkContext.defaultParallelism), dirs)
+    for d in dirs:
+        prepare(spark, d)
+    out, flagged = {}, []
+    for name in names:
+        rec = {}
+        for key, d in zip(("small", "large"), dirs):
+            measure(spark, census, name, d)  # the untimed run
+            rec[key] = measure(spark, census, name, d, reps, plans)
+        ts, tl = rec["small"]["best"], rec["large"]["best"]
+        if ts and tl:
+            rec["ratio"] = round(tl / ts, 3)
+            rec["exponent"] = scaling_exponent(ts, tl, ratio)
+            if rec["exponent"] > FLAG_EXPONENT:
+                flagged.append(name)
+        out[name] = rec
+    print(json.dumps({"metric": "sf_scaling_probe", "unit": "sec",
+                      "dirs": dirs, "input_ratio": round(ratio, 3),
+                      "queries": out, "flagged": flagged}))
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawTextHelpFormatter)
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    ap.add_argument("--reps", type=int, choices=range(1, 1001), metavar="N")
+    ap.add_argument("--plans", metavar="DIR")
+    ap.add_argument("--sf-probe", action="store_true")
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.names) - set(all_queries()))
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    reps = args.reps or (2 if args.names or args.sf_probe else 1)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("bench")
+    census = SparkCensus(spark)
+    if args.sf_probe:
+        sf_probe(spark, census, args.names, sf_dir, reps, args.plans)
+    elif args.names:
+        prepare(spark, sf_dir)
+        for name in args.names:
+            measure(spark, census, name, sf_dir)  # the untimed run
+            print(json.dumps(measure(spark, census, name, sf_dir, reps,
+                                     args.plans)), flush=True)
     else:
-        main()
+        full_run(spark, census, sf_dir, reps, args.plans)
+
+
+if __name__ == "__main__":
+    main()

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import textstats
 from ..functions.hashing import MERSENNE_P, MINHASH_PERMS, hash32, minhash_perm
+from ..session import local_frame
 from .graph import cut, iterate
 
 
@@ -329,8 +330,8 @@ def _cc_driver_local(edges: DataFrame, src: str, dst: str,
             parent[hi] = lo
     rows = [(n, find(n)) for n in parent]
     node_t = edges.schema[src].dataType.simpleString()
-    return edges.sparkSession.createDataFrame(
-        rows, f"node {node_t}, comp {node_t}")
+    return local_frame(edges.sparkSession, rows,
+                       f"node {node_t}, comp {node_t}")
 
 
 def _label_sum(labels: DataFrame):

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import schemas
 from .operators import upsert
+from .session import local_frame
 from .sources import alpha_vantage as av
 
 _TABLES = {
@@ -135,7 +136,7 @@ class StockStore:
 
     def read(self, table: str) -> DataFrame:
         if not self.exists(table):
-            return self.spark.createDataFrame([], schemas.TABLES[table])
+            return local_frame(self.spark, [], schemas.TABLES[table])
         return self.spark.read.schema(schemas.TABLES[table]).parquet(self.path(table))
 
     def append(self, table: str, df: DataFrame) -> None:
@@ -165,8 +166,8 @@ class StockStore:
         seen = {r[0] for r in self.read("companies").collect()}
         new = sorted(set(symbols) - seen)
         if new:
-            self.append("companies", self.spark.createDataFrame(
-                [(s,) for s in new], schemas.COMPANIES))
+            self.append("companies", local_frame(
+                self.spark, [(s,) for s in new], schemas.COMPANIES))
         return len(new)
 
     def ingest(self, endpoint: str, payloads: list[tuple[str, str]],

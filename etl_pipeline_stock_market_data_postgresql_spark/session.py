@@ -23,7 +23,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 #: JVM defaults for the driver and executors. At the 4 MB region G1
@@ -141,3 +142,23 @@ def get_spark(app_name: str = "etl_pipeline_stock_market_data_postgresql_spark",
                        provider)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list,
+                schema: StructType | str) -> DataFrame:
+    """A small driver-side frame of ``rows`` (tuples, in schema order)
+    under ``schema`` (a ``StructType`` or a DDL string), built as an
+    Arrow local relation: Spark plans it as a ``LocalTableScan`` and
+    evaluates it without a job. ``createDataFrame(<list>)`` builds a
+    PythonRDD instead, whose every evaluation runs a Python task per
+    partition, even for an empty list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                 schema=arrow), schema)

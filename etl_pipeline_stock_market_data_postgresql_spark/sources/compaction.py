@@ -38,6 +38,8 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 
 #: Hive's directory name for the NULL partition. Its rows cannot be
 #: matched by a ``cast(part_col as string)`` equi-join (NULL never
@@ -93,8 +95,8 @@ def compact_partitioned(spark: SparkSession, path: str, part_col: str,
                            target_bytes)
     if not plan:
         return plan
-    plan_df = F.broadcast(spark.createDataFrame(
-        [(v, b) for v, b in plan.items()], f"{part_col}_s string, bins int"))
+    plan_df = F.broadcast(local_frame(
+        spark, list(plan.items()), f"{part_col}_s string, bins int"))
     df = spark.read.parquet(path)
     todo = (df.join(plan_df,
                     df[part_col].cast("string") == plan_df[f"{part_col}_s"])

@@ -96,6 +96,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.datasource import InputPartition
 
+from ..session import local_frame
+
 _DATA = "data"
 _MANIFESTS = "manifests"
 
@@ -529,7 +531,7 @@ def read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
     if not files:
         schema = (StructType.fromJson(man["schema"])
                   if man.get("schema") is not None else None)
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _logical_rows(spark, root, man, files)
 
 
@@ -716,19 +718,6 @@ def _dv_map(stats: dict, files) -> dict[str, str]:
 _DV_DRIVER_BYTES = 4 << 20
 
 
-def _local_frame(spark: SparkSession, strings: dict[str, list],
-                 longs: dict[str, list] | None = None) -> DataFrame:
-    """A small driver-side frame of string columns then long columns,
-    as an Arrow local relation: planned as a ``LocalTableScan`` (a
-    list of tuples would run a PythonRDD job to reach the JVM)."""
-    import pyarrow as pa
-
-    cols = {c: pa.array(v, pa.string()) for c, v in strings.items()}
-    cols.update({c: pa.array(v, pa.int64())
-                 for c, v in (longs or {}).items()})
-    return spark.createDataFrame(pa.table(cols))
-
-
 def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
                      fn_col: str = "_dv_fn",
                      ri_col: str = "_dv_ri") -> DataFrame:
@@ -743,12 +732,10 @@ def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
     total = sum(os.path.getsize(os.path.join(root, _DATA, dv))
                 for dv in dvm.values())
     if total <= _DV_DRIVER_BYTES:
-        fs, ps = [], []
-        for f, dv in dvm.items():
-            pos = _read_dv(root, dv)
-            fs += [f] * len(pos)
-            ps += pos
-        return F.broadcast(_local_frame(spark, {fn_col: fs}, {ri_col: ps}))
+        rows = [(f, p) for f, dv in dvm.items()
+                for p in _read_dv(root, dv)]
+        return F.broadcast(local_frame(spark, rows,
+                                       f"{fn_col} string, {ri_col} long"))
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -761,8 +748,8 @@ def _dv_positions_df(spark: SparkSession, root: str, dvm: dict[str, str],
             None if p is None else decode_payload_array(p, c)
             for p, c in zip(payload, n)])
 
-    name_map = _local_frame(spark, {"_dv_sidecar": list(dvm.values()),
-                                    fn_col: list(dvm)})
+    name_map = local_frame(spark, [(dv, f) for f, dv in dvm.items()],
+                           f"_dv_sidecar string, {fn_col} string")
     exploded = (spark.read
                 .schema("positions array<long>, n long, payload string")
                 .json([os.path.join(root, _DATA, dv)
@@ -904,9 +891,9 @@ def _tagged_rows(spark: SparkSession, root: str, schema_json,
     if row_ids:
         based = [f for f in names if _BRID_KEY in stats.get(f, {})]
         if based:
-            bdf = F.broadcast(_local_frame(
-                spark, {"_rt_f": based},
-                {"_rt_base": [int(stats[f][_BRID_KEY]) for f in based]}))
+            bdf = F.broadcast(local_frame(
+                spark, [(f, int(stats[f][_BRID_KEY])) for f in based],
+                "_rt_f string, _rt_base long"))
             df = (df.join(bdf, "_rt_f", "left")
                   .withColumn(_ROW_ID,
                               F.coalesce(F.col(_ROW_ID),
@@ -1006,7 +993,7 @@ def read_version_rows(spark: SparkSession, root: str,
             f"commit_append(..., row_ids=True)")
     if not man["files"]:
         schema = StructType.fromJson(man["schema"]).add(_ROW_ID, LongType())
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _logical_rows(spark, root, man, man["files"], row_ids=True)
 
 
@@ -1682,7 +1669,7 @@ def _commit(spark: SparkSession, root: str, df: DataFrame,
         # empty shuffles); write one explicit empty file so a manifest
         # carrying nothing still references its schema carrier
         shutil.rmtree(tmp, ignore_errors=True)
-        spark.createDataFrame([], df.schema).write.parquet(tmp)
+        local_frame(spark, [], df.schema).write.parquet(tmp)
         parts = sorted(x for x in os.listdir(tmp) if x.endswith(".parquet"))
     new = [f"v{claim:05d}-p{pid}-{seq}-{i:05d}.parquet"
            for i in range(len(parts))]
@@ -2753,8 +2740,8 @@ def _version_diff(spark: SparkSession, root: str, v_from: int,
         if schema_json is None:
             return read_version(spark, root, v_to).limit(0)
         schema = StructType.fromJson(schema_json)
-        return spark.createDataFrame(
-            [], schema.add(_ROW_ID, LongType()) if row_ids else schema)
+        return local_frame(
+            spark, [], schema.add(_ROW_ID, LongType()) if row_ids else schema)
 
     ins, dels = _mutual_except_all(_side("insert", "all"),
                                    _side("delete", "all"))
@@ -2939,7 +2926,7 @@ def history(spark: SparkSession, root: str) -> DataFrame:
         StructField("n_new_files", IntegerType(), True),
         StructField("n_live_files", IntegerType(), True),
         StructField("n_txn_apps", IntegerType(), False)])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _metadata_commit(root: str, mutate, op: str,

@@ -94,6 +94,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import LongType, StringType, StructType
 
+from ..session import local_frame
+
 FORMAT_NAME = "store_cdf"
 
 CHANGE_TYPE_COL = "_change_type"
@@ -493,5 +495,5 @@ def read_change_feed(spark, root: str, starting_version: int = 0,
                   spark, root, pin,
                   _plan_changes(root, starting_version, hi))]
     if not frames:
-        return spark.createDataFrame([], _feed_schema(pin["schema"]))
+        return local_frame(spark, [], _feed_schema(pin["schema"]))
     return reduce(DataFrame.unionByName, frames)

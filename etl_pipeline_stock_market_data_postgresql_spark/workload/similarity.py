@@ -89,8 +89,8 @@ def q29_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale role: the FIXED 2^IVF_BITS bucket count bounds constants at
     gate SFs but makes candidate pairs Σ|bucket|²/2 ∝ n²/2^bits — this
-    query is the family's gate-scale exactness WITNESS (scale_probe
-    skips it on probe dirs), and the corpus-proportional path is
+    query is the family's gate-scale exactness WITNESS (``bench.py``
+    skips it on probe-scale dirs), and the corpus-proportional path is
     q111's K ∝ n hierarchical cells (q98's docstring walks the
     argument)."""
     emb = load(spark, sf_dir, "embeddings")

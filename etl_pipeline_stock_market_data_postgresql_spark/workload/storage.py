@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import Query
+from ..session import local_frame
 from ..sources.bucketed import colocated_join, write_bucketed
 from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 from ..sources.tables import load
@@ -2034,8 +2035,8 @@ def q162_multi_store_atomic_commit(spark: SparkSession,
                     F.col("n_rows").cast("long").alias("n_rows"),
                     "key_sum", "value_sum")
             except vstore.AbortedTransactionError:
-                s = spark.createDataFrame(
-                    [(store_name, v, ops[v], None, None, None)],
+                s = local_frame(
+                    spark, [(store_name, v, ops[v], None, None, None)],
                     "store string, version int, op string, "
                     "n_rows long, key_sum long, value_sum long")
             parts.append(s)
@@ -2413,8 +2414,8 @@ def _update_cert_rollup(spark, vstore, root: str,
 
 
 def _read_cert_rollup(spark, rows: dict) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(v), r[0], r[1], r[2], r[3]) for v, r in rows.items()],
+    return local_frame(
+        spark, [(int(v), r[0], r[1], r[2], r[3]) for v, r in rows.items()],
         "version int, n_rows long, id_sum long, value_q_sum long, "
         "n_corrected long")
 
@@ -3327,9 +3328,9 @@ def q172_batch_source_api(spark: SparkSession, sf_dir: str) -> DataFrame:
               .option("path", root).load()
               .filter(F.col("event_id") <= half // 2))
     parts.append(_agg(pruned, "pruned", ops[max(ops)]))
-    parts.append(spark.createDataFrame(
-        [("history", ",".join(ops[v] for v in sorted(ops)),
-          len(hist), 0.0)],
+    parts.append(local_frame(
+        spark, [("history", ",".join(ops[v] for v in sorted(ops)),
+                 len(hist), 0.0)],
         "phase string, op string, n_rows long, sum_value double"))
     out = parts[0]
     for p in parts[1:]:
@@ -3661,8 +3662,8 @@ def q175_metadata_aggregates(spark: SparkSession,
         rows.append((f"v{v}", int(n),
                      int(mm[0]) if mm else None,
                      int(mm[1]) if mm else None))
-    return spark.createDataFrame(
-        rows, "phase string, n_rows long, id_min long, id_max long")
+    return local_frame(
+        spark, rows, "phase string, n_rows long, id_min long, id_max long")
 
 
 _Q175_SQL = """

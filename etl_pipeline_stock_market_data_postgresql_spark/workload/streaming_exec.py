@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
 from ..sources.derived_cache import fixture, scratch_base, table_fingerprint
 from ..streaming.runner import (replay_deliveries, run_available_now,
                                 write_two_deliveries)
@@ -81,7 +82,7 @@ def _read_back(df: DataFrame, out_dir: str) -> DataFrame:
     except Exception:
         # zero committed batches/files (empty source + fresh
         # checkpoint): out_dir holds no parquet schema to infer
-        return df.sparkSession.createDataFrame([], df.schema)
+        return local_frame(df.sparkSession, [], df.schema)
 
 
 def _run_stream_complete_to_files(df: DataFrame, prefix: str, sf_dir: str,

@@ -27,6 +27,7 @@ from ..functions import textstats
 from ..operators.asof import asof_join_union
 from ..functions.hashing import hash32, hash32_sql, hash60, hash60_sql
 from ..functions.rounding import round_half_up, round_half_up_sql
+from ..session import local_frame
 from ..sources.tables import load
 
 _TOKS_CTE = """
@@ -713,7 +714,7 @@ def q116_trained_quality_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = ("doc_id bigint, n_tokens bigint, n_stop bigint,"
               " pred_quality double, w0 double, w1 double, w2 double")
     if weights is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     w0, w1, w2 = weights
     pred = (F.lit(w0) + F.lit(w1) * F.col("x1").cast("double")
             + F.lit(w2) * F.col("x2").cast("double"))
@@ -825,8 +826,8 @@ def q115_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(bpe.wrap_word(F.col("word")).alias("w"), "freq"))
     merges = bpe.train_bpe(wf, BPE_MERGES,
                            checkpoint_every=BPE_CHECKPOINT_EVERY)
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "merge_rank int, lhs string, rhs string, merged string,"
         " pair_count long")
 
